@@ -23,41 +23,33 @@ import graft.core.Tables
   */
 object Dedup {
 
+  /** Word trigrams of a token array `t`, one array element per window
+    * position. try_element_at: out-of-range → NULL (matching DuckDB's
+    * t[i]); plain element_at throws under ANSI on sub-3-token docs, whose
+    * single window is a NULL gram. */
+  private val gramsExpr =
+    """transform(sequence(0, greatest(size(t)-3, 0)),
+      |  i -> concat(try_element_at(t, i+1), ' ', try_element_at(t, i+2), ' ',
+      |              try_element_at(t, i+3)))""".stripMargin
+
   /** Corpus-generic shingling: (doc_id, word-trigram) pairs of
     * lower-cased text from any (id, text) frame. Word trigrams (not
     * char shingles) keep random-document similarity low while near-dups
     * stay ≫ band threshold.
     *
-    * `dedupe` adds the set-semantics shuffle only where it matters
-    * (Jaccard's intersection/size counts). MinHash signatures are
-    * invariant to duplicate shingles — min over a multiset equals min
-    * over its set — so signature paths skip the distinct and save a
-    * corpus-wide (doc, gram) shuffle; the oracle keeps its DISTINCT and
-    * the mins agree by construction. */
+    * `dedupe` makes each document's grams a set with a per-row
+    * `array_distinct` before the explode (no shuffle). That equals a
+    * global (doc_id, g) distinct only when `docs` holds one row per
+    * doc_id, which every caller's corpus does; the verify kernel
+    * [[exactJaccard]] merges duplicated doc_id rows itself. MinHash
+    * signatures are invariant to duplicate shingles — min over a
+    * multiset equals min over its set — so signature paths skip it. */
   private[graft] def trigramsOf(docs: DataFrame, idCol: String, textCol: String,
                          dedupe: Boolean): DataFrame = {
-    // try_element_at: out-of-range → NULL (matching DuckDB's t[i]);
-    // plain element_at throws under ANSI on sub-3-token docs
-    val gramsExpr =
-      """transform(sequence(0, greatest(size(t)-3, 0)),
-        |  i -> concat(try_element_at(t, i+1), ' ', try_element_at(t, i+2), ' ',
-        |              try_element_at(t, i+3)))""".stripMargin
-    val split0 = docs
-      .select(col(idCol).as("doc_id"), split(lower(col(textCol)), " ").as("t"))
-    // r16 (§2.4 remove shuffles): dedupe=true used to be a distinct()
-    // — a full (doc_id, g) exchange of the gram stream. A trigram set
-    // is per-document by construction, so the dedupe is local to each
-    // row: array_distinct before the explode yields the identical set
-    // with NO shuffle (nulls from sub-3-token docs collapse to one
-    // entry and are filtered after the explode — the same rows the
-    // old filter-then-distinct kept).
-    if (dedupe)
-      split0.select(col("doc_id"),
-          explode(expr(s"array_distinct($gramsExpr)")).as("g"))
-        .where(col("g").isNotNull)
-    else
-      split0.select(col("doc_id"), explode(expr(gramsExpr)).as("g"))
-        .where(col("g").isNotNull)
+    val grams = if (dedupe) s"array_distinct($gramsExpr)" else gramsExpr
+    docs.select(col(idCol).as("doc_id"), split(lower(col(textCol)), " ").as("t"))
+      .select(col("doc_id"), explode(expr(grams)).as("g"))
+      .where(col("g").isNotNull)
   }
 
   private val trigramsSql: String =
@@ -120,14 +112,6 @@ object Dedup {
       expr(s"graft_minhash8(lower(`$textCol`))").as("sig"))
   }
 
-  /** Band frame via the native kernel: scan → `graft_minhash8`
-    * projection → band explode. No shingle explode, no groupBy — the
-    * (doc, gram) aggregation shuffle disappears from the LSH path
-    * entirely (MinHashSpec pins bit-equality against [[signatures]],
-    * so the oracle's md5 algebra is untouched). */
-  private[graft] def bandsNative(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    bandsOfSigs(signaturesNative(docs, idCol, textCol))
-
   /** Bucket-size safety valve for every band self-join (r6 scale-cliff
     * finding): a redundancy-heavy corpus (templated/boilerplate mass,
     * heavy near-dup clusters) piles thousands of docs into one (band,
@@ -144,16 +128,18 @@ object Dedup {
     * DuckDB twins apply the identical rule via [[bandsSql]]. */
   private[graft] val maxBucket = 100
 
+  /** (doc_id, sig, b, v) band rows of a (doc_id, sig) frame: 4 bands
+    * of 2 signature chunks, each row still carrying its document's
+    * whole signature, minus every bucket over [[maxBucket]]. */
   private[graft] def bandsOfSigs(sigs: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("b"), col("v"))
+    val w = Window.partitionBy(col("b"), col("v"))
     sigs
-      .select(col("doc_id"), explode(array(
+      .select(col("doc_id"), col("sig"), explode(array(
         (0 until nBands).map(b => struct(
           lit(b).as("b"),
           concat(element_at(col("sig"), 2 * b + 1),
                  element_at(col("sig"), 2 * b + 2)).as("v"))): _*)).as("band"))
-      .select(col("doc_id"), col("band.b").as("b"), col("band.v").as("v"))
+      .select(col("doc_id"), col("band.b").as("b"), col("band.v").as("v"), col("sig"))
       // trigram-less docs surface as null band values (element_at on a
       // null sig). Filtering v — not sig — keeps the kernel evaluated
       // once: an isnotnull(sig) predicate would be pushed into the scan
@@ -162,6 +148,26 @@ object Dedup {
       .withColumn("bucket_n", count(lit(1)).over(w))
       .where(col("bucket_n") <= maxBucket)
       .drop("bucket_n")
+  }
+
+  /** The candidate plan every LSH consumer reads: distinct
+    * (doc_a < doc_b, n_agree) over the band self-join of a (doc_id, sig)
+    * frame, where n_agree counts the signature chunks the pair agrees on
+    * (the MinHash estimator's numerator). Both join sides carry their
+    * signature through the (b, v) bucket join, so the estimator needs no
+    * signature re-join, and nothing is cached: the join keys are the
+    * bucket window's partitioning, so both sides read the one window
+    * exchange and the kernel runs once per document. Unordered. */
+  private def candidatePlan(sigs: DataFrame): DataFrame = {
+    val bd = bandsOfSigs(sigs)
+    val a = bd.select(col("doc_id").as("doc_a"), col("b"), col("v"), col("sig").as("sa"))
+    val o = bd.select(col("doc_id").as("doc_b"), col("b").as("b2"), col("v").as("v2"),
+      col("sig").as("sb"))
+    a.join(o, col("b") === col("b2") && col("v") === col("v2") &&
+              col("doc_a") < col("doc_b"))
+      .select(col("doc_a"), col("doc_b"),
+        expr("size(filter(zip_with(sa, sb, (x, y) -> x = y), e -> e))").as("n_agree"))
+      .distinct()
   }
 
   private val bandsSql: String = {
@@ -191,25 +197,11 @@ object Dedup {
       |GROUP BY 1
       |ORDER BY text_hash""".stripMargin
 
-  /** Distinct candidate pairs from a bands frame (unordered output —
-    * callers sort). */
-  private def candidatePairs(bd: DataFrame): DataFrame = {
-    val a = bd.select(col("doc_id").as("doc_a"), col("b"), col("v"))
-    val b = bd.select(col("doc_id").as("doc_b"), col("b").as("b2"), col("v").as("v2"))
-    a.join(b, col("b") === col("b2") && col("v") === col("v2") &&
-              col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
-  }
-
   /** MinHash+LSH near-dup candidates: trigram → 8 minhashes → 4 bands
-    * of 2 → bucket self-join on (band, signature) → distinct pairs.
-    * The bands frame is cached: a DataFrame self-join re-executes its
-    * subplan per side (no common-subplan reuse in Catalyst), and the
-    * subplan here is the whole shingle+signature pipeline — caching
-    * the tiny (4 rows/doc) band table halves the query. */
+    * of 2 → bucket self-join on (band, signature) → distinct pairs, off
+    * the shared [[candidatePlan]]. */
   def dedupFuzzy(spark: SparkSession, dir: String): DataFrame =
-    candidatePairs(
-      bandsNative(Tables.documents(spark, dir), "doc_id", "text").cache())
+    minhashCandidates(Tables.documents(spark, dir), "doc_id", "text")
       .orderBy(col("doc_a"), col("doc_b"))
 
   val dedupFuzzySql: String =
@@ -231,7 +223,7 @@ object Dedup {
   def docOverlap(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val src = docs.select(col("doc_id"), col("source"))
-    candidatePairs(bandsNative(docs, "doc_id", "text").cache())
+    minhashCandidates(docs, "doc_id", "text")
       .join(src.select(col("doc_id").as("doc_a"), col("source").as("sa")),
         "doc_a")
       .join(src.select(col("doc_id").as("doc_b"), col("source").as("sb")),
@@ -279,7 +271,7 @@ object Dedup {
       .select(col("doc_id"), md5(lower(trim(col("text")))).as("digest"))
       .join(baseDigests, "digest")
       .select(col("doc_id")).distinct()
-    val pairs = candidatePairs(bandsNative(docs, "doc_id", "text").cache())
+    val pairs = minhashCandidates(docs, "doc_id", "text")
     val nearIds = pairs
       .where(col("doc_a") % 10 === 0 && col("doc_b") % 10 =!= 0)
       .select(col("doc_a").as("doc_id"))
@@ -378,8 +370,7 @@ object Dedup {
       .join(baseDigests, "digest")
       .select(col("doc_id")).distinct()
     val batchIds = batch.select(col("doc_id"))
-    val pairs = candidatePairs(
-      bandsNative(base.unionByName(batch), "doc_id", "text").cache())
+    val pairs = minhashCandidates(base.unionByName(batch), "doc_id", "text")
     val nearIds = pairs
       .join(batchIds.withColumnRenamed("doc_id", "doc_a"),
         Seq("doc_a"), "left_semi")
@@ -501,7 +492,7 @@ object Dedup {
     // construction, since the index holds the same kernel's output
     val combined = idx.select(col("doc_id"), col("sig"))
       .unionByName(signaturesNative(batch, "doc_id", "text"))
-    val pairs = candidatePairs(bandsOfSigs(combined).cache())
+    val pairs = candidatePlan(combined).select(col("doc_a"), col("doc_b"))
     val nearIds = pairs
       .join(batchIds.withColumnRenamed("doc_id", "doc_a"),
         Seq("doc_a"), "left_semi")
@@ -544,80 +535,57 @@ object Dedup {
     * every multi-band candidate exactly and pay full shingling. */
   private val estPruneMinAgree = 3
 
-  /** Signature-agreement count per LSH candidate pair — the shared
-    * estimator rung: one native-kernel pass builds the cached
-    * signatures, bands derive from them (no re-hash), candidates come
-    * from the band self-join, and each pair joins two 8-chunk
-    * signatures to count agreements. Used by [[dedupJaccardEst]] (as
-    * the reported estimate) and [[dedupJaccard]] (as the prune). */
-  private def signatureAgreement(docs: DataFrame): DataFrame = {
-    val sigs = signaturesNative(docs, "doc_id", "text").cache()
-    candidatePairs(bandsOfSigs(sigs).cache())
-      .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sa")), "doc_a")
-      .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sb")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        expr("size(filter(zip_with(sa, sb, (x, y) -> x = y), b -> b))")
-          .as("n_agree"))
-  }
-
-  /** DuckDB twin of [[signatureAgreement]]'s per-pair count. */
+  /** DuckDB twin of [[candidatePlan]]'s per-pair `n_agree`. */
   private lazy val agreeSql: String = (0 until nHashes)
     .map(j => s"(CASE WHEN a.h$j = b.h$j THEN 1 ELSE 0 END)").mkString(" + ")
 
-  /** Exact n-gram Jaccard — the full dedup ladder in one query:
-    * LSH candidates → MinHash-estimator prune (signature-only, no text
-    * re-read, [[estPruneMinAgree]]) → exact trigram verification of the
-    * survivors. At 100 TB the prune is what keeps the verify rung
-    * affordable: the trigram-intersection join runs on est-plausible
-    * pairs only, and the estimator itself joins two 8-chunk signatures
-    * per pair — nothing else. The division is exact-int / exact-int,
-    * bit-identical across engines. */
-  /** Exact trigram-Jaccard verification of a GIVEN candidate pair set —
-    * the verify rung as a reusable step. Shingles ONLY the candidate
-    * docs (left-semi first): the rest of the corpus's trigram sets are
-    * never built, and candidates ≪ corpus at any scale — the
-    * distinct-gram shuffle shrinks from corpus-wide to candidate-wide,
-    * the shape that keeps verify affordable at 100 TB. Shared by
-    * [[dedupJaccard]] and LlmSpec's unpruned-baseline measurement, so
-    * the test measures THIS verify, not a copy that can drift. */
+  /** Exact trigram-Jaccard verification of a given candidate pair set —
+    * the verify rung as one set-intersection kernel, shared by every
+    * exact rung ([[dedupJaccard]], [[dedupContainment]],
+    * [[dedupThresholdHist]], [[dedupRungAgreement]]) and LlmSpec's
+    * unpruned-baseline measurement, so the test measures THIS verify.
+    *
+    * Only candidate documents are shingled: a broadcast id-list
+    * semi-join filters the scan (candidates ≪ corpus at any scale, so
+    * cost follows the candidate count at 100 TB), and the survivors are
+    * hash-partitioned by doc_id. Each then gets one null-free distinct
+    * trigram array, merged per doc_id on that partitioning (no further
+    * exchange) so a duplicated doc_id row cannot inflate the counts; its
+    * set is the union of its rows', as the oracle's DISTINCT (doc_id, g)
+    * defines it. A pair joins its two arrays and reads
+    * common = |A ∩ B|, n_a = |A| and n_b = |B| as BIGINT; pairs sharing
+    * no trigram are absent, as under the inner gram join the oracle
+    * runs. Output: cand's columns, then common, n_a, n_b and jaccard
+    * (exact-int / exact-int, bit-identical across engines). */
   private[graft] def exactJaccard(docs: DataFrame, cand: DataFrame): DataFrame = {
-    val candIds = cand.select(col("doc_a").as("doc_id"))
-      .union(cand.select(col("doc_b").as("doc_id"))).distinct()
-    // r16 (§2.3 shuffle keys, not payloads): the candidate-id set is
-    // bucket-cap-bounded (≪ corpus at any scale) but its size
-    // ESTIMATE — derived through a cached multi-join subplan — made
-    // the planner pick a SortMergeJoin that shuffled the FULL
-    // documents table (text payload included) by doc_id just to probe
-    // membership. Broadcasting the id list turns the semi-join into a
-    // map-side filter on the scan; the repartition then spreads ONLY
-    // the surviving candidate docs (≪ corpus) across the cluster for
-    // the shingling explode — without it the explode inherits the
-    // scan's split count (one task on a small-file table), with the
-    // old SMJ it was the full corpus that paid the exchange.
-    val tg = trigramsOf(
-        docs.join(broadcast(candIds), Seq("doc_id"), "left_semi")
-          .repartition(col("doc_id")),
-        "doc_id", "text", dedupe = true)
-      .cache()
-    val sizes = tg.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val ga = tg.select(col("doc_id").as("ga_id"), col("g").as("ga_g"))
-    val gb = tg.select(col("doc_id").as("gb_id"), col("g").as("gb_g"))
+    val candIds = cand.select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id")).distinct()
+    val grams = docs.join(broadcast(candIds), Seq("doc_id"), "left_semi")
+      .repartition(col("doc_id"))
+      .select(col("doc_id"), split(lower(col("text")), " ").as("t"))
+      .select(col("doc_id"), expr(gramsExpr).as("g"))
+      .groupBy(col("doc_id"))
+      .agg(array_compact(array_distinct(flatten(collect_list(col("g"))))).as("g"))
+    val common = size(array_intersect(col("ga"), col("gb"))).cast("long")
     cand
-      .join(ga, col("doc_a") === col("ga_id"))
-      .join(gb, col("doc_b") === col("gb_id") && col("gb_g") === col("ga_g"))
-      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("common"))
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("n_a")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("n_b")), "doc_b")
-      .select(col("doc_a"), col("doc_b"), col("common"), col("n_a"), col("n_b"),
-        (col("common") / (col("n_a") + col("n_b") - col("common"))).as("jaccard"))
+      .join(grams.select(col("doc_id").as("doc_a"), col("g").as("ga")), "doc_a")
+      .join(grams.select(col("doc_id").as("doc_b"), col("g").as("gb")), "doc_b")
+      .select(cand.columns.toSeq.map(col) ++ Seq(common.as("common"),
+        size(col("ga")).cast("long").as("n_a"), size(col("gb")).cast("long").as("n_b")): _*)
+      .where(col("common") > 0)
+      .withColumn("jaccard", col("common") / (col("n_a") + col("n_b") - col("common")))
   }
 
+  /** Exact n-gram Jaccard — the full dedup ladder in one query:
+    * LSH candidates → MinHash-estimator prune ([[estPruneMinAgree]] on
+    * the candidate plan's own n_agree: no text re-read, no signature
+    * join) → exact trigram verification of the survivors. At 100 TB
+    * the prune is what keeps the verify rung affordable: the kernel
+    * shingles est-plausible pairs' documents only. */
   def dedupJaccard(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val cand = signatureAgreement(docs)
+    val cand = candidatePlan(signaturesNative(docs, "doc_id", "text"))
       .where(col("n_agree") >= estPruneMinAgree)
       .select(col("doc_a"), col("doc_b"))
-      .cache()
     exactJaccard(docs, cand)
       .where(col("jaccard") >= 0.5)
       .orderBy(col("doc_a"), col("doc_b"))
@@ -659,10 +627,10 @@ object Dedup {
     * of the 8 signature chunks that agree (E[est] = true Jaccard, the
     * MinHash property; 1/8 granularity at this signature width). At
     * scale this prunes candidate pairs before the trigram-intersection
-    * verify without touching document text again — pairs join two
-    * 8-string signatures, nothing else. */
+    * verify without touching document text again — the candidate plan
+    * already counts each pair's agreeing chunks. */
   def dedupJaccardEst(spark: SparkSession, dir: String): DataFrame =
-    signatureAgreement(Tables.documents(spark, dir))
+    candidatePlan(signaturesNative(Tables.documents(spark, dir), "doc_id", "text"))
       .withColumn("jaccard_est", col("n_agree").cast("double") / lit(8.0))
       .orderBy(col("doc_a"), col("doc_b"))
 
@@ -837,19 +805,13 @@ object Dedup {
     * 8-chunk MinHash estimator's ≥0.5 call agree with the exact
     * ≥0.5-Jaccard verify? Counts the 2×2 confusion matrix
     * (est_half × jac_half) — est-only cells are the estimator's false
-    * positives at this granularity, jac-only its false negatives. One
-    * extra signature join over the candidate set; the expensive verify
-    * shuffle is shared, not repeated. */
+    * positives at this granularity, jac-only its false negatives. The
+    * verify kernel carries each candidate's n_agree through, so both
+    * rungs come from one pass with no re-join. */
   def dedupRungAgreement(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    // ONE candidate+signature pass serves both rungs (cached — the
-    // exact verify and the estimator join both read it)
-    val agree = signatureAgreement(docs).cache()
-    exactJaccard(docs, agree.select(col("doc_a"), col("doc_b")))
-      .join(agree.select(col("doc_a").as("ea"), col("doc_b").as("eb"),
-          (col("n_agree") >= 4).as("est_half")),
-        col("doc_a") === col("ea") && col("doc_b") === col("eb"))
-      .select((col("jaccard") >= 0.5).as("jac_half"), col("est_half"))
+    exactJaccard(docs, candidatePlan(signaturesNative(docs, "doc_id", "text")))
+      .select((col("n_agree") >= 4).as("est_half"), (col("jaccard") >= 0.5).as("jac_half"))
       .groupBy(col("est_half"), col("jac_half"))
       .agg(count(lit(1)).as("n_pairs"))
       .orderBy(col("est_half"), col("jac_half"))
@@ -1139,11 +1101,8 @@ object Dedup {
         // so the fingerprint must change with the code
         graft.core.Fixtures.staged(dir, "labels", codeTag = "cc_minlabel_v2") {
           target =>
-            val bd = bandsNative(Tables.documents(spark, dir), "doc_id", "text")
-              .cache()
-            val (labels, ids) =
-              connectedComponentsTracked(spark, candidatePairs(bd))
-            bd.unpersist(blocking = false) // edges checkpointed in the fixpoint
+            val (labels, ids) = connectedComponentsTracked(spark,
+              minhashCandidates(Tables.documents(spark, dir), "doc_id", "text"))
             labels.write.mode("overwrite").parquet(target)
             releaseRdds(spark, ids) // staged copy supersedes the checkpoint
         }
@@ -1154,10 +1113,10 @@ object Dedup {
   /** PUBLIC corpus-generic surface: MinHash+LSH near-dup candidate
     * pairs over any (id, text) frame — the same trigram → 8-minhash →
     * 4-band pipeline the registry queries run on `documents`. Returns
-    * unordered distinct (doc_a, doc_b); internal caches are released
-    * by the caller's [[graft.core.Caches.drain]] after its action. */
+    * unordered distinct (doc_a, doc_b) from [[candidatePlan]]; nothing
+    * is cached. */
   def minhashCandidates(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    candidatePairs(bandsNative(docs, idCol, textCol).cache())
+    candidatePlan(signaturesNative(docs, idCol, textCol)).select(col("doc_a"), col("doc_b"))
 
   /** PUBLIC generic surface: connected-component labels over any
     * undirected (doc_a, doc_b) pair frame, by the same min-label
@@ -1173,14 +1132,19 @@ object Dedup {
     * instead of waiting for a session-wide drain. */
   private[llm] def connectedComponentsTracked(
       spark: SparkSession, pairFrame: DataFrame): (DataFrame, Set[Int]) = {
-    val pairs = pairFrame.cache() // union below scans it twice
-    val edges = pairs.union(
-      pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+    // both directions of every pair from one pass over the pair frame
+    val edges = pairFrame
+      .select(explode(array(
+        struct(col("doc_a"), col("doc_b")),
+        struct(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))).as("e"))
+      .select(col("e.doc_a").as("doc_a"), col("e.doc_b").as("doc_b"))
     val (edgesCp, edgeIds) = checkpointTracked(spark, edges)
-    pairs.unpersist(blocking = false)
+    // one-hop seed: each node starts at the least id among itself and
+    // its neighbours, so a pair component is already at its fixed point
+    // and converges in the first (check) round
     var (labels, labelIds) = checkpointTracked(spark,
-      edgesCp.select(col("doc_a").as("node")).distinct()
-        .withColumn("label", col("node")))
+      edgesCp.groupBy(col("doc_a")).agg(min(col("doc_b")).as("m"))
+        .select(col("doc_a").as("node"), least(col("doc_a"), col("m")).as("label")))
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < 20) {
@@ -1465,14 +1429,7 @@ object Dedup {
       .where(col("common") * 2 >= col("n_a") + col("n_b") - col("common"))
       .select(col("doc_a"), col("doc_b"))
       .cache()
-    val bnd = bandsNative(docs, "doc_id", "text")
-    val cand = bnd.join(
-        bnd.select(col("doc_id").as("doc_b2"), col("b").as("b2"),
-          col("v").as("v2")),
-        col("b") === col("b2") && col("v") === col("v2")
-          && col("doc_id") < col("doc_b2"))
-      .select(col("doc_id").as("doc_a"), col("doc_b2").as("doc_b"))
-      .distinct()
+    val cand = minhashCandidates(docs, "doc_id", "text")
     val nSample = docs.agg(count(lit(1)).as("n_sample"))
     val nTrue = truePairs.agg(count(lit(1)).as("n_true"))
     val nCand = cand.agg(count(lit(1)).as("n_cand"))

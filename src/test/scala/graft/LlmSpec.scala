@@ -111,9 +111,21 @@ class LlmSpec extends AnyFunSuite with SparkSpec {
     Dedup.dedupClusters(spark, sfDir).count()
     // pre-drain: only the final round's checkpoint (+ the apply-side
     // frames for this invocation) may be pinned — not one per round.
-    // The fixpoint at sf0.001 runs >=2 rounds, so a leak would pin >=3.
     val live = spark.sparkContext.getPersistentRDDs.size
     assert(live <= 2, s"expected <=2 pinned RDDs pre-drain, found $live")
+    graft.core.Caches.drain(spark)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    // The fixture's components are pairs, which the one-hop seed settles
+    // in a single round, so a per-round leak needs a deeper graph to
+    // show: a 7-node path with its minimum mid-path takes 3 rounds, and
+    // only the final round's labels may stay pinned.
+    import spark.implicits._
+    val path = Seq(17L, 12L, 19L, 11L, 15L, 14L, 20L)
+    val labels = Dedup.connectedComponents(spark,
+      path.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("doc_a", "doc_b"))
+    val pinned = spark.sparkContext.getPersistentRDDs.size
+    assert(pinned == 1, s"expected only the final labels pinned, found $pinned")
+    assert(labels.collect().forall(_.getLong(1) == 11L))
     graft.core.Caches.drain(spark)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
@@ -151,6 +163,110 @@ class LlmSpec extends AnyFunSuite with SparkSpec {
     assert(unpruned.nonEmpty)
     assert(pruned == unpruned,
       s"prune lost ${(unpruned -- pruned).size} reportable pairs")
+  }
+
+  /** Driver-side reference of the verify rung's per-document trigram
+    * set: lower-cased, split on single spaces, empty tokens kept. */
+  private def trigramSet(text: String): Set[String] = {
+    val t = text.toLowerCase.split(" ", -1)
+    (0 to t.length - 3).map(i => s"${t(i)} ${t(i + 1)} ${t(i + 2)}").toSet
+  }
+
+  /** (doc_a, doc_b) -> (common, n_a, n_b, jaccard) from the verify kernel. */
+  private def verifyRows(docs: org.apache.spark.sql.DataFrame,
+                         cand: Seq[(Long, Long)]): Map[(Long, Long), (Long, Long, Long, Double)] = {
+    import spark.implicits._
+    val out = Dedup.exactJaccard(docs, cand.toDF("doc_a", "doc_b"))
+    assert(out.columns.toSeq == Seq("doc_a", "doc_b", "common", "n_a", "n_b", "jaccard"))
+    Seq("common", "n_a", "n_b").foreach(c =>
+      assert(out.schema(c).dataType == org.apache.spark.sql.types.LongType, s"$c type"))
+    out.collect().map(r => (r.getLong(0), r.getLong(1)) ->
+      (r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5))).toMap
+  }
+
+  /** What the verify kernel must report for `cand` given per-doc sets. */
+  private def verifyReference(sets: Map[Long, Set[String]],
+                              cand: Seq[(Long, Long)]): Map[(Long, Long), (Long, Long, Long, Double)] =
+    cand.flatMap { case (a, b) =>
+      val (x, y) = (sets(a), sets(b))
+      val common = x.intersect(y).size.toLong
+      if (common == 0) None
+      else Some((a, b) -> (common, x.size.toLong, y.size.toLong,
+        common.toDouble / (x.size + y.size - common)))
+    }.toMap
+
+  test("exactJaccard equals a driver-side set reference on edge-case texts") {
+    import spark.implicits._
+    val texts = Seq(
+      1L -> "The quick brown fox jumps over the lazy dog",
+      2L -> "the QUICK brown Fox jumps over THE lazy cat", // mixed case
+      3L -> "a b a b a b a b",                            // repeated trigrams
+      4L -> "a b a b a",
+      5L -> "only two",                                   // < 3 tokens
+      6L -> "",                                           // empty text
+      7L -> "completely unrelated words here",
+      8L -> "x  y z")                                     // empty token kept
+    val docs = texts.toDF("doc_id", "text")
+    val cand = Seq((1L, 2L), (3L, 4L), (1L, 5L), (5L, 6L), (1L, 7L), (2L, 7L),
+      (1L, 6L), (4L, 8L))
+    val got = verifyRows(docs, cand)
+    val expected = verifyReference(texts.toMap.map { case (k, v) => k -> trigramSet(v) }, cand)
+    assert(got == expected)
+    // the reference is not vacuous: repeats collapse, and pairs with no
+    // common trigram (short, empty or unrelated docs) are absent
+    assert(got((3L, 4L)) == ((2L, 2L, 2L, 1.0)))
+    assert(got.keySet == Set((1L, 2L), (3L, 4L)))
+    graft.core.Caches.drain(spark)
+  }
+
+  test("exactJaccard: duplicated doc_id rows do not inflate the counts") {
+    import spark.implicits._
+    val a = "alpha beta gamma delta epsilon zeta eta"
+    val b = "alpha beta gamma delta epsilon theta iota"
+    val unique = Seq(1L -> a, 2L -> b).toDF("doc_id", "text")
+    val cand = Seq((1L, 2L), (2L, 3L))
+    // doc 1 three times and doc 2 twice, as a re-ingested corpus holds
+    // them; doc 3's two rows disagree, so its set is their union (the
+    // oracle's DISTINCT (doc_id, g) semantics)
+    val c1 = "theta iota kappa lambda"
+    val c2 = "delta epsilon theta iota mu"
+    val dup = Seq(1L -> a, 2L -> b, 1L -> a, 3L -> c1, 2L -> b, 1L -> a, 3L -> c2)
+      .toDF("doc_id", "text").repartition(3)
+    val base = verifyRows(unique, cand.take(1))
+    val got = verifyRows(dup, cand)
+    assert(got((1L, 2L)) == base((1L, 2L)))
+    assert(got((1L, 2L)) == ((3L, 5L, 5L, 3.0 / 7)))
+    val sets = Map(1L -> trigramSet(a), 2L -> trigramSet(b),
+      3L -> (trigramSet(c1) ++ trigramSet(c2)))
+    assert(got == verifyReference(sets, cand))
+    graft.core.Caches.drain(spark)
+  }
+
+  test("one-hop seeded components equal a driver union-find: path, star, pairs") {
+    import spark.implicits._
+    // a 7-node path whose minimum sits mid-path, a star whose minimum is
+    // a leaf, and two disjoint pairs; edges in mixed orientation
+    val path = Seq(17L, 12L, 19L, 11L, 15L, 14L, 20L)
+    val edges = path.sliding(2).map(p => (p(0), p(1))).toSeq ++
+      Seq((30L, 25L), (31L, 30L), (30L, 32L), (33L, 30L)) ++
+      Seq((41L, 40L), (50L, 51L))
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
+    val expected = nodes.groupBy(find).values
+      .flatMap(members => members.map(_ -> members.min)).toMap
+    val got = Dedup.connectedComponents(spark, edges.toDF("doc_a", "doc_b"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == expected)
+    assert(got(20L) == 11L && got(33L) == 25L && got(51L) == 50L)
+    graft.core.Caches.drain(spark)
   }
 
   test("minhash estimator tracks exact Jaccard on verified pairs") {

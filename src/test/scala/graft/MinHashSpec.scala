@@ -17,7 +17,7 @@ class MinHashSpec extends AnyFunSuite with SparkSpec {
     val composable = Dedup
       .bands(Dedup.signatures(Dedup.trigramsOf(docs, "doc_id", "text", dedupe = false)))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-    val native = Dedup.bandsNative(docs, "doc_id", "text")
+    val native = Dedup.bandsOfSigs(Dedup.signaturesNative(docs, "doc_id", "text"))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
     assert(native == composable)
     assert(native.nonEmpty)
@@ -35,7 +35,7 @@ class MinHashSpec extends AnyFunSuite with SparkSpec {
     val composable = Dedup
       .bands(Dedup.signatures(Dedup.trigramsOf(docs, "doc_id", "text", dedupe = false)))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-    val native = Dedup.bandsNative(docs, "doc_id", "text")
+    val native = Dedup.bandsOfSigs(Dedup.signaturesNative(docs, "doc_id", "text"))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
     assert(native == composable)
     assert(!native.exists(_._1 == 1L)) // doc with no trigram is absent
@@ -69,7 +69,7 @@ class MinHashSpec extends AnyFunSuite with SparkSpec {
     val composableBands = Dedup
       .bands(Dedup.signatures(Dedup.trigramsOf(docs, "doc_id", "text", dedupe = false)))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-    val nativeBands = Dedup.bandsNative(docs, "doc_id", "text")
+    val nativeBands = Dedup.bandsOfSigs(Dedup.signaturesNative(docs, "doc_id", "text"))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
     assert(nativeBands == composableBands)
     val composableFp = Dedup
@@ -91,8 +91,8 @@ class MinHashSpec extends AnyFunSuite with SparkSpec {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val (df, codegen) =
       try {
-        val d = Dedup.bandsNative(
-          Tables.documents(spark, sfDir), "doc_id", "text")
+        val d = Dedup.bandsOfSigs(Dedup.signaturesNative(
+          Tables.documents(spark, sfDir), "doc_id", "text"))
         (d, d.queryExecution.explainString(
           org.apache.spark.sql.execution.CodegenMode))
       } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)

@@ -15,8 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * (PlanAudit). Counts are over the INITIAL adaptive plan, which prints
   * duplicated exchange subtrees that AQE's exchange reuse dedups at
   * runtime — so a budget is an upper bound on planned shuffles, not a
-  * claim of distinct runtime shuffles (llm_dedup_jaccard's 21 planned
-  * collapse to the handful §8 documents). A NEW query must add a row
+  * claim of distinct runtime shuffles (llm_dedup_jaccard plans 14: the
+  * band-window and candidate exchanges print once per consuming leg,
+  * and runtime reuse runs each once). A NEW query must add a row
   * here: the `every query has a budget` test fails otherwise.
   */
 class PlanBudgetSpec extends AnyFunSuite with SparkSpec {
@@ -282,17 +283,21 @@ class PlanBudgetSpec extends AnyFunSuite with SparkSpec {
     "llm_dedup_apply" -> 1,
     "llm_dedup_cluster_stats" -> 2,
     "llm_dedup_clusters" -> 1,
-    // same candidate machinery as llm_dedup_jaccard (the band subtree
-    // prints per consuming leg in the initial plan; AQE reuses it)
-    "llm_dedup_containment" -> 38,
-    // shared verify shuffle + ≤10-row cumulative window
-    "llm_dedup_threshold_hist" -> 39,
-    // one cached candidate+signature pass read by both rungs
-    "llm_dedup_rung_agreement" -> 44,
+    // same candidate plan and verify kernel as llm_dedup_jaccard (the
+    // band subtree prints per consuming leg in the initial plan; AQE
+    // reuses it)
+    "llm_dedup_containment" -> 14,
+    // shared verify kernel + ≤10-row cumulative window
+    "llm_dedup_threshold_hist" -> 15,
+    // one candidate plan carries n_agree through the verify kernel,
+    // so both rungs read one pass
+    "llm_dedup_rung_agreement" -> 15,
     // sample-scoped gram inverted index + size joins + band self-join
     // + four 1-row count frames crossJoined (allowed bnl); the cached
-    // gram subtree prints per consuming leg
-    "llm_dedup_band_recall" -> 25, // r15: cached truePairs subtree prints per consumer
+    // gram subtree prints per consuming leg; the shared candidate plan
+    // is partitioned on (doc_a, doc_b, n_agree), so the hit semi-join
+    // re-keys it on the pair
+    "llm_dedup_band_recall" -> 18,
     // band candidates + two broadcast prefix joins + sort
     "llm_dedup_edit_distance" -> 4,
     "llm_curriculum" -> 2,
@@ -315,7 +320,7 @@ class PlanBudgetSpec extends AnyFunSuite with SparkSpec {
     "llm_dedup_codebook_log" -> 8,
     "llm_dedup_exact" -> 2,
     "llm_dedup_fuzzy" -> 4,
-    "llm_dedup_jaccard" -> 39,
+    "llm_dedup_jaccard" -> 14,
     "llm_dedup_jaccard_est" -> 4,
     "llm_dedup_simhash" -> 1,
     // r6 fingerprint-collapse rewrite: the cached fp/groups subtrees
