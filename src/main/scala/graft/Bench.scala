@@ -1,24 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // r16 (VERDICT r15 #1): the r15 2-minute periodic-GC conf that
-      // bounded the ContextCleaner backlog is GONE — dead
-      // shuffle/broadcast registrations are now released
-      // DETERMINISTICALLY between runs (Caches.release below) and in
-      // the streaming operators' own teardown
-      // (StreamingShim.releaseSince), so no harness GC is needed.
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session("graft-bench", Some(graft.core.Session.envWidth))
     // Warm the JVM (codegen, parquet reader, shuffle paths) so the
     // first measured query doesn't carry one-time JIT cost.
     def calJob(): Unit = {
@@ -66,9 +50,8 @@ object Bench {
                  catch { case _: Throwable => false }
         val dt = (System.nanoTime() - t0) / 1e9
         graft.core.Caches.drain(spark)
-        // r16: deterministic release of ALL dead shuffle/broadcast
-        // registrations between runs — replaces the r15 periodic-GC
-        // conf (see session builder above). Outside the timed region.
+        // release every dead shuffle/broadcast registration between
+        // runs, outside the timed region
         graft.core.Caches.release(spark)
         if (ok) dt else -1.0
       }
@@ -97,10 +80,8 @@ object Bench {
       String.format(java.util.Locale.ROOT, "%.2f", Double.box(x))
     def f4(x: Double): String =
       String.format(java.util.Locale.ROOT, "%.4f", Double.box(x))
-    // Per-query loadavg (r16 — VERDICT r15 #8): loadSamples(i+1) was
-    // read right after query i finished, so a contention window like
-    // r15's agg_s*/agg_t* cluster is self-diagnosing from the
-    // artifact instead of needing a judge-side forensic pass.
+    // Per-query loadavg: loadSamples(i+1) was read right after query i
+    // finished, so a contention window shows in the artifact itself.
     val loadByName = selected.map(_._1).zip(loadSamples.drop(1)).toMap
     val loadsObj = byCost
       .map { case (k, _) => s"\"" + k + "\":" + f2(loadByName(k)) }
@@ -115,14 +96,11 @@ object Bench {
     val line =
       s"""{"loads":$loadsObj,"queries":$qs,"sf":"$sfDir","runs":$runs,"estimator":"min","loadavg":$load,"loadavg_max":$loadMax,"loadavg_mean":$loadMean,"calibration_sec":$cal,"metric":"total","value":$total,"unit":"sec"}"""
     println(line)
-    // FINAL COMPACT LINE (r16 — VERDICT r15 #2: the driver has parsed
-    // null out of every bench since r10 — sbt's "[info] " logger
-    // prefix plus the full line outgrowing the 2000-char tail window
-    // defeated its JSON parser). Two fixes land together: build.sbt
-    // routes forked stdout RAW (outputStrategy := StdoutOutput, no
-    // prefix), and this line — complete, ≤ ~1.7 KB, printed LAST —
-    // carries the whole driver contract (metric/value/unit/queries/
-    // sf) restricted to the top 40 queries by cost plus their
+    // FINAL COMPACT LINE: the full line outgrows a 2000-char tail
+    // window, so this one — complete, ≤ ~1.7 KB, printed LAST,
+    // unprefixed because build.sbt routes forked stdout raw — carries
+    // the whole result contract (metric/value/unit/queries/sf)
+    // restricted to the top 40 queries by cost plus their
     // loadavg samples (array aligned with the queries object order).
     // The full 292-query profile stays in the first line and in
     // BENCH_local.json.

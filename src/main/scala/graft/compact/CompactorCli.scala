@@ -72,19 +72,28 @@ object CompactorCli {
       case Left(err) =>
         out(err)
         1
-      case Right((config, _)) =>
-        val result = Compactor.run(spark, config)
-        result.partitions.foreach(p =>
-          out(s"${if (p.ok) "OK  " else "FAIL"} ${if (p.partition.isEmpty) "/" else p.partition} " +
-            s"${p.inputFiles} -> ${p.outputFiles} files, ${p.rows} rows: ${p.message}"))
-        if (result.ok) 0 else 2
+      case Right((config, _)) => compact(config, spark, out)
     }
 
-  def main(args: Array[String]): Unit = {
-    val local = args.contains("--runningLocally")
-    val builder = SparkSession.builder().appName("graft-compactor")
-    val spark = (if (local) builder.master("local[*]") else builder).getOrCreate()
-    val code = try run(args, spark) finally spark.stop()
-    if (code != 0) sys.exit(code)
+  private def compact(config: Compactor.Config, spark: SparkSession,
+                      out: String => Unit): Int = {
+    val result = Compactor.run(spark, config)
+    result.partitions.foreach(p =>
+      out(s"${if (p.ok) "OK  " else "FAIL"} ${if (p.partition.isEmpty) "/" else p.partition} " +
+        s"${p.inputFiles} -> ${p.outputFiles} files, ${p.rows} rows: ${p.message}"))
+    if (result.ok) 0 else 2
+  }
+
+  /** Parses once, before any session starts: a bad argv prints usage
+    * and exits 1 without starting Spark. */
+  def main(args: Array[String]): Unit = parse(args) match {
+    case Left(err) =>
+      System.err.println(err)
+      sys.exit(1)
+    case Right((config, local)) =>
+      val width = if (local) Some(Runtime.getRuntime.availableProcessors) else None
+      val spark = graft.core.Session("graft-compactor", width)
+      val code = try compact(config, spark, println) finally spark.stop()
+      if (code != 0) sys.exit(code)
   }
 }

@@ -25,8 +25,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * llm_sim_search's oracle).
   *
   * Registered as a SQL function via [[graft.plans.GraftExtensions]]
-  * (`spark.sql.extensions`) or imperatively with
-  * [[graft.plans.GraftExtensions.ensureRegistered]].
+  * (`spark.sql.extensions`, set by [[graft.core.Session]]).
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {

@@ -107,7 +107,6 @@ object Dedup {
     * (dropped downstream at the band filter). */
   private[graft] def signaturesNative(docs: DataFrame, idCol: String,
                                       textCol: String): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(docs.sparkSession)
     docs.select(col(idCol).as("doc_id"),
       expr(s"graft_minhash8(lower(`$textCol`))").as("sig"))
   }
@@ -434,7 +433,6 @@ object Dedup {
     import graft.sources.TxnLog
     val sigDdl = "doc_id BIGINT,digest STRING,sig ARRAY<STRING>"
     def sigsOf(docs: DataFrame): DataFrame = {
-      graft.plans.GraftExtensions.ensureRegistered(docs.sparkSession)
       docs.select(col("doc_id"),
         md5(lower(trim(col("text")))).as("digest"),
         expr("graft_minhash8(lower(text))").as("sig"))
@@ -867,7 +865,6 @@ object Dedup {
     * pipeline's absence semantics for token-less docs without putting
     * the kernel itself into a pushdown-cloned filter. */
   private def simhashFingerprints(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     Tables.documents(spark, dir)
       .where(size(filter(split(lower(col("text")), " "), t => t =!= "")) > 0)
       .select(col("doc_id"), expr("graft_simhash16(lower(text))").as("simhash"))
@@ -1330,7 +1327,6 @@ object Dedup {
   /** Frame-generic core of [[dedupEmbed]] — the spec seam (synthetic
     * corpora exercise the cap/recall trade the fixture cannot). */
   private[graft] def dedupEmbedOn(e: DataFrame, cap: Int): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(e.sparkSession)
     // r16 (§2.2): the probe leg streamed the raw scan — one split on a
     // small-file corpus — so the within-cell cosine join ran
     // single-threaded. An explicit-width repartition on label (conf

@@ -256,7 +256,6 @@ object Similarity {
     * simSearch's oracle — the sequential fold order makes the native,
     * built-in, and DuckDB cosines bit-identical. */
   def simSearchNative(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val e = Tables.embeddings(spark, dir)
     val q = e.where(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("ea"))
@@ -308,7 +307,6 @@ object Similarity {
     * of n; recall is probabilistic (angle-close vectors agree on most
     * signs), which is the standard ANN trade. */
   def simSearchLsh(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"), bucketExpr.as("bucket"))
     val q = e.where(col("vec_id") < 10)
@@ -362,7 +360,6 @@ object Similarity {
     * across probes: a vector lives in exactly one bucket and the 9
     * probed buckets are distinct. */
   def simSearchLshProbe(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"), bucketExpr.as("bucket"))
     val probes = array(lit(0) +: (0 until 8).map(k => lit(1 << k)): _*)
@@ -485,7 +482,6 @@ object Similarity {
   }
 
   def simSearchIvf(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val e = Tables.embeddings(spark, dir)
     ivfSearch(e, seedCentroids(e))
   }
@@ -596,7 +592,6 @@ object Similarity {
       .select(col("cent_id"), col("ce"))
 
   def simSearchIvfTrained(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val e = Tables.embeddings(spark, dir)
     ivfSearch(e, trainedCentroids(spark, dir))
   }
@@ -680,7 +675,6 @@ object Similarity {
 
   private[graft] def dedupEmbedRetrainedOn(e: DataFrame, nlist: Int,
                                            cap: Int): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(e.sparkSession)
     nnWithinCells(e, retrainedCodebook(e, nlist), cap)
   }
 
@@ -689,7 +683,6 @@ object Similarity {
     * [[annLogRoot]] store: train once, advance by the log, broadcast
     * everywhere). */
   def dedupEmbedRetrained(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val e = Tables.embeddings(spark, dir)
     // r14: the retrained codebook is a txn-log table in the shared
     // artifact store ([[annLogRoot]], maintained by
@@ -813,7 +806,6 @@ object Similarity {
       CodebookAdvance(TxnLog.commitStreamBatch(cbRoot, appId, tip,
         Seq.empty, "cbup"), retrained = false)
     else {
-      graft.plans.GraftExtensions.ensureRegistered(spark)
       val cb = retrainedCodebook(TxnLog.read(spark, corpusRoot, tip),
         nlist)
       CodebookAdvance(Some(TxnLog.writeOverwrite(spark, cbRoot, cb,
@@ -866,7 +858,6 @@ object Similarity {
             s"up-to-date re-run must be a zero-commit no-op: $a3")
         }
       }
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     nnWithinCells(TxnLog.read(spark, s"$root/corpus"),
       TxnLog.read(spark, s"$root/codebook")
         .select(col("cent_id"), col("ce")),
@@ -962,7 +953,6 @@ object Similarity {
       ArtifactAdvance(TxnLog.commitStreamBatch(artRoot, appId, tip,
         Seq.empty, "artup"), retrained = false)
     else {
-      graft.plans.GraftExtensions.ensureRegistered(spark)
       val art = train(TxnLog.read(spark, corpusRoot, tip))
       ArtifactAdvance(Some(TxnLog.writeOverwrite(spark, artRoot, art,
         "artup", f"art$tip%08d", txn = Some((appId, tip.toLong)))),
@@ -1020,7 +1010,6 @@ object Similarity {
       if (codesTip < 1) 0L
       else TxnLog.stateAt(codesRoot, codesTip).txns.getOrElse(appId, 0L)
     if (consumed >= tip) return CodesAdvance(None, "noop", 0L)
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     if (consumed < 1) {
       val all = TxnLog.read(spark, corpusRoot, tip)
       val n = all.count()
@@ -1084,7 +1073,6 @@ object Similarity {
             s"_k${PqK}_m${PqM}_d${PqD}_it${PqTrainIters}_s${PqScale}" +
             s"_c$PqCoordScale") { target =>
         import graft.sources.TxnLog
-        graft.plans.GraftExtensions.ensureRegistered(spark)
         val e = Tables.embeddings(spark, dir)
         val corpus = s"$target/corpus"
         new java.io.File(corpus).mkdirs()
@@ -1244,7 +1232,6 @@ object Similarity {
     * BIGINT sum — the same order-free discipline as the Lloyd means.
     * One scalar broadcast cross-join + one cell-keyed aggregate. */
   def embedCluster(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val e = Tables.embeddings(spark, dir)
     assignCells(e, trainedCentroids(spark, dir))
       .groupBy(col("cell"))
@@ -1267,7 +1254,6 @@ object Similarity {
     * Relational.aggCorr]] discipline), so the 2σ cut cannot straddle
     * engines. Shape: cell-keyed aggregate + 16-row broadcast back. */
   def embedOutliers(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val e = Tables.embeddings(spark, dir)
     val asg = assignCells(e, trainedCentroids(spark, dir))
       .withColumn("q", expr("CAST(floor(ccos * 1000000 + 0.5) AS BIGINT)"))
@@ -1331,7 +1317,6 @@ object Similarity {
     * reports for the seed vs trained codebook. */
   private[graft] def ivfScannedPairs(spark: SparkSession, dir: String,
                                      lloydRounds: Int): Long = {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val e = Tables.embeddings(spark, dir)
     val cent = lloydChain(e, lloydRounds)
     probeCells(e, cent).join(assignCells(e, cent), "cell")
@@ -1599,7 +1584,6 @@ object Similarity {
   def lshTopK(spark: SparkSession, dir: String, k: Int,
               bitsPerTable: Int = 4, tables: Int = 8,
               oneBitProbe: Boolean = false): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     def bucketOf(t: Int): Column = {
       val signs = (0 until bitsPerTable).map { j =>
         val normal = (0 until EmbedDim).map(i => planeVal(t, j, i))
@@ -1661,7 +1645,6 @@ object Similarity {
   def cosineTopK(queryDf: DataFrame, queryId: String, queryVec: String,
                  candDf: DataFrame, candId: String, candVec: String,
                  k: Int, excludeSelf: Boolean = true): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(queryDf.sparkSession)
     val q = queryDf.select(col(queryId).as("query_id"), col(queryVec).as("qv"))
       .where(col("query_id").isNotNull)
     val c = candDf.select(col(candId).as("cand_id"), col(candVec).as("cv"))

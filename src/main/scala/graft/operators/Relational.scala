@@ -781,7 +781,6 @@ object Relational {
     * viable against deep per-key history at 100 TB. Same oracle as the
     * window emulation. */
   def joinAsofNative(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val e = Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("ts"))
     val o = Tables.orders(spark, dir)
@@ -800,7 +799,6 @@ object Relational {
     * bound as the backward mode — direction only flips which side of
     * the time comparison is retained. */
   def joinAsofFwd(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val e = Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("ts"))
     val o = Tables.orders(spark, dir)
@@ -913,7 +911,6 @@ object Relational {
     * merge DROP right rows older than the bound instead of carrying one
     * per key forever. */
   def joinAsofTol(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val e = Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("ts"))
     val o = Tables.orders(spark, dir)
@@ -964,7 +961,6 @@ object Relational {
     * semantics are already oracle-verified per direction. At scale: 2
     * key shuffles + sorts (the merges) + 1 event-id shuffle (the zip). */
   def joinAsofNearest(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val e = Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("ts"))
     val o = Tables.orders(spark, dir)

@@ -1,21 +1,16 @@
 package graft.plans
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions.{CosineSimilarity, MinHash8Expr, SimHash16Expr}
 
-/** Session extension point for the engine's native functions —
-  * production registration is declarative:
-  *
-  * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-  * }}}
-  *
-  * after which `graft_cosine(a, b)` resolves in SQL and `expr()` on
-  * every session of that context. */
+/** Session extension point for the engine's native functions, planner
+  * strategy and SQL verbs. Registration is declarative only — the conf
+  * `spark.sql.extensions=graft.plans.GraftExtensions`, which
+  * [[graft.core.Session]] sets — after which `graft_cosine(a, b)`
+  * resolves in SQL and `expr()` on every session of that context. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -52,26 +47,4 @@ object GraftExtensions {
     (new FunctionIdentifier("graft_simhash16"),
       new ExpressionInfo(classOf[SimHash16Expr].getName, "graft_simhash16"),
       (children: Seq[Expression]) => SimHash16Expr(children.head): Expression)
-
-  /** Imperative twin of the declarative config — registers into an
-    * already-built session (idempotent); lets the query registry work
-    * against sessions whose builder didn't set spark.sql.extensions. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    Seq(cosineDescriptor, minhashDescriptor, simhashDescriptor).foreach { d =>
-      if (!reg.functionExists(d._1)) {
-        reg.registerFunction(d._1, d._2, d._3)
-      }
-    }
-    val strategies = spark.experimental.extraStrategies
-    if (!strategies.contains(org.apache.spark.sql.graft.AsofJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        strategies :+ org.apache.spark.sql.graft.AsofJoinStrategy
-    }
-    val rules = spark.experimental.extraOptimizations
-    if (!rules.contains(org.apache.spark.sql.graft.PruneAsofJoinColumns)) {
-      spark.experimental.extraOptimizations =
-        rules :+ org.apache.spark.sql.graft.PruneAsofJoinColumns
-    }
-  }
 }

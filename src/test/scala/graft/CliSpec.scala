@@ -82,6 +82,14 @@ class CliSpec extends AnyFunSuite {
     assert(plain.get("graft.test.marker") == null)
   }
 
+  test("a flag name given as another option's value is that value, not a flag") {
+    val Right((c, local)) = CompactorCli.parse(Array(
+      "--sourceFolder", "/in", "--targetFolder", "/out",
+      "--tmpFolder", "--runningLocally")): @unchecked
+    assert(c.tmpFolder == "--runningLocally")
+    assert(!local)
+  }
+
   test("defaults: dynamic file count, parquet, no overwrite") {
     val Right((c, local)) = CompactorCli.parse(Array(
       "--sourceFolder", "/in", "--targetFolder", "/out")): @unchecked

@@ -25,7 +25,6 @@ class MinHashSpec extends AnyFunSuite with SparkSpec {
 
   test("kernel null/edge semantics match the composable pipeline") {
     import spark.implicits._
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val docs = Seq(
       (1L, "only two"),              // < 3 tokens -> no signature
       (2L, "exactly three tokens"),  // one trigram
@@ -43,7 +42,6 @@ class MinHashSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("native simhash fingerprints equal the composable pipeline's") {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val composable = Dedup.simhashFingerprintsComposable(spark, sfDir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val native = Tables.documents(spark, sfDir)
@@ -59,7 +57,6 @@ class MinHashSpec extends AnyFunSuite with SparkSpec {
 
   test("kernels equal the composable pipelines on random texts (property)") {
     import spark.implicits._
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val rng = new scala.util.Random(42)
     val words = Vector("a", "bb", "ccc", "Dd", "EE", "", "ff gg", "h-h", "ii")
     val docs = (0 until 200).map { i =>

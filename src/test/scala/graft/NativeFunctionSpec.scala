@@ -19,6 +19,24 @@ class NativeFunctionSpec extends AnyFunSuite with SparkSpec {
     assert(math.abs(r - 1.0) < 1e-12)
   }
 
+  test("registry operators leave the Session-built planner state untouched") {
+    import graft.llm.Dedup
+    import graft.operators.Relational
+    import org.apache.spark.sql.graft.AsofJoinStrategy
+    Relational.joinAsofNative(spark, sfDir).count()
+    Dedup.minhashCandidates(graft.core.Tables.documents(spark, sfDir),
+      "doc_id", "text").count()
+    assert(spark.sessionState.planner.strategies
+      .count(_ == AsofJoinStrategy) == 1)
+    assert(spark.experimental.extraStrategies.isEmpty)
+    assert(spark.experimental.extraOptimizations.isEmpty)
+    val fns = spark.sql(
+      """SELECT graft_cosine(array(cast(1.0 AS FLOAT)), array(cast(1.0 AS FLOAT))),
+        |       graft_minhash8('a b c d'), graft_simhash16('a b c d')"""
+        .stripMargin).head
+    assert(fns.getDouble(0) == 1.0 && !fns.isNullAt(1) && !fns.isNullAt(2))
+  }
+
   test("orthogonal and opposite vectors") {
     val rows = spark.sql(
       """SELECT

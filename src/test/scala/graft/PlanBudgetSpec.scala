@@ -12,12 +12,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * lost equi-key fails here, deterministically, at planning time.
   *
   * Budgets are the measured pre-execution plan counts at sf0.001
-  * (PlanAudit). Counts are over the INITIAL adaptive plan, which prints
-  * duplicated exchange subtrees that AQE's exchange reuse dedups at
-  * runtime — so a budget is an upper bound on planned shuffles, not a
-  * claim of distinct runtime shuffles (llm_dedup_jaccard plans 14: the
-  * band-window and candidate exchanges print once per consuming leg,
-  * and runtime reuse runs each once). A NEW query must add a row
+  * (`runMain graft.PlanTool budget`). Counts are over the INITIAL
+  * adaptive plan, which prints duplicated exchange subtrees that AQE's
+  * exchange reuse dedups at runtime — so a budget is an upper bound on
+  * planned shuffles, not a claim of distinct runtime shuffles
+  * (llm_dedup_jaccard plans 14: the band-window and candidate
+  * exchanges print once per consuming leg, and runtime reuse runs each
+  * once). A NEW query must add a row
   * here: the `every query has a budget` test fails otherwise.
   */
 class PlanBudgetSpec extends AnyFunSuite with SparkSpec {
