@@ -14,7 +14,8 @@ import org.apache.hadoop.io.NullWritable
 import org.apache.hadoop.mapreduce.Job
 import org.apache.hadoop.mapreduce.lib.input.FileInputFormat
 import org.apache.hadoop.mapreduce.lib.output.FileOutputFormat
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.types.StructType
 
 /** Small-file compactor — the Spark-native rebuild of the reference's
@@ -255,17 +256,17 @@ object Compactor {
     val rows: Long = c.format match {
       case "avro" => compactAvroLeaf(spark, leaf, tmpOut, n, avroSchema)
       case _ =>
-        val base = parquetSchema
+        // D2/D4: one read, no cache — the record count is observed on
+        // the write job itself, like the Avro route's accumulator
+        val counted = Observation()
+        parquetSchema
           .map(s => spark.read.schema(s).parquet(leaf))
           .getOrElse(spark.read.parquet(leaf))
-          .cache() // D2: one read serves both actions
-        try {
-          val count = base.count() // D4: pre-write record count
-          base.coalesce(n).write // D3: shuffle-free merge
-            .option("compression", "snappy") // P4 parity
-            .mode("error").parquet(tmpOut)
-          count
-        } finally { base.unpersist(); () }
+          .observe(counted, count(lit(1)).as("rows"))
+          .coalesce(n).write // D3: shuffle-free merge
+          .option("compression", "snappy") // P4 parity
+          .mode("error").parquet(tmpOut)
+        counted.get("rows").asInstanceOf[Long]
     }
     log.info(part, s"read ${inputFiles.length} files -> $n files, $rows rows")
 

@@ -36,16 +36,23 @@ final class FsOps(conf: Configuration) {
       .filter(s => s.isFile && isDataFile(s.getPath.getName, ext))
 
   /** All leaf folders under root that directly contain ≥1 data file —
-    * partition discovery (reference: HDFSAvroOperations.scala:19-33). */
+    * partition discovery (reference: HDFSAvroOperations.scala:19-33).
+    * Depth-first in listing order, each leaf at its first data file —
+    * a recursive `listFiles`' order — walked with one `listStatus` per
+    * directory: `listFiles` builds a `LocatedFileStatus` per file (block
+    * locations on HDFS, a permission `stat` per file on the local FS).
+    * On S3A the trade-off flips: `listFiles` is one flat paged LIST and
+    * the walk one LIST per directory, next to the ~six `listStatus`
+    * calls `Compactor.compactLeaf` already makes per leaf. */
   def listLeafFolders(root: String, ext: String): List[String] = {
-    val it = fs.listFiles(new Path(root), true)
-    val parents = scala.collection.mutable.LinkedHashSet[String]()
-    while (it.hasNext) {
-      val s = it.next()
-      if (s.isFile && isDataFile(s.getPath.getName, ext))
-        parents += s.getPath.getParent.toString
+    val leaves = scala.collection.mutable.LinkedHashSet[String]()
+    def walk(dir: Path): Unit = fs.listStatus(dir).foreach { s =>
+      if (s.isDirectory) walk(s.getPath)
+      else if (s.isFile && isDataFile(s.getPath.getName, ext))
+        leaves += s.getPath.getParent.toString
     }
-    parents.toList
+    walk(new Path(root))
+    leaves.toList
   }
 
   /** Partition suffix of a leaf relative to the root (reference:

@@ -809,14 +809,14 @@ class TxnLogOps(val store: LogStore) {
   /** Stage `df` as ONE new data dir under `root` with a fully
     * DISTRIBUTED parquet write (a SQL INSERT can be any size — no
     * `coalesce(1)` here; small-file hygiene is OPTIMIZE's job, the
-    * posture every table format takes for its write path), then
-    * compute multi-column bounds in a single agg pass so the add
-    * publishes skipping metadata at write time. Columns getting
+    * posture every table format takes for its write path), whose one
+    * job also observes the bounds the add publishes as skipping
+    * metadata ([[writeObserved]]). Columns getting
     * stats = `statsCols` ∪ the columns the table's live files
     * already track ∪ (by default) every top-level atomic column —
     * a fresh catalog table must earn pruning from its FIRST insert,
     * not after someone remembers to configure it; all-null/
-    * unrenderable columns silently fall out ([[statsForCols]]).
+    * unrenderable columns silently fall out ([[writeObserved]]).
     * Returns None for an empty frame (the staging dir is cleaned
     * up; an empty INSERT must not commit a zero-row file that every
     * future scan pays to open).
@@ -838,12 +838,6 @@ class TxnLogOps(val store: LogStore) {
   : Option[(String, Entry)] = {
     val df = checkGuard(df0, cons, what)
     val out = s"w_$tag"
-    store.deleteDataDir(root, out) // crashed earlier attempt
-    try df.write.mode("overwrite").parquet(s"$root/$out")
-    catch { case t: Throwable =>
-      store.deleteDataDir(root, out)
-      throw unwrapCheckViolation(t).getOrElse(t)
-    }
     val tracked = stateAt(root, latestVersion(root))
       .stats.values.flatten.map(_.col).toSeq
     val atomic = df.schema.fields.collect {
@@ -856,15 +850,38 @@ class TxnLogOps(val store: LogStore) {
     }.toSeq
     val cols = (statsCols ++ tracked ++ atomic).distinct.sorted
       .filter(df.columns.contains)
-    val probe = spark.read.parquet(s"$root/$out")
-    if (probe.isEmpty) {
-      store.deleteDataDir(root, out)
-      None
-    } else {
-      val stats = statsForCols(spark, root, out, cols)
-      Some(out -> (if (stats.nonEmpty)
-        AddFile(out, Seq.empty, stats) else add(out)))
-    }
+    addOrDrop(root, out, writeObserved(df, root, out, cols, narrow = false))
+  }
+
+  /** The add for a dir [[writeObserved]] wrote, or None (the dir
+    * deleted) when the write held zero rows. */
+  private def addOrDrop(root: String, out: String,
+                        written: (Long, Seq[FileStats]))
+  : Option[(String, Entry)] = written match {
+    case (0L, _) => store.deleteDataDir(root, out); None
+    case (_, stats) => Some(out -> addOf(out, Seq.empty, stats))
+  }
+
+  /** The add publishing `out`: rich when it carries a partition tuple
+    * or bounds, plain otherwise. */
+  private def addOf(out: String, part: Seq[(String, String)],
+                    stats: Seq[FileStats]): Entry =
+    if (part.nonEmpty || stats.nonEmpty) AddFile(out, part, stats)
+    else add(out)
+
+  /** Write `df`, a row-level rewrite of live file `f`, as `out`: the
+    * add carries the bounds `f` published, and `f`'s partition tuple
+    * only where the output's own bounds prove each k=v still uniform
+    * (min == max == v) — a written row may carry another value. */
+  private def writeRewrite(df: DataFrame, root: String, out: String,
+                           st: State, f: String): (String, Entry) = {
+    val part = st.parts.getOrElse(f, Seq.empty)
+    val statCols = st.stats.getOrElse(f, Seq.empty).map(_.col)
+    val (_, all) = writeObserved(df, root, out,
+      (statCols ++ part.map(_._1)).distinct.filter(df.columns.contains))
+    val keptPart = part.filter { case (k, v) =>
+      all.exists(s => s.col == k && s.min == v && s.max == v) }
+    out -> addOf(out, keptPart, all.filter(s => statCols.contains(s.col)))
   }
 
   /** Engine-side APPEND of a DataFrame — the verb behind the V2
@@ -878,9 +895,9 @@ class TxnLogOps(val store: LogStore) {
     * empty frame is a NO-OP returning −1. Returns the committed
     * version.
     *
-    * Scale shape: the data write is `df`'s own distributed plan; the
-    * stats pass is one agg over the staged file; the commit is one
-    * conditional-put log line. */
+    * Scale shape: the data write is `df`'s own distributed plan, and
+    * its one job also yields the row count and bounds; the commit is
+    * one conditional-put log line. */
   def writeAppend(spark: SparkSession, root: String, df: DataFrame,
                   session: String, tag: String,
                   evolve: Boolean = false,
@@ -1023,11 +1040,8 @@ class TxnLogOps(val store: LogStore) {
         raise_error(lit(s"${CheckViolationTag}replaceWhere: an input " +
           s"row falls OUTSIDE the replaced region (${filters.mkString(" AND ")})"))
           .cast("int")).otherwise(lit(1)) >= 1))
-    val staged =
-      try stageWrite(spark, root, guarded, tag, Seq.empty,
-        st.constraints, "replaceWhere")
-      catch { case t: Throwable =>
-        throw unwrapCheckViolation(t).getOrElse(t) }
+    val staged = stageWrite(spark, root, guarded, tag, Seq.empty,
+      st.constraints, "replaceWhere")
     try {
       val candidates = TxnTableRelation.pruneForSt(st, filters)._1
       val predSafe = coalesce(pred, lit(false))
@@ -1049,18 +1063,12 @@ class TxnLogOps(val store: LogStore) {
           .zipWithIndex.map { case ((f, _, _), i) =>
             () => {
               val out = f"${outBase}_k$i%04d"
-              store.deleteDataDir(root, out)
               val raw = scanWithDVs(spark, root, st, Seq(f))
               val fileDf = st.schemaDdl.map(StructType.fromDDL)
                 .map(projectTo(raw, _)).getOrElse(raw)
-              fileDf.where(!predSafe).coalesce(1)
-                .write.mode("overwrite").parquet(s"$root/$out")
-              val part = st.parts.getOrElse(f, Seq.empty)
-              val stats = statsForCols(spark, root, out,
-                st.stats.getOrElse(f, Seq.empty).map(_.col))
-              out -> (if (part.nonEmpty || stats.nonEmpty)
-                AddFile(out, part, stats)
-              else add(out))
+              val (_, stats) = writeObserved(fileDf.where(!predSafe),
+                root, out, st.stats.getOrElse(f, Seq.empty).map(_.col))
+              out -> addOf(out, st.parts.getOrElse(f, Seq.empty), stats)
             }
           })
       if (touched.isEmpty && staged.isEmpty)
@@ -2277,7 +2285,6 @@ class TxnLogOps(val store: LogStore) {
     val outName = f"c${base + 1}%08d" + s"_$session"
     def writeBin(part: Seq[(String, String)], files: Seq[String],
                  out: String): Entry = {
-      store.deleteDataDir(root, out) // crashed earlier attempt
       // per-file scans unioned in NAME order, then a narrow
       // coalesce(1): deterministic row order (a multi-path scan packs
       // splits by SIZE, which would scramble clustering run order)
@@ -2291,16 +2298,13 @@ class TxnLogOps(val store: LogStore) {
       // rows and the vectors retire with their files
       val df = files.sorted.map(f => scanWithDVs(spark, root, st, Seq(f)))
         .reduce(_.unionByName(_, allowMissingColumns = true))
-      df.coalesce(1).write.mode("overwrite").parquet(s"$root/$out")
-      // stats survive OPTIMIZE too: recompute bounds for every column
-      // the bin's inputs published (restricted to the output schema),
-      // ONE agg over the fresh output
+      // stats survive OPTIMIZE too: the rewrite's own job observes
+      // bounds for every column the bin's inputs published (restricted
+      // to the output schema)
       val cols = files.flatMap(f => st.stats.getOrElse(f, Seq.empty)
           .map(_.col)).distinct.sorted
         .filter(df.schema.fieldNames.contains)
-      val stats = statsForCols(spark, root, out, cols)
-      if (part.nonEmpty || stats.nonEmpty) AddFile(out, part, stats)
-      else add(out)
+      addOf(out, part, writeObserved(df, root, out, cols)._2)
     }
     val named = bins.zipWithIndex.map { case ((part, files), i) =>
       (part, files,
@@ -2433,7 +2437,7 @@ class TxnLogOps(val store: LogStore) {
       // (the cells are its partitions), not one serialized Spark job
       // per cell (VERDICT r11 #2: an unpartitioned table with 256
       // cells paid 256 tiny jobs plus a full re-read of the bytes it
-      // had just written). Same rendering as [[statsForCols]] (the
+      // had just written). Same rendering as [[writeObserved]] (the
       // column's own string cast), same skip rule (all-null or
       // codec-rejected bounds publish nothing — absence only costs a
       // scan).
@@ -2480,26 +2484,58 @@ class TxnLogOps(val store: LogStore) {
       adds.map(_._1), session, maxAttempts, readDvs = st.dvs)
   }
 
-  /** Bounds for several columns of one data dir in a SINGLE agg pass
-    * — the multi-column [[statsFor]]. Columns whose bounds cannot be
-    * published (all-null, or a rendering the log line codec rejects)
-    * are silently skipped: stats are an optimization, absence only
-    * costs a scan (the conservative direction). */
-  private def statsForCols(spark: SparkSession, root: String,
-                           file: String, cols: Seq[String])
-  : Seq[FileStats] = {
-    if (cols.isEmpty) return Seq.empty
-    val aggs = cols.flatMap(c => Seq(min(col(c)).cast("string"),
-      max(col(c)).cast("string"))) :+ count(lit(1))
-    val r = spark.read.parquet(s"$root/$file")
-      .agg(aggs.head, aggs.tail: _*).head()
-    val n = r.getLong(2 * cols.size)
-    cols.zipWithIndex.flatMap { case (c, i) =>
-      if (n == 0L || r.isNullAt(2 * i) || r.isNullAt(2 * i + 1)) None
-      else scala.util.Try(
-        FileStats(c, r.getString(2 * i), r.getString(2 * i + 1), n))
-        .toOption
-    }
+  /** Write `df` as the parquet data dir `root/out` (one `coalesce(1)`
+    * task unless `narrow = false`), replacing a crashed earlier attempt
+    * and deleting its own output on failure (a [[checkGuard]] abort
+    * surfaces as the constraint's refusal). Returns the row count and
+    * `cols`' bounds ([[statsFor]]'s rendering) observed on the write
+    * job's result stage, whose accumulators count each partition once.
+    * An all-null column, a zero-row write or a rendering [[FileStats]]
+    * rejects publishes no bound: absence only costs a scan. */
+  private def writeObserved(df: DataFrame, root: String, out: String,
+                            cols: Seq[String], narrow: Boolean = true)
+  : (Long, Seq[FileStats]) = {
+    val obs = org.apache.spark.sql.Observation()
+    val aggs = cols.zipWithIndex.flatMap { case (c, i) =>
+      Seq(min(col(c)).cast("string").as(s"min$i"),
+        max(col(c)).cast("string").as(s"max$i"))
+    } :+ count(lit(1)).as("rows")
+    val observed = df.observe(obs, aggs.head, aggs.tail: _*)
+    val sc = df.sparkSession.sparkContext
+    val tag = s"graft-write-${java.util.UUID.randomUUID}"
+    store.deleteDataDir(root, out) // crashed earlier attempt
+    sc.addJobTag(tag)
+    try (if (narrow) observed.coalesce(1) else observed)
+      .write.mode("overwrite").parquet(s"$root/$out")
+    catch { case t: Throwable =>
+      awaitTasks(sc, tag)
+      store.deleteDataDir(root, out)
+      throw unwrapCheckViolation(t).getOrElse(t)
+    } finally sc.removeJobTag(tag)
+    val r = obs.get
+    val n = r("rows").asInstanceOf[Long]
+    (n, cols.indices.flatMap { i =>
+      (r(s"min$i"), r(s"max$i")) match {
+        case (lo: String, hi: String) if n > 0L =>
+          scala.util.Try(FileStats(cols(i), lo, hi, n)).toOption
+        case _ => None
+      }
+    })
+  }
+
+  /** Wait (up to a minute) until no task of the jobs tagged `tag`
+    * still runs: a failed job returns while its other tasks run on,
+    * and one of them can still create files under the output dir. */
+  private def awaitTasks(sc: org.apache.spark.SparkContext,
+                         tag: String): Unit = {
+    val giveUp = System.nanoTime + 60L * 1000 * 1000 * 1000
+    // after the drain the status store has seen every task start
+    org.apache.spark.sql.graft.StreamingShim.drainListenerBus(sc, 60000L)
+    val st = sc.statusTracker
+    while (System.nanoTime < giveUp && st.getJobIdsForTag(tag).exists(j =>
+        st.getJobInfo(j).exists(_.stageIds.exists(s =>
+          st.getStageInfo(s).exists(_.numActiveTasks > 0)))))
+      Thread.sleep(10)
   }
 
   /** Row-level MERGE (copy-on-write upsert — the most common
@@ -2814,44 +2850,26 @@ class TxnLogOps(val store: LogStore) {
           .map(o => source.join(o.where(col("__owner") === f),
             keyCols, "left_semi"))
           .getOrElse(source.limit(0))
-        store.deleteDataDir(root, out) // crashed earlier attempt
-        kept.unionByName(replacements.select(cols: _*))
-          .coalesce(1).write.mode("overwrite").parquet(s"$root/$out")
-        val part = st.parts.getOrElse(f, Seq.empty)
-        val statCols = st.stats.getOrElse(f, Seq.empty).map(_.col)
-        val present = fileDf.columns.toSet
-        val all = statsForCols(spark, root, out,
-          ((statCols ++ part.map(_._1)).distinct).filter(present))
-        val keptPart = part.filter { case (k, v) =>
-          all.exists(s => s.col == k && s.min == v && s.max == v) }
-        val stats = all.filter(s => statCols.contains(s.col))
-        out -> (if (keptPart.nonEmpty || stats.nonEmpty)
-          AddFile(out, keptPart, stats)
-        else add(out))
+        writeRewrite(kept.unionByName(replacements.select(cols: _*)),
+          root, out, st, f)
       }
     }
     val rewrites: Seq[(String, Entry)] = inPool(rewriteTasks)
     // a matched key is never an insert, whatever clauses fired
-    val inserts0 = probe
+    val inserts = probe
       .map(p => source.join(p.select(keyCols.map(col): _*), keyCols,
         "left_anti"))
       .getOrElse(source)
-    val inserts = if (insertUnmatched) inserts0 else source.limit(0)
     val insertOut: Option[(String, Entry)] =
-      if (inserts.isEmpty) None
+      if (!insertUnmatched) None
       else {
         val out = s"${outBase}_ins"
-        store.deleteDataDir(root, out)
-        inserts.coalesce(1).write.mode("overwrite").parquet(s"$root/$out")
         // the insert file publishes bounds for every column the
         // table's live files track (∩ its schema) — no partition
         // tuple: one insert file may span partitions
         val statCols = st.stats.values.flatten.map(_.col).toSeq
           .distinct.sorted.filter(inserts.columns.contains)
-        val stats = statsForCols(spark, root, out, statCols)
-        Some(out ->
-          (if (stats.nonEmpty) AddFile(out, Seq.empty, stats)
-          else add(out)))
+        addOrDrop(root, out, writeObserved(inserts, root, out, statCols))
       }
     probe.foreach(_.unpersist())
     owners.foreach(_.unpersist())
@@ -2966,7 +2984,6 @@ class TxnLogOps(val store: LogStore) {
     val nuAssigns = nmbsUpdate.map(_._2.toMap).getOrElse(Map.empty)
     def rewriteTask(f: String, i: Int): () => (String, Entry) = () => {
       val out = f"${outBase}_g$i%04d"
-      store.deleteDataDir(root, out) // crashed earlier attempt
       val raw = scanWithDVs(spark, root, st, Seq(f))
       val fileDf = tableSchema.map(projectTo(raw, _)).getOrElse(raw)
       val cols = fileDf.columns.toSeq
@@ -2989,19 +3006,7 @@ class TxnLogOps(val store: LogStore) {
         when(updC, updVal).when(nuC, nuVal).otherwise(col(c)).as(c)
       }
       val kept = j.where(!delC && !ndC).select(outCols: _*)
-      checkGuard(kept, cons, "merge").coalesce(1)
-        .write.mode("overwrite").parquet(s"$root/$out")
-      val part = st.parts.getOrElse(f, Seq.empty)
-      val statCols = st.stats.getOrElse(f, Seq.empty).map(_.col)
-      val present = fileDf.columns.toSet
-      val all = statsForCols(spark, root, out,
-        ((statCols ++ part.map(_._1)).distinct).filter(present))
-      val keptPart = part.filter { case (k, v) =>
-        all.exists(s => s.col == k && s.min == v && s.max == v) }
-      val stats = all.filter(s => statCols.contains(s.col))
-      out -> (if (keptPart.nonEmpty || stats.nonEmpty)
-        AddFile(out, keptPart, stats)
-      else add(out))
+      writeRewrite(checkGuard(kept, cons, "merge"), root, out, st, f)
     }
     val rewrites: Seq[(String, Entry)] =
       try inPool(rewriteFiles.zipWithIndex.map {
@@ -3009,7 +3014,7 @@ class TxnLogOps(val store: LogStore) {
       catch { case t: Throwable =>
         rewriteFiles.indices.foreach(i =>
           store.deleteDataDir(root, f"${outBase}_g$i%04d"))
-        throw unwrapCheckViolation(t).getOrElse(t)
+        throw t
       }
     // inserts: source keys absent from every candidate file (the
     // stats prune is sound — a pruned file provably holds no source
@@ -3024,30 +3029,20 @@ class TxnLogOps(val store: LogStore) {
     val inserts1 = insertWhen
       .map(c => inserts0.where(coalesce(c, lit(false))))
       .getOrElse(inserts0)
-    val inserts = if (insertUnmatched) inserts1 else source.limit(0)
     val insertOut: Option[(String, Entry)] =
-      if (inserts.isEmpty) None
+      if (!insertUnmatched) None
       else {
         val out = s"${outBase}_gins"
-        store.deleteDataDir(root, out)
         val aligned = tableSchema.map { sch =>
           sch.fieldNames.foreach(c => require(
-            inserts.columns.contains(c),
+            inserts1.columns.contains(c),
             s"merge insert: source lacks table column $c"))
-          inserts.select(sch.fieldNames.toSeq.map(col): _*)
-        }.getOrElse(inserts)
-        try checkGuard(aligned, cons, "merge").coalesce(1)
-          .write.mode("overwrite").parquet(s"$root/$out")
-        catch { case t: Throwable =>
-          store.deleteDataDir(root, out)
-          throw unwrapCheckViolation(t).getOrElse(t)
-        }
+          inserts1.select(sch.fieldNames.toSeq.map(col): _*)
+        }.getOrElse(inserts1)
         val statCols = st.stats.values.flatten.map(_.col).toSeq
           .distinct.sorted.filter(aligned.columns.contains)
-        val stats = statsForCols(spark, root, out, statCols)
-        Some(out ->
-          (if (stats.nonEmpty) AddFile(out, Seq.empty, stats)
-          else add(out)))
+        addOrDrop(root, out, writeObserved(checkGuard(aligned, cons, "merge"),
+          root, out, statCols))
       }
     val outs = rewrites ++ insertOut.toSeq
     if (outs.isEmpty && pure.isEmpty)
@@ -3085,9 +3080,10 @@ class TxnLogOps(val store: LogStore) {
     * bounded by the PARTITION count (metadata, like every table
     * format's), never the row count. Partition values render with
     * `toString` and must be quote/newline/`=`/`/`-free (the
-    * [[TxnLog.AddFile]] contract); `statsCols` must be non-null in
-    * every slice ([[statsFor]] fails loudly otherwise). Returns the
-    * committed version. */
+    * [[TxnLog.AddFile]] contract); a `statsCols` column that is
+    * all-null in a slice publishes no bound for that slice, like every
+    * other writer ([[writeObserved]]). Returns the committed
+    * version. */
   def commitPartitionedAppend(spark: SparkSession, root: String,
                               df: DataFrame, partCols: Seq[String],
                               statsCols: Seq[String], session: String,
@@ -3116,12 +3112,10 @@ class TxnLogOps(val store: LogStore) {
     val outBase = f"a${latestVersion(root) + 1}%08d" + s"_$session"
     def writeSlice(tuple: Seq[(String, Any, String)], out: String)
     : TxnLog.AddFile = {
-      store.deleteDataDir(root, out) // crashed earlier attempt
-      checkGuard(df.where(tuple.map { case (c, v, _) => col(c) <=> lit(v) }
-          .reduce(_ && _)), cons, "partitioned append")
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/$out")
-      TxnLog.AddFile(out, tuple.map { case (c, _, s) => c -> s },
-        statsCols.map(statsFor(spark, root, out, _)))
+      val (_, stats) = writeObserved(
+        checkGuard(df.where(tuple.map { case (c, v, _) => col(c) <=> lit(v) }
+          .reduce(_ && _)), cons, "partitioned append"), root, out, statsCols)
+      TxnLog.AddFile(out, tuple.map { case (c, _, s) => c -> s }, stats)
     }
     val named = tuples.zipWithIndex.map { case (t, i) =>
       t -> f"${outBase}_t$i%04d" }
@@ -3129,7 +3123,7 @@ class TxnLogOps(val store: LogStore) {
       try inPool(named.map { case (t, n) => () => writeSlice(t, n) })
       catch { case t: Throwable =>
         named.foreach { case (_, n) => store.deleteDataDir(root, n) }
-        throw unwrapCheckViolation(t).getOrElse(t)
+        throw t
       }
     commitNext(root, adds, session, maxAttempts)
   }
@@ -3280,7 +3274,6 @@ class TxnLogOps(val store: LogStore) {
         .zipWithIndex.map { case ((f, _, _), i) =>
           () => {
             val out = f"${outBase}_k$i%04d"
-            store.deleteDataDir(root, out) // crashed earlier attempt
             // rewrite under the TABLE schema when the log carries one:
             // an arbitrary predicate may reference an evolved column a
             // file of an older generation lacks physically — the
@@ -3292,15 +3285,10 @@ class TxnLogOps(val store: LogStore) {
               .map(projectTo(raw, _)).getOrElse(raw)
             // survivors re-select the FILE's columns: a subquery prep
             // may have attached membership columns for the predicate
-            prep(fileDf).where(!pred)
-              .select(fileDf.columns.toSeq.map(col): _*)
-              .coalesce(1).write.mode("overwrite").parquet(s"$root/$out")
-            val part = st.parts.getOrElse(f, Seq.empty)
-            val stats = statsForCols(spark, root, out,
+            val (_, stats) = writeObserved(prep(fileDf).where(!pred)
+                .select(fileDf.columns.toSeq.map(col): _*), root, out,
               st.stats.getOrElse(f, Seq.empty).map(_.col))
-            out -> (if (part.nonEmpty || stats.nonEmpty)
-              AddFile(out, part, stats)
-            else add(out))
+            out -> addOf(out, st.parts.getOrElse(f, Seq.empty), stats)
           }
         })
     beforeCommit()
@@ -3543,22 +3531,8 @@ class TxnLogOps(val store: LogStore) {
     val rewriteTasks = touched.zipWithIndex.map { case (f, i) =>
       () => {
         val out = f"${outBase}_r$i%04d"
-        store.deleteDataDir(root, out) // crashed earlier attempt
-        val fileDf = scanWithDVs(spark, root, st, Seq(f))
-        checkGuard(updated(fileDf), st.constraints, "update")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$root/$out")
-        val part = st.parts.getOrElse(f, Seq.empty)
-        val statCols = st.stats.getOrElse(f, Seq.empty).map(_.col)
-        val all = statsForCols(spark, root, out,
-          (statCols ++ part.map(_._1)).distinct
-            .filter(dataCols.contains))
-        val keptPart = part.filter { case (k, v) =>
-          all.exists(s => s.col == k && s.min == v && s.max == v) }
-        val stats = all.filter(s => statCols.contains(s.col))
-        out -> (if (keptPart.nonEmpty || stats.nonEmpty)
-          AddFile(out, keptPart, stats)
-        else add(out))
+        writeRewrite(checkGuard(updated(scanWithDVs(spark, root, st, Seq(f))),
+          st.constraints, "update"), root, out, st, f)
       }
     }
     val rewrites: Seq[(String, Entry)] =
@@ -3566,7 +3540,7 @@ class TxnLogOps(val store: LogStore) {
       catch { case t: Throwable =>
         touched.indices.foreach(i =>
           store.deleteDataDir(root, f"${outBase}_r$i%04d"))
-        throw unwrapCheckViolation(t).getOrElse(t)
+        throw t
       }
     beforeCommit()
     commitRewrite(root, base + 1, touched,

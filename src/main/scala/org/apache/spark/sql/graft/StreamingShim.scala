@@ -82,6 +82,12 @@ object StreamingShim {
         .unloadAll()
   }
 
+  /** Wait up to `ms` until every listener has processed the events
+    * posted so far (`listenerBus` is `private[spark]`). */
+  def drainListenerBus(sc: org.apache.spark.SparkContext, ms: Long): Unit =
+    try sc.listenerBus.waitUntilEmpty(ms)
+    catch { case _: java.util.concurrent.TimeoutException => () }
+
   /** Driver-side registration ids currently live in this JVM —
     * shuffles from the MapOutputTracker, broadcasts from the block
     * managers (one in-process query under local mode). The pair is a

@@ -108,6 +108,45 @@ class CompactorSpec extends AnyFunSuite with SparkSpec {
     assert(res.ok, res.log.toTsv)
   }
 
+  test("listLeafFolders matches the recursive listFiles walk, order included") {
+    val base = tmpBase()
+    def touch(rel: String): Unit = {
+      val f = new File(s"$base/$rel")
+      f.getParentFile.mkdirs()
+      Files.write(f.toPath, Array[Byte](1))
+    }
+    // the root is itself a leaf, next to nested partitions, markers,
+    // checksums, dot/underscore dirs, a non-data file and an empty dir
+    Seq("root.parquet", "_SUCCESS", ".root.parquet.crc", "notes.txt",
+      "y=1/m=1/a.parquet", "y=1/m=1/b.parquet", "y=1/m=1/_SUCCESS",
+      "y=1/m=1/.a.parquet.crc", "y=1/m=2/a.parquet", "y=1/m=2/a.avro",
+      "y=2/top.parquet", "y=2/m=1/a.parquet", "y=2/m=3/only.txt",
+      "_tmp/a.parquet", ".hidden/m=9/a.parquet", "_SUCCESS_dir/x.avro")
+      .foreach(touch)
+    new File(s"$base/empty/deeper").mkdirs()
+    // the walk listLeafFolders replaced: one recursive listFiles
+    def listFilesWalk(root: String, ext: String): List[String] = {
+      val it = fsOps.fs.listFiles(new Path(root), true)
+      val parents = scala.collection.mutable.LinkedHashSet[String]()
+      while (it.hasNext) {
+        val s = it.next()
+        if (s.isFile && fsOps.isDataFile(s.getPath.getName, ext))
+          parents += s.getPath.getParent.toString
+      }
+      parents.toList
+    }
+    for (root <- Seq(base, s"$base/", s"$base/y=1", s"$base/y=1/m=1",
+         s"$base/y=2", s"$base/empty"); ext <- Seq(".parquet", ".avro")) {
+      val leaves = fsOps.listLeafFolders(root, ext)
+      assert(leaves == listFilesWalk(root, ext), s"$root $ext")
+    }
+    val all = fsOps.listLeafFolders(base, ".parquet")
+      .map(fsOps.partitionPath(base, _)).sorted
+    assert(all == List("", "/.hidden/m=9", "/_tmp", "/y=1/m=1", "/y=1/m=2",
+      "/y=2", "/y=2/m=1"))
+    assert(fsOps.listLeafFolders(s"$base/empty", ".parquet").isEmpty)
+  }
+
   test("aborts commit when the source changes mid-flight") {
     val base = tmpBase()
     sampleDf(100).repartition(2).write.parquet(s"$base/src")

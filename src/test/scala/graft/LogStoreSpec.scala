@@ -1189,6 +1189,29 @@ class LogStoreSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("commitPartitionedAppend: a stats column all-null in one slice " +
+    "publishes that slice without its bound") {
+    import spark.implicits._
+    withScratch { root =>
+      val df = Seq((1L, "eu", Some(10L)), (2L, "eu", Some(20L)),
+        (3L, "us", Option.empty[Long])).toDF("k", "region", "w")
+      assert(TxnLog.commitPartitionedAppend(spark, root, df,
+        partCols = Seq("region"), statsCols = Seq("k", "w"), "s") == 1)
+      val st = TxnLog.stateAt(root, 1)
+      val byRegion = st.parts.map { case (f, p) => p.head._2 -> f }
+      assert(st.stats(byRegion("eu")) == Seq(
+        TxnLog.FileStats("k", "1", "2", 2L),
+        TxnLog.FileStats("w", "10", "20", 2L)))
+      assert(st.stats(byRegion("us")) == Seq(
+        TxnLog.FileStats("k", "3", "3", 1L)))
+      assert(TxnLog.read(spark, root).count() == 3)
+      // the missing bound only costs a scan: a w predicate keeps us
+      val (scanned, _) = TxnLog.pruneWhere(root, 1, Seq.empty,
+        Seq(("w", "30", "40")))
+      assert(scanned == Seq(byRegion("us")))
+    }
+  }
+
   test("OPTIMIZE compacts within partitions and keeps pruning metadata") {
     import spark.implicits._
     withScratch { root =>
