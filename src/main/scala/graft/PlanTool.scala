@@ -94,7 +94,10 @@ object PlanTool {
         case NonFatal(e) =>
           failed += 1
           println(s"ERROR $name ${e.getMessage}")
-      } finally Caches.drain(spark)
+      } finally {
+        Caches.drain(spark)
+        Caches.release(spark)
+      }
     }
     if (args(0) == "md") {
       val out = args.lift(1).getOrElse("PLANS.md")

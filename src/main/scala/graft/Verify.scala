@@ -20,7 +20,10 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      finally graft.core.Caches.drain(spark) // no cache outlives its query
+      finally { // no block, shuffle or broadcast outlives its query
+        graft.core.Caches.drain(spark)
+        graft.core.Caches.release(spark)
+      }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

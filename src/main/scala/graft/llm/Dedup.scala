@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Caches, Tables}
 
 /** Deduplication operators for LLM training-data pipelines
   * (SURVEY.md §2B `llm_dedup_*`): exact, MinHash+LSH, exact-Jaccard
@@ -1034,24 +1034,6 @@ object Dedup {
        |ORDER BY doc_id""".stripMargin
   }
 
-  /** Eager localCheckpoint plus the ids of the RDD blocks it pinned, so
-    * the fixpoint loop can release round n-1 once round n materializes.
-    * (A checkpointed Dataset bypasses the CacheManager, so
-    * `Dataset.unpersist` is a no-op on it — the underlying RDD handle is
-    * the only release path, reached here via the persistent-RDD map.) */
-  private def checkpointTracked(spark: SparkSession, df: DataFrame)
-      : (DataFrame, Set[Int]) = {
-    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val cp = df.localCheckpoint()
-    val after = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    (cp, after.diff(before))
-  }
-
-  private def releaseRdds(spark: SparkSession, ids: Set[Int]): Unit = {
-    val live = spark.sparkContext.getPersistentRDDs
-    ids.foreach(id => live.get(id).foreach(_.unpersist(blocking = false)))
-  }
-
   /** Unordered (doc_id, cluster_id) connected-component labels over the
     * LSH candidate pairs, by iterative min-label propagation — shared by
     * [[dedupClusters]] (sorted dump), [[dedupApply]] (broadcast join) and
@@ -1063,10 +1045,9 @@ object Dedup {
     * parquet (immutable once renamed into place; re-staged only when
     * the source bytes change), and every call reads that fixture —
     * the shape a real pipeline uses (compute labels once, consume
-    * them many times). Disk staging
-    * rather than a pinned cache keeps the registry's drain discipline
-    * intact: after any consumer's action + [[graft.core.Caches.drain]],
-    * zero RDDs stay pinned (LlmSpec).
+    * them many times). Disk staging rather than a pinned cache means
+    * the staging body can release every block it pinned once the write
+    * completes: no RDD stays pinned after the query (LlmSpec).
     *
     * Scale/lifecycle notes for the fixpoint itself: labels and edges
     * stay distributed; rounds are bounded by component diameter (log-ish
@@ -1098,10 +1079,10 @@ object Dedup {
         // so the fingerprint must change with the code
         graft.core.Fixtures.staged(dir, "labels", codeTag = "cc_minlabel_v2") {
           target =>
-            val (labels, ids) = connectedComponentsTracked(spark,
+            val labels = connectedComponents(spark,
               minhashCandidates(Tables.documents(spark, dir), "doc_id", "text"))
             labels.write.mode("overwrite").parquet(target)
-            releaseRdds(spark, ids) // staged copy supersedes the checkpoint
+            Caches.unpin(labels) // the staged copy supersedes the checkpoint
         }
       }
     spark.read.parquet(path)
@@ -1119,27 +1100,20 @@ object Dedup {
     * undirected (doc_a, doc_b) pair frame, by the same min-label
     * propagation / checkpoint-release fixpoint the registry's clusters
     * query uses. The returned frame is backed by the final round's
-    * localCheckpoint; drain after consuming it. */
-  def connectedComponents(spark: SparkSession, pairFrame: DataFrame): DataFrame =
-    connectedComponentsTracked(spark, pairFrame)._1
-
-  /** [[connectedComponents]] plus the RDD ids of the final round's
-    * checkpoint blocks, so a caller that copies the result elsewhere
-    * (e.g. [[clusterLabels]]'s disk staging) can release them eagerly
-    * instead of waiting for a session-wide drain. */
-  private[llm] def connectedComponentsTracked(
-      spark: SparkSession, pairFrame: DataFrame): (DataFrame, Set[Int]) = {
+    * checkpoint: release it with [[graft.core.Caches.unpin]] (or a
+    * harness drain) after consuming it. */
+  def connectedComponents(spark: SparkSession, pairFrame: DataFrame): DataFrame = {
     // both directions of every pair from one pass over the pair frame
     val edges = pairFrame
       .select(explode(array(
         struct(col("doc_a"), col("doc_b")),
         struct(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))).as("e"))
       .select(col("e.doc_a").as("doc_a"), col("e.doc_b").as("doc_b"))
-    val (edgesCp, edgeIds) = checkpointTracked(spark, edges)
+    val edgesCp = Caches.pin(edges)
     // one-hop seed: each node starts at the least id among itself and
     // its neighbours, so a pair component is already at its fixed point
     // and converges in the first (check) round
-    var (labels, labelIds) = checkpointTracked(spark,
+    var labels = Caches.pin(
       edgesCp.groupBy(col("doc_a")).agg(min(col("doc_b")).as("m"))
         .select(col("doc_a").as("node"), least(col("doc_a"), col("m")).as("label")))
     var changed = 1L
@@ -1150,17 +1124,15 @@ object Dedup {
       val stepped = labels.select(col("node"), col("label")).union(prop)
         .groupBy(col("node")).agg(min(col("label")).as("label"))
         .join(labels.select(col("node"), col("label").as("old")), "node")
-      val (next, nextIds) = checkpointTracked(spark, stepped)
+      val next = Caches.pin(stepped)
       changed = next.where(col("label") =!= col("old")).count()
-      releaseRdds(spark, labelIds)
+      Caches.unpin(labels)
       labels = next.select(col("node"), col("label"))
-      labelIds = nextIds
       iter += 1
     }
     require(changed == 0, s"label propagation did not converge in $iter rounds")
-    releaseRdds(spark, edgeIds)
-    (labels.select(col("node").as("doc_id"), col("label").as("cluster_id")),
-      labelIds)
+    Caches.unpin(edgesCp)
+    labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
   }
 
   /** Near-dup clustering: connected components over the LSH candidate

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Caches, Tables}
 
 /** Similarity search + multimodal-column operators (SURVEY.md §2B
   * `llm_sim_search` / `llm_multimodal`).
@@ -926,8 +926,10 @@ object Similarity {
     * either direction since the consumed version, otherwise commit
     * ONLY the watermark (no training job is ever planned). Retrains
     * publish via the idempotent overwrite keyed (appId,
-    * corpus-version). Being txn-log tables, every artifact inherits
-    * history, time travel, and vacuum. */
+    * corpus-version), after which the trained frame's checkpoint
+    * blocks are released ([[graft.core.Caches.unpin]]) — `train` may
+    * pin its rounds and hand the last one over. Being txn-log tables,
+    * every artifact inherits history, time travel, and vacuum. */
   def advanceArtifactLog(spark: SparkSession, corpusRoot: String,
                          artRoot: String, appId: String,
                          train: DataFrame => DataFrame,
@@ -954,9 +956,10 @@ object Similarity {
         Seq.empty, "artup"), retrained = false)
     else {
       val art = train(TxnLog.read(spark, corpusRoot, tip))
-      ArtifactAdvance(Some(TxnLog.writeOverwrite(spark, artRoot, art,
-        "artup", f"art$tip%08d", txn = Some((appId, tip.toLong)))),
-        retrained = true)
+      val v = TxnLog.writeOverwrite(spark, artRoot, art,
+        "artup", f"art$tip%08d", txn = Some((appId, tip.toLong)))
+      Caches.unpin(art) // the published artifact supersedes its pins
+      ArtifactAdvance(Some(v), retrained = true)
     }
   }
 
@@ -1134,7 +1137,6 @@ object Similarity {
           "ivf", df => lloydChain(df, IvfLloydRounds)).committed.isEmpty)
         assert(advanceCodesLog(spark, corpus, s"$target/pqcodes",
           "pqc", seedEncodeOf(spark, corpus)).mode == "noop")
-        graft.core.Caches.drain(spark) // pqcb training checkpoints
       }
     }
 
@@ -1198,11 +1200,10 @@ object Similarity {
     * — [[pqTrainedCb]]'s body, df-generic for the artifact log. */
   private def trainPqCbOf(spark: SparkSession)
   : DataFrame => DataFrame = corpusDf => {
-    val coords = pqCoordsOf(corpusDf).localCheckpoint(true)
-    var cb = coords.where(col("vec_id") < PqK)
+    val coords = Caches.pin(pqCoordsOf(corpusDf))
+    var cb = Caches.pin(coords.where(col("vec_id") < PqK)
       .select(col("vec_id").cast("int").as("code"), col("m"),
-        col("i"), col("q").as("c"))
-      .localCheckpoint(true)
+        col("i"), col("q").as("c")))
     for (_ <- 1 to PqTrainIters) {
       val assign = coords
         .join(broadcast(cb), Seq("m", "i"))
@@ -1215,11 +1216,13 @@ object Similarity {
       val centers = coords.join(assign, Seq("vec_id", "m"))
         .groupBy(col("m"), col("code"), col("i"))
         .agg(expr("sum(q) div count(1)").as("cn"))
-      cb = cb.join(centers, Seq("m", "code", "i"), "left")
+      val next = Caches.pin(cb.join(centers, Seq("m", "code", "i"), "left")
         .select(col("code"), col("m"), col("i"),
-          coalesce(col("cn"), col("c")).as("c"))
-        .localCheckpoint(true)
+          coalesce(col("cn"), col("c")).as("c")))
+      Caches.unpin(cb)
+      cb = next
     }
+    Caches.unpin(coords)
     cb
   }
 
@@ -2131,9 +2134,9 @@ object Similarity {
         graft.core.Fixtures.staged(dir, "mmrpicks",
             codeTag = s"mmr_s${MmrShortlist}_k${MmrK}_lambda05_v1") {
           target =>
-            mmrCompute(spark, dir)
-              .write.mode("overwrite").parquet(target)
-            graft.core.Caches.drain(spark) // round checkpoints superseded
+            val picks = mmrCompute(spark, dir)
+            picks.write.mode("overwrite").parquet(target)
+            Caches.unpin(picks)
         }
       }
     spark.read.parquet(path)
@@ -2148,31 +2151,29 @@ object Similarity {
       col("nrm").as("nb"))
     val wQ = Window.partitionBy(col("query_id"))
       .orderBy(col("simq").desc, col("cand_id"))
-    val short = broadcast(q).join(c, col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"),
-        (Dedup.dotExpr("ea", "eb") / (col("na") * col("nb"))).as("simq"),
-        col("eb"), col("nb"))
-      .withColumn("rk", row_number().over(wQ))
-      .where(col("rk") <= MmrShortlist)
-      .select(col("query_id"), col("cand_id"), col("simq"),
-        col("eb"), col("nb"))
-      .localCheckpoint(true)
+    val short = Caches.pin(
+      broadcast(q).join(c, col("query_id") =!= col("cand_id"))
+        .select(col("query_id"), col("cand_id"),
+          (Dedup.dotExpr("ea", "eb") / (col("na") * col("nb"))).as("simq"),
+          col("eb"), col("nb"))
+        .withColumn("rk", row_number().over(wQ))
+        .where(col("rk") <= MmrShortlist)
+        .select(col("query_id"), col("cand_id"), col("simq"),
+          col("eb"), col("nb")))
     val a = short.select(col("query_id"), col("cand_id").as("ca"),
       col("eb").as("ea2"), col("nb").as("na2"))
     val b2 = short.select(col("query_id"), col("cand_id").as("cb"),
       col("eb").as("eb2"), col("nb").as("nb2"))
-    val cc = a.join(b2, "query_id").where(col("ca") =!= col("cb"))
+    val cc = Caches.pin(a.join(b2, "query_id").where(col("ca") =!= col("cb"))
       .select(col("query_id"), col("ca"), col("cb"),
-        (Dedup.dotExpr("ea2", "eb2") / (col("na2") * col("nb2"))).as("simc"))
-      .localCheckpoint(true)
+        (Dedup.dotExpr("ea2", "eb2") / (col("na2") * col("nb2"))).as("simc")))
     val wPick = Window.partitionBy(col("query_id"))
       .orderBy(col("mmr").desc, col("cand_id"))
-    var sel = short
+    var sel = Caches.pin(short
       .withColumn("mmr", lit(0.5) * col("simq"))
       .withColumn("rk", row_number().over(wPick)).where(col("rk") === 1)
       .select(col("query_id"), col("cand_id"), lit(1).as("step"),
-        col("mmr"))
-      .localCheckpoint(true)
+        col("mmr")))
     for (k <- 2 to MmrK) {
       val red = cc.join(
           sel.select(col("query_id"), col("cand_id").as("cb")),
@@ -2187,8 +2188,11 @@ object Similarity {
         .withColumn("rk", row_number().over(wPick)).where(col("rk") === 1)
         .select(col("query_id"), col("cand_id"), lit(k).as("step"),
           col("mmr"))
-      sel = sel.union(pick).localCheckpoint(true)
+      val next = Caches.pin(sel.union(pick))
+      Caches.unpin(sel)
+      sel = next
     }
+    Caches.unpin(short, cc)
     sel
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Caches, Tables}
 
 /** Graph analytics over a relational co-occurrence graph (SURVEY.md
   * §2B `graph_*`) — the capability a curation/analytics stack reaches
@@ -164,9 +164,9 @@ object Graph {
             codeTag = s"graph_cc_minlabel_mod${CompMod}_v1") { target =>
           val pairs = edges(spark, dir, CompMod)
             .select(col("src").as("doc_a"), col("dst").as("doc_b"))
-          graft.llm.Dedup.connectedComponents(spark, pairs)
-            .write.mode("overwrite").parquet(target)
-          graft.core.Caches.drain(spark) // fixpoint checkpoints superseded
+          val labels = graft.llm.Dedup.connectedComponents(spark, pairs)
+          labels.write.mode("overwrite").parquet(target)
+          Caches.unpin(labels) // the staged copy supersedes the checkpoint
         }
       }
     val labels = spark.read.parquet(path)
@@ -531,26 +531,28 @@ object Graph {
             val sym = e.select(col("src").as("u"), col("dst").as("v"))
               .union(e.select(col("dst").as("u"), col("src").as("v")))
             val deg = sym.groupBy(col("u")).agg(count(lit(1)).as("deg"))
-            val adj = sym.join(deg, "u").localCheckpoint(true)
+            val adj = Caches.pin(sym.join(deg, "u"))
             val seedQ = 15L * PrScale / 100
             def base = when(col("node") % PprSeedMod === 0, lit(seedQ))
               .otherwise(lit(0L))
-            var r = nodes.withColumn("pr", base).localCheckpoint(true)
+            var r = Caches.pin(nodes.withColumn("pr", base))
             for (_ <- 1 to PrIters) {
               val inflow = adj.join(r, col("u") === col("node"))
                 .select(col("v"), expr("pr div deg").as("c"))
                 .groupBy(col("v")).agg(sum(col("c")).as("inflow"))
-              r = nodes.join(inflow, col("node") === col("v"), "left")
-                .select(col("node"),
-                  (base + expr("(85L * coalesce(inflow, 0L)) div 100L"))
-                    .as("pr"))
-                .localCheckpoint(true)
+              val next = Caches.pin(
+                nodes.join(inflow, col("node") === col("v"), "left")
+                  .select(col("node"),
+                    (base + expr("(85L * coalesce(inflow, 0L)) div 100L"))
+                      .as("pr")))
+              Caches.unpin(r)
+              r = next
             }
             r.join(deg, col("node") === col("u"), "left")
               .select(col("node"), coalesce(col("deg"), lit(0L)).as("deg"),
                 col("pr"))
               .write.mode("overwrite").parquet(target)
-            graft.core.Caches.drain(spark) // round checkpoints superseded
+            Caches.unpin(adj, r)
         }
       }
     spark.read.parquet(path)
@@ -623,18 +625,19 @@ object Graph {
               s"graph_kcore_k${KcoreK}_r${KcoreRounds}_mod${CompMod}_v1") {
           target =>
             val e = edges(spark, dir, CompMod)
-            var sym = e.select(col("src").as("u"), col("dst").as("v"))
-              .union(e.select(col("dst").as("u"), col("src").as("v")))
-              .localCheckpoint(true)
+            var sym = Caches.pin(
+              e.select(col("src").as("u"), col("dst").as("v"))
+                .union(e.select(col("dst").as("u"), col("src").as("v"))))
             for (_ <- 1 to KcoreRounds) {
               val alive = sym.groupBy(col("u")).agg(count(lit(1)).as("deg"))
                 .where(col("deg") >= KcoreK)
                 .select(col("u").as("keep"))
-              sym = sym
+              val next = Caches.pin(sym
                 .join(alive, col("u") === col("keep")).drop("keep")
                 .join(alive.select(col("keep")),
-                  col("v") === col("keep")).drop("keep")
-                .localCheckpoint(true)
+                  col("v") === col("keep")).drop("keep"))
+              Caches.unpin(sym)
+              sym = next
             }
             val resid = sym.groupBy(col("u")).agg(count(lit(1)).as("deg"))
             val nodes = Tables.lineitem(spark, dir)
@@ -644,7 +647,7 @@ object Graph {
               .select(col("node"),
                 coalesce(col("deg"), lit(0L)).as("resid_deg"))
               .write.mode("overwrite").parquet(target)
-            graft.core.Caches.drain(spark) // round checkpoints superseded
+            Caches.unpin(sym)
         }
       }
     spark.read.parquet(path)
@@ -696,12 +699,13 @@ object Graph {
     * ONCE per source content ([[graft.core.Fixtures.staged]]) — the
     * train-once/read-everywhere posture. Inside the stage, each of the
     * 5 rounds is one edge-keyed shuffle (Σ deg map-side, node-count
-    * reduce) followed by an eager localCheckpoint, the canonical Spark
-    * iterative-graph pattern (GraphX does the same) that keeps round
-    * k+1 planning against a materialized frame instead of re-nesting
-    * the whole prior chain; a multi-executor deployment would swap in
-    * reliable checkpoints exactly as [[graft.llm.Dedup]]'s fixpoint
-    * does. The oracle unrolls the same five rounds as chained CTEs. */
+    * reduce) followed by an eager local checkpoint
+    * ([[graft.core.Caches.pin]]), the canonical Spark iterative-graph
+    * pattern (GraphX does the same) that keeps round k+1 planning
+    * against a materialized frame instead of re-nesting the whole
+    * prior chain. Round k's blocks are released as soon as round k+1
+    * is pinned, so two rounds are held at most. The oracle unrolls the
+    * same five rounds as chained CTEs. */
   def pagerank(spark: SparkSession, dir: String): DataFrame = {
     val path = graft.core.Fixtures.memo(pagerankFixtures,
       (spark.sparkContext.applicationId, dir)) {
@@ -715,23 +719,25 @@ object Graph {
             val sym = e.select(col("src").as("u"), col("dst").as("v"))
               .union(e.select(col("dst").as("u"), col("src").as("v")))
             val deg = sym.groupBy(col("u")).agg(count(lit(1)).as("deg"))
-            val adj = sym.join(deg, "u").localCheckpoint(true)
-            var r = nodes.withColumn("pr", lit(PrScale)).localCheckpoint(true)
+            val adj = Caches.pin(sym.join(deg, "u"))
+            var r = Caches.pin(nodes.withColumn("pr", lit(PrScale)))
             for (_ <- 1 to PrIters) {
               val inflow = adj.join(r, col("u") === col("node"))
                 .select(col("v"), expr("pr div deg").as("c"))
                 .groupBy(col("v")).agg(sum(col("c")).as("inflow"))
-              r = nodes.join(inflow, col("node") === col("v"), "left")
-                .select(col("node"),
-                  (lit(15L * PrScale / 100) +
-                    expr("(85L * coalesce(inflow, 0L)) div 100L")).as("pr"))
-                .localCheckpoint(true)
+              val next = Caches.pin(
+                nodes.join(inflow, col("node") === col("v"), "left")
+                  .select(col("node"),
+                    (lit(15L * PrScale / 100) +
+                      expr("(85L * coalesce(inflow, 0L)) div 100L")).as("pr")))
+              Caches.unpin(r)
+              r = next
             }
             r.join(deg, col("node") === col("u"), "left")
               .select(col("node"), coalesce(col("deg"), lit(0L)).as("deg"),
                 col("pr"))
               .write.mode("overwrite").parquet(target)
-            graft.core.Caches.drain(spark) // round checkpoints superseded
+            Caches.unpin(adj, r)
         }
       }
     spark.read.parquet(path)
@@ -796,27 +802,28 @@ object Graph {
               .where(col("l_partkey") % CompMod === 0)
               .select(col("l_partkey").as("node")).distinct()
             val e = edges(spark, dir, CompMod)
-            val sym = e.select(col("src").as("u"), col("dst").as("v"))
-              .union(e.select(col("dst").as("u"), col("src").as("v")))
-              .localCheckpoint(true)
+            val sym = Caches.pin(
+              e.select(col("src").as("u"), col("dst").as("v"))
+                .union(e.select(col("dst").as("u"), col("src").as("v"))))
             // per-hop eager checkpoint, same rationale as [[pagerank]]:
             // each hop references the previous frontier twice
             // (relax + carry), so an unmaterialized chain doubles the
             // planned subtree per hop
-            var dist = nodes.withColumn("d",
-              when(col("node") % BfsSrcMod === 0, lit(0L)))
-              .localCheckpoint(true)
+            var dist = Caches.pin(nodes.withColumn("d",
+              when(col("node") % BfsSrcMod === 0, lit(0L))))
             for (_ <- 1 to BfsHops) {
               val relax = sym.join(dist, col("u") === col("node"))
                 .where(col("d").isNotNull)
                 .select(col("v"), (col("d") + 1L).as("nd"))
                 .groupBy(col("v")).agg(min(col("nd")).as("nd"))
-              dist = dist.join(relax, col("node") === col("v"), "left")
-                .select(col("node"), least(col("d"), col("nd")).as("d"))
-                .localCheckpoint(true)
+              val next = Caches.pin(
+                dist.join(relax, col("node") === col("v"), "left")
+                  .select(col("node"), least(col("d"), col("nd")).as("d")))
+              Caches.unpin(dist)
+              dist = next
             }
             dist.write.mode("overwrite").parquet(target)
-            graft.core.Caches.drain(spark) // hop checkpoints superseded
+            Caches.unpin(sym, dist)
         }
       }
     spark.read.parquet(path)
@@ -1042,24 +1049,25 @@ object Graph {
               .where(col("l_partkey") % CompMod === 0)
               .select(col("l_partkey").as("node")).distinct()
             val e = edges(spark, dir, CompMod)
-            val sym = e.select(col("src").as("u"), col("dst").as("v"))
-              .union(e.select(col("dst").as("u"), col("src").as("v")))
-              .withColumn("w", expr("1L + (u + v) % 5L"))
-              .localCheckpoint(true)
-            var dist = nodes.withColumn("d",
-              when(col("node") % BfsSrcMod === 0, lit(0L)))
-              .localCheckpoint(true)
+            val sym = Caches.pin(
+              e.select(col("src").as("u"), col("dst").as("v"))
+                .union(e.select(col("dst").as("u"), col("src").as("v")))
+                .withColumn("w", expr("1L + (u + v) % 5L")))
+            var dist = Caches.pin(nodes.withColumn("d",
+              when(col("node") % BfsSrcMod === 0, lit(0L))))
             for (_ <- 1 to SsspRounds) {
               val relax = sym.join(dist, col("u") === col("node"))
                 .where(col("d").isNotNull)
                 .select(col("v"), (col("d") + col("w")).as("nd"))
                 .groupBy(col("v")).agg(min(col("nd")).as("nd"))
-              dist = dist.join(relax, col("node") === col("v"), "left")
-                .select(col("node"), least(col("d"), col("nd")).as("d"))
-                .localCheckpoint(true)
+              val next = Caches.pin(
+                dist.join(relax, col("node") === col("v"), "left")
+                  .select(col("node"), least(col("d"), col("nd")).as("d")))
+              Caches.unpin(dist)
+              dist = next
             }
             dist.write.mode("overwrite").parquet(target)
-            graft.core.Caches.drain(spark) // round checkpoints superseded
+            Caches.unpin(sym, dist)
         }
       }
     spark.read.parquet(path)

@@ -393,12 +393,6 @@ object Streams {
     }
 
   def streamFileSink(spark: SparkSession, dir: String): DataFrame = {
-    // r16 (VERDICT r15 #1): everything this invocation registers —
-    // fixture staging, micro-batch shuffles/broadcasts, readback — is
-    // dead once the result is localized below; release it
-    // deterministically in the teardown instead of waiting for a GC
-    // the ContextCleaner may never see in a short-lived window.
-    val mark = org.apache.spark.sql.graft.StreamingShim.resourceMark(spark)
     val src = graft.core.Fixtures.memo(sinkFixtures,
       (spark.sparkContext.applicationId, dir)) {
         graft.core.Fixtures.staged(s"$dir/events.parquet", "streamsrc",
@@ -442,7 +436,6 @@ object Streams {
       // this run's state-store providers — repeated in-JVM
       // invocations used to accumulate both
       org.apache.spark.sql.graft.StreamingShim.drainStreamingState(spark)
-      org.apache.spark.sql.graft.StreamingShim.releaseSince(spark, mark)
     }
   }
 
@@ -503,8 +496,52 @@ object Streams {
     * metadata commit; the readback is one scan of the live set. At
     * production scale the same job runs continuously — nothing here
     * is fixture-shaped except driving both passes in-process. */
-  def streamTxnSink(spark: SparkSession, dir: String): DataFrame = {
-    val mark = org.apache.spark.sql.graft.StreamingShim.resourceMark(spark)
+  def streamTxnSink(spark: SparkSession, dir: String): DataFrame =
+    withTxnSinkScratch(spark, dir, "txnsink") { run =>
+      def pass(): Unit =
+        runTxnSinkPass(spark, run.in.toString, run.root.toString, run.ck)
+      run.feed("t1")
+      pass()
+      run.feed("t2") // files arrive while the stream is DOWN…
+      pass() //         …restart
+      val tip = TxnLog.latestVersion(run.root.toString)
+      val last = TxnLog.stateAt(run.root.toString, tip).txns("ingest")
+      // re-delivery probe: the crashed-and-replayed commit must be
+      // refused by the txn watermark, not appended twice
+      assert(TxnLog.commitStreamBatch(run.root.toString, "ingest", last,
+        Seq(TxnLog.add("dup")), "probe").isEmpty,
+        "txn watermark accepted a replayed batch")
+      val rows = TxnLog.read(spark, run.root.toString)
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_events"),
+          sum(Det.cents(col("value"))).as("sum_cents"))
+        .collect() // bounded: one row per event type
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+      import spark.implicits._
+      rows.toDF("event_type", "n_events", "sum_cents")
+        .orderBy(col("event_type"))
+    }
+
+  /** One run's scratch for a txn-log sink job fed from the staged
+    * event-id-parity tranches: `in` is the stream's file source,
+    * `root` the sink table and `ck` its checkpoint; `feed(t)` copies
+    * tranche `t` (`t1` = even ids, `t2` = odd) into `in`. */
+  private final case class TxnSinkRun(src: String, in: java.io.File,
+                                      root: java.io.File, ck: String) {
+    def feed(tranche: String): Unit =
+      Option(new java.io.File(s"$src/$tranche").listFiles()).toSeq.flatten
+        .filter(_.getName.endsWith(".parquet"))
+        .foreach(f => java.nio.file.Files.copy(f.toPath,
+          new java.io.File(in, f.getName).toPath))
+  }
+
+  /** Stage the two tranches once per source content, run `body` over
+    * fresh `graft_<kind>_{in,tbl,ck}_*` scratch, then delete the
+    * scratch and drop this run's streaming state — also when the job
+    * fails, or one transient error would trip the litter gate for
+    * every query after it. */
+  private def withTxnSinkScratch[A](spark: SparkSession, dir: String,
+                                    kind: String)(body: TxnSinkRun => A): A = {
     val src = graft.core.Fixtures.memo(txnSinkFixtures,
       (spark.sparkContext.applicationId, dir)) {
         graft.core.Fixtures.staged(s"$dir/events.parquet", "txnstreamsrc",
@@ -523,41 +560,19 @@ object Streams {
     val uuid = s"${graft.core.Fixtures.appTag(spark)}_" +
       java.util.UUID.randomUUID().toString
     val tmpRoot = sys.props("java.io.tmpdir")
-    val inDir = new java.io.File(s"$tmpRoot/graft_txnsink_in_$uuid")
-    val root = new java.io.File(s"$tmpRoot/graft_txnsink_tbl_$uuid")
-    val ck = s"$tmpRoot/graft_txnsink_ck_$uuid"
-    def feed(tranche: String): Unit =
-      Option(new java.io.File(s"$src/$tranche").listFiles()).toSeq.flatten
-        .filter(_.getName.endsWith(".parquet"))
-        .foreach(f => java.nio.file.Files.copy(f.toPath,
-          new java.io.File(inDir, f.getName).toPath))
+    val run = TxnSinkRun(src,
+      new java.io.File(s"$tmpRoot/graft_${kind}_in_$uuid"),
+      new java.io.File(s"$tmpRoot/graft_${kind}_tbl_$uuid"),
+      s"$tmpRoot/graft_${kind}_ck_$uuid")
     try {
-      inDir.mkdirs(); root.mkdirs()
-      feed("t1")
-      runTxnSinkPass(spark, inDir.toString, root.toString, ck)
-      feed("t2") // files arrive while the stream is DOWN…
-      runTxnSinkPass(spark, inDir.toString, root.toString, ck) // …restart
-      val tip = TxnLog.latestVersion(root.toString)
-      val last = TxnLog.stateAt(root.toString, tip).txns("ingest")
-      // re-delivery probe: the crashed-and-replayed commit must be
-      // refused by the txn watermark, not appended twice
-      assert(TxnLog.commitStreamBatch(root.toString, "ingest", last,
-        Seq(TxnLog.add("dup")), "probe").isEmpty,
-        "txn watermark accepted a replayed batch")
-      val rows = TxnLog.read(spark, root.toString)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(Det.cents(col("value"))).as("sum_cents"))
-        .collect() // bounded: one row per event type
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-      import spark.implicits._
-      rows.toDF("event_type", "n_events", "sum_cents")
-        .orderBy(col("event_type"))
+      run.in.mkdirs(); run.root.mkdirs()
+      body(run)
     } finally {
-      for (d <- Seq(inDir, root, new java.io.File(ck)))
+      for (d <- Seq(run.in, run.root, new java.io.File(run.ck)))
         graft.core.Fixtures.deleteRecursively(d)
+      // stateful sink jobs: two AvailableNow queries per invocation,
+      // 4-32 aggregate state-store providers each
       org.apache.spark.sql.graft.StreamingShim.drainStreamingState(spark)
-      org.apache.spark.sql.graft.StreamingShim.releaseSince(spark, mark)
     }
   }
 
@@ -586,80 +601,45 @@ object Streams {
     * its CHANGED keys (stats pre-prune + cheapest-action ladder) —
     * the 100 TB posture for a running aggregate whose key space
     * dwarfs any batch. */
-  def streamUpdateSink(spark: SparkSession, dir: String): DataFrame = {
-    val mark = org.apache.spark.sql.graft.StreamingShim.resourceMark(spark)
-    val src = graft.core.Fixtures.memo(txnSinkFixtures,
-      (spark.sparkContext.applicationId, dir)) {
-        graft.core.Fixtures.staged(s"$dir/events.parquet", "txnstreamsrc",
-            codeTag = "event_id_parity_v1") { target =>
-          val e = Tables.events(spark, dir)
-            .select(col("event_id"), col("event_type"), col("value"))
-          e.where(col("event_id") % 2 === 0)
-            .coalesce(1).write.parquet(s"$target/t1")
-          e.where(col("event_id") % 2 === 1)
-            .coalesce(1).write.parquet(s"$target/t2")
-        }
+  def streamUpdateSink(spark: SparkSession, dir: String): DataFrame =
+    withTxnSinkScratch(spark, dir, "updsink") { run =>
+      def pass(): Unit = withStatePartitions(spark) {
+        val q = spark.readStream
+          .schema(org.apache.spark.sql.types.StructType.fromDDL(
+            "event_id BIGINT, event_type STRING, value DOUBLE"))
+          .parquet(run.in.toString)
+          .groupBy(col("event_type"))
+          .agg(count(lit(1)).as("n_events"),
+            sum(Det.cents(col("value"))).as("sum_cents"))
+          .writeStream.format("graft-txnlog")
+          .option("path", run.root.toString).option("appId", "upsink")
+          .option("mergeKey", "event_type")
+          .option("checkpointLocation", run.ck)
+          .outputMode("update")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
       }
-    val uuid = s"${graft.core.Fixtures.appTag(spark)}_" +
-      java.util.UUID.randomUUID().toString
-    val tmpRoot = sys.props("java.io.tmpdir")
-    val inDir = new java.io.File(s"$tmpRoot/graft_updsink_in_$uuid")
-    val root = new java.io.File(s"$tmpRoot/graft_updsink_tbl_$uuid")
-    val ck = s"$tmpRoot/graft_updsink_ck_$uuid"
-    def feed(tranche: String): Unit =
-      Option(new java.io.File(s"$src/$tranche").listFiles()).toSeq.flatten
-        .filter(_.getName.endsWith(".parquet"))
-        .foreach(f => java.nio.file.Files.copy(f.toPath,
-          new java.io.File(inDir, f.getName).toPath))
-    def pass(): Unit = withStatePartitions(spark) {
-      val q = spark.readStream
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(
-          "event_id BIGINT, event_type STRING, value DOUBLE"))
-        .parquet(inDir.toString)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(Det.cents(col("value"))).as("sum_cents"))
-        .writeStream.format("graft-txnlog")
-        .option("path", root.toString).option("appId", "upsink")
-        .option("mergeKey", "event_type")
-        .option("checkpointLocation", ck)
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    try {
-      inDir.mkdirs(); root.mkdirs()
-      feed("t1")
+      run.feed("t1")
       pass()
-      feed("t2") // arrives while the stream is DOWN…
-      pass() //     …restart: state resumes, changed keys upsert
-      val tip = TxnLog.latestVersion(root.toString)
-      val last = TxnLog.stateAt(root.toString, tip).txns("upsink")
+      run.feed("t2") // arrives while the stream is DOWN…
+      pass() //         …restart: state resumes, changed keys upsert
+      val tip = TxnLog.latestVersion(run.root.toString)
+      val last = TxnLog.stateAt(run.root.toString, tip).txns("upsink")
       // a replayed batch must be refused by the atomic watermark
-      assert(TxnLog.writeStreamBatchUpdate(spark, root.toString,
+      assert(TxnLog.writeStreamBatchUpdate(spark, run.root.toString,
         Tables.events(spark, dir).limit(1)
           .select(col("event_type"), lit(0L).as("n_events"),
             lit(0L).as("sum_cents")),
         "event_type", "upsink", last, "probe").isEmpty,
         "update watermark accepted a replayed batch")
-      val rows = TxnLog.read(spark, root.toString)
+      val rows = TxnLog.read(spark, run.root.toString)
         .collect() // bounded: one row per event type
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
       import spark.implicits._
       rows.toDF("event_type", "n_events", "sum_cents")
         .orderBy(col("event_type"))
-    } finally {
-      for (d <- Seq(inDir, root, new java.io.File(ck)))
-        graft.core.Fixtures.deleteRecursively(d)
-      // the update sink is the registry's most expensive entry and
-      // the one the r14 growth was measured on (3.6 s → 8.0 s across
-      // stacked runs): two stateful AvailableNow queries per
-      // invocation, 4-32 aggregate state-store providers each
-      org.apache.spark.sql.graft.StreamingShim.drainStreamingState(spark)
-      org.apache.spark.sql.graft.StreamingShim.releaseSince(spark, mark)
     }
-  }
 
   /** OFFSET-SOURCE ingest, oracled (r15 — VERDICT r14 #7: the
     * Kafka-shaped gap, closed with the in-tree deterministic twin;
@@ -682,7 +662,6 @@ object Streams {
     * one O(1) idempotent commit per micro-batch; swap the source for
     * a real broker and nothing else changes. */
   def streamRateSink(spark: SparkSession, dir: String): DataFrame = {
-    val mark = org.apache.spark.sql.graft.StreamingShim.resourceMark(spark)
     val n = 500
     val uuid = s"${graft.core.Fixtures.appTag(spark)}_" +
       java.util.UUID.randomUUID().toString
@@ -737,7 +716,6 @@ object Streams {
       for (d <- Seq(root, new java.io.File(ck)))
         graft.core.Fixtures.deleteRecursively(d)
       org.apache.spark.sql.graft.StreamingShim.drainStreamingState(spark)
-      org.apache.spark.sql.graft.StreamingShim.releaseSince(spark, mark)
     }
   }
 

@@ -7,7 +7,9 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps [[graft.core.Session]] the one way `src/main` builds a session,
-  * and keeps operators from registering extensions themselves. */
+  * keeps operators from registering extensions themselves, and keeps the
+  * one release rule: operators pin and unpin through [[graft.core.Caches]],
+  * and only the harness mains sweep the session. */
 class SessionSpec extends AnyFunSuite {
 
   private val main = Paths.get("src/main")
@@ -29,5 +31,17 @@ class SessionSpec extends AnyFunSuite {
     assert(builders.size == 1 &&
       builders.head.startsWith("scala/graft/core/Session.scala:"), builders)
     assert(hits("ensureRegistered").isEmpty)
+  }
+
+  test("src/main checkpoints only through Caches.pin and sweeps the session only in the harness mains") {
+    val pins = hits("localCheckpoint(")
+    assert(pins.nonEmpty &&
+      pins.forall(_.startsWith("scala/graft/core/Caches.scala:")), pins)
+    val harness = Set("Bench", "Verify", "PlanTool")
+      .map(m => s"scala/graft/$m.scala")
+    val sweeps = hits("Caches.drain(") ++ hits("Caches.release(")
+    assert(sweeps.nonEmpty &&
+      sweeps.forall(h => harness(h.takeWhile(_ != ':'))), sweeps)
+    assert(hits("resourceMark").isEmpty && hits("releaseSince").isEmpty)
   }
 }
