@@ -69,9 +69,10 @@ object Fixtures {
     * stable path in place, so two JVMs on the same source (SKILL.md
     * notes concurrent Bench/Verify runs happen) could overwrite the
     * parquet while the other was mid-read. Now the callback writes
-    * into a JVM-unique `.tmp` dir which is atomically RENAMED to the
-    * final name: a reader can never observe a partial fixture, and
-    * when two JVMs race, the rename loser just deletes its tmp copy
+    * into a JVM-unique `<final name>.<appTag>.<uuid>.tmp` dir
+    * which is atomically RENAMED to the final name: a reader can
+    * never observe a partial fixture, and when two JVMs race, the
+    * rename loser just deletes its tmp copy
     * and reads the winner's — identical content, deterministic write.
     *
     * `codeTag`: extra salt folded into the fingerprint for fixtures
@@ -110,8 +111,14 @@ object Fixtures {
     val tmpRoot = new File(sys.props("java.io.tmpdir"))
     val target = new File(tmpRoot, prefix + fp)
     if (!target.isDirectory) {
-      val tmp = new File(tmpRoot,
-        prefix + fp + "." + java.util.UUID.randomUUID() + ".tmp")
+      // the staging session's tag (active, else default): a litter
+      // detector tells its own in-flight staging from another JVM's
+      import org.apache.spark.sql.SparkSession
+      val owner = SparkSession.getActiveSession
+        .orElse(SparkSession.getDefaultSession).map(appTag)
+        .getOrElse("nosession")
+      val tmp = new File(tmpRoot, prefix + fp + "." + owner + "." +
+        java.util.UUID.randomUUID() + ".tmp")
       try write(tmp.toString)
       catch { case e: Throwable => deleteRecursively(tmp); throw e }
       try Files.move(tmp.toPath, target.toPath,

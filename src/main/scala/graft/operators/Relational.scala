@@ -1621,8 +1621,8 @@ object Relational {
     * MERGED metaData. The writer-side gate is real: an append whose
     * shared column changes type is rejected (spec-proven in
     * MaintenanceSpec), and a widening append without `evolve` is
-    * rejected too. The query reads the TIP under parquet mergeSchema
-    * algebra — old files null-pad the new column — and emits the
+    * rejected too. The query reads the TIP under the log's own
+    * schema — old files null-pad the new column — and emits the
     * census that proves attribution: total rows/cents across both
     * schema generations, plus count/sum of the evolved column (only
     * v2's rows have it), plus the resolved tip schema DDL itself, so
@@ -1654,7 +1654,8 @@ object Relational {
     val ddl = TxnLog.schemaAt(root, tip)
       .getOrElse(sys.error(s"no metaData in $root")).toDDL
     // the reader-side API under test: resolves live set + schema from
-    // the log, one mergeSchema read projected to the metaData columns
+    // the log and reads every file under that schema (a file's columns
+    // carry the log's types; a column it lacks reads as null)
     TxnLog.read(spark, root)
       .agg(count(lit(1)).as("n_rows"),
         sum(Det.cents(col("o_totalprice"))).as("sum_cents"),

@@ -441,7 +441,8 @@ class TxnLogOps(val store: LogStore) {
     *    schema must read old files" invariant, inverted for writes);
     *  - new columns are evolution: rejected unless `evolve = true`,
     *    in which case the commit carries merged metaData and readers
-    *    see old files as null-padded (parquet mergeSchema algebra).
+    *    see old files as null-padded (the log-schema read of
+    *    [[readData]]: a column a file lacks reads as null).
     *
     * The validate/merge and the commit are ATOMIC per attempt: the
     * schema is resolved against a snapshotted base version and the
@@ -798,9 +799,11 @@ class TxnLogOps(val store: LogStore) {
                           session: String, evolve: Boolean = false,
                           maxAttempts: Int = 10): Int = {
     val cons = stateAt(root, latestVersion(root)).constraints
+    // the new files are read under the DDL being committed (their
+    // own schema), not the footers': no inference job per append
     if (cons.nonEmpty && files.nonEmpty)
-      enforceConstraints(spark.read.option("mergeSchema", "true")
-        .parquet(files.map(f => s"$root/$f"): _*), cons,
+      enforceConstraints(readData(spark, root,
+          State(Set.empty, Some(schemaDdl)), files), cons,
         s"append of ${files.mkString(",")}")
     commitAppend(root, files, schemaDdl, session, evolve, maxAttempts,
       enforcedCons = Some(cons))
@@ -1028,7 +1031,7 @@ class TxnLogOps(val store: LogStore) {
     // table's metaData like EVERY other writer (evolve = false — a
     // REPLACE that wants new columns is a schema migration); a direct
     // caller with a missing/retyped column is refused here instead of
-    // committing files that null-pad or break later mergeSchema scans.
+    // committing files that null-pad or break later log-schema scans.
     // Some(..) only for a schema-less table publishing its first
     // schema — carried into the commit.
     val meta = resolveWriteSchema(root, base, df.schema, evolve = false)
@@ -1063,9 +1066,7 @@ class TxnLogOps(val store: LogStore) {
           .zipWithIndex.map { case ((f, _, _), i) =>
             () => {
               val out = f"${outBase}_k$i%04d"
-              val raw = scanWithDVs(spark, root, st, Seq(f))
-              val fileDf = st.schemaDdl.map(StructType.fromDDL)
-                .map(projectTo(raw, _)).getOrElse(raw)
+              val fileDf = scanWithDVs(spark, root, st, Seq(f))
               val (_, stats) = writeObserved(fileDf.where(!predSafe),
                 root, out, st.stats.getOrElse(f, Seq.empty).map(_.col))
               out -> addOf(out, st.parts.getOrElse(f, Seq.empty), stats)
@@ -1088,11 +1089,9 @@ class TxnLogOps(val store: LogStore) {
   }
 
   /** Project `base` to schema `s`'s columns in order, null-padding
-    * any column the scanned parquet union lacks: legal when every
-    * live file carrying an evolved column has since been removed —
-    * the metaData contract still promises the column, typed null
-    * (ADVICE r9: a bare select failed with AnalysisException on such
-    * a valid log). */
+    * any column `base` lacks: a frame read under one version's schema
+    * lifted to another's (a change feed's end version, a MERGE's
+    * widened schema). */
   private def projectTo(base: DataFrame, s: StructType): DataFrame = {
     val present = base.columns.toSet
     base.select(s.fields.toSeq.map(f =>
@@ -1107,13 +1106,6 @@ class TxnLogOps(val store: LogStore) {
   private def relPath: org.apache.spark.sql.Column = regexp_extract(
     col("_metadata.file_path"), "/([^/]+/[^/]+)$", 1)
 
-  /** The deleted `(path, pos)` rows of `files`' deletion vectors at
-    * state `st`, or None when none carries a DV. Each DISTINCT
-    * sidecar dir is read once and filtered to the files that point
-    * at it NOW — sidecars are shared per commit and replaced per
-    * file, so a retired pointer's leftover rows never leak in. DV
-    * frames are deleted-row-count sized: broadcastable by design
-    * (that is when merge-on-read is the right call at all). */
   /** An ext ref is either ABSOLUTE (starts with '/': tables that move
     * independently — Delta's posture) or RELATIVE to this table's
     * root ('../src/f0': a source and clone moved TOGETHER — e.g. one
@@ -1146,6 +1138,13 @@ class TxnLogOps(val store: LogStore) {
   private def dataPaths(root: String, st: State, files: Seq[String])
   : Seq[String] = files.map(dataPath(root, st, _))
 
+  /** The deleted `(path, pos)` rows of `files`' deletion vectors at
+    * state `st`, or None when none carries a DV. Each DISTINCT
+    * sidecar dir is read once and filtered to the files that point
+    * at it NOW — sidecars are shared per commit and replaced per
+    * file, so a retired pointer's leftover rows never leak in. DV
+    * frames are deleted-row-count sized: broadcastable by design
+    * (that is when merge-on-read is the right call at all). */
   private def dvRows(spark: SparkSession, root: String, st: State,
                      files: Seq[String]): Option[DataFrame] = {
     val here = files
@@ -1160,16 +1159,6 @@ class TxnLogOps(val store: LogStore) {
       }.reduce(_ unionAll _))
   }
 
-  /** Scan `files` (one multi-path mergeSchema read) with deletion
-    * vectors applied: rows whose (relative leaf path, row index)
-    * appear in a live DV drop out via a BROADCAST left-anti join —
-    * no shuffle on the data side, row order within each file
-    * preserved; a version with no DVs pays nothing (plain scan).
-    * `fileCol = Some(name)` appends a column holding the row's data
-    * dir name — the file-attribution the probe/census passes need,
-    * computed from `_metadata.file_path` on the scan side (an
-    * `input_file_name()` evaluated after the anti join would not be
-    * reliable). */
   /** Apply the state's column mapping to a raw multi-file scan:
     * logical column L fed by physical column P coalesces — a post-
     * rename file carries L, a pre-rename file's P feeds it, a file
@@ -1190,11 +1179,51 @@ class TxnLogOps(val store: LogStore) {
         .drop(present: _*)
     }
 
+  /** THE reader of txn-log data: `files` (ext refs resolved through
+    * `st`) read under the log's own schema, never the footers'. The
+    * read schema is `st`'s metaData columns plus each physical
+    * spelling in `st.colmap` typed as its logical column; names the
+    * log dropped are not read, and the column mapping is applied, so
+    * the frame speaks logical names only. Contract: a file's columns
+    * carry the log's types — a footer that disagrees fails the scan
+    * loudly instead of retyping — and a column a file lacks reads as
+    * null. Building the frame starts no Spark job; only a log with no
+    * metaData falls back to parquet schema inference (a footer-
+    * reading job per frame). */
+  private[graft] def readData(spark: SparkSession, root: String,
+                              st: State, files: Seq[String]): DataFrame = {
+    val paths = dataPaths(root, st, files)
+    val raw = st.schemaDdl.map(StructType.fromDDL) match {
+      case Some(s) =>
+        // a spelling equal (case-insensitively, as the reader
+        // resolves) to a logical name is already read under it
+        val spellings = s.fields.toSeq.flatMap(f =>
+          st.colmap.getOrElse(f.name, Seq.empty)
+            .filterNot(p => s.fieldNames.exists(_.equalsIgnoreCase(p)))
+            .map(p => f.copy(name = p, nullable = true)))
+          .distinctBy(_.name.toLowerCase)
+        spark.read.schema(StructType(s.fields ++ spellings))
+          .parquet(paths: _*)
+      case None =>
+        spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    }
+    applyColMap(raw, st)
+  }
+
+  /** Scan `files` (one multi-path [[readData]]) with deletion
+    * vectors applied: rows whose (relative leaf path, row index)
+    * appear in a live DV drop out via a BROADCAST left-anti join —
+    * no shuffle on the data side, row order within each file
+    * preserved; a version with no DVs pays nothing (plain scan).
+    * `fileCol = Some(name)` appends a column holding the row's data
+    * dir name — the file-attribution the probe/census passes need,
+    * computed from `_metadata.file_path` on the scan side (an
+    * `input_file_name()` evaluated after the anti join would not be
+    * reliable). */
   private def scanWithDVs(spark: SparkSession, root: String, st: State,
                           files: Seq[String],
                           fileCol: Option[String] = None): DataFrame = {
-    val base = applyColMap(spark.read.option("mergeSchema", "true")
-      .parquet(dataPaths(root, st, files): _*), st)
+    val base = readData(spark, root, st, files)
     val dataCols = base.columns.toSeq
     val dv = dvRows(spark, root, st, files)
     if (dv.isEmpty && fileCol.isEmpty) return base
@@ -1218,11 +1247,11 @@ class TxnLogOps(val store: LogStore) {
 
   /** Read the table as of `version` (negative = the tip): the live
     * set and schema resolve from the log (checkpointed replay), data
-    * comes back in ONE multi-path parquet read under mergeSchema
-    * algebra (older generations null-pad evolved columns) with that
-    * version's deletion vectors applied, and when the log carries
-    * metaData the result is projected to the resolved schema's
-    * columns in order — the reader-side half of the schema contract
+    * comes back in ONE multi-path parquet read under that schema
+    * ([[readData]]: the resolved schema's columns in order, older
+    * generations null-padding evolved columns, and no Spark job to
+    * build the frame) with that version's deletion vectors applied
+    * — the reader-side half of the schema contract
     * [[commitAppend]] enforces on writes. A version with an empty
     * live set (legal: a remove-only commit can drain the table)
     * reads as an empty frame under the resolved schema. */
@@ -1238,8 +1267,7 @@ class TxnLogOps(val store: LogStore) {
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
     }
-    val base = scanWithDVs(spark, root, st, st.live.toSeq.sorted)
-    schema.map(projectTo(base, _)).getOrElse(base)
+    scanWithDVs(spark, root, st, st.live.toSeq.sorted)
   }
 
   /** TIMESTAMP AS OF read: [[versionAsOf]] + [[read]]. */
@@ -1394,10 +1422,7 @@ class TxnLogOps(val store: LogStore) {
           s"version $v of $root has no scanned files and no schema"))
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-      } else {
-        val base = scanWithDVs(spark, root, st, scanned)
-        schema.map(projectTo(base, _)).getOrElse(base)
-      }
+      } else scanWithDVs(spark, root, st, scanned)
     (df, scanned, pruned)
   }
 
@@ -1871,15 +1896,13 @@ class TxnLogOps(val store: LogStore) {
     if (files.isEmpty) {
       val s = schema.orElse(
         if (st.live.isEmpty) None
-        else Some(spark.read.parquet(
-          dataPath(root, st, st.live.head)).schema))
+        else Some(readData(spark, root, st, Seq(st.live.head)).schema))
         .getOrElse(throw new IllegalStateException(
           s"version $v of $root has no files and no metaData schema"))
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
     }
-    val base = scanWithDVs(spark, root, st, files.sorted)
-    schema.map(projectTo(base, _)).getOrElse(base)
+    scanWithDVs(spark, root, st, files.sorted)
   }
 
   /** Single-range data skipping — [[pruneWhere]] with one predicate
@@ -1909,16 +1932,12 @@ class TxnLogOps(val store: LogStore) {
       if (scanned.isEmpty) {
         val s = schema.orElse(
           if (st.live.isEmpty) None
-          else Some(spark.read.parquet(
-            dataPath(root, st, st.live.head)).schema))
+          else Some(readData(spark, root, st, Seq(st.live.head)).schema))
           .getOrElse(throw new IllegalStateException(
             s"version $v of $root has no files and no metaData schema"))
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-      } else {
-        val base = scanWithDVs(spark, root, st, scanned)
-        schema.map(projectTo(base, _)).getOrElse(base)
-      }
+      } else scanWithDVs(spark, root, st, scanned)
     (df, scanned, pruned)
   }
 
@@ -2018,7 +2037,9 @@ class TxnLogOps(val store: LogStore) {
     * — matched keys replace their rows, unmatched insert — with the
     * (appId, batchId) watermark committed ATOMICALLY with the merge's
     * own actions, so a checkpoint re-delivery is a one-lookup no-op
-    * exactly like Append/Complete. An empty batch commits just the
+    * exactly like Append/Complete. The batch's plan runs once: the
+    * MERGE pins it and its bounds job is the first to run it, and an
+    * empty batch (that job's row count is 0) commits just the
     * marker. The merge's cheapest-action ladder applies unchanged
     * (stats pre-prune, untouched files stay untouched, narrow
     * rewrites), so a keyed update stream touches only the files
@@ -2034,8 +2055,6 @@ class TxnLogOps(val store: LogStore) {
     val base = latestVersion(root)
     if (stateAt(root, base).txns.get(appId).exists(_ >= batchId))
       return None
-    if (df.isEmpty)
-      return commitStreamBatch(root, appId, batchId, Seq.empty, session)
     val r = mergeClauses(spark, root, df, keyCol, session,
       updateWhen = Some(lit(true)), deleteWhen = None,
       insertUnmatched = true, txn = Some((appId, batchId)))
@@ -2270,7 +2289,7 @@ class TxnLogOps(val store: LogStore) {
     // file still rewrites (OPTIMIZE materializes vectors). When every
     // bin is trivial the whole OPTIMIZE is a no-op: no commit at all.
     // (Schema-evolution materialization becomes best-effort for
-    // skipped files — readers mergeSchema/null-pad regardless.)
+    // skipped files — readers null-pad under the log schema anyway.)
     val bins = allBins.filterNot { case (_, fs) =>
       fs.size == 1 && !fs.exists(st.dvs.contains) }
     if (bins.isEmpty) return None
@@ -2289,10 +2308,10 @@ class TxnLogOps(val store: LogStore) {
       // coalesce(1): deterministic row order (a multi-path scan packs
       // splits by SIZE, which would scramble clustering run order)
       // and still zero exchange — Union and coalesce are narrow.
-      // unionByName with null-fill: a bin spanning schema GENERATIONS
-      // (evolution happened between appends) rewrites under the
-      // merged column set — OPTIMIZE materializes the evolution, so
-      // the compacted table reads without mergeSchema work
+      // each per-file scan reads under the log schema, so a bin
+      // spanning schema GENERATIONS rewrites under the whole table
+      // schema — OPTIMIZE materializes the evolution (unionByName's
+      // null-fill covers only a metaData-less log's inferred scans)
       // per-file DV application (order-preserving filter): OPTIMIZE
       // MATERIALIZES deletion vectors — outputs hold only surviving
       // rows and the vectors retire with their files
@@ -2371,7 +2390,6 @@ class TxnLogOps(val store: LogStore) {
     val st = stateAt(root, base)
     val live = st.live.toSeq.sorted
     require(live.nonEmpty, "nothing to z-order")
-    val tableSchema = st.schemaDdl.map(StructType.fromDDL)
     val nDim = zorderBy.size
     val zSpace = 1L << (8 * nDim)
     val groups = live.groupBy(f => st.parts.getOrElse(f, Seq.empty))
@@ -2382,8 +2400,7 @@ class TxnLogOps(val store: LogStore) {
                      gi: Int): Seq[(String, Entry)] = {
       // DV-applied scan: the z-order rewrite materializes deletion
       // vectors like the default OPTIMIZE (outputs = surviving rows)
-      val raw = scanWithDVs(spark, root, st, files)
-      val df0 = tableSchema.map(projectTo(raw, _)).getOrElse(raw)
+      val df0 = scanWithDVs(spark, root, st, files)
       // one agg pass: every dimension's long bounds + null census
       val aggsZ = zorderBy.flatMap(c => Seq(min(col(c).cast("long")),
         max(col(c).cast("long")))) :+
@@ -2490,11 +2507,14 @@ class TxnLogOps(val store: LogStore) {
     * surfaces as the constraint's refusal). Returns the row count and
     * `cols`' bounds ([[statsFor]]'s rendering) observed on the write
     * job's result stage, whose accumulators count each partition once.
-    * An all-null column, a zero-row write or a rendering [[FileStats]]
-    * rejects publishes no bound: absence only costs a scan. */
+    * An all-null column, a zero-row write, a rendering [[FileStats]]
+    * rejects or a column `df` does not carry (the table dropped or
+    * renamed it since the input's bounds were logged) publishes no
+    * bound: absence only costs a scan. */
   private def writeObserved(df: DataFrame, root: String, out: String,
-                            cols: Seq[String], narrow: Boolean = true)
+                            statsCols: Seq[String], narrow: Boolean = true)
   : (Long, Seq[FileStats]) = {
+    val cols = statsCols.filter(df.columns.contains)
     val obs = org.apache.spark.sql.Observation()
     val aggs = cols.zipWithIndex.flatMap { case (c, i) =>
       Seq(min(col(c)).cast("string").as(s"min$i"),
@@ -2598,7 +2618,8 @@ class TxnLogOps(val store: LogStore) {
     * pruning metadata exactly like [[mergeUpsert]]. Commit is
     * conflict-aware ([[commitRewrite]]). Returns the committed
     * version, or None when nothing matched and nothing inserts (or on
-    * conflict). */
+    * conflict); an empty source with a `txn` marker commits just the
+    * marker. */
   def mergeClauses(spark: SparkSession, root: String, source0: DataFrame,
                    keyCol: String, session: String,
                    updateWhen: Option[org.apache.spark.sql.Column],
@@ -2718,9 +2739,11 @@ class TxnLogOps(val store: LogStore) {
         s"($nRows rows, $nKeys keys)")
     // an EMPTY source is a no-op for every clause EXCEPT the
     // not-matched-by-source ones (snapshot-sync against an empty
-    // snapshot legitimately deletes/updates everything)
+    // snapshot legitimately deletes/updates everything); a streaming
+    // batch (`txn`) still lands its marker, taken from this count
     if (nRows == 0L && nmbsDelete.isEmpty && nmbsUpdate.isEmpty)
-      return None // empty merge: no-op
+      return txn.flatMap { case (app, b) =>
+        commitStreamBatch(root, app, b, Seq.empty, session) }
     // stats pre-prune (one conjunctive bounds predicate per key
     // column), then the exact probe over surviving candidates.
     // NOT-MATCHED-BY-SOURCE clauses void the prune: any file can hold
@@ -3243,7 +3266,7 @@ class TxnLogOps(val store: LogStore) {
                          conflictWhat: Option[String] = None,
                          prep: DataFrame => DataFrame = identity)
   : Option[Int] = {
-    // mergeSchema: candidates may span schema generations — a file
+    // log schema: candidates may span schema generations — a file
     // predating the predicate column reads it as null (no hit), and
     // the scan must not depend on which file's footer gets sampled.
     // DV-applied: census counts SURVIVING rows, so the pure-remove
@@ -3274,15 +3297,12 @@ class TxnLogOps(val store: LogStore) {
         .zipWithIndex.map { case ((f, _, _), i) =>
           () => {
             val out = f"${outBase}_k$i%04d"
-            // rewrite under the TABLE schema when the log carries one:
-            // an arbitrary predicate may reference an evolved column a
-            // file of an older generation lacks physically — the
-            // census scan null-padded it (so the file CAN hold hits,
-            // e.g. `evolved IS NULL OR ...`), and the rewrite must
-            // resolve the same way instead of failing analysis
-            val raw = scanWithDVs(spark, root, st, Seq(f))
-            val fileDf = st.schemaDdl.map(StructType.fromDDL)
-              .map(projectTo(raw, _)).getOrElse(raw)
+            // the rewrite reads under the TABLE schema like the
+            // census: an arbitrary predicate may reference an evolved
+            // column a file of an older generation lacks physically —
+            // it reads as null (so the file CAN hold hits, e.g.
+            // `evolved IS NULL OR ...`) instead of failing analysis
+            val fileDf = scanWithDVs(spark, root, st, Seq(f))
             // survivors re-select the FILE's columns: a subquery prep
             // may have attached membership columns for the predicate
             val (_, stats) = writeObserved(prep(fileDf).where(!pred)
@@ -3378,8 +3398,7 @@ class TxnLogOps(val store: LogStore) {
                            conflictWhat: Option[String] = None,
                            prep: DataFrame => DataFrame = identity)
   : Option[Int] = {
-    val baseScan = applyColMap(spark.read.option("mergeSchema", "true")
-      .parquet(dataPaths(root, st, candidates): _*), st)
+    val baseScan = readData(spark, root, st, candidates)
     // row identity is captured BEFORE the subquery prep: _metadata is
     // a scan-relation column and would not survive the membership join
     val withIds = prep(baseScan.select(col("*"),
@@ -3619,10 +3638,8 @@ class TxnLogOps(val store: LogStore) {
         // version's state in the range can contribute a mapping
         val extAll = (fromV to to).foldLeft(Map.empty[String, String])(
           (m, v) => m ++ stateAt(root, v).ext)
-        spark.read.option("mergeSchema", "true")
-          .parquet(touched.map(f => extAll.get(f)
-            .map(resolveExt(root, _)).getOrElse(s"$root/$f")): _*)
-          .schema
+        readData(spark, root, State(Set.empty, None, ext = extAll),
+          touched).schema
       }
     }
     def empty(s: StructType): DataFrame = spark.createDataFrame(
@@ -3685,9 +3702,7 @@ class TxnLogOps(val store: LogStore) {
             }
           }.reduce(_ unionAll _)
           val files = dvSets.map(_.file).distinct.sorted
-          val base = applyColMap(
-            spark.read.option("mergeSchema", "true")
-              .parquet(dataPaths(root, postSt, files): _*), postSt)
+          val base = readData(spark, root, postSt, files)
           val dataCols = base.columns.toSeq
           Some(projectTo(base.select((dataCols.map(col) :+
               relPath.as("__path") :+
@@ -4092,13 +4107,20 @@ class TxnLogOps(val store: LogStore) {
       return versionsDf.select(col("version"), col("n_files"),
         lit(0L).as("n_rows"), lit(0L).as("sum_cents"))
         .orderBy(col("version"))
-    // tip colmap covers every prior spelling (lists accumulate), so
-    // one mapped scan reads valueCol across rename generations
+    // one mapped scan reads valueCol across every generation: the
+    // tip colmap covers every prior spelling (lists accumulate), and
+    // the read schema is the tip's widened by any column an older
+    // version's metaData held (a column the tip dropped still rolls
+    // up where it lived); ext refs resolve across the whole history
     val tipSt = states.lastOption.map(_._2)
       .getOrElse(State(Set.empty, None))
-    val perFile = applyColMap(spark.read
-        .option("mergeSchema", "true").parquet(files.map(path): _*),
-        tipSt)
+    val histSchema = states.reverse.flatMap(_._2.schemaDdl).distinct
+      .map(StructType.fromDDL).reduceOption((a, b) => StructType(
+        a.fields ++ b.fields.filterNot(f =>
+          a.fieldNames.exists(_.equalsIgnoreCase(f.name)))))
+    val histSt = tipSt.copy(schemaDdl = histSchema.map(_.toDDL),
+      ext = extAll)
+    val perFile = readData(spark, root, histSt, files)
       .select(regexp_extract(input_file_name(), "/([^/]+)/[^/]+$", 1)
         .as("file"),
         graft.core.Det.cents(col(valueCol)).as("cents"))
@@ -4118,9 +4140,7 @@ class TxnLogOps(val store: LogStore) {
             .select(col("path"), col("pos"), lit(d).as("dv")))
           .reduce(_ unionAll _)
         val dvFiles = pairs.map(_._1).distinct.sorted
-        val corr = applyColMap(spark.read
-            .option("mergeSchema", "true")
-            .parquet(dvFiles.map(path): _*), tipSt)
+        val corr = readData(spark, root, histSt, dvFiles)
           .select(relPath.as("path"),
             col("_metadata.row_index").as("pos"),
             graft.core.Det.cents(col(valueCol)).as("cents"))

@@ -184,11 +184,11 @@ object TxnLogSource {
     val base = schema.getOrElse {
       val tip = TxnLog.latestVersion(r)
       TxnLog.schemaAt(r, tip).getOrElse {
-        val live = TxnLog.liveFiles(r, tip)
-        require(live.nonEmpty,
+        val st = TxnLog.stateAt(r, tip)
+        require(st.live.nonEmpty,
           s"cannot infer a schema for empty table $r — pass .schema(...)")
-        sqlContext.sparkSession.read.option("mergeSchema", "true")
-          .parquet(live.map(f => s"$r/$f"): _*).schema
+        TxnLog.readData(sqlContext.sparkSession, r, st,
+          st.live.toSeq.sorted).schema
       }
     }
     if (parameters.get("readChangeFeed").exists(_.toBoolean))
@@ -293,8 +293,10 @@ private[streaming] class TxnLogSource(sqlContext: SQLContext,
     if (files.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val scan = spark.read.option("mergeSchema", "true")
-      .parquet(files.map(f => s"$rootPath/$f"): _*)
+    // under the log schema at `to` (renames mapped, clone refs
+    // resolved): no footer-inference job per micro-batch
+    val scan = TxnLog.readData(spark, rootPath,
+      TxnLog.stateAt(rootPath, to), files)
     val present = scan.columns.toSet
     scan.select(schema.fields.toSeq.map(f =>
       if (present.contains(f.name)) col(f.name)

@@ -1,7 +1,6 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
 
 import org.apache.avro.Schema
 import org.apache.avro.file.DataFileWriter
@@ -15,7 +14,7 @@ import graft.sources.AvroSource
 /** DataFrame-level Avro source: schema mapping, value conversion
   * (incl. nested/array/map/bytes), schema-evolution projection, and
   * interop with the relational operators once loaded. */
-class AvroSourceSpec extends AnyFunSuite with SparkSpec {
+class AvroSourceSpec extends AnyFunSuite with SparkSpec with ScratchDirs {
 
   private val schema = new Schema.Parser().parse(
     """{"type":"record","name":"Ev","fields":[
@@ -61,7 +60,7 @@ class AvroSourceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("reads nested rows and supports relational ops on top") {
-    val base = Files.createTempDirectory("graft_avro_src").toString
+    val base = scratchDir("graft_avro_src")
     writeRows(s"$base/part-0.avro", 6)
     writeRows(s"$base/part-1.avro", 6)
     val df = AvroSource.read(spark, base)
@@ -76,12 +75,12 @@ class AvroSourceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("write → read round-trips nested rows (bidirectional source)") {
-    val base = Files.createTempDirectory("graft_avro_rt").toString
+    val base = scratchDir("graft_avro_rt")
     writeRows(s"$base/part-0.avro", 5)
     val df = AvroSource.read(spark, base)
     // sibling dir, not under base: the write job re-evaluates the lazy
     // read of base, which must not see the output dir in its listing
-    val out = s"${Files.createTempDirectory("graft_avro_rt_out")}/rewritten"
+    val out = s"${scratchDir("graft_avro_rt_out")}/rewritten"
     AvroSource.write(df, out)
     val back = AvroSource.read(spark, out)
     assert(back.schema == df.schema, "schema must survive the round-trip")
@@ -104,7 +103,7 @@ class AvroSourceSpec extends AnyFunSuite with SparkSpec {
       .select(col("id"), col("d").cast("date").as("d"),
         col("ts").cast("timestamp").as("ts"),
         col("price").cast("decimal(12,2)").as("price"))
-    val out = s"${Files.createTempDirectory("graft_avro_logical")}/t"
+    val out = s"${scratchDir("graft_avro_logical")}/t"
     AvroSource.write(df, out)
     // the written Avro schema carries the logical annotations
     val written = AvroSource.fromCatalyst(df.schema)
@@ -136,7 +135,7 @@ class AvroSourceSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     val v1 = Seq((1L, "10.50"), (2L, "20.25")).toDF("id", "price")
       .select(col("id"), col("price").cast("decimal(10,2)").as("price"))
-    val out = s"${Files.createTempDirectory("graft_avro_evo_logical")}/t"
+    val out = s"${scratchDir("graft_avro_evo_logical")}/t"
     AvroSource.write(v1, out)
     val v2 = new Schema.Parser().parse(
       """{"type":"record","name":"GraftRecord","namespace":"graft.avro","fields":[
@@ -159,7 +158,7 @@ class AvroSourceSpec extends AnyFunSuite with SparkSpec {
         |{"name":"score","type":"double"},
         |{"name":"extra","type":["null","string"],"default":null}
         |]}""".stripMargin)
-    val base = Files.createTempDirectory("graft_avro_evo").toString
+    val base = scratchDir("graft_avro_evo")
     // v1 files use the 7-field schema; read them under the narrower v2
     // reader schema: kept fields decode, the new field defaults null
     writeRows(s"$base/part-0.avro", 3)

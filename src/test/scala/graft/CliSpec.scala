@@ -7,7 +7,7 @@ import graft.compact.CompactorCli
 /** Option-surface parity with the reference's scopt parser
   * (DefragmentAvroInputParams.scala): required folders, typed
   * fileCount, flag options, unknown-option rejection. */
-class CliSpec extends AnyFunSuite {
+class CliSpec extends AnyFunSuite with ScratchDirs {
 
   test("parses the full option set") {
     val Right((c, local)) = CompactorCli.parse(Array(
@@ -45,7 +45,7 @@ class CliSpec extends AnyFunSuite {
   test("run() compacts end-to-end and reports per-partition lines") {
     val spark = SparkSpec.session
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_cli_e2e").toString
+    val base = scratchDir("graft_cli_e2e")
     (1 to 100).toDF("id").repartition(4).write.parquet(s"$base/src")
     val lines = scala.collection.mutable.Buffer[String]()
     val code = CompactorCli.run(Array(
@@ -62,7 +62,7 @@ class CliSpec extends AnyFunSuite {
   }
 
   test("--hadoopConfig loads site files into the FS Configuration") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_hconf")
+    val dir = java.nio.file.Paths.get(scratchDir("graft_hconf"))
     java.nio.file.Files.writeString(dir.resolve("core-site.xml"),
       """<?xml version="1.0"?>
         |<configuration>

@@ -18,10 +18,10 @@ import graft.compact.Compactor.Config
   * (FIXTURES.md §B): flat + partitioned compaction, dynamic sizing,
   * rejection cases, dot/underscore ignores, mutation abort, trash on
   * overwrite, and schema evolution for both parquet and avro. */
-class CompactorSpec extends AnyFunSuite with SparkSpec {
+class CompactorSpec extends AnyFunSuite with SparkSpec with ScratchDirs {
 
   private def tmpBase(): String =
-    Files.createTempDirectory("graft_compact_spec").toString
+    scratchDir("graft_compact_spec")
 
   private def sampleDf(n: Int = 100): DataFrame = {
     import spark.implicits._
@@ -272,7 +272,7 @@ class CompactorSpec extends AnyFunSuite with SparkSpec {
 
   test("single-file utilities: copyFromLocal, stream read, file-only delete") {
     val ops = fsOps
-    val base = java.nio.file.Files.createTempDirectory("graft_fsops")
+    val base = java.nio.file.Paths.get(scratchDir("graft_fsops"))
     val src = base.resolve("payload.txt")
     java.nio.file.Files.writeString(src, "graft-fs-utils")
     val dstDir = base.resolve("dst")

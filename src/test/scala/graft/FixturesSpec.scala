@@ -11,13 +11,27 @@ import graft.core.Fixtures
 /** Staged-fixture lifecycle: collision-resistant keys and re-staging on
   * source change (ADVICE r3: hashCode keys could collide; a bare
   * _SUCCESS marker reused stale fixtures after the source regenerated). */
-class FixturesSpec extends AnyFunSuite {
+class FixturesSpec extends AnyFunSuite with ScratchDirs {
+
+  private val sources =
+    new java.util.concurrent.ConcurrentLinkedQueue[String]
 
   private def tmpSource(): File = {
-    val d = Files.createTempDirectory("graft_fixsrc_").toFile
+    val d = new File(scratchDir("graft_fixsrc_"))
     Files.write(new File(d, "data.txt").toPath,
       "v1".getBytes(StandardCharsets.UTF_8))
+    sources.add(Fixtures.pathTag(d.toString))
     d
+  }
+
+  /** The fixtures staged from this suite's sources carry their path
+    * tags in their names; they go with the sources. */
+  override def afterAll(): Unit = {
+    val tags = sources.toArray.toSeq.map(_.toString)
+    try Option(new File(sys.props("java.io.tmpdir")).listFiles()).toSeq
+      .flatten.filter(f => tags.exists(f.getName.contains))
+      .foreach(Fixtures.deleteRecursively)
+    finally super.afterAll()
   }
 
   test("distinct source paths get distinct fixture paths") {

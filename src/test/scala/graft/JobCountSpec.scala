@@ -5,18 +5,20 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.graft.StreamingShim
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.compact.Compactor
 import graft.sources.TxnLog
 
-/** Spark jobs per write op on the warm test session, pinned. A write
+/** Spark jobs per txn-log op on the warm test session, pinned. A write
   * takes its row count and bounds from its own job, so an op must not
-  * grow back a read of what it just wrote. Like [[PlanBudgetSpec]],
-  * a pin may only be tightened: re-measure with this spec's failure
-  * message and lower the number. */
+  * grow back a read of what it just wrote; a read builds its frame
+  * under the log's schema, so it must not grow back a footer-inference
+  * job. Like [[PlanBudgetSpec]], a pin may only be tightened:
+  * re-measure with this spec's failure message and lower the number. */
 class JobCountSpec extends AnyFunSuite with SparkSpec {
 
   private val started = new AtomicInteger
@@ -76,7 +78,7 @@ class JobCountSpec extends AnyFunSuite with SparkSpec {
   test("a one-file deleteRange") {
     withScratch { root =>
       table(root, 1)
-      assertJobs("deleteRange", 5)(
+      assertJobs("deleteRange", 3)(
         assert(TxnLog.deleteRange(spark, root, "k", "3", "6", "d").nonEmpty))
     }
   }
@@ -84,7 +86,7 @@ class JobCountSpec extends AnyFunSuite with SparkSpec {
   test("a one-file mergeUpsert") {
     withScratch { root =>
       table(root, 1)
-      assertJobs("mergeUpsert", 17)(
+      assertJobs("mergeUpsert", 15)(
         assert(TxnLog.mergeUpsert(spark, root, rows(15, 25), "k", "m")
           .nonEmpty))
     }
@@ -93,8 +95,43 @@ class JobCountSpec extends AnyFunSuite with SparkSpec {
   test("a two-file OPTIMIZE") {
     withScratch { root =>
       table(root, 2)
-      assertJobs("compact", 3)(
+      assertJobs("compact", 1)(
         assert(TxnLog.compact(spark, root, "o").nonEmpty))
+    }
+  }
+
+  test("building TxnLog.read starts no job; a point lookup runs one") {
+    withScratch { root =>
+      table(root, 6)
+      assertJobs("building TxnLog.read", 0)(TxnLog.read(spark, root))
+      assertJobs("readPointLookup + collect", 1) {
+        val (df, scanned, _) = TxnLog.readPointLookup(spark, root, "k", "45")
+        assert(scanned.size == 1)
+        assert(df.where(col("k") === 45L).collect().length == 1)
+      }
+    }
+  }
+
+  test("an update-mode streaming pass over an aggregation") {
+    withScratch { root =>
+      import spark.implicits._
+      implicit val sq: org.apache.spark.sql.classic.SQLContext =
+        spark.sqlContext.asInstanceOf[org.apache.spark.sql.classic.SQLContext]
+      val in = MemoryStream[Long]
+      val q = in.toDS().toDF("k").groupBy(col("k")).agg(count(lit(1)).as("n"))
+        .writeStream.format("graft-txnlog")
+        .option("path", s"$root/t").option("appId", "jobs")
+        .option("mergeKey", "k").option("checkpointLocation", s"$root/ck")
+        .outputMode("update").start()
+      try {
+        in.addData(0L until 20L: _*)
+        q.processAllAvailable()
+        assertJobs("update-mode pass", 10) {
+          in.addData(15L until 25L: _*)
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+      assert(TxnLog.read(spark, s"$root/t").count() == 25)
     }
   }
 

@@ -45,18 +45,23 @@ class QueriesSpec extends AnyFunSuite with SparkSpec {
     * snapshot), independent of query hygiene — graft code never
     * creates that prefix directly, so a spark-* entry is
     * runtime-owned by construction and JVM-exit-cleaned. */
-  /** Per-process sink scratch embeds the owning appId
+  /** Per-process sink scratch and in-flight staging dirs
+    * (`<fixture>.<appTag>.<uuid>.tmp`) embed the owning appId
     * ([[graft.core.Fixtures.appTag]]) — a dir created by a CONCURRENT
     * graft process (another Verify/bench on this machine, cleaned in
     * its own finally) is not ours to assert on (r13 flake: a parallel
-    * Verify's in-flight `graft_updsink_*` failed this suite). */
-  private val sinkScratch = "^graft_(txnsink|updsink)_(in|tbl|ck)_".r
+    * Verify's in-flight `graft_updsink_*` failed this suite; a second
+    * test JVM's `graft_graphcc_….tmp` staging did too). */
+  private val tagged = "^graft_(txnsink|updsink)_(in|tbl|ck)_|\\.tmp$".r
+
+  private def ours(n: String): Boolean =
+    tagged.findFirstIn(n).isEmpty ||
+      n.contains(graft.core.Fixtures.appTag(spark))
 
   private def litter: Set[String] =
     (tmpChildren -- tmpBefore).filter { n =>
       n.startsWith("graft_") && stagedFixture.findFirstIn(n).isEmpty &&
-        (sinkScratch.findFirstIn(n).isEmpty ||
-          n.contains(graft.core.Fixtures.appTag(spark)))
+        ours(n)
     }
 
   test("every oracle key has a query") {
@@ -95,8 +100,28 @@ class QueriesSpec extends AnyFunSuite with SparkSpec {
     assert(leaked.delete())
   }
 
+  /** A staging dir's name: `graft_<kind>_<pathTag>_<fp>.<tag>.<id>.tmp`. */
+  private def stagingName(tag: String): String =
+    s"graft_probe_${"0" * 32}_${"0" * 32}.$tag.$suiteEpoch.tmp"
+
+  test("another session's in-flight staging dir is not litter; this session's is") {
+    // left alive across the registry pass (deleted in afterAll), so the
+    // per-query checks and the end-of-pass partial-dir check see it too
+    val foreign = new java.io.File(tmpRoot, stagingName("local1otherjvm"))
+    assert(foreign.mkdir(), "could not create the probe dir")
+    assert(!litter.contains(foreign.getName),
+      "detector flagged another session's in-flight staging dir")
+    val own = new java.io.File(tmpRoot,
+      stagingName(graft.core.Fixtures.appTag(spark)))
+    assert(own.mkdir())
+    assert(litter.contains(own.getName),
+      "detector no longer catches this session's leaked staging dir")
+    assert(own.delete())
+  }
+
   override def afterAll(): Unit = {
     new java.io.File(tmpRoot, s"alien-proc-$suiteEpoch").delete()
+    new java.io.File(tmpRoot, stagingName("local1otherjvm")).delete()
     super.afterAll()
   }
 
@@ -115,7 +140,7 @@ class QueriesSpec extends AnyFunSuite with SparkSpec {
   // order): end-state of the full registry pass.
   test("registry pass leaves no partial fixture staging dirs") {
     val partial = (tmpChildren -- tmpBefore)
-      .filter(n => n.startsWith("graft_") && n.endsWith(".tmp"))
+      .filter(n => n.startsWith("graft_") && n.endsWith(".tmp") && ours(n))
     assert(partial.isEmpty,
       s"staging rename protocol left partial dirs: $partial")
   }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
@@ -12,11 +11,11 @@ import graft.operators.{Streams, Windows}
   * cannot produce: calendar gaps for ts_gapfill, out-of-order funnel
   * events. Fixtures are written as parquet table dirs so the query
   * functions run unchanged. */
-class SemanticsSpec extends AnyFunSuite with SparkSpec {
+class SemanticsSpec extends AnyFunSuite with SparkSpec with ScratchDirs {
 
   /** Writes a minimal table dir and returns it as the sf dir. */
   private def fixtureDir(write: String => Unit): String = {
-    val dir = Files.createTempDirectory("graft_semantics").toString
+    val dir = scratchDir("graft_semantics")
     write(dir)
     dir
   }

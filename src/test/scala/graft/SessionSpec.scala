@@ -7,9 +7,10 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps [[graft.core.Session]] the one way `src/main` builds a session,
-  * keeps operators from registering extensions themselves, and keeps the
+  * keeps operators from registering extensions themselves, keeps the
   * one release rule: operators pin and unpin through [[graft.core.Caches]],
-  * and only the harness mains sweep the session. */
+  * and only the harness mains sweep the session, and keeps txn-log data
+  * read under the log's own schema. */
 class SessionSpec extends AnyFunSuite {
 
   private val main = Paths.get("src/main")
@@ -43,5 +44,19 @@ class SessionSpec extends AnyFunSuite {
     assert(sweeps.nonEmpty &&
       sweeps.forall(h => harness(h.takeWhile(_ != ':'))), sweeps)
     assert(hits("resourceMark").isEmpty && hits("releaseSince").isEmpty)
+  }
+
+  test("txn-log data infers its schema only in TxnLog.readData's no-metaData fallback") {
+    val txnLog = "scala/graft/sources/TxnLog.scala"
+    val owners = Set(txnLog, "scala/graft/streaming/TxnLogSource.scala")
+    val infers = hits("option(\"mergeSchema\"")
+      .filter(h => owners(h.takeWhile(_ != ':')))
+    val lines = Files.readAllLines(main.resolve(txnLog)).asScala.toSeq
+    val start = lines.indexWhere(_.contains(" def readData("))
+    val end = lines.indexWhere(_.matches("  (private.* )?def .*"), start + 1)
+    assert(start >= 0 && end > start, "no TxnLog.readData")
+    val fallback = lines.indexWhere(_.contains("case None =>"), start)
+    assert(infers.size == 1 && fallback < end &&
+      infers.head == s"$txnLog:${fallback + 2}", infers)
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,9 +9,9 @@ import graft.operators.Relational
 /** Source/sink breadth beyond parquet (reference D1/D5/D8 analogues):
   * JSON and CSV round-trips, JSON schema inference (the TemplateApp
   * route), and partition-pruning plan behavior. */
-class SourcesSpec extends AnyFunSuite with SparkSpec {
+class SourcesSpec extends AnyFunSuite with SparkSpec with ScratchDirs {
 
-  private def tmp(): String = Files.createTempDirectory("graft_sources").toString
+  private def tmp(): String = scratchDir("graft_sources")
 
   test("json round-trip preserves rows and schema-inferred reads work") {
     val base = tmp()

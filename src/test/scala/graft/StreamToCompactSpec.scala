@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -15,13 +14,13 @@ import graft.streaming.EventStreams.Event
   * folds them into few — streaming ingest and DBA maintenance
   * composed. Uses the parquet file sink with a checkpoint (exactly-
   * once manifest) and foreachBatch-free plumbing. */
-class StreamToCompactSpec extends AnyFunSuite with SparkSpec {
+class StreamToCompactSpec extends AnyFunSuite with SparkSpec with ScratchDirs {
 
   test("stream to file sink, then compact the small files") {
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.classic.SQLContext =
       spark.sqlContext.asInstanceOf[org.apache.spark.sql.classic.SQLContext]
-    val base = Files.createTempDirectory("graft_stream_compact").toString
+    val base = scratchDir("graft_stream_compact")
     val in = MemoryStream[Event]
     val q = in.toDF()
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
