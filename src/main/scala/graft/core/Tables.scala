@@ -1,6 +1,8 @@
 package graft.core
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchemaShim
 
 /** Table loaders over the driver-generated parquet testdata.
   *
@@ -11,6 +13,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * predicate pushdown, column pruning and vectorized reads from
   * Catalyst. At 100 TB these would be partitioned/bucketed parquet
   * roots; `spark.read.parquet(dir)` scales to that unchanged.
+  *
+  * Building a table frame starts no Spark job: [[parquet]] reads the
+  * schema from one data file's footer on the driver, through Spark's
+  * own footer reader and conversion, and hands it to
+  * `spark.read.schema`. A bare `spark.read.parquet` would run that
+  * footer read as a one-task inference job on every load.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -18,7 +26,24 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` under the schema of one data file's
+    * footer, read on the driver: the first visible file of a flat
+    * directory (or `path` itself if it is a file), as Spark's own
+    * inference takes one file and assumes the rest agree. A missing
+    * path or a directory with no data file at its top (a partitioned
+    * layout) falls back to Spark's inference. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val file = (if (fs.exists(p)) Seq(fs.getFileStatus(p)) else Nil)
+      .flatMap(st => if (st.isFile) Seq(st) else fs.listStatus(p).toSeq
+        .filter(f => f.isFile && !"_.".contains(f.getPath.getName.head)))
+      .sortBy(_.getPath.getName).headOption
+    file.flatMap(FooterSchemaShim.schemaOf(spark, _))
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
 
   /** events.ts has shipped as two physical types across testdata
     * generations: INT64 TIMESTAMP(NANOS) (which Spark 4 rejects unless

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -111,10 +111,10 @@ object Dedup {
       expr(s"graft_minhash8(lower(`$textCol`))").as("sig"))
   }
 
-  /** Bucket-size safety valve for every band self-join (r6 scale-cliff
+  /** Bucket-size safety valve for every band bucket (r6 scale-cliff
     * finding): a redundancy-heavy corpus (templated/boilerplate mass,
     * heavy near-dup clusters) piles thousands of docs into one (band,
-    * signature) bucket, and the candidate join then emits |bucket|²/2
+    * signature) bucket, and candidate generation then emits |bucket|²/2
     * pairs from that bucket alone — measured 8.45 M candidates on a
     * 25 k-doc corpus where every doc had 4 near-copies, a 12,000×
     * blow-up over the same corpus at constant near-dup density. A
@@ -127,11 +127,10 @@ object Dedup {
     * DuckDB twins apply the identical rule via [[bandsSql]]. */
   private[graft] val maxBucket = 100
 
-  /** (doc_id, sig, b, v) band rows of a (doc_id, sig) frame: 4 bands
+  /** (doc_id, b, v, sig) band rows of a (doc_id, sig) frame: 4 bands
     * of 2 signature chunks, each row still carrying its document's
-    * whole signature, minus every bucket over [[maxBucket]]. */
-  private[graft] def bandsOfSigs(sigs: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("b"), col("v"))
+    * whole signature. */
+  private[graft] def bandsOfSigs(sigs: DataFrame): DataFrame =
     sigs
       .select(col("doc_id"), col("sig"), explode(array(
         (0 until nBands).map(b => struct(
@@ -144,30 +143,29 @@ object Dedup {
       // once: an isnotnull(sig) predicate would be pushed into the scan
       // and recompute graft_minhash8 per row in the filter.
       .where(col("v").isNotNull)
-      .withColumn("bucket_n", count(lit(1)).over(w))
-      .where(col("bucket_n") <= maxBucket)
-      .drop("bucket_n")
-  }
 
   /** The candidate plan every LSH consumer reads: distinct
-    * (doc_a < doc_b, n_agree) over the band self-join of a (doc_id, sig)
+    * (doc_a < doc_b, n_agree) over the (b, v) buckets of a (doc_id, sig)
     * frame, where n_agree counts the signature chunks the pair agrees on
-    * (the MinHash estimator's numerator). Both join sides carry their
-    * signature through the (b, v) bucket join, so the estimator needs no
-    * signature re-join, and nothing is cached: the join keys are the
-    * bucket window's partitioning, so both sides read the one window
-    * exchange and the kernel runs once per document. Unordered. */
-  private def candidatePlan(sigs: DataFrame): DataFrame = {
-    val bd = bandsOfSigs(sigs)
-    val a = bd.select(col("doc_id").as("doc_a"), col("b"), col("v"), col("sig").as("sa"))
-    val o = bd.select(col("doc_id").as("doc_b"), col("b").as("b2"), col("v").as("v2"),
-      col("sig").as("sb"))
-    a.join(o, col("b") === col("b2") && col("v") === col("v2") &&
-              col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        expr("size(filter(zip_with(sa, sb, (x, y) -> x = y), e -> e))").as("n_agree"))
+    * (the MinHash estimator's numerator). One groupBy(b, v) collects each
+    * bucket's (doc_id, sig) members; a bucket of 2..[[maxBucket]] rows
+    * emits its member pairs and their n_agree from a nested lambda, so
+    * the estimator needs no signature re-join and the bucket needs no
+    * self-join. Two exchanges (the bucket groupBy and the distinct),
+    * nothing cached; the kernel runs once per document. Unordered. */
+  private[graft] def candidatePlan(sigs: DataFrame): DataFrame =
+    bandsOfSigs(sigs)
+      .groupBy(col("b"), col("v"))
+      .agg(collect_list(struct(col("doc_id"), col("sig"))).as("m"))
+      .where(size(col("m")) > 1 && size(col("m")) <= maxBucket)
+      .select(explode(expr(
+        """flatten(transform(m, x -> transform(filter(m, y -> x.doc_id < y.doc_id),
+          |  y -> named_struct('doc_a', x.doc_id, 'doc_b', y.doc_id, 'n_agree',
+          |    size(filter(zip_with(x.sig, y.sig, (p, q) -> p = q), e -> e))))))"""
+          .stripMargin)).as("p"))
+      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"),
+        col("p.n_agree").as("n_agree"))
       .distinct()
-  }
 
   private val bandsSql: String = {
     val raw = (0 until nBands)
@@ -543,31 +541,31 @@ object Dedup {
     * [[dedupThresholdHist]], [[dedupRungAgreement]]) and LlmSpec's
     * unpruned-baseline measurement, so the test measures THIS verify.
     *
-    * Only candidate documents are shingled: a broadcast id-list
-    * semi-join filters the scan (candidates ≪ corpus at any scale, so
-    * cost follows the candidate count at 100 TB), and the survivors are
-    * hash-partitioned by doc_id. Each then gets one null-free distinct
-    * trigram array, merged per doc_id on that partitioning (no further
-    * exchange) so a duplicated doc_id row cannot inflate the counts; its
-    * set is the union of its rows', as the oracle's DISTINCT (doc_id, g)
-    * defines it. A pair joins its two arrays and reads
-    * common = |A ∩ B|, n_a = |A| and n_b = |B| as BIGINT; pairs sharing
-    * no trigram are absent, as under the inner gram join the oracle
-    * runs. Output: cand's columns, then common, n_a, n_b and jaccard
-    * (exact-int / exact-int, bit-identical across engines). */
+    * `cand` is a set of pairs (distinct rows). Its (pair, side, doc_id)
+    * endpoint rows are broadcast; one docs scan probes them and shingles
+    * each matched row, so only candidate documents are shingled. One
+    * groupBy on cand's columns builds each side's null-free distinct
+    * trigram array from its matched rows, so a duplicated doc_id's set
+    * is the union of its rows', as the oracle's DISTINCT (doc_id, g)
+    * defines it. The pair reads common = |A ∩ B|, n_a = |A| and
+    * n_b = |B| as BIGINT; pairs sharing no trigram (or naming an absent
+    * doc) are absent, as under the oracle's inner gram join. Scale
+    * shape: the broadcast grows with the (pruned) pair count, the one
+    * shuffle with the pairs' gram arrays. Output: cand's columns, then
+    * common, n_a, n_b and jaccard (exact-int / exact-int, bit-identical
+    * across engines). */
   private[graft] def exactJaccard(docs: DataFrame, cand: DataFrame): DataFrame = {
-    val candIds = cand.select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id")).distinct()
-    val grams = docs.join(broadcast(candIds), Seq("doc_id"), "left_semi")
-      .repartition(col("doc_id"))
-      .select(col("doc_id"), split(lower(col("text")), " ").as("t"))
-      .select(col("doc_id"), expr(gramsExpr).as("g"))
-      .groupBy(col("doc_id"))
-      .agg(array_compact(array_distinct(flatten(collect_list(col("g"))))).as("g"))
+    val keys = cand.columns.toSeq.map(col)
+    val ends = cand.select(keys :+ posexplode(array(col("doc_a"), col("doc_b")))
+      .as(Seq("side", "doc_id")): _*)
+    def grams(side: Int): Column = array_compact(array_distinct(flatten(
+      collect_list(when(col("side") === side, col("g"))))))
     val common = size(array_intersect(col("ga"), col("gb"))).cast("long")
-    cand
-      .join(grams.select(col("doc_id").as("doc_a"), col("g").as("ga")), "doc_a")
-      .join(grams.select(col("doc_id").as("doc_b"), col("g").as("gb")), "doc_b")
-      .select(cand.columns.toSeq.map(col) ++ Seq(common.as("common"),
+    docs.select(col("doc_id"), col("text")).join(broadcast(ends), "doc_id")
+      .select(keys ++ Seq(col("side"), split(lower(col("text")), " ").as("t")): _*)
+      .select(keys ++ Seq(col("side"), expr(gramsExpr).as("g")): _*)
+      .groupBy(keys: _*).agg(grams(0).as("ga"), grams(1).as("gb"))
+      .select(keys ++ Seq(common.as("common"),
         size(col("ga")).cast("long").as("n_a"), size(col("gb")).cast("long").as("n_b")): _*)
       .where(col("common") > 0)
       .withColumn("jaccard", col("common") / (col("n_a") + col("n_b") - col("common")))
@@ -1053,12 +1051,12 @@ object Dedup {
     * stay distributed; rounds are bounded by component diameter (log-ish
     * for near-dup blobs). Each round's localCheckpoint truncates lineage
     * (a plain cache doubles the plan every round); the convergence
-    * comparison is folded into the checkpoint job, so the per-round
-    * count is a scan of checkpointed rows, not a second shuffle. Round
-    * n-1's checkpoint blocks are released as soon as round n
-    * materializes — peak pinned state is two label frames regardless of
-    * round count; the final round's blocks are released as soon as the
-    * staging write completes. */
+    * count is folded into the checkpoint job (an `Observation` on it).
+    * Round n-1's checkpoint blocks are released as soon as round n
+    * materializes — peak pinned state is the edges plus two label
+    * frames regardless of round count; the final round's are released
+    * once the staging write completes, and the staged labels read back
+    * under their footer's schema ([[Tables.parquet]]), with no job. */
   private val labelFixtures =
     scala.collection.concurrent.TrieMap.empty[(String, String), String]
 
@@ -1085,7 +1083,7 @@ object Dedup {
             Caches.unpin(labels) // the staged copy supersedes the checkpoint
         }
       }
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
   }
 
   /** PUBLIC corpus-generic surface: MinHash+LSH near-dup candidate
@@ -1099,39 +1097,41 @@ object Dedup {
   /** PUBLIC generic surface: connected-component labels over any
     * undirected (doc_a, doc_b) pair frame, by the same min-label
     * propagation / checkpoint-release fixpoint the registry's clusters
-    * query uses. The returned frame is backed by the final round's
-    * checkpoint: release it with [[graft.core.Caches.unpin]] (or a
-    * harness drain) after consuming it. */
+    * query uses: the edges pinned once, then one checkpoint per round,
+    * whose job also counts the changed labels (an `Observation`). The
+    * returned frame is backed by the final round's checkpoint: release
+    * it with [[graft.core.Caches.unpin]] (or a harness drain) after
+    * consuming it. */
   def connectedComponents(spark: SparkSession, pairFrame: DataFrame): DataFrame = {
     // both directions of every pair from one pass over the pair frame
-    val edges = pairFrame
+    val edges = Caches.pin(pairFrame
       .select(explode(array(
         struct(col("doc_a"), col("doc_b")),
         struct(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))).as("e"))
-      .select(col("e.doc_a").as("doc_a"), col("e.doc_b").as("doc_b"))
-    val edgesCp = Caches.pin(edges)
-    // one-hop seed: each node starts at the least id among itself and
-    // its neighbours, so a pair component is already at its fixed point
-    // and converges in the first (check) round
-    var labels = Caches.pin(
-      edgesCp.groupBy(col("doc_a")).agg(min(col("doc_b")).as("m"))
-        .select(col("doc_a").as("node"), least(col("doc_a"), col("m")).as("label")))
+      .select(col("e.doc_a").as("doc_a"), col("e.doc_b").as("doc_b")))
+    // one-hop seed (least of self and neighbours: a pair component is
+    // already fixed, so round 1 only checks it), planned inline, unpinned
+    var labels = edges.groupBy(col("doc_a")).agg(min(col("doc_b")).as("m"))
+      .select(col("doc_a").as("node"), least(col("doc_a"), col("m")).as("label"))
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < 20) {
-      val prop = edgesCp.join(labels, col("doc_a") === col("node"))
+      val prop = edges.join(labels, col("doc_a") === col("node"))
         .select(col("doc_b").as("node"), col("label"))
-      val stepped = labels.select(col("node"), col("label")).union(prop)
+      val stepped = labels.union(prop)
         .groupBy(col("node")).agg(min(col("label")).as("label"))
         .join(labels.select(col("node"), col("label").as("old")), "node")
-      val next = Caches.pin(stepped)
-      changed = next.where(col("label") =!= col("old")).count()
-      Caches.unpin(labels)
+      // the round's changed-label count rides on its checkpoint job
+      val obs = Observation()
+      val next = Caches.pin(stepped.observe(obs,
+        count(when(col("label") =!= col("old"), 1)).as("changed")))
+      changed = obs.get("changed").asInstanceOf[Long]
+      if (iter > 0) Caches.unpin(labels) // the seed's only leaf is `edges`
       labels = next.select(col("node"), col("label"))
       iter += 1
     }
     require(changed == 0, s"label propagation did not converge in $iter rounds")
-    Caches.unpin(edgesCp)
+    Caches.unpin(edges)
     labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
   }
 
@@ -1282,7 +1282,6 @@ object Dedup {
     * cell's sample degrades to the best of the K-sample — the
     * standard sampling estimator, deterministic in both engines. */
   private[graft] val DedupEmbedCellCap = 512
-  // (capped ≡ uncapped on the fixture is pinned in LlmSpec)
 
   /** Embedding-cosine near-dup: nearest neighbor per vector *within
     * its coarse cluster* (`label`) — the IVF pattern: partition by a

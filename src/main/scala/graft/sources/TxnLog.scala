@@ -3642,8 +3642,11 @@ class TxnLogOps(val store: LogStore) {
           touched).schema
       }
     }
+    // all-nullable, as a scanned (non-empty) feed comes back: a feed's
+    // schema must not flip with whether the range changed any row
     def empty(s: StructType): DataFrame = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.graft.StreamingShim.asNullable(s))
     if (touched.isEmpty)
       return empty(StructType(schema.fields ++ cdfFields.fields))
     val frames = perV.flatMap { case (v, entries) =>

@@ -82,6 +82,11 @@ object StreamingShim {
         .unloadAll()
   }
 
+  /** `s` with every field, element and value nullable, nested too: the
+    * schema a file-source scan reports (`asNullable` is `private[spark]`). */
+  def asNullable(s: org.apache.spark.sql.types.StructType)
+  : org.apache.spark.sql.types.StructType = s.asNullable
+
   /** Wait up to `ms` until every listener has processed the events
     * posted so far (`listenerBus` is `private[spark]`). */
   def drainListenerBus(sc: org.apache.spark.SparkContext, ms: Long): Unit =

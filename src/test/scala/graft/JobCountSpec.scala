@@ -11,14 +11,18 @@ import org.apache.spark.sql.graft.StreamingShim
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.compact.Compactor
+import graft.core.{Caches, Tables}
+import graft.llm.Dedup
 import graft.sources.TxnLog
 
-/** Spark jobs per txn-log op on the warm test session, pinned. A write
-  * takes its row count and bounds from its own job, so an op must not
-  * grow back a read of what it just wrote; a read builds its frame
-  * under the log's schema, so it must not grow back a footer-inference
-  * job. Like [[PlanBudgetSpec]], a pin may only be tightened:
-  * re-measure with this spec's failure message and lower the number. */
+/** Spark jobs per txn-log op and per dedup-ladder rung on the warm test
+  * session, pinned. A write takes its row count and bounds from its own
+  * job, so an op must not grow back a read of what it just wrote; a
+  * read builds its frame under the log's (or the footer's) schema, so
+  * it must not grow back a footer-inference job; a ladder rung must not
+  * grow back a cache, a pinned seed or a separate convergence count.
+  * Like [[PlanBudgetSpec]], a pin may only be tightened: re-measure
+  * with this spec's failure message and lower the number. */
 class JobCountSpec extends AnyFunSuite with SparkSpec {
 
   private val started = new AtomicInteger
@@ -133,6 +137,53 @@ class JobCountSpec extends AnyFunSuite with SparkSpec {
       } finally q.stop()
       assert(TxnLog.read(spark, s"$root/t").count() == 25)
     }
+  }
+
+  test("building Tables.documents starts no job") {
+    assertJobs("building Tables.documents", 0)(Tables.documents(spark, sfDir))
+  }
+
+  /** The ladder rungs on the sf0.001 corpus, each measured warm (a first
+    * run compiles and stages the cluster labels). */
+  private def ladder(what: String, pinned: Int)(op: => Any): Unit = {
+    op
+    Caches.drain(spark)
+    assertJobs(what, pinned)(op)
+    Caches.drain(spark)
+  }
+
+  test("dedup ladder: candidates collect") {
+    ladder("minhashCandidates collect", 3)(Dedup.minhashCandidates(
+      Tables.documents(spark, sfDir), "doc_id", "text").collect())
+  }
+
+  test("dedup ladder: dedupJaccard collect") {
+    ladder("dedupJaccard collect", 7)(Dedup.dedupJaccard(spark, sfDir).collect())
+  }
+
+  test("dedup ladder: connectedComponents on a pair frame and on a path") {
+    import spark.implicits._
+    def components(pairs: => DataFrame): Unit = {
+      val labels = Dedup.connectedComponents(spark, pairs)
+      labels.collect()
+      Caches.unpin(labels)
+    }
+    ladder("connectedComponents on the candidates + collect", 8)(components(
+      Dedup.minhashCandidates(Tables.documents(spark, sfDir), "doc_id", "text")))
+    // three rounds: the seed is inline, each round is one checkpoint job
+    // plus its exchanges, and its change count rides on that job
+    val path = Seq(17L, 12L, 19L, 11L, 15L, 14L, 20L)
+    ladder("connectedComponents on a 7-node path + collect", 15)(components(
+      path.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("doc_a", "doc_b")))
+  }
+
+  test("dedup ladder: dedupApply plus a group count") {
+    ladder("dedupApply group count", 3)(Dedup.dedupApply(spark, sfDir)
+      .groupBy(col("kept")).count().collect())
+  }
+
+  test("dedup ladder: dedupEmbed collect") {
+    ladder("dedupEmbed collect", 7)(Dedup.dedupEmbed(spark, sfDir).collect())
   }
 
   test("a two-leaf Compactor.run") {

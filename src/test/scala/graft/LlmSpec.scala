@@ -130,6 +130,90 @@ class LlmSpec extends AnyFunSuite with SparkSpec {
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
+  /** Runs `body` with a listener tracking the RDD ids that hold live
+    * blocks (added on a block update, dropped on unpersist); returns the
+    * peak count and the ids still live at the end. `getPersistentRDDs`
+    * cannot stand in: it holds weak values, so a leaked checkpoint whose
+    * frame is unreachable vanishes from it. */
+  private def trackingPinned(body: => Unit): (Int, Set[Int]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated,
+      SparkListenerUnpersistRDD}
+    val live = scala.collection.mutable.Set.empty[Int]
+    var peak = 0
+    val l = new SparkListener {
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit =
+        e.blockUpdatedInfo.blockId.asRDDId.foreach { id =>
+          if (e.blockUpdatedInfo.storageLevel.isValid) live += id.rddId
+          else live -= id.rddId
+          peak = math.max(peak, live.size)
+        }
+      override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit =
+        live -= e.rddId
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.sql.graft.StreamingShim.drainListenerBus(sc, 60000L)
+    sc.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.sql.graft.StreamingShim.drainListenerBus(sc, 60000L)
+    } finally sc.removeSparkListener(l)
+    (peak, live.toSet)
+  }
+
+  test("fixpoint peak pinned state is the edges plus two label rounds") {
+    import spark.implicits._
+    graft.core.Caches.drain(spark)
+    val path = Seq(17L, 12L, 19L, 11L, 15L, 14L, 20L)
+    val (peak, left) = trackingPinned {
+      val labels = Dedup.connectedComponents(spark,
+        path.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("doc_a", "doc_b"))
+      assert(labels.collect().forall(_.getLong(1) == 11L))
+      graft.core.Caches.unpin(labels)
+    }
+    // three rounds: a round that kept its predecessor would reach 4
+    assert(peak >= 2 && peak <= 3, s"peak pinned RDDs $peak")
+    assert(left.isEmpty, s"still pinned: $left")
+  }
+
+  test("an empty pair frame converges and leaves nothing pinned") {
+    import spark.implicits._
+    graft.core.Caches.drain(spark)
+    val (_, left) = trackingPinned {
+      val labels = Dedup.connectedComponents(spark,
+        Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"))
+      assert(labels.collect().isEmpty)
+      graft.core.Caches.unpin(labels)
+    }
+    assert(left.isEmpty, s"still pinned: $left")
+  }
+
+  test("candidate plan equals a driver bucket reference: maxBucket edge, duplicated doc_id rows") {
+    import spark.implicits._
+    def words(tag: String) = (0 until 30).map(i => s"$tag$i").mkString(" ")
+    val full = Dedup.maxBucket
+    val nearC = words("c").replace("c29", "other")
+    val docs = ((0 until full).map(i => (1000L + i, words("a"))) ++    // exactly maxBucket
+      (0 until full + 1).map(i => (2000L + i, words("b"))) ++          // one over
+      Seq(3000L -> words("c"), 3000L -> words("c"), 3001L -> words("c"),
+        3000L -> nearC, 3002L -> nearC)).toDF("doc_id", "text")      // repeated ids
+    val sigs = Dedup.signaturesNative(docs, "doc_id", "text")
+    val got = Dedup.candidatePlan(sigs).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    // the distinct (a < b, n_agree) of every row pair sharing a (b, v)
+    // bucket of 2..maxBucket rows
+    val expected = Dedup.bandsOfSigs(sigs).collect().toSeq
+      .groupBy(r => (r.getInt(1), r.getString(2))).values
+      .filter(m => m.size > 1 && m.size <= full)
+      .flatMap(m => for (x <- m; y <- m if x.getLong(0) < y.getLong(0)) yield
+        (x.getLong(0), y.getLong(0), x.getSeq[String](3).zip(y.getSeq[String](3))
+          .count(p => p._1 == p._2)))
+      .toSet
+    assert(got == expected)
+    assert(got.count(_._1 / 1000 == 1) == full * (full - 1) / 2)
+    assert(!got.exists(_._1 / 1000 == 2))
+    assert(got.contains((3000L, 3001L, 8)) && got.contains((3000L, 3002L, 8)))
+  }
+
   test("jaccard-verified pairs are a subset of LSH candidates") {
     val cand = Dedup.dedupFuzzy(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

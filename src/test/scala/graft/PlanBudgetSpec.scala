@@ -16,9 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * adaptive plan, which prints duplicated exchange subtrees that AQE's
   * exchange reuse dedups at runtime — so a budget is an upper bound on
   * planned shuffles, not a claim of distinct runtime shuffles
-  * (llm_dedup_jaccard plans 14: the band-window and candidate
-  * exchanges print once per consuming leg, and runtime reuse runs each
-  * once). A NEW query must add a row
+  * (llm_dedup_band_recall plans 14: its cached gram subtree prints
+  * once per consuming leg, and runtime reuse runs each once). A NEW
+  * query must add a row
   * here: the `every query has a budget` test fails otherwise.
   */
 class PlanBudgetSpec extends AnyFunSuite with SparkSpec {
@@ -284,23 +284,22 @@ class PlanBudgetSpec extends AnyFunSuite with SparkSpec {
     "llm_dedup_apply" -> 1,
     "llm_dedup_cluster_stats" -> 2,
     "llm_dedup_clusters" -> 1,
-    // same candidate plan and verify kernel as llm_dedup_jaccard (the
-    // band subtree prints per consuming leg in the initial plan; AQE
-    // reuses it)
-    "llm_dedup_containment" -> 14,
+    // same candidate plan (bucket groupBy + distinct) and verify kernel
+    // (broadcast endpoints, one pair groupBy) as llm_dedup_jaccard
+    "llm_dedup_containment" -> 4,
     // shared verify kernel + ≤10-row cumulative window
-    "llm_dedup_threshold_hist" -> 15,
+    "llm_dedup_threshold_hist" -> 5,
     // one candidate plan carries n_agree through the verify kernel,
     // so both rungs read one pass
-    "llm_dedup_rung_agreement" -> 15,
-    // sample-scoped gram inverted index + size joins + band self-join
+    "llm_dedup_rung_agreement" -> 5,
+    // sample-scoped gram inverted index + size joins + candidate plan
     // + four 1-row count frames crossJoined (allowed bnl); the cached
     // gram subtree prints per consuming leg; the shared candidate plan
     // is partitioned on (doc_a, doc_b, n_agree), so the hit semi-join
     // re-keys it on the pair
-    "llm_dedup_band_recall" -> 18,
+    "llm_dedup_band_recall" -> 14,
     // band candidates + two broadcast prefix joins + sort
-    "llm_dedup_edit_distance" -> 4,
+    "llm_dedup_edit_distance" -> 3,
     "llm_curriculum" -> 2,
     // label-cell join + candidate-side cap window + per-vector NN
     // window + sort (cap adds one label-keyed exchange); r16 +1: the
@@ -320,15 +319,16 @@ class PlanBudgetSpec extends AnyFunSuite with SparkSpec {
     // initial plan; runtime reuses the one exchange
     "llm_dedup_codebook_log" -> 8,
     "llm_dedup_exact" -> 2,
-    "llm_dedup_fuzzy" -> 4,
-    "llm_dedup_jaccard" -> 14,
-    "llm_dedup_jaccard_est" -> 4,
+    "llm_dedup_fuzzy" -> 3,
+    // candidate plan 2, verify kernel 1, output sort 1
+    "llm_dedup_jaccard" -> 4,
+    "llm_dedup_jaccard_est" -> 3,
     "llm_dedup_simhash" -> 1,
     // r6 fingerprint-collapse rewrite: the cached fp/groups subtrees
     // print once per consuming leg (3×/4×) in the initial plan; runtime
     // materializes each once
     "llm_dedup_simhash_nn" -> 20,
-    "llm_doc_overlap" -> 5,
+    "llm_doc_overlap" -> 4,
     "llm_embed_cluster" -> 3,
     "llm_embed_outliers" -> 5,
     "llm_embed_quantize" -> 1,
@@ -337,12 +337,12 @@ class PlanBudgetSpec extends AnyFunSuite with SparkSpec {
     // broadcast 10-query probe + per-query rank + sort
     "llm_hard_negatives" -> 2,
     "llm_fingerprint" -> 1,
-    "llm_incremental_dedup" -> 11,
+    "llm_incremental_dedup" -> 8,
     // same band/digest machinery, increment membership via CDF-id
     // joins instead of mod filters — measured equal to the twin
-    "llm_dedup_cdf" -> 11,
-    // index read + batch sigs + band window/self-join + verdict joins
-    "llm_dedup_index" -> 11,
+    "llm_dedup_cdf" -> 8,
+    // index read + batch sigs + bucket groupBy + verdict joins
+    "llm_dedup_index" -> 8,
     "llm_lang_id" -> 1,
     // projection + ≤|langs|² cell agg + per-actual window + sort
     "llm_lang_confusion" -> 3,

@@ -55,16 +55,9 @@ class ReaderSpec extends AnyFunSuite with SparkSpec with ScratchDirs {
   private def rowsOf(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
 
-  private def typesOf(df: DataFrame): Seq[(String, String)] =
-    df.schema.fields.toSeq.map(f => f.name -> f.dataType.sql)
-
-  /** Same rows under the same schema; `nullability = false` compares
-    * names and types only (an empty change feed is typed by the DDL,
-    * whose keys are NOT NULL, as it was before the log-schema read). */
-  private def assertSame(what: String, got: DataFrame, ref: DataFrame,
-                         nullability: Boolean = true): Unit = {
-    if (nullability) assert(got.schema == ref.schema, s"$what: schema")
-    else assert(typesOf(got) == typesOf(ref), s"$what: schema")
+  /** Same rows under the same schema, nullability included. */
+  private def assertSame(what: String, got: DataFrame, ref: DataFrame): Unit = {
+    assert(got.schema == ref.schema, s"$what: schema")
     assert(rowsOf(got) == rowsOf(ref), s"$what: rows")
   }
 
@@ -185,10 +178,8 @@ class ReaderSpec extends AnyFunSuite with SparkSpec with ScratchDirs {
       val changes = TxnLog.readChanges(spark, root, v - 1, v)
       def kind(t: String) = changes.where(col("_change_type") === t)
         .select(schema.fieldNames.toSeq.map(col): _*)
-      assertSame(s"v$v inserts", kind("insert"),
-        at(v).exceptAll(at(v - 1)), nullability = false)
-      assertSame(s"v$v deletes", kind("delete"),
-        at(v - 1).exceptAll(at(v)), nullability = false)
+      assertSame(s"v$v inserts", kind("insert"), at(v).exceptAll(at(v - 1)))
+      assertSame(s"v$v deletes", kind("delete"), at(v - 1).exceptAll(at(v)))
     }
   }
 
