@@ -408,7 +408,10 @@ object Streams {
           e.unionAll(sentinel).coalesce(2).write.parquet(target)
         }
       }
-    val uuid = java.util.UUID.randomUUID().toString
+    // the owning appId in the names, as the txn/upd sinks do: another
+    // graft process must be able to tell these dirs are not its own
+    val uuid = s"${graft.core.Fixtures.appTag(spark)}_" +
+      java.util.UUID.randomUUID().toString
     val tmpRoot = sys.props("java.io.tmpdir")
     val out = s"$tmpRoot/graft_streamsink_out_$uuid"
     val ck = s"$tmpRoot/graft_streamsink_ck_$uuid"

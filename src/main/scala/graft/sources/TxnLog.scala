@@ -508,12 +508,46 @@ class TxnLogOps(val store: LogStore) {
     * the same arithmetic Spark's own size-only stats visitor uses)
     * sits under the session threshold; above it the frame joins
     * un-hinted and the planner picks a shuffled join like any other
-    * big side. Threshold ≤ 0 (auto-broadcast disabled) never hints. */
+    * big side. Threshold ≤ 0 (auto-broadcast disabled) never hints.
+    *
+    * Callers are the frames whose row count a job already took: the
+    * distributed MERGE ladder and the general merge surface (their
+    * sources), and pinned IN-subquery key sets. A MERGE source the
+    * optimizer already sizes within the threshold never gets here: it
+    * is held on the driver instead ([[holdsOnDriver]]). */
   private[graft] def maybeBroadcast(spark: SparkSession, df: DataFrame,
                                     rows: Long): DataFrame = {
     val thresh = spark.sessionState.conf.autoBroadcastJoinThreshold
     val est = rows * math.max(df.schema.defaultSize.toLong, 8L)
     if (thresh > 0 && est <= thresh) broadcast(df) else df
+  }
+
+  /** Whether an upsert-ladder MERGE holds `source` on the driver: its
+    * optimizer size estimate is within
+    * `spark.sql.autoBroadcastJoinThreshold` (the test Spark's planner
+    * applies before it broadcasts a relation, so the driver holds no
+    * more than a broadcast would), and every key column is of a type
+    * whose driver-side equality and order are Spark's (integral,
+    * binary-collated string, boolean, date, timestamp) and the same
+    * in the table (`table`, when it has a schema). */
+  private[graft] def holdsOnDriver(spark: SparkSession, source: DataFrame,
+                                   keyCols: Seq[String],
+                                   table: Option[StructType]): Boolean = {
+    import org.apache.spark.sql.types._
+    val thresh = spark.sessionState.conf.autoBroadcastJoinThreshold
+    def heldKey(k: String): Boolean =
+      source.schema.fields.find(_.name == k).map(_.dataType).exists { dt =>
+        val plain = dt match {
+          case ByteType | ShortType | IntegerType | LongType | BooleanType |
+               DateType | TimestampType | TimestampNTZType => true
+          case s: StringType => s == StringType
+          case _ => false
+        }
+        plain && table.forall(_.fields.find(_.name == k)
+          .forall(_.dataType == dt))
+      }
+    thresh > 0 && keyCols.forall(heldKey) &&
+      source.queryExecution.optimizedPlan.stats.sizeInBytes <= thresh
   }
 
   /** The schema contract every write resolves against the table's
@@ -567,18 +601,27 @@ class TxnLogOps(val store: LogStore) {
     * strictly FALSE (SQL CHECK semantics: NULL passes). ONE scan
     * counts every constraint's violations simultaneously — the
     * enforcement cost is one pass over the rows being written,
-    * never over the table. */
+    * never over the table. `onDriver` is for a local relation: a
+    * projection of per-row flags evaluates on the driver with no
+    * job (an aggregate would run one), and the driver counts them. */
   private def enforceConstraints(df: DataFrame,
                                  cons: Map[String, String],
-                                 what: String): Unit = {
+                                 what: String,
+                                 onDriver: Boolean = false): Unit = {
     if (cons.isEmpty) return
     val named = cons.toSeq.sorted
-    val aggs = named.map { case (_, e) =>
-      count(when(!coalesce(expr(e), lit(true)), 1)) }
-    val r = df.agg(aggs.head, aggs.tail: _*).head()
-    val bad = named.zipWithIndex.collect {
-      case ((n, e), i) if r.getLong(i) > 0 =>
-        s"$n (CHECK $e): ${r.getLong(i)} rows"
+    val fails = named.map { case (_, e) => !coalesce(expr(e), lit(true)) }
+    val counts: Seq[Long] =
+      if (onDriver) {
+        val flags = df.select(fails: _*).collect()
+        named.indices.map(i => flags.count(_.getBoolean(i)).toLong)
+      } else {
+        val aggs = fails.map(f => count(when(f, 1)))
+        val r = df.agg(aggs.head, aggs.tail: _*).head()
+        named.indices.map(r.getLong)
+      }
+    val bad = named.zip(counts).collect {
+      case ((n, e), c) if c > 0 => s"$n (CHECK $e): $c rows"
     }
     require(bad.isEmpty,
       s"$what violates table constraints — ${bad.mkString("; ")}")
@@ -1219,14 +1262,16 @@ class TxnLogOps(val store: LogStore) {
     * dir name — the file-attribution the probe/census passes need,
     * computed from `_metadata.file_path` on the scan side (an
     * `input_file_name()` evaluated after the anti join would not be
-    * reliable). */
+    * reliable). `rowIds` keeps each row's identity, the relative leaf
+    * path `__path` and the parquet `__pos`, after the data columns. */
   private def scanWithDVs(spark: SparkSession, root: String, st: State,
                           files: Seq[String],
-                          fileCol: Option[String] = None): DataFrame = {
+                          fileCol: Option[String] = None,
+                          rowIds: Boolean = false): DataFrame = {
     val base = readData(spark, root, st, files)
     val dataCols = base.columns.toSeq
     val dv = dvRows(spark, root, st, files)
-    if (dv.isEmpty && fileCol.isEmpty) return base
+    if (dv.isEmpty && fileCol.isEmpty && !rowIds) return base
     val withMeta = base.select((dataCols.map(col) :+
       relPath.as("__path") :+
       col("_metadata.row_index").as("__pos")): _*)
@@ -1237,11 +1282,12 @@ class TxnLogOps(val store: LogStore) {
           .withColumnRenamed("pos", "__pos")),
           Seq("__path", "__pos"), "left_anti")
     }
+    val ids = if (rowIds) Seq("__path", "__pos") else Seq.empty
     fileCol match {
       case Some(n) => surviving
         .withColumn(n, regexp_extract(col("__path"), "^([^/]+)/", 1))
-        .select((dataCols :+ n).map(col): _*)
-      case None => surviving.select(dataCols.map(col): _*)
+        .select((dataCols ++ (n +: ids)).map(col): _*)
+      case None => surviving.select((dataCols ++ ids).map(col): _*)
     }
   }
 
@@ -2099,7 +2145,9 @@ class TxnLogOps(val store: LogStore) {
     * share (VERDICT r10 #1: merge/delete used to pay one serialized
     * job latency per touched file while compact already pooled its
     * bins). Each task is one narrow job; Spark's scheduler interleaves
-    * them across executor slots. Results keep `tasks` order. */
+    * them across executor slots. Results keep `tasks` order. A failed
+    * task's error surfaces only once every task has ended, so the
+    * caller's cleanup never races a write still running. */
   private def inPool[T](tasks: Seq[() => T]): Seq[T] =
     if (tasks.size <= 1) tasks.map(_())
     else {
@@ -2111,7 +2159,12 @@ class TxnLogOps(val store: LogStore) {
         scala.concurrent.Future.traverse(tasks)(t =>
           scala.concurrent.Future(t())),
         scala.concurrent.duration.Duration.Inf)
-      finally pool.shutdown()
+      finally {
+        pool.shutdown()
+        pool.awaitTermination(Long.MaxValue,
+          java.util.concurrent.TimeUnit.NANOSECONDS)
+        ()
+      }
     }
 
   /** Conflict-aware optimistic commit for read-modify-write writers
@@ -2610,16 +2663,41 @@ class TxnLogOps(val store: LogStore) {
     *
     * The planner ladder composes [[mergeUpsert]]'s with
     * [[deleteRange]]'s cheapest-action trick: stats pre-prune → ONE
-    * broadcast inner probe over the candidates (matched rows + clause
-    * flags, bounded by the source's key count) → per file: untouched
-    * when no clause fires, PURE REMOVE (metadata-only, zero data I/O)
-    * when every row fires delete, narrow copy-on-write rewrite
-    * otherwise. Rewrites run as concurrent Spark jobs and re-publish
-    * pruning metadata exactly like [[mergeUpsert]]. Commit is
-    * conflict-aware ([[commitRewrite]]). Returns the committed
-    * version, or None when nothing matched and nothing inserts (or on
-    * conflict); an empty source with a `txn` marker commits just the
-    * marker. */
+    * probe over the candidates (matched rows + clause flags, bounded
+    * by the source's key count) → per file: untouched when no clause
+    * fires, PURE REMOVE (metadata-only, zero data I/O) when every row
+    * fires delete, narrow copy-on-write rewrite otherwise. Rewrites
+    * and the insert file are written as one wave of concurrent Spark
+    * jobs and re-publish pruning metadata exactly like
+    * [[mergeUpsert]]. Commit is conflict-aware ([[commitRewrite]]).
+    * Returns the committed version, or None when nothing matched and
+    * nothing inserts (or on conflict); an empty source with a `txn`
+    * marker commits just the marker.
+    *
+    * Path selection, by the source's size estimate against
+    * `spark.sql.autoBroadcastJoinThreshold` ([[holdsOnDriver]]):
+    *
+    *  - within it, the source is HELD ON THE DRIVER: collected once
+    *    (count, duplicate refusal and key bounds with no further job),
+    *    one collect job probes the candidates under an `In` on the
+    *    source keys, the clause flags, owners and pure removes are
+    *    computed on the driver, and each rewrite drops its fired rows
+    *    by row identity. Scale shape: driver memory is bounded by the
+    *    threshold (what a broadcast would hold) plus the matched rows;
+    *    Spark jobs are 1 (probe) + touched files + 1 (inserts, when
+    *    any), plus the source's own collect when it is not local and
+    *    a broadcast job when a candidate carries a deletion vector.
+    *  - above it, the DISTRIBUTED ladder: the source is cached, a
+    *    bounds job counts and bounds it, the probe is a join (broadcast
+    *    under [[maybeBroadcast]]'s row estimate, shuffled above it)
+    *    cached for the per-file counts, owners and inserts. Scale
+    *    shape: no driver-side rows beyond per-file counts; 15 Spark
+    *    jobs for a one-file upsert, 16 when its joins shuffle.
+    *
+    * Both paths leave the same rows and commit the same actions (the
+    * same removes, the same adds with the same bounds and partition
+    * tuples). The extended clause surface of [[mergeClausesKeys]]
+    * always takes the distributed [[mergeClausesGeneral]]. */
   def mergeClauses(spark: SparkSession, root: String, source0: DataFrame,
                    keyCol: String, session: String,
                    updateWhen: Option[org.apache.spark.sql.Column],
@@ -2697,37 +2775,40 @@ class TxnLogOps(val store: LogStore) {
           evolve = true))
       else None
     val live = liveFiles(root, base)
-    val outBase = f"m${base + 1}%08d" + s"_$session"
+    val mc = MergeCommit(base, f"m${base + 1}%08d" + s"_$session", session,
+      beforeCommit, maxAttempts, txn, strictConflict, evoDdl, evolveResolve)
+    val extendedSurface = updateSet.nonEmpty || insertWhen.nonEmpty ||
+      nmbsDelete.nonEmpty || nmbsUpdate.nonEmpty
+    if (!extendedSurface &&
+        holdsOnDriver(spark, source0, keyCols, schemaAt(root, base)))
+      return mergeHeld(spark, root, source0, keyCols, updateWhen,
+        deleteWhen, insertUnmatched, live, mc)
     // the source is re-referenced once per touched file plus the
     // bounds/insert passes — pin it for the operation's duration so a
     // computed change batch is not recomputed N times
     val source = source0.cache()
-    try mergeClausesPinned(spark, root, source, keyCols, session,
-      updateWhen, deleteWhen, insertUnmatched, beforeCommit,
-      maxAttempts, base, live, outBase, txn, strictConflict,
-      updateSet, insertWhen, nmbsDelete, nmbsUpdate,
-      evoDdl, evolveResolve)
+    try mergeClausesPinned(spark, root, source, keyCols, updateWhen,
+      deleteWhen, insertUnmatched, live, mc, extendedSurface, updateSet,
+      insertWhen, nmbsDelete, nmbsUpdate)
     finally { source.unpersist(); () }
   }
 
+  /** The distributed upsert ladder (sources above the broadcast
+    * threshold), and the census that routes the extended clause
+    * surface to [[mergeClausesGeneral]]. `source` is cached. */
   private def mergeClausesPinned(spark: SparkSession, root: String,
-      source: DataFrame, keyCols: Seq[String], session: String,
+      source: DataFrame, keyCols: Seq[String],
       updateWhen: Option[org.apache.spark.sql.Column],
       deleteWhen: Option[org.apache.spark.sql.Column],
-      insertUnmatched: Boolean, beforeCommit: () => Unit,
-      maxAttempts: Int, base: Int, live: Seq[String], outBase: String,
-      txn: Option[(String, Long)] = None,
-      strictConflict: Boolean = false,
-      updateSet: Option[Seq[(String, String)]] = None,
-      insertWhen: Option[org.apache.spark.sql.Column] = None,
-      nmbsDelete: Option[org.apache.spark.sql.Column] = None,
+      insertUnmatched: Boolean, live: Seq[String], mc: MergeCommit,
+      extendedSurface: Boolean,
+      updateSet: Option[Seq[(String, String)]],
+      insertWhen: Option[org.apache.spark.sql.Column],
+      nmbsDelete: Option[org.apache.spark.sql.Column],
       nmbsUpdate: Option[(org.apache.spark.sql.Column,
-        Seq[(String, String)])] = None,
-      evoDdl: Option[String] = None,
-      evolveResolve: Option[Int => Option[String]] = None)
+        Seq[(String, String)])])
   : Option[Int] = {
-    val extendedSurface = updateSet.nonEmpty || insertWhen.nonEmpty ||
-      nmbsDelete.nonEmpty || nmbsUpdate.nonEmpty
+    val base = mc.base
     val aggsB = keyCols.flatMap(k => Seq(min(col(k)).cast("string"),
       max(col(k)).cast("string"))) ++ Seq(count(lit(1)),
       countDistinct(col(keyCols.head), keyCols.tail.map(col): _*))
@@ -2742,8 +2823,8 @@ class TxnLogOps(val store: LogStore) {
     // snapshot legitimately deletes/updates everything); a streaming
     // batch (`txn`) still lands its marker, taken from this count
     if (nRows == 0L && nmbsDelete.isEmpty && nmbsUpdate.isEmpty)
-      return txn.flatMap { case (app, b) =>
-        commitStreamBatch(root, app, b, Seq.empty, session) }
+      return mc.txn.flatMap { case (app, b) =>
+        commitStreamBatch(root, app, b, Seq.empty, mc.session) }
     // stats pre-prune (one conjunctive bounds predicate per key
     // column), then the exact probe over surviving candidates.
     // NOT-MATCHED-BY-SOURCE clauses void the prune: any file can hold
@@ -2760,11 +2841,9 @@ class TxnLogOps(val store: LogStore) {
       else pruneWhere(root, base, Seq.empty, preds)
     val st = stateAt(root, base)
     if (extendedSurface)
-      return mergeClausesGeneral(spark, root, source, keyCols, session,
-        updateWhen, deleteWhen, insertUnmatched, beforeCommit,
-        maxAttempts, base, st, candidates, outBase, txn, strictConflict,
-        updateSet, insertWhen, nmbsDelete, nmbsUpdate, nRows,
-        evoDdl, evolveResolve)
+      return mergeClausesGeneral(spark, root, source, keyCols, updateWhen,
+        deleteWhen, insertUnmatched, st, candidates, mc, updateSet,
+        insertWhen, nmbsDelete, nmbsUpdate, nRows)
     // source columns renamed __src_<c> (key keeps its name) so clause
     // conditions can reference BOTH sides of the match; broadcast only
     // under the session threshold (r15 valve — an upsert batch hints,
@@ -2818,47 +2897,21 @@ class TxnLogOps(val store: LogStore) {
         "merge-written rows")
     }
     // the cheapest-action ladder, per file: untouched when no clause
-    // fired; PURE REMOVE when every row fires delete (row totals for
-    // delete-affected files come from one narrow count scan — zero
-    // data I/O on the happy path); narrow rewrite otherwise
+    // fired; PURE REMOVE when every surviving row fires delete
+    // ([[survivingRows]]); narrow rewrite otherwise
     val delFiles = byFile.filter(_._2._1 > 0).keys.toSeq.sorted
-    // totals are SURVIVING rows (DV-applied): on a vectored file the
-    // pure-remove bar is "every not-yet-deleted row fires delete"
-    val totals: Map[String, Long] =
-      if (delFiles.isEmpty) Map.empty
-      else scanWithDVs(spark, root, st, delFiles,
-          fileCol = Some("__file"))
-        .select(col("__file")).groupBy(col("__file")).count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val totals = survivingRows(spark, root, st, delFiles)
     val pure = delFiles.filter(f => byFile(f)._1 == totals(f))
     val rewriteFiles = byFile.keys.toSeq
       .filter(f => byFile(f)._1 + byFile(f)._2 > 0)
       .filterNot(pure.contains).sorted
-    val touched = (pure ++ rewriteFiles).sorted
     // each update-firing key gets ONE owner file for its replacement
     val owners = probe.map(_.where(col("__u"))
       .groupBy(keyCols.map(col): _*)
       .agg(min(col("__file")).as("__owner")).cache())
-    // rewrites happen under the TABLE schema when the log carries one
-    // — under the WIDENED schema when this merge evolves it (r15: the
-    // widening is not committed yet, so the rewrite plans against the
-    // resolved DDL, not the log's): an old-generation file rewritten
-    // under its own narrower schema would silently DROP the source
-    // rows' evolved-column values — instead the rewrite null-pads the
-    // old rows (the same algebra the reader applies) and keeps the
-    // replacement rows whole
-    val tableSchema = evoDdl.orElse(st.schemaDdl).map(StructType.fromDDL)
-    // pruning metadata survives the MERGE (ADVICE r10: plain add()
-    // actions used to strip it, degrading skipping to full scans):
-    // each rewrite recomputes the bounds its input file published.
-    // The partition tuple is inherited ONLY when provably still
-    // uniform — a source row may carry a DIFFERENT partition-column
-    // value than the row it replaces, so each k=v is re-verified
-    // against the output's own bounds (min==max==v) and dropped
-    // otherwise (conservative: absent metadata only costs a scan).
-    val rewriteTasks = rewriteFiles.zipWithIndex.map { case (f, i) =>
-      () => {
-        val out = f"${outBase}_u$i%04d"
+    val tableSchema = mergeSchema(st, mc)
+    val rewrites = rewriteFiles.zipWithIndex.map { case (f, i) =>
+      (f, f"${mc.outBase}_u$i%04d", () => {
         // DV-applied: a merge rewrite materializes the file's vector
         val raw = scanWithDVs(spark, root, st, Seq(f))
         val fileDf = tableSchema.map(projectTo(raw, _)).getOrElse(raw)
@@ -2873,39 +2926,275 @@ class TxnLogOps(val store: LogStore) {
           .map(o => source.join(o.where(col("__owner") === f),
             keyCols, "left_semi"))
           .getOrElse(source.limit(0))
-        writeRewrite(kept.unionByName(replacements.select(cols: _*)),
-          root, out, st, f)
-      }
+        kept.unionByName(replacements.select(cols: _*))
+      })
     }
-    val rewrites: Seq[(String, Entry)] = inPool(rewriteTasks)
     // a matched key is never an insert, whatever clauses fired
     val inserts = probe
       .map(p => source.join(p.select(keyCols.map(col): _*), keyCols,
         "left_anti"))
       .getOrElse(source)
-    val insertOut: Option[(String, Entry)] =
-      if (!insertUnmatched) None
+    try writeMergeAndCommit(root, st, mc, pure, rewrites,
+      if (insertUnmatched) Some(s"${mc.outBase}_ins" -> (() => inserts))
+      else None)
+    finally {
+      probe.foreach(_.unpersist())
+      owners.foreach(_.unpersist())
+    }
+  }
+
+  /** The upsert ladder on a source held on the driver
+    * ([[holdsOnDriver]]): the same clause algebra, owner rule and
+    * per-file cheapest action as [[mergeClausesPinned]], in one probe
+    * job plus one wave of write jobs.
+    *
+    *  1. The source is collected once. Its rows give the row count,
+    *     the duplicate-key refusal (a key tuple with a null part is no
+    *     key, as in `countDistinct`) and the key bounds, rendered as
+    *     `min(c).cast("string")` renders them, for the stats pre-prune.
+    *  2. ONE collect job scans the candidates ([[scanWithDVs]]) under
+    *     an `In` on the source keys and returns each matched row's
+    *     keys, file, row identity and the target columns the clause
+    *     conditions read. The clause flags are a projection over a
+    *     local relation of those rows joined on the driver to their
+    *     source rows (no job); per-file counts, pure removes and each
+    *     key's owner follow on the driver.
+    *  3. Each touched file is rewritten as its scan minus the fired
+    *     rows (by row identity) plus the replacement rows it owns; the
+    *     unmatched held rows are the inserts ([[writeMergeAndCommit]]).
+    *
+    * CHECK constraints gate the written source rows on the driver
+    * before any write. */
+  private def mergeHeld(spark: SparkSession, root: String,
+      source: DataFrame, keyCols: Seq[String],
+      updateWhen: Option[org.apache.spark.sql.Column],
+      deleteWhen: Option[org.apache.spark.sql.Column],
+      insertUnmatched: Boolean, live: Seq[String], mc: MergeCommit)
+  : Option[Int] = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.util.TypeUtils
+    import org.apache.spark.sql.catalyst.{expressions => ce}
+    import org.apache.spark.sql.types.StringType
+    import scala.jdk.CollectionConverters._
+    val schema = source.schema
+    val rows = source.collect().toSeq
+    val keyTypes = keyCols.map(k => schema(k).dataType)
+    val toKey = keyTypes.map(CatalystTypeConverters.createToCatalystConverter)
+    // a key tuple in Catalyst's values (byte-equal strings, day and
+    // microsecond counts): Spark's equality, as a Scala Seq's
+    def keyAt(r: Row, at: Seq[Int]): Seq[Any] =
+      at.zip(toKey).map { case (i, c) => c(r.get(i)) }
+    val srcAt = keyCols.map(schema.fieldIndex)
+    val srcKeys = rows.map(keyAt(_, srcAt))
+    val nKeys = srcKeys.filterNot(_.contains(null)).distinct.size
+    require(rows.size == nKeys,
+      s"merge source has duplicate ${keyCols.mkString(",")} tuples " +
+        s"(${rows.size} rows, $nKeys keys)")
+    if (rows.isEmpty)
+      return mc.txn.flatMap { case (app, b) =>
+        commitStreamBatch(root, app, b, Seq.empty, mc.session) }
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    val preds = keyCols.indices.map { i =>
+      val ord = TypeUtils.getInterpretedOrdering(keyTypes(i))
+      def render(v: Any): String =
+        ce.Cast(ce.Literal(v, keyTypes(i)), StringType, tz).eval(null).toString
+      val vs = srcKeys.map(_(i))
+      (keyCols(i), render(vs.min(ord)), render(vs.max(ord)))
+    }
+    val st = stateAt(root, mc.base)
+    val candidates =
+      if (live.isEmpty) Seq.empty[String]
+      else pruneWhere(root, mc.base, Seq.empty, preds)._1
+    val keyed = srcKeys.zip(rows)
+    val held = keyed.toMap
+    val srcIdx = schema.fields.indices
+      .filterNot(i => keyCols.contains(schema(i).name))
+    val srcCols = srcIdx.map(i =>
+      schema(i).copy(name = s"__src_${schema(i).name}", nullable = true))
+    val delC = deleteWhen.map(c => coalesce(c, lit(false)))
+      .getOrElse(lit(false))
+    val updC = updateWhen.map(c => coalesce(c, lit(false)))
+      .getOrElse(lit(false))
+    val flagCols = Seq(delC, !delC && updC)
+    // the probe: matched target rows, keys first, then the columns the
+    // conditions read (as Spark resolves them over an empty relation
+    // of the joined columns), then __file, __path, __pos
+    val (probeSchema, probed) =
+      if (candidates.isEmpty) (new StructType(), Seq.empty[Row])
       else {
-        val out = s"${outBase}_ins"
-        // the insert file publishes bounds for every column the
-        // table's live files track (∩ its schema) — no partition
-        // tuple: one insert file may span partitions
-        val statCols = st.stats.values.flatten.map(_.col).toSeq
-          .distinct.sorted.filter(inserts.columns.contains)
-        addOrDrop(root, out, writeObserved(inserts, root, out, statCols))
+        val scan = scanWithDVs(spark, root, st, candidates,
+          fileCol = Some("__file"), rowIds = true)
+        val dataFields = scan.schema.fields.dropRight(3).toSeq
+        val refs = spark.createDataFrame(java.util.List.of[Row](),
+            StructType(dataFields ++ srcCols))
+          .select(flagCols: _*).queryExecution.analyzed.references
+          .map(_.name).toSet
+        val read = dataFields.map(_.name)
+          .filter(c => !keyCols.contains(c) && refs(c))
+        val p = scan.where(keysIn(keyCols, keyTypes, srcKeys))
+          .select((keyCols ++ read ++ Seq("__file", "__path", "__pos"))
+            .map(col): _*)
+        (p.schema, p.collect().toSeq)
       }
-    probe.foreach(_.unpersist())
-    owners.foreach(_.unpersist())
-    val outs = rewrites ++ insertOut.toSeq
+    val fileAt = probeSchema.size - 3
+    val probedKeys = probed.map(keyAt(_, keyCols.indices))
+    // clause flags over the matched rows joined to their source rows,
+    // as a projection over a local relation: evaluated on the driver
+    val flags: Seq[(Boolean, Boolean)] =
+      if (probed.isEmpty) Seq.empty
+      else {
+        val joined = probed.zip(probedKeys).map { case (p, k) =>
+          Row.fromSeq(p.toSeq.take(fileAt) ++ srcIdx.map(held(k).get)) }
+        spark.createDataFrame(joined.asJava,
+            StructType(probeSchema.fields.take(fileAt) ++ srcCols))
+          .select(flagCols: _*).collect().toSeq
+          .map(r => (r.getBoolean(0), r.getBoolean(1)))
+      }
+    // one matched target row: key, file, row identity, clauses fired
+    final case class Hit(key: Seq[Any], file: String, path: String,
+                         pos: Long, del: Boolean, upd: Boolean)
+    val hits = probed.zip(probedKeys).zip(flags).map {
+      case ((p, k), (d, u)) => Hit(k, p.getString(fileAt),
+        p.getString(fileAt + 1), p.getLong(fileAt + 2), d, u) }
+    val byFile = hits.groupBy(_.file).map { case (f, hs) =>
+      f -> (hs.count(_.del).toLong, hs.count(_.upd).toLong) }
+    val delFiles = byFile.filter(_._2._1 > 0).keys.toSeq.sorted
+    val totals = survivingRows(spark, root, st, delFiles)
+    val pure = delFiles.filter(f => byFile(f)._1 == totals(f))
+    val rewriteFiles = byFile.keys.toSeq
+      .filter(f => byFile(f)._1 + byFile(f)._2 > 0)
+      .filterNot(pure.contains).sorted
+    // each update-firing key's owner: the first file it fires in
+    val owner: Map[Seq[Any], String] = hits.filter(_.upd).groupBy(_.key)
+      .map { case (k, hs) => k -> hs.map(_.file).min }
+    val matched = probedKeys.toSet
+    val cons = st.constraints
+    if (cons.nonEmpty) {
+      val written = keyed.collect {
+        case (k, r) if owner.contains(k) ||
+          (insertUnmatched && !matched(k)) => r }
+      if (written.nonEmpty)
+        enforceConstraints(spark.createDataFrame(written.asJava, schema),
+          cons, "merge-written rows", onDriver = true)
+    }
+    val owned = owner.toSeq.groupBy(_._2).map { case (f, ks) =>
+      f -> ks.map(k => held(k._1)) }
+    // the fired rows of each touched file, as (leaf path -> positions)
+    val gone = hits.filter(h => h.del || h.upd).groupBy(_.file)
+      .map { case (f, hs) =>
+        f -> hs.groupBy(_.path).map { case (p, ps) => p -> ps.map(_.pos) } }
+    val tableSchema = mergeSchema(st, mc)
+    val rewrites = rewriteFiles.zipWithIndex.map { case (f, i) =>
+      (f, f"${mc.outBase}_u$i%04d", () => {
+        val hit = gone(f).map { case (p, ps) =>
+          col("__path") === p && col("__pos").isin(ps: _*) }.reduce(_ || _)
+        val raw = scanWithDVs(spark, root, st, Seq(f), rowIds = true)
+          .where(!hit).drop("__path", "__pos")
+        val fileDf = tableSchema.map(projectTo(raw, _)).getOrElse(raw)
+        val replacements = spark.createDataFrame(
+          owned.getOrElse(f, Seq.empty).asJava, schema)
+        fileDf.unionByName(
+          replacements.select(fileDf.columns.map(col).toSeq: _*))
+      })
+    }
+    val inserts = keyed.collect { case (k, r) if !matched(k) => r }
+    writeMergeAndCommit(root, st, mc, pure, rewrites,
+      if (insertUnmatched && inserts.nonEmpty)
+        Some(s"${mc.outBase}_ins" ->
+          (() => spark.createDataFrame(inserts.asJava, schema)))
+      else None)
+  }
+
+  /** An `In` of the key columns against literal key tuples: `keys` are
+    * Catalyst values of `types`; a composite key probes as a struct. */
+  private def keysIn(keyCols: Seq[String],
+                     types: Seq[org.apache.spark.sql.types.DataType],
+                     keys: Seq[Seq[Any]]): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.catalyst.{InternalRow, expressions => ce}
+    import org.apache.spark.sql.types.StructField
+    val (probe, lits) =
+      if (keyCols.size == 1)
+        (col(keyCols.head), keys.map(k => ce.Literal(k.head, types.head)))
+      else {
+        val t = StructType(keyCols.zip(types).map { case (k, dt) =>
+          StructField(k, dt) })
+        (struct(keyCols.map(col): _*),
+          keys.map(k => ce.Literal(InternalRow.fromSeq(k), t)))
+      }
+    org.apache.spark.sql.graft.StreamingShim.column(ce.In(
+      org.apache.spark.sql.graft.StreamingShim.expression(probe), lits))
+  }
+
+  /** Surviving (DV-applied) rows of each of `files`: the log's
+    * write-time count less the file's deletion-vector cardinality, and
+    * one narrow count scan for the files whose add logged no count. */
+  private def survivingRows(spark: SparkSession, root: String, st: State,
+                            files: Seq[String]): Map[String, Long] = {
+    val logged = files.flatMap(f => st.stats.get(f).flatMap(_.headOption)
+      .map(s => f -> (s.rows - st.dvs.get(f).map(_._2).getOrElse(0L))))
+      .toMap
+    val unknown = files.filterNot(logged.contains)
+    if (unknown.isEmpty) logged
+    else logged ++ scanWithDVs(spark, root, st, unknown,
+        fileCol = Some("__file"))
+      .select(col("__file")).groupBy(col("__file")).count()
+      .collect().map(r => r.getString(0) -> r.getLong(1))
+  }
+
+  /** The schema MERGE rewrites under: the table's when the log carries
+    * one, the WIDENED one when this merge evolves it (r15: the widening
+    * is not committed yet, so the rewrite plans against the resolved
+    * DDL, not the log's). An old-generation file rewritten under its
+    * own narrower schema would silently DROP the source rows'
+    * evolved-column values; instead the rewrite null-pads the old rows
+    * (the same algebra the reader applies) and keeps the replacement
+    * rows whole. */
+  private def mergeSchema(st: State, mc: MergeCommit): Option[StructType] =
+    mc.evoDdl.orElse(st.schemaDdl).map(StructType.fromDDL)
+
+  /** The tail every MERGE path shares: write each touched file's
+    * rewrite (`rewrites`: file, output dir, its rows — pruning metadata
+    * survives through [[writeRewrite]]) and the insert file as ONE wave
+    * of concurrent jobs ([[inPool]]), then commit a remove for each
+    * rewritten and each `pure` file plus the adds through
+    * [[commitRewrite]]. The insert
+    * file publishes bounds for every column the table's live files
+    * track (∩ its schema) and no partition tuple (one insert file may
+    * span partitions); a zero-row insert leaves no file. A failed write
+    * deletes every output of the wave. Returns None, committing
+    * nothing, when nothing fired and nothing inserts. */
+  private def writeMergeAndCommit(root: String, st: State, mc: MergeCommit,
+      pure: Seq[String], rewrites: Seq[(String, String, () => DataFrame)],
+      insert: Option[(String, () => DataFrame)],
+      readAllLive: Option[Set[String]] = None): Option[Int] = {
+    val tasks: Seq[() => Option[(String, Entry)]] =
+      rewrites.map { case (f, out, rows) =>
+        () => Some(writeRewrite(rows(), root, out, st, f)) } ++
+      insert.map { case (out, rows) => () => {
+        val df = rows()
+        val statCols = st.stats.values.flatten.map(_.col).toSeq
+          .distinct.sorted.filter(df.columns.contains)
+        addOrDrop(root, out, writeObserved(df, root, out, statCols))
+      } }
+    val outs =
+      try inPool(tasks).flatten
+      catch { case t: Throwable =>
+        (rewrites.map(_._2) ++ insert.map(_._1))
+          .foreach(store.deleteDataDir(root, _))
+        throw t
+      }
     if (outs.isEmpty && pure.isEmpty)
       return None // nothing fired, nothing to insert
-    beforeCommit()
-    commitRewrite(root, base + 1, touched,
-      touched.map(remove) ++ outs.map(_._2), outs.map(_._1), session,
-      maxAttempts, readDvs = st.dvs, txn = txn,
-      enforcedCons = Some(cons),
-      schemaDdl = evoDdl, evolveDdl = evolveResolve,
-      conflictWhat = if (strictConflict) Some("MERGE") else None)
+    mc.beforeCommit()
+    val touched = (pure ++ rewrites.map(_._1)).sorted
+    commitRewrite(root, mc.base + 1, touched,
+      touched.map(remove) ++ outs.map(_._2), outs.map(_._1), mc.session,
+      mc.maxAttempts, readDvs = st.dvs, txn = mc.txn,
+      enforcedCons = Some(st.constraints),
+      schemaDdl = mc.evoDdl, evolveDdl = mc.evolveResolve,
+      readAllLive = readAllLive,
+      conflictWhat = if (mc.strictConflict) Some("MERGE") else None)
   }
 
   /** The GENERALIZED merge surface (r14 — VERDICT r13 #2: snapshot-
@@ -2945,24 +3234,20 @@ class TxnLogOps(val store: LogStore) {
     * ([[checkGuard]]); commit is conflict-aware with the constraint-
     * drift re-check. */
   private def mergeClausesGeneral(spark: SparkSession, root: String,
-      source: DataFrame, keyCols: Seq[String], session: String,
+      source: DataFrame, keyCols: Seq[String],
       updateWhen: Option[org.apache.spark.sql.Column],
       deleteWhen: Option[org.apache.spark.sql.Column],
-      insertUnmatched: Boolean, beforeCommit: () => Unit,
-      maxAttempts: Int, base: Int, st: State, candidates: Seq[String],
-      outBase: String, txn: Option[(String, Long)],
-      strictConflict: Boolean,
+      insertUnmatched: Boolean, st: State, candidates: Seq[String],
+      mc: MergeCommit,
       updateSet: Option[Seq[(String, String)]],
       insertWhen: Option[org.apache.spark.sql.Column],
       nmbsDelete: Option[org.apache.spark.sql.Column],
       nmbsUpdate: Option[(org.apache.spark.sql.Column,
         Seq[(String, String)])],
-      nRows: Long,
-      evoDdl: Option[String],
-      evolveResolve: Option[Int => Option[String]])
+      nRows: Long)
   : Option[Int] = {
     val cons = st.constraints
-    val tableSchema = evoDdl.orElse(st.schemaDdl).map(StructType.fromDDL)
+    val tableSchema = mergeSchema(st, mc)
     // r15 valve: a change batch broadcasts, a full snapshot (the very
     // idiom this path exists for) degrades to a shuffled census join
     val srcRen = maybeBroadcast(spark, source.select(
@@ -3000,45 +3285,37 @@ class TxnLogOps(val store: LogStore) {
     val rewriteFiles = byFile.collect {
       case (f, dels, upds, total)
         if dels + upds > 0 && dels < total => f }
-    val touched = (pure ++ rewriteFiles).sorted
     // in-place rewrite: drop deleting rows, project changed rows
     // through their assignment lists, keep the rest verbatim
     val updAssigns = updateSet.map(_.toMap)
     val nuAssigns = nmbsUpdate.map(_._2.toMap).getOrElse(Map.empty)
-    def rewriteTask(f: String, i: Int): () => (String, Entry) = () => {
-      val out = f"${outBase}_g$i%04d"
-      val raw = scanWithDVs(spark, root, st, Seq(f))
-      val fileDf = tableSchema.map(projectTo(raw, _)).getOrElse(raw)
-      val cols = fileDf.columns.toSeq
-      val j = fileDf.join(srcRen, keyCols, "left")
-      val outCols = cols.map { c =>
-        val dt = fileDf.schema(c).dataType
-        val updVal = updAssigns match {
-          case Some(as) =>
-            as.get(c).map(e => expr(e).cast(dt)).getOrElse(col(c))
-          case None =>
-            if (keyCols.contains(c)) col(c)
-            else {
-              require(source.columns.contains(c),
-                s"full-row merge update: source lacks column $c")
-              col(s"__src_$c").cast(dt)
-            }
+    val rewrites = rewriteFiles.zipWithIndex.map { case (f, i) =>
+      (f, f"${mc.outBase}_g$i%04d", () => {
+        val raw = scanWithDVs(spark, root, st, Seq(f))
+        val fileDf = tableSchema.map(projectTo(raw, _)).getOrElse(raw)
+        val cols = fileDf.columns.toSeq
+        val j = fileDf.join(srcRen, keyCols, "left")
+        val outCols = cols.map { c =>
+          val dt = fileDf.schema(c).dataType
+          val updVal = updAssigns match {
+            case Some(as) =>
+              as.get(c).map(e => expr(e).cast(dt)).getOrElse(col(c))
+            case None =>
+              if (keyCols.contains(c)) col(c)
+              else {
+                require(source.columns.contains(c),
+                  s"full-row merge update: source lacks column $c")
+                col(s"__src_$c").cast(dt)
+              }
+          }
+          val nuVal = nuAssigns.get(c)
+            .map(e => expr(e).cast(dt)).getOrElse(col(c))
+          when(updC, updVal).when(nuC, nuVal).otherwise(col(c)).as(c)
         }
-        val nuVal = nuAssigns.get(c)
-          .map(e => expr(e).cast(dt)).getOrElse(col(c))
-        when(updC, updVal).when(nuC, nuVal).otherwise(col(c)).as(c)
-      }
-      val kept = j.where(!delC && !ndC).select(outCols: _*)
-      writeRewrite(checkGuard(kept, cons, "merge"), root, out, st, f)
+        checkGuard(j.where(!delC && !ndC).select(outCols: _*), cons,
+          "merge")
+      })
     }
-    val rewrites: Seq[(String, Entry)] =
-      try inPool(rewriteFiles.zipWithIndex.map {
-        case (f, i) => rewriteTask(f, i) })
-      catch { case t: Throwable =>
-        rewriteFiles.indices.foreach(i =>
-          store.deleteDataDir(root, f"${outBase}_g$i%04d"))
-        throw t
-      }
     // inserts: source keys absent from every candidate file (the
     // stats prune is sound — a pruned file provably holds no source
     // key), filtered by the insert condition (TRUE-only)
@@ -3052,25 +3329,15 @@ class TxnLogOps(val store: LogStore) {
     val inserts1 = insertWhen
       .map(c => inserts0.where(coalesce(c, lit(false))))
       .getOrElse(inserts0)
-    val insertOut: Option[(String, Entry)] =
-      if (!insertUnmatched) None
-      else {
-        val out = s"${outBase}_gins"
-        val aligned = tableSchema.map { sch =>
-          sch.fieldNames.foreach(c => require(
-            inserts1.columns.contains(c),
-            s"merge insert: source lacks table column $c"))
-          inserts1.select(sch.fieldNames.toSeq.map(col): _*)
-        }.getOrElse(inserts1)
-        val statCols = st.stats.values.flatten.map(_.col).toSeq
-          .distinct.sorted.filter(aligned.columns.contains)
-        addOrDrop(root, out, writeObserved(checkGuard(aligned, cons, "merge"),
-          root, out, statCols))
-      }
-    val outs = rewrites ++ insertOut.toSeq
-    if (outs.isEmpty && pure.isEmpty)
-      return None // nothing fired, nothing to insert
-    beforeCommit()
+    val inserts = () => {
+      val aligned = tableSchema.map { sch =>
+        sch.fieldNames.foreach(c => require(
+          inserts1.columns.contains(c),
+          s"merge insert: source lacks table column $c"))
+        inserts1.select(sch.fieldNames.toSeq.map(col): _*)
+      }.getOrElse(inserts1)
+      checkGuard(aligned, cons, "merge")
+    }
     // r15 (ADVICE r14 medium): a merge with not-matched-by-source
     // clauses READ THE WHOLE TABLE — a file appended between its read
     // snapshot and the won slot was never censused, so rows absent
@@ -3082,13 +3349,9 @@ class TxnLogOps(val store: LogStore) {
     val fullRead =
       if (nmbsDelete.nonEmpty || nmbsUpdate.nonEmpty) Some(st.live)
       else None
-    commitRewrite(root, base + 1, touched,
-      touched.map(remove) ++ outs.map(_._2), outs.map(_._1), session,
-      maxAttempts, readDvs = st.dvs, txn = txn,
-      enforcedCons = Some(cons),
-      schemaDdl = evoDdl, evolveDdl = evolveResolve,
-      readAllLive = fullRead,
-      conflictWhat = if (strictConflict) Some("MERGE") else None)
+    writeMergeAndCommit(root, st, mc, pure, rewrites,
+      if (insertUnmatched) Some(s"${mc.outBase}_gins" -> inserts) else None,
+      readAllLive = fullRead)
   }
 
   /** Partitioned APPEND — the writer-side half of the partition
@@ -4458,6 +4721,15 @@ object TxnLog extends TxnLogOps(LogStore.configuredStore) {
   private[sources] val VersionName = "^v(\\d{8})\\.jsonl$".r
   private[sources] val CheckpointName =
     "^v(\\d{8})\\.checkpoint\\.jsonl$".r
+
+  /** What every MERGE path carries from
+    * [[TxnLogOps.mergeClausesKeys]] to its commit: the read version,
+    * the output dirs' name prefix, and the commit's options. */
+  private[sources] final case class MergeCommit(base: Int,
+      outBase: String, session: String, beforeCommit: () => Unit,
+      maxAttempts: Int, txn: Option[(String, Long)],
+      strictConflict: Boolean, evoDdl: Option[String],
+      evolveResolve: Option[Int => Option[String]])
 
   /** Replayed table state at a version: live files + current schema +
     * per-file stats, partition tuples, and deletion vectors for live

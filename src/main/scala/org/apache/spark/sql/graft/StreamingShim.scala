@@ -28,13 +28,20 @@ object StreamingShim {
     * receives is streaming-flagged, so batch verbs (`.write`, a
     * windowless agg) refuse it; re-rooting the compiled plan as a
     * plain batch scan is exactly what Spark's own ForeachBatchSink
-    * does before handing the user their batch frame. */
+    * does before handing the user their batch frame, and it is done
+    * the same way: `LogicalRDD.fromDataset` carries the batch plan's
+    * statistics onto the new leaf (a bare `internalCreateDataFrame`
+    * leaf reports the default size, so every micro-batch would look
+    * unbounded). With a finite size estimate, an update-mode batch
+    * within the broadcast threshold takes MERGE's driver-held path
+    * ([[graft.sources.TxnLogOps.holdsOnDriver]]). */
   def asBatchFrame(df: org.apache.spark.sql.DataFrame)
   : org.apache.spark.sql.DataFrame = {
     val ds = df.asInstanceOf[
       org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
-    ds.sparkSession.internalCreateDataFrame(
-      ds.queryExecution.toRdd, ds.schema, isStreaming = false)
+    org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession,
+      org.apache.spark.sql.execution.LogicalRDD.fromDataset(
+        ds.queryExecution.toRdd, ds, isStreaming = false))
   }
 
   /** DataFrame over an already-ANALYZED logical plan —

@@ -43,7 +43,9 @@ class JobCountSpec extends AnyFunSuite with SparkSpec {
   }
 
   /** `op` starts at most `pinned` jobs (suites run one at a time per
-    * JVM, so every job started meanwhile is the op's). */
+    * JVM, so every job started meanwhile is the op's), and at least one
+    * when the pin is above 0: a listener that stopped counting would
+    * otherwise pass every pin. */
   private def assertJobs(what: String, pinned: Int)(op: => Any): Unit = {
     StreamingShim.drainListenerBus(spark.sparkContext, 60000L)
     started.set(0)
@@ -51,6 +53,8 @@ class JobCountSpec extends AnyFunSuite with SparkSpec {
     StreamingShim.drainListenerBus(spark.sparkContext, 60000L)
     val n = started.get
     assert(n <= pinned, s"$what ran $n Spark jobs (pinned $pinned)")
+    assert(pinned == 0 || n > 0,
+      s"$what counted no Spark job (pinned $pinned): is the listener counting?")
   }
 
   private def withScratch(body: String => Unit): Unit = {
@@ -90,9 +94,24 @@ class JobCountSpec extends AnyFunSuite with SparkSpec {
   test("a one-file mergeUpsert") {
     withScratch { root =>
       table(root, 1)
-      assertJobs("mergeUpsert", 15)(
+      assertJobs("mergeUpsert", 3)(
         assert(TxnLog.mergeUpsert(spark, root, rows(15, 25), "k", "m")
           .nonEmpty))
+    }
+  }
+
+  test("a one-file mergeUpsert on the distributed ladder") {
+    // auto-broadcast off: the source is not held on the driver, and the
+    // ladder's joins shuffle instead of broadcasting
+    withScratch { root =>
+      table(root, 1)
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val old = spark.conf.get(key)
+      spark.conf.set(key, "-1")
+      try assertJobs("mergeUpsert, auto-broadcast off", 16)(
+        assert(TxnLog.mergeUpsert(spark, root, rows(15, 25), "k", "m")
+          .nonEmpty))
+      finally spark.conf.set(key, old)
     }
   }
 
@@ -116,7 +135,32 @@ class JobCountSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("an update-mode streaming pass over a file-source aggregation") {
+    // a file-source batch carries its size estimate, so the sink's MERGE
+    // holds the batch on the driver
+    withScratch { root =>
+      import spark.implicits._
+      def feed(ks: Seq[Long]): Unit =
+        ks.toDF("k").coalesce(1).write.mode("append").parquet(s"$root/in")
+      feed(0L until 20L)
+      val q = spark.readStream.schema("k LONG").parquet(s"$root/in")
+        .groupBy(col("k")).agg(count(lit(1)).as("n"))
+        .writeStream.format("graft-txnlog")
+        .option("path", s"$root/t").option("appId", "jobs")
+        .option("mergeKey", "k").option("checkpointLocation", s"$root/ck")
+        .outputMode("update").start()
+      try {
+        q.processAllAvailable()
+        feed(15L until 25L)
+        assertJobs("update-mode pass, file source", 6)(q.processAllAvailable())
+      } finally q.stop()
+      assert(TxnLog.read(spark, s"$root/t").count() == 25)
+    }
+  }
+
   test("an update-mode streaming pass over an aggregation") {
+    // a MemoryStream batch reports no size estimate, so the sink's MERGE
+    // takes the distributed ladder
     withScratch { root =>
       import spark.implicits._
       implicit val sq: org.apache.spark.sql.classic.SQLContext =

@@ -52,7 +52,8 @@ class QueriesSpec extends AnyFunSuite with SparkSpec {
     * its own finally) is not ours to assert on (r13 flake: a parallel
     * Verify's in-flight `graft_updsink_*` failed this suite; a second
     * test JVM's `graft_graphcc_….tmp` staging did too). */
-  private val tagged = "^graft_(txnsink|updsink)_(in|tbl|ck)_|\\.tmp$".r
+  private val tagged =
+    "^graft_(txnsink|updsink|streamsink)_(in|tbl|ck|out)_|\\.tmp$".r
 
   private def ours(n: String): Boolean =
     tagged.findFirstIn(n).isEmpty ||
@@ -104,24 +105,34 @@ class QueriesSpec extends AnyFunSuite with SparkSpec {
   private def stagingName(tag: String): String =
     s"graft_probe_${"0" * 32}_${"0" * 32}.$tag.$suiteEpoch.tmp"
 
+  /** A streaming-sink scratch dir's name: `graft_streamsink_<role>_<tag>_<id>`. */
+  private def streamSinkName(role: String, tag: String): String =
+    s"graft_streamsink_${role}_${tag}_$suiteEpoch"
+
   test("another session's in-flight staging dir is not litter; this session's is") {
     // left alive across the registry pass (deleted in afterAll), so the
-    // per-query checks and the end-of-pass partial-dir check see it too
-    val foreign = new java.io.File(tmpRoot, stagingName("local1otherjvm"))
-    assert(foreign.mkdir(), "could not create the probe dir")
-    assert(!litter.contains(foreign.getName),
-      "detector flagged another session's in-flight staging dir")
-    val own = new java.io.File(tmpRoot,
-      stagingName(graft.core.Fixtures.appTag(spark)))
-    assert(own.mkdir())
-    assert(litter.contains(own.getName),
-      "detector no longer catches this session's leaked staging dir")
-    assert(own.delete())
+    // per-query checks and the end-of-pass partial-dir check see them too
+    for (name <- Seq(stagingName("local1otherjvm"),
+        streamSinkName("ck", "local1otherjvm"))) {
+      val foreign = new java.io.File(tmpRoot, name)
+      assert(foreign.mkdir(), "could not create the probe dir")
+      assert(!litter.contains(foreign.getName),
+        s"detector flagged another session's in-flight dir $name")
+    }
+    val appTag = graft.core.Fixtures.appTag(spark)
+    for (name <- Seq(stagingName(appTag), streamSinkName("out", appTag))) {
+      val own = new java.io.File(tmpRoot, name)
+      assert(own.mkdir())
+      assert(litter.contains(own.getName),
+        s"detector no longer catches this session's leaked dir $name")
+      assert(own.delete())
+    }
   }
 
   override def afterAll(): Unit = {
     new java.io.File(tmpRoot, s"alien-proc-$suiteEpoch").delete()
     new java.io.File(tmpRoot, stagingName("local1otherjvm")).delete()
+    new java.io.File(tmpRoot, streamSinkName("ck", "local1otherjvm")).delete()
     super.afterAll()
   }
 
