@@ -9,12 +9,13 @@ import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.avro.mapred.{AvroKey, FsInput}
 import org.apache.avro.mapreduce.{AvroJob, AvroKeyInputFormat, AvroKeyOutputFormat}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.io.NullWritable
 import org.apache.hadoop.mapreduce.Job
 import org.apache.hadoop.mapreduce.lib.input.FileInputFormat
 import org.apache.hadoop.mapreduce.lib.output.FileOutputFormat
 import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchemaShim
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.types.StructType
 
@@ -124,27 +125,28 @@ object Compactor {
 
   /** 3-way schema resolution (reference:
     * DefragmentAvroFolder.scala:83-107): external file → latest
-    * modified data file across all leaves → None (embedded). */
+    * modified data file across all leaves → None (embedded). A parquet
+    * file's schema is its footer's, read on the driver
+    * ([[FooterSchemaShim]], as [[graft.core.Tables.parquet]] reads
+    * one), so resolution starts no job. */
   def resolveParquetSchema(spark: SparkSession, fsOps: FsOps, c: Config): Option[StructType] =
     c.schemaFile.map(f => StructType.fromDDL(
         new String(readFully(fsOps, f), java.nio.charset.StandardCharsets.UTF_8)))
-      .orElse(latestDataFile(fsOps, c).map(p =>
-        spark.read.parquet(p).schema))
+      .orElse(latestDataFile(fsOps, c).flatMap(FooterSchemaShim.schemaOf(spark, _)))
 
   def resolveAvroSchema(fsOps: FsOps, c: Config): Option[Schema] =
     c.schemaFile.map(f => new Schema.Parser().parse(
         new String(readFully(fsOps, f), java.nio.charset.StandardCharsets.UTF_8)))
-      .orElse(latestDataFile(fsOps, c).map { p =>
-        val in = new FsInput(new Path(p), fsOps.fs.getConf)
+      .orElse(latestDataFile(fsOps, c).map { f =>
+        val in = new FsInput(f.getPath, fsOps.fs.getConf)
         val r = DataFileReader.openReader(in, new GenericDatumReader[GenericRecord]())
         try r.getSchema finally r.close()
       })
 
-  private def latestDataFile(fsOps: FsOps, c: Config): Option[String] = {
+  private def latestDataFile(fsOps: FsOps, c: Config): Option[FileStatus] = {
     val all = fsOps.listLeafFolders(c.sourceFolder, ext(c))
       .flatMap(l => fsOps.listDataFiles(l, ext(c)))
-    if (all.isEmpty) None
-    else Some(all.maxBy(_.getModificationTime).getPath.toString)
+    if (all.isEmpty) None else Some(all.maxBy(_.getModificationTime))
   }
 
   private def readFully(fsOps: FsOps, path: String): Array[Byte] = {

@@ -40,24 +40,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
         s"graft_cosine expects (array<float>, array<float>), got ($l, $r)")
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0
-    var sa = 0.0
-    var sb = 0.0
-    var i = 0
-    while (i < n) {
-      val xi = x.getFloat(i).toDouble
-      val yi = y.getFloat(i).toDouble
-      dot += xi * yi
-      sa += xi * xi
-      sb += yi * yi
-      i += 1
-    }
-    dot / (math.sqrt(sa) * math.sqrt(sb))
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimilarity.of(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -89,4 +73,28 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 
   override def prettyName: String = "graft_cosine"
+}
+
+object CosineSimilarity {
+
+  /** The kernel's interpreted arithmetic on two non-null float arrays:
+    * what `nullSafeEval` returns and what the generated loop computes.
+    * A driver-side caller ([[graft.llm.Dedup.dedupEmbedOn]]'s held path)
+    * calls it to score exactly as the expression does. */
+  def of(x: ArrayData, y: ArrayData): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var dot = 0.0
+    var sa = 0.0
+    var sb = 0.0
+    var i = 0
+    while (i < n) {
+      val xi = x.getFloat(i).toDouble
+      val yi = y.getFloat(i).toDouble
+      dot += xi * yi
+      sa += xi * xi
+      sb += yi * yi
+      i += 1
+    }
+    dot / (math.sqrt(sa) * math.sqrt(sb))
+  }
 }

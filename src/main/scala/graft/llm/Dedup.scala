@@ -1,5 +1,7 @@
 package graft.llm
 
+import scala.collection.parallel.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1047,16 +1049,17 @@ object Dedup {
     * the staging body can release every block it pinned once the write
     * completes: no RDD stays pinned after the query (LlmSpec).
     *
-    * Scale/lifecycle notes for the fixpoint itself: labels and edges
-    * stay distributed; rounds are bounded by component diameter (log-ish
-    * for near-dup blobs). Each round's localCheckpoint truncates lineage
-    * (a plain cache doubles the plan every round); the convergence
-    * count is folded into the checkpoint job (an `Observation` on it).
-    * Round n-1's checkpoint blocks are released as soon as round n
-    * materializes — peak pinned state is the edges plus two label
-    * frames regardless of round count; the final round's are released
-    * once the staging write completes, and the staged labels read back
-    * under their footer's schema ([[Tables.parquet]]), with no job. */
+    * The labels come from [[connectedComponents]]: held on the driver
+    * when the candidate pairs fit the broadcast threshold, else the
+    * distributed fixpoint. On that path each round's localCheckpoint
+    * truncates lineage (a plain cache doubles the plan every round);
+    * the convergence count is folded into the checkpoint job (an
+    * `Observation` on it). Round n-1's checkpoint blocks are released
+    * as soon as round n materializes — peak pinned state is the edges
+    * plus two label frames regardless of round count; the final
+    * round's are released once the staging write completes. The staged
+    * labels read back under their footer's schema ([[Tables.parquet]]),
+    * with no job. */
   private val labelFixtures =
     scala.collection.concurrent.TrieMap.empty[(String, String), String]
 
@@ -1095,14 +1098,78 @@ object Dedup {
     candidatePlan(signaturesNative(docs, idCol, textCol)).select(col("doc_a"), col("doc_b"))
 
   /** PUBLIC generic surface: connected-component labels over any
-    * undirected (doc_a, doc_b) pair frame, by the same min-label
-    * propagation / checkpoint-release fixpoint the registry's clusters
-    * query uses: the edges pinned once, then one checkpoint per round,
-    * whose job also counts the changed labels (an `Observation`). The
-    * returned frame is backed by the final round's checkpoint: release
-    * it with [[graft.core.Caches.unpin]] (or a harness drain) after
-    * consuming it. */
+    * undirected (doc_a, doc_b) pair frame — (doc_id, cluster_id), each
+    * node of a pair labelled by the least node of its component,
+    * unordered. A pair with a null endpoint adds its other endpoint as
+    * a node but no edge; a null node gets no label.
+    *
+    * Path choice ([[graft.core.Held]]): a pair frame that fits the
+    * broadcast threshold, whose endpoints share one plain key type
+    * ([[graft.core.Held.plainKey]]), is HELD ON THE DRIVER
+    * ([[componentsHeld]]): one collect job, a driver union-find, a
+    * local relation back. Any other frame runs the distributed
+    * min-label fixpoint ([[componentsDistributed]]). Both paths return
+    * the same rows under the same schema; only the distributed one
+    * refuses a component whose diameter needs more than 20 rounds. */
   def connectedComponents(spark: SparkSession, pairFrame: DataFrame): DataFrame = {
+    val types = Seq("doc_a", "doc_b").map(pairFrame.schema(_).dataType).distinct
+    if (types.size == 1 && graft.core.Held.plainKey(types.head) &&
+        graft.core.Held.fits(pairFrame)) componentsHeld(spark, pairFrame)
+    else componentsDistributed(spark, pairFrame)
+  }
+
+  /** The held components path. Scale shape: the pair frame (at most the
+    * broadcast threshold) is collected once; a union-find over its
+    * endpoints' Catalyst values, each set rooted at its least node
+    * under Spark's ordering, labels every node in near-linear time on
+    * the driver with no round bound; the labels come back as a local
+    * relation, which Spark reads with no job and no generated code.
+    * Nothing is pinned. */
+  private def componentsHeld(spark: SparkSession, pairFrame: DataFrame): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.util.TypeUtils
+    import org.apache.spark.sql.types.{StructField, StructType}
+    import scala.jdk.CollectionConverters._
+    val (a, b) = (pairFrame.schema("doc_a"), pairFrame.schema("doc_b"))
+    val toKey = CatalystTypeConverters.createToCatalystConverter(a.dataType)
+    val ord = TypeUtils.getInterpretedOrdering(a.dataType)
+    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+    def root(x: Any): Any = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var y = x
+      while (y != r) { val up = parent(y); parent(y) = r; y = up }
+      r
+    }
+    pairFrame.select(col("doc_a"), col("doc_b")).collect().foreach { p =>
+      val (x, y) = (toKey(p.get(0)), toKey(p.get(1)))
+      Seq(x, y).foreach(n => if (n != null && !parent.contains(n)) parent(n) = n)
+      if (x != null && y != null) {
+        val (rx, ry) = (root(x), root(y))
+        if (ord.lt(rx, ry)) parent(ry) = rx else if (ord.lt(ry, rx)) parent(rx) = ry
+      }
+    }
+    val toScala = CatalystTypeConverters.createToScalaConverter(a.dataType)
+    val labels = parent.keys.toSeq.map(n => Row(toScala(n), toScala(root(n))))
+    // the distributed path's schema: the node keeps the endpoints'
+    // nullability, the label is a `min`
+    spark.createDataFrame(labels.asJava, StructType(Seq(
+      StructField("doc_id", a.dataType, a.nullable || b.nullable),
+      StructField("cluster_id", a.dataType, nullable = true))))
+  }
+
+  /** The distributed components path: min-label propagation, the edges
+    * pinned once, then one checkpoint per round, whose job also counts
+    * the changed labels (an `Observation`). Scale shape: labels and
+    * edges stay distributed; a round costs a join and an aggregation
+    * over the edges, rounds follow the component diameter, and more
+    * than 20 rounds is refused. The returned frame is backed by the
+    * final round's checkpoint: release it with
+    * [[graft.core.Caches.unpin]] (or a harness drain) after consuming
+    * it. */
+  private def componentsDistributed(spark: SparkSession,
+                                    pairFrame: DataFrame): DataFrame = {
     // both directions of every pair from one pass over the pair frame
     val edges = Caches.pin(pairFrame
       .select(explode(array(
@@ -1286,8 +1353,9 @@ object Dedup {
   /** Embedding-cosine near-dup: nearest neighbor per vector *within
     * its coarse cluster* (`label`) — the IVF pattern: partition by a
     * coarse quantizer, pairwise only inside a cell. Cost is
-    * Σ cell × min(cell, [[DedupEmbedCellCap]]), never n², and the
-    * join shuffles on label. */
+    * Σ cell × min(cell, [[DedupEmbedCellCap]]), never n²: on the
+    * driver when the embeddings fit the broadcast threshold, else in a
+    * join that shuffles on label ([[dedupEmbedOn]]). */
   def dedupEmbed(spark: SparkSession, dir: String): DataFrame =
     dedupEmbedCapped(spark, dir, DedupEmbedCellCap)
 
@@ -1296,8 +1364,129 @@ object Dedup {
     dedupEmbedOn(Tables.embeddings(spark, dir), cap)
 
   /** Frame-generic core of [[dedupEmbed]] — the spec seam (synthetic
-    * corpora exercise the cap/recall trade the fixture cannot). */
-  private[graft] def dedupEmbedOn(e: DataFrame, cap: Int): DataFrame = {
+    * corpora exercise the cap/recall trade the fixture cannot): per
+    * (vec_id, label, embedding) row, the nearest capped cell-mate,
+    * sorted by vec_id.
+    *
+    * Path choice ([[graft.core.Held]]): an embedding frame that fits
+    * the broadcast threshold, with plain id and label types
+    * ([[graft.core.Held.plainKey]]), is HELD ON THE DRIVER
+    * ([[embedHeld]]); any other runs the distributed cell join
+    * ([[embedDistributed]]). Both return the same rows under the same
+    * schema. */
+  private[graft] def dedupEmbedOn(e: DataFrame, cap: Int): DataFrame =
+    if (Seq("vec_id", "label").forall(c =>
+          graft.core.Held.plainKey(e.schema(c).dataType)) &&
+        graft.core.Held.fits(e)) embedHeld(e, cap)
+    else embedDistributed(e, cap)
+
+  /** The held embedding path. Scale shape: one collect job reads the
+    * vectors with their cap keys (n rows, at most the broadcast
+    * threshold); the driver then scores n × min(cell, cap) pairs
+    * across its cores with [[graft.functions.CosineSimilarity.of]] and
+    * returns a local relation, with no shuffle and no generated code
+    * past the scan. It keeps [[embedDistributed]]'s semantics:
+    *  - each cell's candidates are its first `cap` rows by
+    *    (md5('cap:' ‖ label ‖ ':' ‖ vec_id), vec_id), the window's own
+    *    ordering, with the key computed by Spark in the collect;
+    *  - the nearest is the highest cosine under Spark's double ordering
+    *    (NaN first, −0.0 = 0.0, null last), ties to the lower nn_id;
+    *  - a vector never pairs with its own id, duplicated ids merge into
+    *    one row, and a null label or id yields nothing;
+    *  - a null embedding element reads as 0, as in an unsafe array. */
+  private def embedHeld(e: DataFrame, cap: Int): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    import org.apache.spark.sql.catalyst.util.{SQLOrderingUtil, TypeUtils}
+    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+    import scala.jdk.CollectionConverters._
+    val Seq(idF, labelF, vecF) = Seq("vec_id", "label", "embedding").map(e.schema(_))
+    val toId = CatalystTypeConverters.createToCatalystConverter(idF.dataType)
+    val toLabel = CatalystTypeConverters.createToCatalystConverter(labelF.dataType)
+    val toIdOut = CatalystTypeConverters.createToScalaConverter(idF.dataType)
+    val toLabelOut = CatalystTypeConverters.createToScalaConverter(labelF.dataType)
+    val idOrd = TypeUtils.getInterpretedOrdering(idF.dataType)
+    final case class V(id: Any, label: Any, vec: UnsafeArrayData, capKey: String)
+    val vs = e.select(col("vec_id"), col("label"), col("embedding"),
+        md5(concat_ws(":", lit("cap"), col("label"), col("vec_id"))))
+      .collect().map { r =>
+        V(toId(r.get(0)), toLabel(r.get(1)),
+          if (r.isNullAt(2)) null
+          else UnsafeArrayData.fromPrimitiveArray(r.getSeq[Any](2)
+            .map(x => if (x == null) 0f else x.asInstanceOf[Float]).toArray),
+          r.getString(3))
+      }
+    // ascending ids, nulls first (a null id still takes a cap slot)
+    def idCmp(x: Any, y: Any): Int =
+      if (x == null) { if (y == null) 0 else -1 }
+      else if (y == null) 1 else idOrd.compare(x, y)
+    val cells = vs.filter(_.label != null).groupBy(_.label).map { case (l, m) =>
+      l -> m.sortWith { (x, y) =>
+        val c = x.capKey.compareTo(y.capKey)
+        if (c != 0) c < 0 else idCmp(x.id, y.id) < 0
+      }.take(cap).filter(_.id != null)
+    }
+    // < 0 when (cosine c, id n) ranks before (d, m): cosine descending
+    // under Spark's ordering, null (`cNull`) last, then the lower id
+    def rank(cNull: Boolean, c: Double, n: Any, dNull: Boolean, d: Double, m: Any): Int = {
+      val k =
+        if (cNull) { if (dNull) 0 else 1 }
+        else if (dNull) -1
+        else SQLOrderingUtil.compareDoubles(d, c)
+      if (k != 0) k else idOrd.compare(n, m)
+    }
+    // a vector's nearest: candidate id, the probe's label, cosine (null
+    // when either vector is null)
+    final case class Nn(nn: Any, label: Any, cosine: java.lang.Double) {
+      def before(o: Nn): Boolean = rank(cosine == null, if (cosine == null) 0.0 else cosine,
+        nn, o.cosine == null, if (o.cosine == null) 0.0 else o.cosine, o.nn) < 0
+    }
+    def nearest(v: V): Option[Nn] = {
+      val cands = cells(v.label)
+      var (top, topNull, topCos) = (-1, true, 0.0)
+      var i = 0
+      while (i < cands.length) {
+        val c = cands(i)
+        if (c.id != v.id) {
+          val isNull = v.vec == null || c.vec == null
+          val cos = if (isNull) 0.0 else graft.functions.CosineSimilarity.of(v.vec, c.vec)
+          if (top < 0 || rank(isNull, cos, c.id, topNull, topCos, cands(top).id) < 0) {
+            top = i; topNull = isNull; topCos = cos
+          }
+        }
+        i += 1
+      }
+      if (top < 0) None
+      else Some(Nn(cands(top).id, v.label, if (topNull) null else topCos))
+    }
+    // probes score in parallel across the driver's cores; duplicated
+    // ids then merge in one pass
+    val best = scala.collection.mutable.HashMap.empty[Any, Nn]
+    vs.filter(v => v.id != null && v.label != null).par
+      .map(v => v.id -> nearest(v)).seq.foreach {
+        case (id, Some(n)) if best.get(id).forall(n.before) => best(id) = n
+        case _ => ()
+      }
+    val rows = best.toSeq.sortWith((x, y) => idOrd.lt(x._1, y._1)).map {
+      case (id, n) => Row(toIdOut(id), toIdOut(n.nn), toLabelOut(n.label), n.cosine)
+    }
+    // the distributed path's schema; the flag is projected by Spark,
+    // folded into the local relation with no job
+    e.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+        idF, idF.copy(name = "nn_id"), labelF,
+        StructField("cosine", DoubleType, vecF.nullable))))
+      .select(col("vec_id"), col("nn_id"), col("label"), col("cosine"),
+        (col("cosine") >= 0.9).as("is_near_dup"))
+  }
+
+  /** The distributed embedding path. Scale shape: the probe side is
+    * repartitioned on label, the capped candidate side ranked by a
+    * label window, the within-cell pairs scored by `graft_cosine` in
+    * the join, and a vec_id window keeps each vector's nearest; cost is
+    * Σ cell × min(cell, cap) across the session width, plus a shuffle
+    * of the scored pairs. */
+  private def embedDistributed(e: DataFrame, cap: Int): DataFrame = {
     // r16 (§2.2): the probe leg streamed the raw scan — one split on a
     // small-file corpus — so the within-cell cosine join ran
     // single-threaded. An explicit-width repartition on label (conf

@@ -149,10 +149,10 @@ object Graph {
   /** Connected components of the sparse ([[CompMod]]) co-purchase
     * graph — the generic graph-clustering surface beyond the dedup
     * family: per sampled part, the min-id label of its component
-    * (itself when isolated). Labels come from the SAME distributed
-    * min-label-propagation fixpoint the dedup ladder runs
-    * ([[graft.llm.Dedup.connectedComponents]] — driver sees change
-    * counts only, rounds bounded by graph diameter), staged once per
+    * (itself when isolated). Labels come from the SAME components rung
+    * the dedup ladder runs ([[graft.llm.Dedup.connectedComponents]] —
+    * a driver union-find when the edges fit the broadcast threshold,
+    * else the distributed min-label fixpoint), staged once per
     * source content via [[graft.core.Fixtures.staged]] exactly like
     * the dedup cluster labels; singleton nodes join back as their own
     * label. The oracle re-derives labels through the recursive

@@ -522,32 +522,19 @@ class TxnLogOps(val store: LogStore) {
     if (thresh > 0 && est <= thresh) broadcast(df) else df
   }
 
-  /** Whether an upsert-ladder MERGE holds `source` on the driver: its
-    * optimizer size estimate is within
-    * `spark.sql.autoBroadcastJoinThreshold` (the test Spark's planner
-    * applies before it broadcasts a relation, so the driver holds no
-    * more than a broadcast would), and every key column is of a type
-    * whose driver-side equality and order are Spark's (integral,
-    * binary-collated string, boolean, date, timestamp) and the same
-    * in the table (`table`, when it has a schema). */
-  private[graft] def holdsOnDriver(spark: SparkSession, source: DataFrame,
-                                   keyCols: Seq[String],
+  /** Whether an upsert-ladder MERGE holds `source` on the driver: it
+    * fits the broadcast threshold ([[graft.core.Held.fits]]), and every
+    * key column is of a type whose driver-side equality and order are
+    * Spark's ([[graft.core.Held.plainKey]]) and the same in the table
+    * (`table`, when it has a schema). */
+  private[graft] def holdsOnDriver(source: DataFrame, keyCols: Seq[String],
                                    table: Option[StructType]): Boolean = {
-    import org.apache.spark.sql.types._
-    val thresh = spark.sessionState.conf.autoBroadcastJoinThreshold
     def heldKey(k: String): Boolean =
       source.schema.fields.find(_.name == k).map(_.dataType).exists { dt =>
-        val plain = dt match {
-          case ByteType | ShortType | IntegerType | LongType | BooleanType |
-               DateType | TimestampType | TimestampNTZType => true
-          case s: StringType => s == StringType
-          case _ => false
-        }
-        plain && table.forall(_.fields.find(_.name == k)
-          .forall(_.dataType == dt))
+        graft.core.Held.plainKey(dt) && table.forall(_.fields
+          .find(_.name == k).forall(_.dataType == dt))
       }
-    thresh > 0 && keyCols.forall(heldKey) &&
-      source.queryExecution.optimizedPlan.stats.sizeInBytes <= thresh
+    keyCols.forall(heldKey) && graft.core.Held.fits(source)
   }
 
   /** The schema contract every write resolves against the table's
@@ -2679,7 +2666,7 @@ class TxnLogOps(val store: LogStore) {
     *
     *  - within it, the source is HELD ON THE DRIVER: collected once
     *    (count, duplicate refusal and key bounds with no further job),
-    *    one collect job probes the candidates under an `In` on the
+    *    one collect job probes the candidates under an `InSet` on the
     *    source keys, the clause flags, owners and pure removes are
     *    computed on the driver, and each rewrite drops its fired rows
     *    by row identity. Scale shape: driver memory is bounded by the
@@ -2780,7 +2767,7 @@ class TxnLogOps(val store: LogStore) {
     val extendedSurface = updateSet.nonEmpty || insertWhen.nonEmpty ||
       nmbsDelete.nonEmpty || nmbsUpdate.nonEmpty
     if (!extendedSurface &&
-        holdsOnDriver(spark, source0, keyCols, schemaAt(root, base)))
+        holdsOnDriver(source0, keyCols, schemaAt(root, base)))
       return mergeHeld(spark, root, source0, keyCols, updateWhen,
         deleteWhen, insertUnmatched, live, mc)
     // the source is re-referenced once per touched file plus the
@@ -2953,7 +2940,7 @@ class TxnLogOps(val store: LogStore) {
     *     key, as in `countDistinct`) and the key bounds, rendered as
     *     `min(c).cast("string")` renders them, for the stats pre-prune.
     *  2. ONE collect job scans the candidates ([[scanWithDVs]]) under
-    *     an `In` on the source keys and returns each matched row's
+    *     an `InSet` on the source keys and returns each matched row's
     *     keys, file, row identity and the target columns the clause
     *     conditions read. The clause flags are a projection over a
     *     local relation of those rows joined on the driver to their
@@ -3032,7 +3019,7 @@ class TxnLogOps(val store: LogStore) {
           .map(_.name).toSet
         val read = dataFields.map(_.name)
           .filter(c => !keyCols.contains(c) && refs(c))
-        val p = scan.where(keysIn(keyCols, keyTypes, srcKeys))
+        val p = scan.where(keysIn(keyCols, srcKeys))
           .select((keyCols ++ read ++ Seq("__file", "__path", "__pos"))
             .map(col): _*)
         (p.schema, p.collect().toSeq)
@@ -3088,7 +3075,8 @@ class TxnLogOps(val store: LogStore) {
     val rewrites = rewriteFiles.zipWithIndex.map { case (f, i) =>
       (f, f"${mc.outBase}_u$i%04d", () => {
         val hit = gone(f).map { case (p, ps) =>
-          col("__path") === p && col("__pos").isin(ps: _*) }.reduce(_ || _)
+          col("__path") === p && inSet(col("__pos"), ps.toSet) }
+          .reduce(_ || _)
         val raw = scanWithDVs(spark, root, st, Seq(f), rowIds = true)
           .where(!hit).drop("__path", "__pos")
         val fileDf = tableSchema.map(projectTo(raw, _)).getOrElse(raw)
@@ -3106,24 +3094,23 @@ class TxnLogOps(val store: LogStore) {
       else None)
   }
 
-  /** An `In` of the key columns against literal key tuples: `keys` are
-    * Catalyst values of `types`; a composite key probes as a struct. */
+  /** An `InSet` of the key columns against key tuples of Catalyst
+    * values; a composite key probes as a struct. */
   private def keysIn(keyCols: Seq[String],
-                     types: Seq[org.apache.spark.sql.types.DataType],
-                     keys: Seq[Seq[Any]]): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.catalyst.{InternalRow, expressions => ce}
-    import org.apache.spark.sql.types.StructField
-    val (probe, lits) =
-      if (keyCols.size == 1)
-        (col(keyCols.head), keys.map(k => ce.Literal(k.head, types.head)))
-      else {
-        val t = StructType(keyCols.zip(types).map { case (k, dt) =>
-          StructField(k, dt) })
-        (struct(keyCols.map(col): _*),
-          keys.map(k => ce.Literal(InternalRow.fromSeq(k), t)))
-      }
-    org.apache.spark.sql.graft.StreamingShim.column(ce.In(
-      org.apache.spark.sql.graft.StreamingShim.expression(probe), lits))
+                     keys: Seq[Seq[Any]]): org.apache.spark.sql.Column =
+    if (keyCols.size == 1) inSet(col(keyCols.head), keys.map(_.head).toSet)
+    else inSet(struct(keyCols.map(col): _*),
+      keys.map(org.apache.spark.sql.catalyst.InternalRow.fromSeq).toSet)
+
+  /** `c` in a set of Catalyst values, as an `InSet`: its generated code
+    * references the set instead of inlining each value as an `In` of
+    * literals does, so a call with new values reuses the compiled class.
+    * Parquet pushdown sees the same `sources.In`. */
+  private def inSet(c: org.apache.spark.sql.Column,
+                    values: Set[Any]): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.graft.StreamingShim
+    StreamingShim.column(org.apache.spark.sql.catalyst.expressions.InSet(
+      StreamingShim.expression(c), values))
   }
 
   /** Surviving (DV-applied) rows of each of `files`: the log's

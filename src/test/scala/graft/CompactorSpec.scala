@@ -192,6 +192,28 @@ class CompactorSpec extends AnyFunSuite with SparkSpec with ScratchDirs {
     assert(out.count() == 4)
   }
 
+  test("parquet schema resolves from the footer as Spark's inference reports it") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val base = tmpBase()
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { required int64 id; optional binary name (UTF8); " +
+        "required int64 ts (TIMESTAMP(NANOS,false)); }")
+    val newest = s"$base/src/part-1.parquet"
+    Seq(s"$base/src/part-0.parquet", newest).foreach { f =>
+      val w = ExampleParquetWriter.builder(new Path(f)).withType(schema).build()
+      try w.write(new SimpleGroupFactory(schema).newGroup().append("id", 1L)
+        .append("name", "a").append("ts", 1700000000123456789L))
+      finally w.close()
+    }
+    fsOps.fs.setTimes(new Path(newest), System.currentTimeMillis() + 60000, -1)
+    val resolved = Compactor.resolveParquetSchema(spark, fsOps, cfg(base))
+    assert(resolved.contains(spark.read.parquet(newest).schema))
+    // nanosAsLong: the nanosecond timestamp resolves as a long
+    assert(resolved.get("ts").dataType == org.apache.spark.sql.types.LongType)
+  }
+
   // ---- avro parity (reference's native format) ----
 
   private val avroV1 = new Schema.Parser().parse(

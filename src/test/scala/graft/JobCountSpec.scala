@@ -105,13 +105,9 @@ class JobCountSpec extends AnyFunSuite with SparkSpec {
     // ladder's joins shuffle instead of broadcasting
     withScratch { root =>
       table(root, 1)
-      val key = "spark.sql.autoBroadcastJoinThreshold"
-      val old = spark.conf.get(key)
-      spark.conf.set(key, "-1")
-      try assertJobs("mergeUpsert, auto-broadcast off", 16)(
+      withThreshold(-1L)(assertJobs("mergeUpsert, auto-broadcast off", 16)(
         assert(TxnLog.mergeUpsert(spark, root, rows(15, 25), "k", "m")
-          .nonEmpty))
-      finally spark.conf.set(key, old)
+          .nonEmpty)))
     }
   }
 
@@ -212,13 +208,25 @@ class JobCountSpec extends AnyFunSuite with SparkSpec {
       labels.collect()
       Caches.unpin(labels)
     }
-    ladder("connectedComponents on the candidates + collect", 8)(components(
-      Dedup.minhashCandidates(Tables.documents(spark, sfDir), "doc_id", "text")))
-    // three rounds: the seed is inline, each round is one checkpoint job
-    // plus its exchanges, and its change count rides on that job
+    def candidates = Dedup.minhashCandidates(Tables.documents(spark, sfDir),
+      "doc_id", "text")
     val path = Seq(17L, 12L, 19L, 11L, 15L, 14L, 20L)
-    ladder("connectedComponents on a 7-node path + collect", 15)(components(
-      path.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("doc_a", "doc_b")))
+    def pathPairs = path.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("doc_a", "doc_b")
+    // held on the driver: the candidates' own collect, then no job; a
+    // local pair frame collects with none
+    ladder("connectedComponents held on the candidates + collect", 3)(
+      components(candidates))
+    ladder("connectedComponents held on a 7-node path + collect", 0)(
+      components(pathPairs))
+    // the distributed fixpoint, auto-broadcast off: its joins shuffle
+    withThreshold(-1L) {
+      ladder("connectedComponents on the candidates + collect", 8)(
+        components(candidates))
+      // three rounds: the seed is inline, each round is one checkpoint
+      // job plus its exchanges, and its change count rides on that job
+      ladder("connectedComponents on a 7-node path + collect", 16)(
+        components(pathPairs))
+    }
   }
 
   test("dedup ladder: dedupApply plus a group count") {
@@ -227,7 +235,10 @@ class JobCountSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("dedup ladder: dedupEmbed collect") {
-    ladder("dedupEmbed collect", 7)(Dedup.dedupEmbed(spark, sfDir).collect())
+    // held on the driver: the vectors' collect, then no job
+    ladder("dedupEmbed held collect", 1)(Dedup.dedupEmbed(spark, sfDir).collect())
+    withThreshold(-1L)(
+      ladder("dedupEmbed collect", 7)(Dedup.dedupEmbed(spark, sfDir).collect()))
   }
 
   test("a two-leaf Compactor.run") {
@@ -237,7 +248,7 @@ class JobCountSpec extends AnyFunSuite with SparkSpec {
       val c = Compactor.Config(sourceFolder = s"$base/src",
         targetFolder = s"$base/tgt", fileCount = 1,
         tmpFolder = s"$base/tmp")
-      assertJobs("Compactor.run", 3)(assert(Compactor.run(spark, c).ok))
+      assertJobs("Compactor.run", 2)(assert(Compactor.run(spark, c).ok))
     }
   }
 }

@@ -105,29 +105,32 @@ class LlmSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("fixpoint releases round n-1 checkpoints while running (bounded pinned state)") {
-    graft.core.Caches.drain(spark) // isolate from earlier suites' caches
-    // during clusterLabels itself, in-loop release keeps pinned blocks to
-    // O(edges + 2 label frames); after the query's action + drain → zero
-    Dedup.dedupClusters(spark, sfDir).count()
-    // pre-drain: only the final round's checkpoint (+ the apply-side
-    // frames for this invocation) may be pinned — not one per round.
-    val live = spark.sparkContext.getPersistentRDDs.size
-    assert(live <= 2, s"expected <=2 pinned RDDs pre-drain, found $live")
-    graft.core.Caches.drain(spark)
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
-    // The fixture's components are pairs, which the one-hop seed settles
-    // in a single round, so a per-round leak needs a deeper graph to
-    // show: a 7-node path with its minimum mid-path takes 3 rounds, and
-    // only the final round's labels may stay pinned.
-    import spark.implicits._
-    val path = Seq(17L, 12L, 19L, 11L, 15L, 14L, 20L)
-    val labels = Dedup.connectedComponents(spark,
-      path.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("doc_a", "doc_b"))
-    val pinned = spark.sparkContext.getPersistentRDDs.size
-    assert(pinned == 1, s"expected only the final labels pinned, found $pinned")
-    assert(labels.collect().forall(_.getLong(1) == 11L))
-    graft.core.Caches.drain(spark)
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    // the distributed fixpoint: a pair frame held on the driver pins nothing
+    withThreshold(-1L) {
+      graft.core.Caches.drain(spark) // isolate from earlier suites' caches
+      // during clusterLabels itself, in-loop release keeps pinned blocks to
+      // O(edges + 2 label frames); after the query's action + drain → zero
+      Dedup.dedupClusters(spark, sfDir).count()
+      // pre-drain: only the final round's checkpoint (+ the apply-side
+      // frames for this invocation) may be pinned — not one per round.
+      val live = spark.sparkContext.getPersistentRDDs.size
+      assert(live <= 2, s"expected <=2 pinned RDDs pre-drain, found $live")
+      graft.core.Caches.drain(spark)
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+      // The fixture's components are pairs, which the one-hop seed settles
+      // in a single round, so a per-round leak needs a deeper graph to
+      // show: a 7-node path with its minimum mid-path takes 3 rounds, and
+      // only the final round's labels may stay pinned.
+      import spark.implicits._
+      val path = Seq(17L, 12L, 19L, 11L, 15L, 14L, 20L)
+      val labels = Dedup.connectedComponents(spark,
+        path.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("doc_a", "doc_b"))
+      val pinned = spark.sparkContext.getPersistentRDDs.size
+      assert(pinned == 1, s"expected only the final labels pinned, found $pinned")
+      assert(labels.collect().forall(_.getLong(1) == 11L))
+      graft.core.Caches.drain(spark)
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    }
   }
 
   /** Runs `body` with a listener tracking the RDD ids that hold live
@@ -161,30 +164,34 @@ class LlmSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("fixpoint peak pinned state is the edges plus two label rounds") {
-    import spark.implicits._
-    graft.core.Caches.drain(spark)
-    val path = Seq(17L, 12L, 19L, 11L, 15L, 14L, 20L)
-    val (peak, left) = trackingPinned {
-      val labels = Dedup.connectedComponents(spark,
-        path.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("doc_a", "doc_b"))
-      assert(labels.collect().forall(_.getLong(1) == 11L))
-      graft.core.Caches.unpin(labels)
+    withThreshold(-1L) {
+      import spark.implicits._
+      graft.core.Caches.drain(spark)
+      val path = Seq(17L, 12L, 19L, 11L, 15L, 14L, 20L)
+      val (peak, left) = trackingPinned {
+        val labels = Dedup.connectedComponents(spark,
+          path.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("doc_a", "doc_b"))
+        assert(labels.collect().forall(_.getLong(1) == 11L))
+        graft.core.Caches.unpin(labels)
+      }
+      // three rounds: a round that kept its predecessor would reach 4
+      assert(peak >= 2 && peak <= 3, s"peak pinned RDDs $peak")
+      assert(left.isEmpty, s"still pinned: $left")
     }
-    // three rounds: a round that kept its predecessor would reach 4
-    assert(peak >= 2 && peak <= 3, s"peak pinned RDDs $peak")
-    assert(left.isEmpty, s"still pinned: $left")
   }
 
   test("an empty pair frame converges and leaves nothing pinned") {
-    import spark.implicits._
-    graft.core.Caches.drain(spark)
-    val (_, left) = trackingPinned {
-      val labels = Dedup.connectedComponents(spark,
-        Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"))
-      assert(labels.collect().isEmpty)
-      graft.core.Caches.unpin(labels)
+    withThreshold(-1L) {
+      import spark.implicits._
+      graft.core.Caches.drain(spark)
+      val (_, left) = trackingPinned {
+        val labels = Dedup.connectedComponents(spark,
+          Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"))
+        assert(labels.collect().isEmpty)
+        graft.core.Caches.unpin(labels)
+      }
+      assert(left.isEmpty, s"still pinned: $left")
     }
-    assert(left.isEmpty, s"still pinned: $left")
   }
 
   test("candidate plan equals a driver bucket reference: maxBucket edge, duplicated doc_id rows") {

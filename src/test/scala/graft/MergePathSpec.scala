@@ -22,13 +22,6 @@ import graft.sources.TxnLog.{CommitInfo, Entry}
   * size, so a small batch takes the driver-held path. */
 class MergePathSpec extends AnyFunSuite with SparkSpec with ScratchDirs {
 
-  private def withThreshold[T](bytes: Long)(body: => T): T = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, bytes.toString)
-    try body finally spark.conf.set(key, old)
-  }
-
   /** What a merge left: its result or refusal message, the table's rows,
     * and the entries of the version it committed (none when it
     * committed nothing), commit time left out. */
@@ -42,7 +35,7 @@ class MergePathSpec extends AnyFunSuite with SparkSpec with ScratchDirs {
     setup(root)
     val source = src
     val before = TxnLog.latestVersion(root)
-    assert(TxnLog.holdsOnDriver(spark, source, keys,
+    assert(TxnLog.holdsOnDriver(source, keys,
       TxnLog.schemaAt(root, before)) == held)
     val result =
       try Right(merge(root, source))
@@ -284,7 +277,7 @@ class BatchFrameProbe extends StreamSinkProvider {
       val batch = StreamingShim.asBatchFrame(data)
       MergePathSpec.seen.add((
         batch.queryExecution.optimizedPlan.stats.sizeInBytes,
-        TxnLog.holdsOnDriver(batch.sparkSession, batch, Seq("k"), None)))
+        TxnLog.holdsOnDriver(batch, Seq("k"), None)))
       batch.collect(); ()
     }
   }

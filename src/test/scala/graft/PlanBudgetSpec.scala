@@ -301,12 +301,11 @@ class PlanBudgetSpec extends AnyFunSuite with SparkSpec {
     // band candidates + two broadcast prefix joins + sort
     "llm_dedup_edit_distance" -> 3,
     "llm_curriculum" -> 2,
-    // label-cell join + candidate-side cap window + per-vector NN
-    // window + sort (cap adds one label-keyed exchange); r16 +1: the
-    // probe leg's explicit-width repartition on label (the one-split
-    // scan serialized the within-cell cosine join — measured 7.2 s ->
-    // 2.1 s at x10)
-    "llm_dedup_embed" -> 4,
+    // the embeddings fit the broadcast threshold, so the rung is held
+    // on the driver and plans a local relation; the distributed path
+    // (label-cell join + cap window + NN window + sort, 4 exchanges)
+    // runs above it
+    "llm_dedup_embed" -> 0,
     // retrain adds the Lloyd rounds' (cell,dim) shuffles + assignment;
     // r16 +1: nnWithinCells' explicit-width repartition on vec_id
     "llm_dedup_embed_retrained" -> 8,

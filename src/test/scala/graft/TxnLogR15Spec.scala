@@ -20,13 +20,6 @@ class TxnLogR15Spec extends AnyFunSuite with SparkSpec {
     finally graft.core.Fixtures.deleteRecursively(new java.io.File(root))
   }
 
-  private def withThreshold(bytes: Long)(body: => Unit): Unit = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, bytes.toString)
-    try body finally spark.conf.set(key, old)
-  }
-
   test("DML broadcast valve: probe frames hint only under the session " +
     "threshold; above it the join degrades instead of OOMing " +
     "(VERDICT r14 #2 / ADVICE r14 medium)") {
