@@ -1,12 +1,17 @@
 package graft.llm
 
+import scala.collection.mutable
 import scala.collection.parallel.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 
-import graft.core.{Caches, Tables}
+import graft.core.{Caches, Held, Tables}
 
 /** Deduplication operators for LLM training-data pipelines
   * (SURVEY.md §2B `llm_dedup_*`): exact, MinHash+LSH, exact-Jaccard
@@ -69,23 +74,9 @@ object Dedup {
   /** MinHash signature columns h0..h7: two md5 digests per trigram,
     * each split into four independent 8-hex (32-bit) chunks — the min
     * of a uniformly-hashed hex string over the trigram set ≡ min under
-    * a random permutation of the trigram universe, and 32 bits keeps
-    * chunk-collision probability negligible at realistic shingle-set
-    * sizes. One digest per seed would be 8 md5 evaluations per gram;
-    * chunking needs 2. */
-  private[graft] def signatures(tg: DataFrame): DataFrame = {
-    val withDigests = tg.select(col("doc_id"),
-      md5(col("g")).as("m1"),
-      md5(concat(lit("x:"), col("g"))).as("m2"))
-    withDigests.groupBy(col("doc_id"))
-      .agg(
-        min(substring(col("m1"), 1, 8)).as("h0"),
-        ((1 until 4).map(s =>
-          min(substring(col("m1"), 8 * s + 1, 8)).as(s"h$s")) ++
-          (0 until 4).map(s =>
-            min(substring(col("m2"), 8 * s + 1, 8)).as(s"h${4 + s}"))): _*)
-  }
-
+    * a random permutation of the trigram universe. The native kernel
+    * [[graft.functions.MinHash8]] computes the same chunks in one pass
+    * (MinHashSpec holds the two bit-equal). */
   private val signaturesSql: String = {
     val mins = (0 until nHashes).map { s =>
       val (m, off) = if (s < 4) ("m1", 8 * s + 1) else ("m2", 8 * (s - 4) + 1)
@@ -95,14 +86,6 @@ object Dedup {
        |FROM (SELECT doc_id, md5(g) AS m1, md5('x:' || g) AS m2 FROM tg)
        |GROUP BY doc_id""".stripMargin
   }
-
-  /** (doc_id, band_idx, band_signature) — bands of 2 hashes each. */
-  private[graft] def bands(sig: DataFrame): DataFrame =
-    sig.select(col("doc_id"), explode(array(
-      (0 until nBands).map(b => struct(
-        lit(b).as("b"),
-        concat(col(s"h${2 * b}"), col(s"h${2 * b + 1}")).as("v"))): _*)).as("band"))
-      .select(col("doc_id"), col("band.b").as("b"), col("band.v").as("v"))
 
   /** (doc_id, sig) projection on the single-pass native kernel
     * [[graft.functions.MinHash8]]; sig is null for trigram-less docs
@@ -149,13 +132,69 @@ object Dedup {
   /** The candidate plan every LSH consumer reads: distinct
     * (doc_a < doc_b, n_agree) over the (b, v) buckets of a (doc_id, sig)
     * frame, where n_agree counts the signature chunks the pair agrees on
-    * (the MinHash estimator's numerator). One groupBy(b, v) collects each
-    * bucket's (doc_id, sig) members; a bucket of 2..[[maxBucket]] rows
-    * emits its member pairs and their n_agree from a nested lambda, so
-    * the estimator needs no signature re-join and the bucket needs no
-    * self-join. Two exchanges (the bucket groupBy and the distinct),
-    * nothing cached; the kernel runs once per document. Unordered. */
-  private[graft] def candidatePlan(sigs: DataFrame): DataFrame =
+    * (the MinHash estimator's numerator). A bucket of 2..[[maxBucket]]
+    * rows (every row counts, a null or repeated doc_id too) emits its
+    * member pairs.
+    *
+    * Path choice ([[graft.core.Held]]): a signature frame that fits the
+    * broadcast threshold, with a plain doc_id type, is HELD ON THE DRIVER
+    * ([[candidatesHeld]]); any other runs the distributed bucket
+    * aggregate ([[candidatesDistributed]]). Both return the same rows
+    * under the same schema; the held one is a local relation sorted on
+    * (doc_a, doc_b, n_agree), the distributed one is unordered. */
+  private[graft] def candidatePlan(sigs: DataFrame): DataFrame = {
+    val plan = candidatesDistributed(sigs)
+    val stringSig = sigs.schema("sig").dataType match {
+      case ArrayType(e, _) => e == StringType
+      case _ => false
+    }
+    if (stringSig && Held.plainKey(sigs.schema("doc_id").dataType) && Held.fits(sigs))
+      candidatesHeld(sigs, plan.schema)
+    else plan
+  }
+
+  /** The held candidate path. Scale shape: one collect job reads each
+    * document's (doc_id, sig), the kernel evaluated by Spark in that
+    * job; the driver files each row under its 4 (b, v) band values and
+    * emits every bucket's pairs, with no shuffle and no further job. */
+  private def candidatesHeld(sigs: DataFrame, schema: StructType): DataFrame = {
+    val idType = sigs.schema("doc_id").dataType
+    val toKey = CatalystTypeConverters.createToCatalystConverter(idType)
+    val ord = TypeUtils.getInterpretedOrdering(idType)
+    val rows = sigs.select(col("doc_id"), col("sig")).collect()
+    val ids = rows.map(r => toKey(r.get(0)))
+    val sig = rows.map(r => if (r.isNullAt(1)) null else r.getSeq[String](1).toArray)
+    val buckets = mutable.HashMap.empty[(Int, String), mutable.ArrayBuffer[Int]]
+    for (i <- rows.indices if sig(i) != null; b <- 0 until nBands) {
+      val (p, q) = (sig(i)(2 * b), sig(i)(2 * b + 1))
+      if (p != null && q != null)
+        buckets.getOrElseUpdate((b, p + q), mutable.ArrayBuffer.empty[Int]) += i
+    }
+    // zip_with pads the shorter signature with nulls, which never agree
+    def agree(x: Array[String], y: Array[String]): Int =
+      (0 until math.min(x.length, y.length)).count(k => x(k) != null && x(k) == y(k))
+    val pairs = mutable.HashSet.empty[(Any, Any, Int)]
+    for (m <- buckets.valuesIterator if m.size > 1 && m.size <= maxBucket; x <- m; y <- m) {
+      val (a, b) = (ids(x), ids(y))
+      if (a != null && b != null && ord.lt(a, b)) pairs += ((a, b, agree(sig(x), sig(y))))
+    }
+    val sorted = pairs.toSeq.sortWith { (x, y) =>
+      val c = ord.compare(x._1, y._1)
+      if (c != 0) c < 0 else {
+        val d = ord.compare(x._2, y._2)
+        if (d != 0) d < 0 else x._3 < y._3
+      }
+    }
+    Held.local(sigs.sparkSession, schema, sorted.map { case (a, b, n) => InternalRow(a, b, n) })
+  }
+
+  /** The distributed candidate path: one groupBy(b, v) collects each
+    * bucket's (doc_id, sig) members, and a qualifying bucket emits its
+    * pairs and their n_agree from a nested lambda, so the estimator
+    * needs no signature re-join and the bucket needs no self-join. Two
+    * exchanges (the bucket groupBy and the distinct), nothing cached;
+    * the kernel runs once per document. Unordered. */
+  private def candidatesDistributed(sigs: DataFrame): DataFrame =
     bandsOfSigs(sigs)
       .groupBy(col("b"), col("v"))
       .agg(collect_list(struct(col("doc_id"), col("sig"))).as("m"))
@@ -168,6 +207,15 @@ object Dedup {
       .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"),
         col("p.n_agree").as("n_agree"))
       .distinct()
+
+  /** `df` ordered on (doc_a, doc_b). A held candidate or verify result,
+    * with any projection or filter over it, is a local relation already
+    * in that order, which a sort would only put through a range-shuffle
+    * job again; the distributed plans aggregate, so the optimizer folds
+    * one into a local relation only when it is empty. */
+  private def byPair(df: DataFrame): DataFrame =
+    if (df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) df
+    else df.orderBy(col("doc_a"), col("doc_b"))
 
   private val bandsSql: String = {
     val raw = (0 until nBands)
@@ -200,8 +248,7 @@ object Dedup {
     * of 2 → bucket self-join on (band, signature) → distinct pairs, off
     * the shared [[candidatePlan]]. */
   def dedupFuzzy(spark: SparkSession, dir: String): DataFrame =
-    minhashCandidates(Tables.documents(spark, dir), "doc_id", "text")
-      .orderBy(col("doc_a"), col("doc_b"))
+    byPair(minhashCandidates(Tables.documents(spark, dir), "doc_id", "text"))
 
   val dedupFuzzySql: String =
     s"""WITH tg AS ($trigramsSql),
@@ -543,20 +590,73 @@ object Dedup {
     * [[dedupThresholdHist]], [[dedupRungAgreement]]) and LlmSpec's
     * unpruned-baseline measurement, so the test measures THIS verify.
     *
-    * `cand` is a set of pairs (distinct rows). Its (pair, side, doc_id)
-    * endpoint rows are broadcast; one docs scan probes them and shingles
-    * each matched row, so only candidate documents are shingled. One
-    * groupBy on cand's columns builds each side's null-free distinct
-    * trigram array from its matched rows, so a duplicated doc_id's set
-    * is the union of its rows', as the oracle's DISTINCT (doc_id, g)
-    * defines it. The pair reads common = |A ∩ B|, n_a = |A| and
-    * n_b = |B| as BIGINT; pairs sharing no trigram (or naming an absent
-    * doc) are absent, as under the oracle's inner gram join. Scale
-    * shape: the broadcast grows with the (pruned) pair count, the one
-    * shuffle with the pairs' gram arrays. Output: cand's columns, then
-    * common, n_a, n_b and jaccard (exact-int / exact-int, bit-identical
-    * across engines). */
+    * `cand` is a set of pairs (distinct rows). Each document's trigram
+    * set is the null-free union of its rows' grams, so a duplicated
+    * doc_id's set is the union of its rows', as the oracle's DISTINCT
+    * (doc_id, g) defines it. The pair reads common = |A ∩ B|,
+    * n_a = |A| and n_b = |B| as BIGINT; pairs sharing no trigram (or
+    * naming an absent doc) are absent, as under the oracle's inner gram
+    * join. Output: cand's columns, then common, n_a, n_b and jaccard
+    * (exact-int / exact-int, bit-identical across engines).
+    *
+    * Path choice ([[graft.core.Held]]): when `docs` and `cand` both fit
+    * the broadcast threshold and doc_id, doc_a and doc_b share one plain
+    * key type, the verify is HELD ON THE DRIVER ([[jaccardHeld]]), a
+    * local relation sorted on (doc_a, doc_b); otherwise it runs the
+    * distributed kernel ([[jaccardDistributed]]). Both return the same
+    * rows under the same schema. */
   private[graft] def exactJaccard(docs: DataFrame, cand: DataFrame): DataFrame = {
+    val plan = jaccardDistributed(docs, cand)
+    val idType = docs.schema("doc_id").dataType
+    if (Held.plainKey(idType) && Seq("doc_a", "doc_b").forall(cand.schema(_).dataType == idType) &&
+        Held.fits(cand) && Held.fits(docs)) jaccardHeld(docs, cand, plan.schema)
+    else plan
+  }
+
+  /** The held verify path. Scale shape: the pairs are collected (a
+    * held candidate frame with no job), then one collect job probes the
+    * docs scan with an `InSet` on the pairs' endpoints and shingles the
+    * matched rows in Spark, so only candidate documents travel; the
+    * driver merges each doc_id's rows into one set and intersects each
+    * pair's sets in parallel across its cores, with no shuffle. */
+  private def jaccardHeld(docs: DataFrame, cand: DataFrame, schema: StructType): DataFrame = {
+    val idType = docs.schema("doc_id").dataType
+    val toKey = CatalystTypeConverters.createToCatalystConverter(idType)
+    val toRow = CatalystTypeConverters.createToCatalystConverter(cand.schema)
+    val ord = TypeUtils.getInterpretedOrdering(idType)
+    val (ia, ib) = (cand.schema.fieldIndex("doc_a"), cand.schema.fieldIndex("doc_b"))
+    val pairs = cand.collect().distinct.map(r => toRow(r).asInstanceOf[InternalRow])
+    val ends = pairs.flatMap(p => Seq(p.get(ia, idType), p.get(ib, idType))).filter(_ != null).toSet
+    val grams: Map[Any, Set[String]] =
+      if (ends.isEmpty) Map.empty
+      else docs.where(Held.in(col("doc_id"), ends))
+        .select(col("doc_id"), split(lower(col("text")), " ").as("t"))
+        .select(col("doc_id"), expr(gramsExpr).as("g"))
+        .collect()
+        .groupMapReduce(r => toKey(r.get(0)))(r =>
+          if (r.isNullAt(1)) Set.empty[String] else r.getSeq[String](1).filter(_ != null).toSet)(_ ++ _)
+    def gramsOf(id: Any): Set[String] = if (id == null) Set.empty else grams.getOrElse(id, Set.empty)
+    val verified = pairs.par.flatMap { p =>
+      val (a, b) = (gramsOf(p.get(ia, idType)), gramsOf(p.get(ib, idType)))
+      val common = (if (a.size <= b.size) a.count(b) else b.count(a)).toLong
+      if (common == 0) None
+      else Some(InternalRow.fromSeq(p.toSeq(cand.schema) ++ Seq[Any](common, a.size.toLong,
+        b.size.toLong, common.toDouble / (a.size + b.size - common).toDouble)))
+    }.seq.sortWith { (x, y) =>
+      val c = ord.compare(x.get(ia, idType), y.get(ia, idType))
+      if (c != 0) c < 0 else ord.lt(x.get(ib, idType), y.get(ib, idType))
+    }
+    Held.local(docs.sparkSession, schema, verified.toSeq)
+  }
+
+  /** The distributed verify path. Its (pair, side, doc_id) endpoint
+    * rows are broadcast; one docs scan probes them and shingles each
+    * matched row, so only candidate documents are shingled. One groupBy
+    * on cand's columns builds each side's null-free distinct trigram
+    * array from its matched rows. Scale shape: the broadcast grows with
+    * the (pruned) pair count, the one shuffle with the pairs' gram
+    * arrays. */
+  private def jaccardDistributed(docs: DataFrame, cand: DataFrame): DataFrame = {
     val keys = cand.columns.toSeq.map(col)
     val ends = cand.select(keys :+ posexplode(array(col("doc_a"), col("doc_b")))
       .as(Seq("side", "doc_id")): _*)
@@ -584,9 +684,7 @@ object Dedup {
     val cand = candidatePlan(signaturesNative(docs, "doc_id", "text"))
       .where(col("n_agree") >= estPruneMinAgree)
       .select(col("doc_a"), col("doc_b"))
-    exactJaccard(docs, cand)
-      .where(col("jaccard") >= 0.5)
-      .orderBy(col("doc_a"), col("doc_b"))
+    byPair(exactJaccard(docs, cand).where(col("jaccard") >= 0.5))
   }
 
   lazy val dedupJaccardSql: String = {
@@ -628,9 +726,8 @@ object Dedup {
     * verify without touching document text again — the candidate plan
     * already counts each pair's agreeing chunks. */
   def dedupJaccardEst(spark: SparkSession, dir: String): DataFrame =
-    candidatePlan(signaturesNative(Tables.documents(spark, dir), "doc_id", "text"))
-      .withColumn("jaccard_est", col("n_agree").cast("double") / lit(8.0))
-      .orderBy(col("doc_a"), col("doc_b"))
+    byPair(candidatePlan(signaturesNative(Tables.documents(spark, dir), "doc_id", "text"))
+      .withColumn("jaccard_est", col("n_agree").cast("double") / lit(8.0)))
 
   lazy val dedupJaccardEstSql: String = {
     val agree = agreeSql
@@ -714,14 +811,13 @@ object Dedup {
   def dedupContainment(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val cand = minhashCandidates(docs, "doc_id", "text")
-    exactJaccard(docs, cand)
+    byPair(exactJaccard(docs, cand)
       .select(col("doc_a"), col("doc_b"), col("common"),
         col("n_a"), col("n_b"),
         (col("common") / least(col("n_a"), col("n_b"))).as("containment"),
         (col("common") / (col("n_a") + col("n_b") - col("common")))
           .as("jaccard"))
-      .where(col("containment") >= 0.5)
-      .orderBy(col("doc_a"), col("doc_b"))
+      .where(col("containment") >= 0.5))
   }
 
   lazy val dedupContainmentSql: String =
@@ -1113,50 +1209,65 @@ object Dedup {
     * refuses a component whose diameter needs more than 20 rounds. */
   def connectedComponents(spark: SparkSession, pairFrame: DataFrame): DataFrame = {
     val types = Seq("doc_a", "doc_b").map(pairFrame.schema(_).dataType).distinct
-    if (types.size == 1 && graft.core.Held.plainKey(types.head) &&
-        graft.core.Held.fits(pairFrame)) componentsHeld(spark, pairFrame)
+    if (types.size == 1 && Held.plainKey(types.head) &&
+        Held.fits(pairFrame)) componentsHeld(spark, pairFrame)
     else componentsDistributed(spark, pairFrame)
   }
 
   /** The held components path. Scale shape: the pair frame (at most the
-    * broadcast threshold) is collected once; a union-find over its
-    * endpoints' Catalyst values, each set rooted at its least node
-    * under Spark's ordering, labels every node in near-linear time on
-    * the driver with no round bound; the labels come back as a local
-    * relation, which Spark reads with no job and no generated code.
+    * broadcast threshold) is collected once; each endpoint's Catalyst
+    * value gets a dense Int id once, a union-find over Int arrays joins
+    * the pairs' components in near-linear time, and one pass over the
+    * nodes finds each component's least node under Spark's ordering, with
+    * no round bound; the labels come back as a local relation of
+    * Catalyst rows, which Spark reads with no job and no generated code.
     * Nothing is pinned. */
   private def componentsHeld(spark: SparkSession, pairFrame: DataFrame): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.catalyst.CatalystTypeConverters
-    import org.apache.spark.sql.catalyst.util.TypeUtils
-    import org.apache.spark.sql.types.{StructField, StructType}
-    import scala.jdk.CollectionConverters._
     val (a, b) = (pairFrame.schema("doc_a"), pairFrame.schema("doc_b"))
     val toKey = CatalystTypeConverters.createToCatalystConverter(a.dataType)
     val ord = TypeUtils.getInterpretedOrdering(a.dataType)
-    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
-    def root(x: Any): Any = {
+    val pairs = pairFrame.select(col("doc_a"), col("doc_b")).collect()
+    val ids = new java.util.HashMap[Any, Integer](pairs.length)
+    val nodes = mutable.ArrayBuffer.empty[Any]
+    def idOf(v: Any): Int =
+      if (v == null) -1
+      else {
+        val k = toKey(v)
+        val i = ids.get(k)
+        if (i != null) i.intValue
+        else { ids.put(k, nodes.size); nodes += k; nodes.size - 1 }
+      }
+    val ends = pairs.map(p => (idOf(p.get(0)), idOf(p.get(1))))
+    val parent = Array.range(0, nodes.size)
+    val rank = new Array[Byte](nodes.size)
+    def root(x: Int): Int = {
       var r = x
-      while (parent(r) != r) r = parent(r)
-      var y = x
-      while (y != r) { val up = parent(y); parent(y) = r; y = up }
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
       r
     }
-    pairFrame.select(col("doc_a"), col("doc_b")).collect().foreach { p =>
-      val (x, y) = (toKey(p.get(0)), toKey(p.get(1)))
-      Seq(x, y).foreach(n => if (n != null && !parent.contains(n)) parent(n) = n)
-      if (x != null && y != null) {
+    ends.foreach { case (x, y) =>
+      if (x >= 0 && y >= 0) {
         val (rx, ry) = (root(x), root(y))
-        if (ord.lt(rx, ry)) parent(ry) = rx else if (ord.lt(ry, rx)) parent(rx) = ry
+        if (rx != ry) {
+          if (rank(rx) < rank(ry)) parent(rx) = ry
+          else {
+            parent(ry) = rx
+            if (rank(rx) == rank(ry)) rank(rx) = (rank(rx) + 1).toByte
+          }
+        }
       }
     }
-    val toScala = CatalystTypeConverters.createToScalaConverter(a.dataType)
-    val labels = parent.keys.toSeq.map(n => Row(toScala(n), toScala(root(n))))
+    val least = Array.fill(nodes.size)(-1)
+    nodes.indices.foreach { i =>
+      val r = root(i)
+      if (least(r) < 0 || ord.lt(nodes(i), nodes(least(r)))) least(r) = i
+    }
     // the distributed path's schema: the node keeps the endpoints'
     // nullability, the label is a `min`
-    spark.createDataFrame(labels.asJava, StructType(Seq(
-      StructField("doc_id", a.dataType, a.nullable || b.nullable),
-      StructField("cluster_id", a.dataType, nullable = true))))
+    Held.local(spark, StructType(Seq(
+        StructField("doc_id", a.dataType, a.nullable || b.nullable),
+        StructField("cluster_id", a.dataType, nullable = true))),
+      nodes.indices.map(i => InternalRow(nodes(i), nodes(least(root(i))))))
   }
 
   /** The distributed components path: min-label propagation, the edges
@@ -1376,8 +1487,8 @@ object Dedup {
     * schema. */
   private[graft] def dedupEmbedOn(e: DataFrame, cap: Int): DataFrame =
     if (Seq("vec_id", "label").forall(c =>
-          graft.core.Held.plainKey(e.schema(c).dataType)) &&
-        graft.core.Held.fits(e)) embedHeld(e, cap)
+          Held.plainKey(e.schema(c).dataType)) &&
+        Held.fits(e)) embedHeld(e, cap)
     else embedDistributed(e, cap)
 
   /** The held embedding path. Scale shape: one collect job reads the
@@ -1396,10 +1507,9 @@ object Dedup {
     *  - a null embedding element reads as 0, as in an unsafe array. */
   private def embedHeld(e: DataFrame, cap: Int): DataFrame = {
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.catalyst.CatalystTypeConverters
     import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-    import org.apache.spark.sql.catalyst.util.{SQLOrderingUtil, TypeUtils}
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+    import org.apache.spark.sql.types.DoubleType
     import scala.jdk.CollectionConverters._
     val Seq(idF, labelF, vecF) = Seq("vec_id", "label", "embedding").map(e.schema(_))
     val toId = CatalystTypeConverters.createToCatalystConverter(idF.dataType)

@@ -3075,7 +3075,7 @@ class TxnLogOps(val store: LogStore) {
     val rewrites = rewriteFiles.zipWithIndex.map { case (f, i) =>
       (f, f"${mc.outBase}_u$i%04d", () => {
         val hit = gone(f).map { case (p, ps) =>
-          col("__path") === p && inSet(col("__pos"), ps.toSet) }
+          col("__path") === p && graft.core.Held.in(col("__pos"), ps.toSet) }
           .reduce(_ || _)
         val raw = scanWithDVs(spark, root, st, Seq(f), rowIds = true)
           .where(!hit).drop("__path", "__pos")
@@ -3098,20 +3098,9 @@ class TxnLogOps(val store: LogStore) {
     * values; a composite key probes as a struct. */
   private def keysIn(keyCols: Seq[String],
                      keys: Seq[Seq[Any]]): org.apache.spark.sql.Column =
-    if (keyCols.size == 1) inSet(col(keyCols.head), keys.map(_.head).toSet)
-    else inSet(struct(keyCols.map(col): _*),
+    if (keyCols.size == 1) graft.core.Held.in(col(keyCols.head), keys.map(_.head).toSet)
+    else graft.core.Held.in(struct(keyCols.map(col): _*),
       keys.map(org.apache.spark.sql.catalyst.InternalRow.fromSeq).toSet)
-
-  /** `c` in a set of Catalyst values, as an `InSet`: its generated code
-    * references the set instead of inlining each value as an `In` of
-    * literals does, so a call with new values reuses the compiled class.
-    * Parquet pushdown sees the same `sources.In`. */
-  private def inSet(c: org.apache.spark.sql.Column,
-                    values: Set[Any]): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.graft.StreamingShim
-    StreamingShim.column(org.apache.spark.sql.catalyst.expressions.InSet(
-      StreamingShim.expression(c), values))
-  }
 
   /** Surviving (DV-applied) rows of each of `files`: the log's
     * write-time count less the file's deletion-vector cardinality, and

@@ -47,7 +47,8 @@ object StreamingShim {
   /** DataFrame over an already-ANALYZED logical plan —
     * `Dataset.ofRows` is `private[sql]`; the native-DML rewrite
     * ([[graft.plans.ResolveGraftDml]], r13) needs it to hand a
-    * resolved MERGE source subtree to the engine verb at run time. */
+    * resolved MERGE source subtree to the engine verb at run time, and
+    * [[graft.core.Held.local]] to return a held path's Catalyst rows. */
   def ofRows(spark: org.apache.spark.sql.SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
   : org.apache.spark.sql.DataFrame =

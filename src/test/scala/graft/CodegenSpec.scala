@@ -54,7 +54,7 @@ class CodegenSpec extends AnyFunSuite with SparkSpec with ScratchDirs {
     val held = entriesAdded(ladderPass())
     val distributed = withThreshold(-1L)(entriesAdded(ladderPass()))
     info(s"entries per pass: held rungs $held, distributed rungs $distributed")
-    assert(held <= 66, s"a ladder pass adds $held codegen cache entries")
+    assert(held <= 30, s"a ladder pass adds $held codegen cache entries")
   }
 
   test("a second mergeUpsert with new Long keys compiles no code") {

@@ -193,12 +193,18 @@ class JobCountSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("dedup ladder: candidates collect") {
-    ladder("minhashCandidates collect", 3)(Dedup.minhashCandidates(
+    // held on the driver: the signatures' collect, then no job
+    ladder("minhashCandidates held collect", 1)(Dedup.minhashCandidates(
       Tables.documents(spark, sfDir), "doc_id", "text").collect())
+    withThreshold(-1L)(ladder("minhashCandidates collect", 3)(Dedup.minhashCandidates(
+      Tables.documents(spark, sfDir), "doc_id", "text").collect()))
   }
 
   test("dedup ladder: dedupJaccard collect") {
-    ladder("dedupJaccard collect", 7)(Dedup.dedupJaccard(spark, sfDir).collect())
+    // held: the signatures' collect and the endpoint documents' collect
+    ladder("dedupJaccard held collect", 2)(Dedup.dedupJaccard(spark, sfDir).collect())
+    withThreshold(-1L)(
+      ladder("dedupJaccard collect", 7)(Dedup.dedupJaccard(spark, sfDir).collect()))
   }
 
   test("dedup ladder: connectedComponents on a pair frame and on a path") {
@@ -212,10 +218,11 @@ class JobCountSpec extends AnyFunSuite with SparkSpec {
       "doc_id", "text")
     val path = Seq(17L, 12L, 19L, 11L, 15L, 14L, 20L)
     def pathPairs = path.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("doc_a", "doc_b")
-    // held on the driver: the candidates' own collect, then no job; a
-    // local pair frame collects with none
-    ladder("connectedComponents held on the candidates + collect", 3)(
-      components(candidates))
+    // held on the driver: a held candidate frame and a local pair frame
+    // collect with no job
+    val held = candidates
+    ladder("connectedComponents held on the held candidates + collect", 0)(
+      components(held))
     ladder("connectedComponents held on a 7-node path + collect", 0)(
       components(pathPairs))
     // the distributed fixpoint, auto-broadcast off: its joins shuffle
@@ -239,6 +246,24 @@ class JobCountSpec extends AnyFunSuite with SparkSpec {
     ladder("dedupEmbed held collect", 1)(Dedup.dedupEmbed(spark, sfDir).collect())
     withThreshold(-1L)(
       ladder("dedupEmbed collect", 7)(Dedup.dedupEmbed(spark, sfDir).collect()))
+  }
+
+  test("dedup ladder: one benchmark pass") {
+    // the `llm_dedup` benchmark's pass: a corpus read (its footer
+    // inference is a job), then each rung built and collected
+    def pass(): Unit = {
+      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      val cand = Dedup.minhashCandidates(docs, "doc_id", "text")
+      cand.select(col("doc_a"), col("doc_b")).collect()
+      Dedup.dedupJaccard(spark, sfDir).select(col("doc_a"), col("doc_b"), col("jaccard")).collect()
+      val cc = Dedup.connectedComponents(spark, cand)
+      cc.collect()
+      Caches.unpin(cc)
+      Dedup.dedupApply(spark, sfDir).groupBy(col("kept")).count().collect()
+      Dedup.dedupEmbed(spark, sfDir)
+        .select(col("vec_id"), col("nn_id"), col("is_near_dup")).collect()
+    }
+    ladder("a dedup ladder pass", 8)(pass())
   }
 
   test("a two-leaf Compactor.run") {

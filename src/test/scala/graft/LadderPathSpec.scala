@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate, Join}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,16 +9,17 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{Caches, Tables}
 import graft.llm.Dedup
 
-/** The dedup ladder's two rung paths agree: each case runs a rung once
+/** The dedup ladder's rung paths agree: each case runs a rung (the
+  * candidates, the verify, the components, the embedding search) once
   * held on the driver (the default threshold, [[graft.core.Held]]) and
   * once distributed (auto-broadcast off), and both must return the same
   * rows under the same schema. A held result is a local relation; a
-  * distributed one plans a join or reads a checkpoint. */
+  * distributed one plans an aggregate or a join, or reads a checkpoint. */
 class LadderPathSpec extends AnyFunSuite with SparkSpec {
 
   private def held(df: DataFrame): Boolean =
-    df.queryExecution.analyzed.find(p =>
-      p.isInstanceOf[Join] || p.isInstanceOf[LogicalRDD]).isEmpty
+    df.queryExecution.analyzed.find(p => p.isInstanceOf[Join] || p.isInstanceOf[Aggregate] ||
+      p.isInstanceOf[Generate] || p.isInstanceOf[LogicalRDD]).isEmpty
 
   /** Runs `rung` on both paths, requiring the same rows (as strings, so
     * NaN compares equal) and the same schema; returns the rows. */
@@ -34,6 +35,91 @@ class LadderPathSpec extends AnyFunSuite with SparkSpec {
     val distributed = withThreshold(-1L)(run(onDriver = false))
     assert(onDriver == distributed)
     onDriver._1
+  }
+
+  // ---- candidates and verify ----
+
+  private def corpus[K: scala.reflect.runtime.universe.TypeTag](docs: (K, String)*): DataFrame = {
+    import spark.implicits._
+    docs.toDF("doc_id", "text")
+  }
+
+  private def candidates(docs: => DataFrame): Seq[String] =
+    bothPaths(Dedup.candidatePlan(Dedup.signaturesNative(docs, "doc_id", "text")), sorted = false)
+
+  /** The verify rung over the corpus's own candidates (both computed on
+    * the path under test), or over the given pairs. */
+  private def verify(docs: => DataFrame, pairs: => Option[DataFrame] = None): Seq[String] =
+    bothPaths(Dedup.exactJaccard(docs, pairs.getOrElse(
+      Dedup.candidatePlan(Dedup.signaturesNative(docs, "doc_id", "text")))), sorted = false)
+
+  private def words(tag: String, n: Int = 30): String = (0 until n).map(i => s"$tag$i").mkString(" ")
+
+  test("candidates and verify: a bucket of maxBucket members, one of maxBucket + 1") {
+    val full = Dedup.maxBucket
+    def docs = corpus((0 until full).map(i => (1000L + i, words("a"))) ++
+      (0 until full + 1).map(i => (2000L + i, words("b"))): _*)
+    val pairs = candidates(docs)
+    assert(pairs.size == full * (full - 1) / 2)
+    assert(pairs.forall(_.startsWith("[10")))
+    assert(verify(docs).size == full * (full - 1) / 2)
+  }
+
+  test("candidates and verify: duplicated doc_id rows, short docs, pairs with no common trigram") {
+    import spark.implicits._
+    val nearC = words("c").replace("c29", "other")
+    def docs = corpus(3000L -> words("c"), 3000L -> words("c"), 3001L -> words("c"),
+      3000L -> nearC, 3002L -> nearC, 3003L -> words("c", 2), 3004L -> words("c", 2),
+      3005L -> words("c", 3), 3006L -> "", 3007L -> words("d"))
+    val pairs = candidates(docs)
+    assert(pairs.contains("[3000,3001,8]") && pairs.contains("[3000,3002,8]"))
+    // under 3 tokens: a null signature, in no bucket
+    assert(!pairs.exists(p => Seq("3003", "3004", "3006").exists(p.contains)))
+    // 3000's set is the union of its rows': c's 28 grams and nearC's one more
+    assert(verify(docs).exists(_.startsWith("[3000,3001,8,28,29,28,")))
+    // absent docs, short docs and disjoint sets verify to nothing
+    def given = Seq(1L -> 2L, 3003L -> 3004L, 3005L -> 3007L, 3000L -> 3007L,
+      3000L -> 9999L, 3001L -> 3005L).toDF("doc_a", "doc_b")
+    assert(verify(docs, Some(given)) == Seq("[3001,3005,1,28,1,0.03571428571428571]"))
+  }
+
+  test("candidates and verify: an empty corpus") {
+    def docs = corpus[Long]()
+    assert(candidates(docs).isEmpty)
+    assert(verify(docs).isEmpty)
+  }
+
+  test("candidates and verify: Int and String ids") {
+    val texts = Seq(words("e"), words("e"), words("e").replace("e7", "x"))
+    def ints = corpus(texts.indices.map(i => (i + 1, texts(i))): _*)
+    assert(candidates(ints).contains("[1,2,8]"))
+    assert(verify(ints).exists(_.startsWith("[1,2,8,28,28,28,1.0]")))
+    // binary order: "B" < "a" < "é"
+    def strs = corpus("a" -> texts(0), "B" -> texts(1), "é" -> texts(2))
+    assert(candidates(strs).contains("[B,a,8]"))
+    assert(verify(strs).exists(_.startsWith("[B,a,8,28,28,28,1.0]")))
+  }
+
+  test("candidates and verify: a DoubleType doc_id stays distributed") {
+    val docs = corpus(1.0 -> words("f"), 2.0 -> words("f"))
+    val cand = Dedup.candidatePlan(Dedup.signaturesNative(docs, "doc_id", "text"))
+    val verified = Dedup.exactJaccard(docs, cand)
+    assert(!held(cand) && !held(verified))
+    assert(verified.collect().map(_.toString).toSeq == Seq("[1.0,2.0,8,28,28,28,1.0]"))
+  }
+
+  test("candidates and verify: the fixture corpus, n_agree and jaccard bit for bit") {
+    def docs = Tables.documents(spark, sfDir)
+    assert(candidates(docs).nonEmpty)
+    assert(verify(docs).nonEmpty)
+    assert(bothPaths(Dedup.dedupJaccard(spark, sfDir), sorted = true).nonEmpty)
+    assert(bothPaths(Dedup.dedupJaccardEst(spark, sfDir), sorted = true).nonEmpty)
+    // the rows compare as strings above; here each jaccard's raw bits
+    def bits = Dedup.exactJaccard(docs,
+        Dedup.candidatePlan(Dedup.signaturesNative(docs, "doc_id", "text")))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(6)))).toSeq.sorted
+    assert(bits == withThreshold(-1L)(bits))
   }
 
   // ---- connected components ----

@@ -238,22 +238,28 @@ class LlmSpec extends AnyFunSuite with SparkSpec {
     // The fixture's planted near-dups sit well above the boundary, so
     // the measured loss must be zero — if corpus geometry ever drifts
     // toward the boundary, this fails loudly instead of silently.
+    // Measured on both verify paths: held on the driver (the default
+    // threshold) and distributed (auto-broadcast off).
     import org.apache.spark.sql.functions._
-    val docs = graft.core.Tables.documents(spark, sfDir)
-    val cand = Dedup.minhashCandidates(docs, "doc_id", "text").cache()
-    // the SAME verify rung the production query uses (Dedup.exactJaccard),
-    // fed every candidate instead of the pruned set
-    val unpruned = Dedup.exactJaccard(docs, cand)
-      .where(col("jaccard") >= 0.5)
-      .select(col("doc_a"), col("doc_b"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val pruned = Dedup.dedupJaccard(spark, sfDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    graft.core.Caches.drain(spark)
-    info(s"unpruned reportable pairs: ${unpruned.size}, after prune: ${pruned.size}")
-    assert(unpruned.nonEmpty)
-    assert(pruned == unpruned,
-      s"prune lost ${(unpruned -- pruned).size} reportable pairs")
+    def measure(path: String): Unit = {
+      val docs = graft.core.Tables.documents(spark, sfDir)
+      val cand = Dedup.minhashCandidates(docs, "doc_id", "text").cache()
+      // the SAME verify rung the production query uses (Dedup.exactJaccard),
+      // fed every candidate instead of the pruned set
+      val unpruned = Dedup.exactJaccard(docs, cand)
+        .where(col("jaccard") >= 0.5)
+        .select(col("doc_a"), col("doc_b"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val pruned = Dedup.dedupJaccard(spark, sfDir)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      graft.core.Caches.drain(spark)
+      info(s"$path: unpruned reportable pairs: ${unpruned.size}, after prune: ${pruned.size}")
+      assert(unpruned.nonEmpty)
+      assert(pruned == unpruned,
+        s"$path: prune lost ${(unpruned -- pruned).size} reportable pairs")
+    }
+    measure("held")
+    withThreshold(-1L)(measure("distributed"))
   }
 
   /** Driver-side reference of the verify rung's per-document trigram

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,10 +13,30 @@ import graft.llm.Dedup
   * swap in the kernel without touching any oracle SQL. */
 class MinHashSpec extends AnyFunSuite with SparkSpec {
 
+  /** The composable reference: signature columns h0..h7 from (doc_id, g)
+    * trigram rows, two md5 digests per trigram, each split into four
+    * 8-hex (32-bit) chunks, min per document — the algebra the oracle's
+    * `signaturesSql` spells out. */
+  private def signatures(tg: DataFrame): DataFrame =
+    tg.select(col("doc_id"), md5(col("g")).as("m1"), md5(concat(lit("x:"), col("g"))).as("m2"))
+      .groupBy(col("doc_id"))
+      .agg(min(substring(col("m1"), 1, 8)).as("h0"),
+        ((1 until 4).map(s => min(substring(col("m1"), 8 * s + 1, 8)).as(s"h$s")) ++
+          (0 until 4).map(s => min(substring(col("m2"), 8 * s + 1, 8)).as(s"h${4 + s}"))): _*)
+
+  /** (doc_id, b, v) rows of the reference signatures: 4 bands of 2. */
+  private def bands(sig: DataFrame): DataFrame =
+    sig.select(col("doc_id"), explode(array((0 until 4).map(b => struct(lit(b).as("b"),
+        concat(col(s"h${2 * b}"), col(s"h${2 * b + 1}")).as("v"))): _*)).as("band"))
+      .select(col("doc_id"), col("band.b").as("b"), col("band.v").as("v"))
+
+  /** The reference band frame of an (doc_id, text) frame. */
+  private def composableBands(docs: DataFrame): DataFrame =
+    bands(signatures(Dedup.trigramsOf(docs, "doc_id", "text", dedupe = false)))
+
   test("native kernel band frame equals the composable pipeline's") {
     val docs = Tables.documents(spark, sfDir)
-    val composable = Dedup
-      .bands(Dedup.signatures(Dedup.trigramsOf(docs, "doc_id", "text", dedupe = false)))
+    val composable = composableBands(docs)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
     val native = Dedup.bandsOfSigs(Dedup.signaturesNative(docs, "doc_id", "text"))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
@@ -31,8 +52,7 @@ class MinHashSpec extends AnyFunSuite with SparkSpec {
       (3L, "a  b c"),                // empty token kept by split semantics
       (4L, "UPPER case NORMALIZED lower")
     ).toDF("doc_id", "text")
-    val composable = Dedup
-      .bands(Dedup.signatures(Dedup.trigramsOf(docs, "doc_id", "text", dedupe = false)))
+    val composable = composableBands(docs)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
     val native = Dedup.bandsOfSigs(Dedup.signaturesNative(docs, "doc_id", "text"))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
@@ -63,12 +83,11 @@ class MinHashSpec extends AnyFunSuite with SparkSpec {
       val n = rng.nextInt(8) // 0..7 tokens: covers the no-trigram edge
       (i.toLong, (0 until n).map(_ => words(rng.nextInt(words.size))).mkString(" "))
     }.toDF("doc_id", "text")
-    val composableBands = Dedup
-      .bands(Dedup.signatures(Dedup.trigramsOf(docs, "doc_id", "text", dedupe = false)))
+    val refBands = composableBands(docs)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
     val nativeBands = Dedup.bandsOfSigs(Dedup.signaturesNative(docs, "doc_id", "text"))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-    assert(nativeBands == composableBands)
+    assert(nativeBands == refBands)
     val composableFp = Dedup
       .simhashComposableOf(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -16,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * adaptive plan, which prints duplicated exchange subtrees that AQE's
   * exchange reuse dedups at runtime — so a budget is an upper bound on
   * planned shuffles, not a claim of distinct runtime shuffles
-  * (llm_dedup_band_recall plans 14: its cached gram subtree prints
+  * (llm_dedup_band_recall plans 10: its cached gram subtree prints
   * once per consuming leg, and runtime reuse runs each once). A NEW
   * query must add a row
   * here: the `every query has a budget` test fails otherwise.
@@ -284,22 +284,20 @@ class PlanBudgetSpec extends AnyFunSuite with SparkSpec {
     "llm_dedup_apply" -> 1,
     "llm_dedup_cluster_stats" -> 2,
     "llm_dedup_clusters" -> 1,
-    // same candidate plan (bucket groupBy + distinct) and verify kernel
-    // (broadcast endpoints, one pair groupBy) as llm_dedup_jaccard
-    "llm_dedup_containment" -> 4,
-    // shared verify kernel + ≤10-row cumulative window
-    "llm_dedup_threshold_hist" -> 5,
-    // one candidate plan carries n_agree through the verify kernel,
-    // so both rungs read one pass
-    "llm_dedup_rung_agreement" -> 5,
-    // sample-scoped gram inverted index + size joins + candidate plan
-    // + four 1-row count frames crossJoined (allowed bnl); the cached
-    // gram subtree prints per consuming leg; the shared candidate plan
-    // is partitioned on (doc_a, doc_b, n_agree), so the hit semi-join
-    // re-keys it on the pair
-    "llm_dedup_band_recall" -> 14,
-    // band candidates + two broadcast prefix joins + sort
-    "llm_dedup_edit_distance" -> 3,
+    // the candidates and the verify are held on the driver at spec
+    // scale (graft.core.Held): a local relation, already in pair order
+    // (distributed: bucket groupBy + distinct + pair groupBy + sort)
+    "llm_dedup_containment" -> 0,
+    // held verify rows + band aggregate + ≤10-row cumulative window
+    "llm_dedup_threshold_hist" -> 2,
+    // held verify rows carry n_agree: the 2×2 aggregate + sort
+    "llm_dedup_rung_agreement" -> 2,
+    // sample-scoped gram inverted index + size joins + the held
+    // candidates + four 1-row count frames crossJoined (allowed bnl);
+    // the cached gram subtree prints per consuming leg
+    "llm_dedup_band_recall" -> 10,
+    // held candidates + two broadcast prefix joins + sort
+    "llm_dedup_edit_distance" -> 1,
     "llm_curriculum" -> 2,
     // the embeddings fit the broadcast threshold, so the rung is held
     // on the driver and plans a local relation; the distributed path
@@ -318,16 +316,20 @@ class PlanBudgetSpec extends AnyFunSuite with SparkSpec {
     // initial plan; runtime reuses the one exchange
     "llm_dedup_codebook_log" -> 8,
     "llm_dedup_exact" -> 2,
-    "llm_dedup_fuzzy" -> 3,
-    // candidate plan 2, verify kernel 1, output sort 1
-    "llm_dedup_jaccard" -> 4,
-    "llm_dedup_jaccard_est" -> 3,
+    // held candidates: a local relation in pair order (distributed:
+    // bucket groupBy + distinct + sort)
+    "llm_dedup_fuzzy" -> 0,
+    // held candidates and verify (distributed: candidate plan 2,
+    // verify kernel 1, output sort 1)
+    "llm_dedup_jaccard" -> 0,
+    "llm_dedup_jaccard_est" -> 0,
     "llm_dedup_simhash" -> 1,
     // r6 fingerprint-collapse rewrite: the cached fp/groups subtrees
     // print once per consuming leg (3×/4×) in the initial plan; runtime
     // materializes each once
     "llm_dedup_simhash_nn" -> 20,
-    "llm_doc_overlap" -> 4,
+    // held candidates + source joins + pair-source aggregate + sort
+    "llm_doc_overlap" -> 2,
     "llm_embed_cluster" -> 3,
     "llm_embed_outliers" -> 5,
     "llm_embed_quantize" -> 1,
@@ -336,12 +338,13 @@ class PlanBudgetSpec extends AnyFunSuite with SparkSpec {
     // broadcast 10-query probe + per-query rank + sort
     "llm_hard_negatives" -> 2,
     "llm_fingerprint" -> 1,
-    "llm_incremental_dedup" -> 8,
+    // digest semi-join + held candidates + verdict joins + sort
+    "llm_incremental_dedup" -> 4,
     // same band/digest machinery, increment membership via CDF-id
     // joins instead of mod filters — measured equal to the twin
-    "llm_dedup_cdf" -> 8,
-    // index read + batch sigs + bucket groupBy + verdict joins
-    "llm_dedup_index" -> 8,
+    "llm_dedup_cdf" -> 4,
+    // index read + batch sigs, held candidates + verdict joins
+    "llm_dedup_index" -> 4,
     "llm_lang_id" -> 1,
     // projection + ≤|langs|² cell agg + per-actual window + sort
     "llm_lang_confusion" -> 3,
