@@ -839,12 +839,13 @@ class TxnLogOps(val store: LogStore) {
       enforcedCons = Some(cons))
   }
 
-  /** Stage `df` as ONE new data dir under `root` with a fully
-    * DISTRIBUTED parquet write (a SQL INSERT can be any size — no
-    * `coalesce(1)` here; small-file hygiene is OPTIMIZE's job, the
-    * posture every table format takes for its write path), whose one
-    * job also observes the bounds the add publishes as skipping
-    * metadata ([[writeObserved]]). Columns getting
+  /** Stage `df` as ONE new data dir under `root` ([[writeObserved]]):
+    * a broadcast-sized frame is held and written as one file on the
+    * driver; a larger one takes a fully DISTRIBUTED parquet write (a
+    * SQL INSERT can be any size — no `coalesce(1)` here; small-file
+    * hygiene is OPTIMIZE's job, the posture every table format takes
+    * for its write path), whose one job also observes the bounds the
+    * add publishes as skipping metadata. Columns getting
     * stats = `statsCols` ∪ the columns the table's live files
     * already track ∪ (by default) every top-level atomic column —
     * a fresh catalog table must earn pruning from its FIRST insert,
@@ -857,8 +858,9 @@ class TxnLogOps(val store: LogStore) {
     * r13 (VERDICT r12 #2): CHECK constraints are FUSED into the
     * staging write as a fail-fast guard ([[checkGuard]]) instead of a
     * separate validation pass — a checked INSERT reads its input
-    * ONCE. A violating row aborts the write mid-job; the partial
-    * staging dir is deleted and the failure surfaces as the same
+    * ONCE. A violating row aborts the write (mid-job, or in a held
+    * write's collect before any byte lands); the partial staging dir
+    * is deleted and the failure surfaces as the same
     * `IllegalArgumentException` naming the constraint that the
     * two-pass enforcement threw, BEFORE any commit — the
     * refuse-before-commit semantics are unchanged, only the second
@@ -928,8 +930,10 @@ class TxnLogOps(val store: LogStore) {
     * empty frame is a NO-OP returning −1. Returns the committed
     * version.
     *
-    * Scale shape: the data write is `df`'s own distributed plan, and
-    * its one job also yields the row count and bounds; the commit is
+    * Scale shape: a broadcast-sized `df` is written on the driver with
+    * no write job (none at all for a local frame); a larger one is
+    * written by its own distributed plan, whose one job also yields the
+    * row count and bounds ([[writeObserved]]); the commit is
     * one conditional-put log line. */
   def writeAppend(spark: SparkSession, root: String, df: DataFrame,
                   session: String, tag: String,
@@ -2541,13 +2545,20 @@ class TxnLogOps(val store: LogStore) {
       adds.map(_._1), session, maxAttempts, readDvs = st.dvs)
   }
 
-  /** Write `df` as the parquet data dir `root/out` (one `coalesce(1)`
-    * task unless `narrow = false`), replacing a crashed earlier attempt
-    * and deleting its own output on failure (a [[checkGuard]] abort
-    * surfaces as the constraint's refusal). Returns the row count and
-    * `cols`' bounds ([[statsFor]]'s rendering) observed on the write
-    * job's result stage, whose accumulators count each partition once.
-    * An all-null column, a zero-row write, a rendering [[FileStats]]
+  /** Write `df` as the parquet data dir `root/out`, replacing a crashed
+    * earlier attempt and deleting its own output on failure (a
+    * [[checkGuard]] abort surfaces as the constraint's refusal). A frame
+    * that [[graft.core.Held.fits]] is HELD: its rows are collected (no
+    * job for a local relation, one otherwise) and written as one file on
+    * the driver, which computes the row count and bounds from the same
+    * rows ([[graft.core.Held.write]]), so a violating row refuses the
+    * write before any byte lands. A larger frame, or any frame when the
+    * session sets `spark.sql.files.maxRecordsPerFile`, is written by a
+    * write job (one `coalesce(1)` task unless `narrow = false`) that
+    * observes the count and `cols`' bounds ([[statsFor]]'s rendering)
+    * on its result stage, whose accumulators count each partition once.
+    * Both paths give the same rows, footer schema and log entry. An
+    * all-null column, a zero-row write, a rendering [[FileStats]]
     * rejects or a column `df` does not carry (the table dropped or
     * renamed it since the input's bounds were logged) publishes no
     * bound: absence only costs a scan. */
@@ -2555,27 +2566,35 @@ class TxnLogOps(val store: LogStore) {
                             statsCols: Seq[String], narrow: Boolean = true)
   : (Long, Seq[FileStats]) = {
     val cols = statsCols.filter(df.columns.contains)
-    val obs = org.apache.spark.sql.Observation()
-    val aggs = cols.zipWithIndex.flatMap { case (c, i) =>
-      Seq(min(col(c)).cast("string").as(s"min$i"),
-        max(col(c)).cast("string").as(s"max$i"))
-    } :+ count(lit(1)).as("rows")
-    val observed = df.observe(obs, aggs.head, aggs.tail: _*)
     val sc = df.sparkSession.sparkContext
     val tag = s"graft-write-${java.util.UUID.randomUUID}"
     store.deleteDataDir(root, out) // crashed earlier attempt
     sc.addJobTag(tag)
-    try (if (narrow) observed.coalesce(1) else observed)
-      .write.mode("overwrite").parquet(s"$root/$out")
-    catch { case t: Throwable =>
-      awaitTasks(sc, tag)
-      store.deleteDataDir(root, out)
-      throw unwrapCheckViolation(t).getOrElse(t)
-    } finally sc.removeJobTag(tag)
-    val r = obs.get
-    val n = r("rows").asInstanceOf[Long]
+    val (n, bounds) =
+      try {
+        if (df.sparkSession.sessionState.conf.maxRecordsPerFile <= 0 &&
+            graft.core.Held.fits(df))
+          graft.core.Held.write(df, s"$root/$out", cols)
+        else {
+          val obs = org.apache.spark.sql.Observation()
+          val aggs = cols.zipWithIndex.flatMap { case (c, i) =>
+            Seq(min(col(c)).cast("string").as(s"min$i"),
+              max(col(c)).cast("string").as(s"max$i"))
+          } :+ count(lit(1)).as("rows")
+          val observed = df.observe(obs, aggs.head, aggs.tail: _*)
+          (if (narrow) observed.coalesce(1) else observed)
+            .write.mode("overwrite").parquet(s"$root/$out")
+          val r = obs.get
+          (r("rows").asInstanceOf[Long], cols.indices.map(i =>
+            (r(s"min$i").asInstanceOf[String], r(s"max$i").asInstanceOf[String])))
+        }
+      } catch { case t: Throwable =>
+        awaitTasks(sc, tag)
+        store.deleteDataDir(root, out)
+        throw unwrapCheckViolation(t).getOrElse(t)
+      } finally sc.removeJobTag(tag)
     (n, cols.indices.flatMap { i =>
-      (r(s"min$i"), r(s"max$i")) match {
+      bounds(i) match {
         case (lo: String, hi: String) if n > 0L =>
           scala.util.Try(FileStats(cols(i), lo, hi, n)).toOption
         case _ => None
@@ -2671,9 +2690,11 @@ class TxnLogOps(val store: LogStore) {
     *    computed on the driver, and each rewrite drops its fired rows
     *    by row identity. Scale shape: driver memory is bounded by the
     *    threshold (what a broadcast would hold) plus the matched rows;
-    *    Spark jobs are 1 (probe) + touched files + 1 (inserts, when
-    *    any), plus the source's own collect when it is not local and
-    *    a broadcast job when a candidate carries a deletion vector.
+    *    Spark jobs are 1 (probe) + one collect per touched file (its
+    *    rewrite is a held write, [[writeObserved]]; the local insert
+    *    rows need none), plus the source's own collect when it is not
+    *    local and a broadcast job when a candidate carries a deletion
+    *    vector.
     *  - above it, the DISTRIBUTED ladder: the source is cached, a
     *    bounds job counts and bounds it, the probe is a join (broadcast
     *    under [[maybeBroadcast]]'s row estimate, shuffled above it)
@@ -2746,15 +2767,21 @@ class TxnLogOps(val store: LogStore) {
         // rewrite projection would otherwise silently drop its values
         // (the same contract every append-shaped writer enforces via
         // resolveWriteSchema)
-        schemaAt(root, base).foreach { table =>
-          val extra = source0.columns
-            .filterNot(c => table.fieldNames.contains(c))
-          require(extra.isEmpty,
-            s"merge source adds columns ${extra.mkString(",")} — pass " +
-              "evolveSchema=true (SQL: WITH SCHEMA EVOLUTION) to widen " +
-              "the table")
+        schemaAt(root, base) match {
+          case Some(table) =>
+            val extra = source0.columns
+              .filterNot(c => table.fieldNames.contains(c))
+            require(extra.isEmpty,
+              s"merge source adds columns ${extra.mkString(",")} — pass " +
+                "evolveSchema=true (SQL: WITH SCHEMA EVOLUTION) to widen " +
+                "the table")
+            None
+          // a schema-less table (an update sink's first batch creates
+          // its table here) publishes the source's schema, as an append
+          // does, so later reads need no footer inference
+          case None =>
+            resolveWriteSchema(root, base, source0.schema, evolve = false)
         }
-        None
       }
     val evolveResolve: Option[Int => Option[String]] =
       if (evolveSchema)
@@ -2933,7 +2960,8 @@ class TxnLogOps(val store: LogStore) {
   /** The upsert ladder on a source held on the driver
     * ([[holdsOnDriver]]): the same clause algebra, owner rule and
     * per-file cheapest action as [[mergeClausesPinned]], in one probe
-    * job plus one wave of write jobs.
+    * job plus one wave of writes (held ones, [[writeObserved]], when
+    * each rewrite fits).
     *
     *  1. The source is collected once. Its rows give the row count,
     *     the duplicate-key refusal (a key tuple with a null part is no
@@ -3132,7 +3160,7 @@ class TxnLogOps(val store: LogStore) {
   /** The tail every MERGE path shares: write each touched file's
     * rewrite (`rewrites`: file, output dir, its rows — pruning metadata
     * survives through [[writeRewrite]]) and the insert file as ONE wave
-    * of concurrent jobs ([[inPool]]), then commit a remove for each
+    * of concurrent writes ([[inPool]], [[writeObserved]]), then commit a remove for each
     * rewritten and each `pure` file plus the adds through
     * [[commitRewrite]]. The insert
     * file publishes bounds for every column the table's live files
@@ -3399,10 +3427,12 @@ class TxnLogOps(val store: LogStore) {
     * and then each file takes the CHEAPEST correct action — untouched
     * when it holds no match, PURE REMOVE (a metadata-only action, no
     * data I/O at all) when every row matches, and a narrow one-task
-    * rewrite keeping only survivors otherwise. Commit is remove+add
-    * through the conflict checker (appends commute; a removed touched
-    * file aborts). Returns the committed version, None when no row
-    * matched or on conflict. */
+    * rewrite keeping only survivors otherwise. Broadcast-sized
+    * candidates are held on the driver ([[deleteCore]]): the delete is
+    * then one collect job, and its bounds never reach generated code.
+    * Commit is remove+add through the conflict checker (appends
+    * commute; a removed touched file aborts). Returns the committed
+    * version, None when no row matched or on conflict. */
   def deleteRange(spark: SparkSession, root: String, colName: String,
                   lo: String, hi: String, session: String,
                   beforeCommit: () => Unit = () => (),
@@ -3496,7 +3526,16 @@ class TxnLogOps(val store: LogStore) {
   /** The shared copy-on-write DELETE body: census + cheapest-action
     * ladder + conflict-aware commit, parameterized by the delete
     * predicate (built against the candidates' merged scan, so typed
-    * bounds can resolve their column's type first). */
+    * bounds can resolve their column's type first).
+    *
+    * When the candidate scan [[graft.core.Held.fits]], it is HELD: one
+    * collect job returns the candidate rows with their `__file`, the
+    * predicate is a projection over a local relation of those rows
+    * (evaluated on the driver: no job, and the bounds never reach
+    * generated code), and each partial file's survivors are a local
+    * relation that [[writeObserved]] writes on the driver. Larger scans
+    * run the census as one aggregate job and each rewrite as its own
+    * scan and write job. Both give the same census, rows and entries. */
   private def deleteCore(spark: SparkSession, root: String, base: Int,
                          st: State, candidates: Seq[String],
                          mkPred: DataFrame => org.apache.spark.sql.Column,
@@ -3518,13 +3557,31 @@ class TxnLogOps(val store: LogStore) {
     // destroying every null-keyed row in a partially-matching file
     // (ADVICE r10 high). The null-safe complement keeps them.
     val pred = coalesce(mkPred(scan), lit(false))
-    val census = scan.select(col("__file"), pred.as("__hit"))
-      .groupBy(col("__file"))
-      .agg(count(when(col("__hit"), 1)).as("hits"),
-        count(lit(1)).as("total"))
-      .where(col("hits") > 0)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1).toSeq
+    // held: each candidate file's rows, in scan order, with hit flags
+    val held: Option[Map[String,
+        Seq[(org.apache.spark.sql.catalyst.InternalRow, Boolean)]]] =
+      if (!graft.core.Held.fits(scan)) None
+      else {
+        val rows = graft.core.Held.rows(scan).toSeq
+        val hits = graft.core.Held.local(spark, scan.schema, rows)
+          .select(pred).collect().map(_.getBoolean(0))
+        val fileAt = scan.schema.fieldIndex("__file")
+        Some(rows.zip(hits).groupBy(_._1.getUTF8String(fileAt).toString))
+      }
+    val census: Seq[(String, Long, Long)] = held match {
+      case Some(byFile) =>
+        byFile.toSeq.map { case (f, rs) =>
+          (f, rs.count(_._2).toLong, rs.size.toLong) }
+          .filter(_._2 > 0).sortBy(_._1)
+      case None =>
+        scan.select(col("__file"), pred.as("__hit"))
+          .groupBy(col("__file"))
+          .agg(count(when(col("__hit"), 1)).as("hits"),
+            count(lit(1)).as("total"))
+          .where(col("hits") > 0)
+          .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+          .sortBy(_._1).toSeq
+    }
     if (census.isEmpty) return None // nothing matches: no-op
     val outBase = f"d${base + 1}%08d" + s"_$session"
     val touched = census.map(_._1)
@@ -3544,8 +3601,13 @@ class TxnLogOps(val store: LogStore) {
             val fileDf = scanWithDVs(spark, root, st, Seq(f))
             // survivors re-select the FILE's columns: a subquery prep
             // may have attached membership columns for the predicate
-            val (_, stats) = writeObserved(prep(fileDf).where(!pred)
-                .select(fileDf.columns.toSeq.map(col): _*), root, out,
+            val survivors = held match {
+              case Some(byFile) => graft.core.Held.local(spark, scan.schema,
+                byFile(f).collect { case (r, false) => r })
+              case None => prep(fileDf).where(!pred)
+            }
+            val (_, stats) = writeObserved(
+              survivors.select(fileDf.columns.toSeq.map(col): _*), root, out,
               st.stats.getOrElse(f, Seq.empty).map(_.col))
             out -> addOf(out, st.parts.getOrElse(f, Seq.empty), stats)
           }

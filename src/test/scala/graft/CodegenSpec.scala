@@ -57,12 +57,13 @@ class CodegenSpec extends AnyFunSuite with SparkSpec with ScratchDirs {
     assert(held <= 30, s"a ladder pass adds $held codegen cache entries")
   }
 
+  private def rows(keys: Seq[Long]): DataFrame = {
+    import spark.implicits._
+    keys.map(k => (k, k * 10L, s"p$k")).toDF("k", "v", "s")
+  }
+
   test("a second mergeUpsert with new Long keys compiles no code") {
     val root = scratchDir("graft_codegen_")
-    def rows(keys: Seq[Long]): DataFrame = {
-      import spark.implicits._
-      keys.map(k => (k, k * 10L, s"p$k")).toDF("k", "v", "s")
-    }
     TxnLog.writeAppend(spark, root, rows(0L until 40L).coalesce(1), "s", "t0")
     assert(TxnLog.mergeUpsert(spark, root, rows(15L until 45L), "k", "m1").nonEmpty)
     val before = CodeGenerator.compileTime
@@ -70,5 +71,15 @@ class CodegenSpec extends AnyFunSuite with SparkSpec with ScratchDirs {
       "k", "m2").nonEmpty)
     assert(CodeGenerator.compileTime == before,
       s"the second merge compiled for ${(CodeGenerator.compileTime - before) / 1e6} ms")
+  }
+
+  test("a second deleteRange with new bounds compiles no code") {
+    val root = scratchDir("graft_codegen_")
+    TxnLog.writeAppend(spark, root, rows(0L until 200L).coalesce(1), "s", "t0")
+    assert(TxnLog.deleteRange(spark, root, "k", "10", "19", "d1").nonEmpty)
+    val before = CodeGenerator.compileTime
+    assert(TxnLog.deleteRange(spark, root, "k", "42", "57", "d2").nonEmpty)
+    assert(CodeGenerator.compileTime == before,
+      s"the second delete compiled for ${(CodeGenerator.compileTime - before) / 1e6} ms")
   }
 }

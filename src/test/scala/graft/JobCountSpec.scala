@@ -16,11 +16,12 @@ import graft.llm.Dedup
 import graft.sources.TxnLog
 
 /** Spark jobs per txn-log op and per dedup-ladder rung on the warm test
-  * session, pinned. A write takes its row count and bounds from its own
-  * job, so an op must not grow back a read of what it just wrote; a
-  * read builds its frame under the log's (or the footer's) schema, so
-  * it must not grow back a footer-inference job; a ladder rung must not
-  * grow back a cache, a pinned seed or a separate convergence count.
+  * session, pinned. A write takes its row count and bounds from the rows
+  * it writes (held on the driver, or observed on its write job), so an
+  * op must not grow back a read of what it just wrote; a read builds
+  * its frame under the log's (or the footer's) schema, so it must not
+  * grow back a footer-inference job; a ladder rung must not grow back a
+  * cache, a pinned seed or a separate convergence count.
   * Like [[PlanBudgetSpec]], a pin may only be tightened: re-measure
   * with this spec's failure message and lower the number. */
 class JobCountSpec extends AnyFunSuite with SparkSpec {
@@ -75,26 +76,35 @@ class JobCountSpec extends AnyFunSuite with SparkSpec {
       TxnLog.writeAppend(spark, root, rows(i * 20L, i * 20L + 20L)
         .coalesce(1), "s", s"t$i")
 
-  test("a 10-row writeAppend runs one job") {
+  test("a 10-row writeAppend runs no job") {
+    // held: a local frame is written on the driver; auto-broadcast off,
+    // the write job
     withScratch { root =>
       table(root, 1)
-      assertJobs("writeAppend", 1)(
+      assertJobs("writeAppend", 0)(
         assert(TxnLog.writeAppend(spark, root, rows(100, 110), "s", "a") == 2))
+      withThreshold(-1L)(assertJobs("writeAppend, auto-broadcast off", 1)(
+        assert(TxnLog.writeAppend(spark, root, rows(110, 120), "s", "b") == 3)))
     }
   }
 
   test("a one-file deleteRange") {
+    // held: the candidate rows' collect; auto-broadcast off, the census
+    // aggregate and the rewrite's write job
     withScratch { root =>
       table(root, 1)
-      assertJobs("deleteRange", 3)(
+      assertJobs("deleteRange", 1)(
         assert(TxnLog.deleteRange(spark, root, "k", "3", "6", "d").nonEmpty))
+      withThreshold(-1L)(assertJobs("deleteRange, auto-broadcast off", 3)(
+        assert(TxnLog.deleteRange(spark, root, "k", "8", "9", "d").nonEmpty)))
     }
   }
 
   test("a one-file mergeUpsert") {
+    // the probe and the rewrite's collect; the inserts are local
     withScratch { root =>
       table(root, 1)
-      assertJobs("mergeUpsert", 3)(
+      assertJobs("mergeUpsert", 2)(
         assert(TxnLog.mergeUpsert(spark, root, rows(15, 25), "k", "m")
           .nonEmpty))
     }
@@ -148,7 +158,7 @@ class JobCountSpec extends AnyFunSuite with SparkSpec {
       try {
         q.processAllAvailable()
         feed(15L until 25L)
-        assertJobs("update-mode pass, file source", 6)(q.processAllAvailable())
+        assertJobs("update-mode pass, file source", 4)(q.processAllAvailable())
       } finally q.stop()
       assert(TxnLog.read(spark, s"$root/t").count() == 25)
     }

@@ -224,4 +224,39 @@ class ReaderSpec extends AnyFunSuite with SparkSpec with ScratchDirs {
       "the reader retyped the log's column")
     intercept[Exception](df.collect())
   }
+
+  test("an update-mode sink's first batch publishes the table schema, so " +
+    "later reads infer nothing") {
+    import spark.implicits._
+    val dir = scratchDir("graft_reader_stream_")
+    def pass(ks: Long*): Unit = {
+      ks.toDF("k").coalesce(1).write.mode("append").parquet(s"$dir/in")
+      spark.readStream.schema("k LONG").parquet(s"$dir/in")
+        .groupBy(col("k")).agg(count(lit(1)).as("n"))
+        .writeStream.format("graft-txnlog").option("path", s"$dir/t")
+        .option("appId", "agg").option("mergeKey", "k")
+        .option("checkpointLocation", s"$dir/ck").outputMode("update")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
+    }
+    pass(1L, 2L, 2L)
+    assert(TxnLog.schemaAt(s"$dir/t", TxnLog.latestVersion(s"$dir/t")).nonEmpty)
+    pass(2L, 3L)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.sql.graft.StreamingShim.drainListenerBus(spark.sparkContext, 60000L)
+    spark.sparkContext.addSparkListener(listener)
+    val got = try TxnLog.read(spark, s"$dir/t") finally {
+      org.apache.spark.sql.graft.StreamingShim.drainListenerBus(spark.sparkContext, 60000L)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.get == 0, s"building the read ran ${jobs.get} Spark jobs")
+    assertSame("update sink", got,
+      mergeSchemaRead(s"$dir/t", TxnLog.latestVersion(s"$dir/t")))
+    assert(rowsOf(got) == Seq("[1,1]", "[2,3]", "[3,1]"))
+  }
 }

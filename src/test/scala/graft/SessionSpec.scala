@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Keeps [[graft.core.Session]] the one way `src/main` builds a session,
   * keeps operators from registering extensions themselves, keeps the
   * one release rule: operators pin and unpin through [[graft.core.Caches]],
-  * and only the harness mains sweep the session, and keeps txn-log data
-  * read under the log's own schema. */
+  * and only the harness mains sweep the session, keeps txn-log data
+  * read under the log's own schema, and keeps [[graft.core.Held]] the
+  * one writer of parquet files outside a write job. */
 class SessionSpec extends AnyFunSuite {
 
   private val main = Paths.get("src/main")
@@ -58,5 +59,11 @@ class SessionSpec extends AnyFunSuite {
     val fallback = lines.indexWhere(_.contains("case None =>"), start)
     assert(infers.size == 1 && fallback < end &&
       infers.head == s"$txnLog:${fallback + 2}", infers)
+  }
+
+  test("only graft.core.Held writes parquet outside a write job") {
+    val writers = hits("prepareWrite") ++ hits("OutputWriterFactory")
+    assert(writers.nonEmpty &&
+      writers.forall(_.startsWith("scala/graft/core/Held.scala:")), writers)
   }
 }

@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.TxnLog
 
-/** Write-time bounds are taken from the write job itself (an observed
-  * min/max/count on the written frame), not read back from the file.
+/** Write-time bounds are taken from the rows being written (computed on
+  * the driver for a held write, observed on the write job otherwise),
+  * not read back from the file.
   * Every txn-log write path must still publish exactly what a
   * [[TxnLog.statsFor]] read-back of the written file computes, for
   * every column type the writers track, and must keep the empty-write
@@ -73,7 +74,8 @@ class WriteStatsSpec extends AnyFunSuite with SparkSpec {
     new File(root).listFiles().filter(_.isDirectory).map(_.getName)
       .toSeq.sorted
 
-  test("every write path publishes the bounds a read-back computes") {
+  /** Each writer in turn on one table, checking [[assertParity]]. */
+  private def everyWritePath(): Unit =
     withScratch { root =>
       def step(what: String, suffixes: String*)(op: => Any): Unit = {
         val before = live(root)
@@ -114,6 +116,15 @@ class WriteStatsSpec extends AnyFunSuite with SparkSpec {
         assert(TxnLog.compact(spark, root, "o").nonEmpty))
       assert(live(root).size == 1)
     }
+
+  test("every write path publishes the bounds a read-back computes") {
+    everyWritePath()
+  }
+
+  test("every write path publishes the bounds a read-back computes, " +
+    "on write jobs") {
+    // auto-broadcast off: no frame is held, every write runs its job
+    withThreshold(-1L)(everyWritePath())
   }
 
   test("partitioned append slices publish the bounds a read-back computes") {
