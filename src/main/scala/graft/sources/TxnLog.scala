@@ -1033,15 +1033,17 @@ class TxnLogOps(val store: LogStore) {
     *    staging scan, one pass) and nothing commits; silently landing
     *    out-of-region rows would turn "replace this slice" into
     *    "corrupt the rest";
-    *  - the delete side is the cheapest-action ladder with exact
-    *    predicates: candidates prune from the log
+    *  - the delete side is DELETE's own plan ([[deletePlan]]) with
+    *    exact predicates: candidates prune from the log
     *    ([[TxnTableRelation.pruneForSt]] — untouched files are
-    *    untouched), full-match files pure-remove (metadata only),
-    *    partial files rewrite keeping `!pred` survivors with their
-    *    pruning metadata recomputed;
+    *    untouched), the shared [[Census]] finds the files holding a
+    *    hit, full-match files pure-remove (metadata only), partial
+    *    files rewrite keeping `!pred` survivors with their pruning
+    *    metadata recomputed;
     *  - CHECK constraints and write-time stats ride the staged append
     *    exactly like [[writeAppend]].
     *
+    * Scale shape: [[writeAppend]]'s staging plus [[deleteCore]]'s.
     * Commit is conflict-aware ([[commitRewrite]]). Same isolation
     * class as every optimistic writer here (WriteSerializable): an
     * append interleaving between census and commit commutes — its
@@ -1055,10 +1057,7 @@ class TxnLogOps(val store: LogStore) {
                         maxAttempts: Int = 5,
                         strictConflict: Boolean = false,
                         beforeCommit: () => Unit = () => ()): Option[Int] = {
-    val cols = filters.map(f => TxnTableRelation.filterColumn(f)
-      .getOrElse(throw new UnsupportedOperationException(
-        s"cannot rebuild filter $f as an exact row predicate")))
-    val pred = cols.reduceOption(_ && _).getOrElse(lit(true))
+    val pred = exactPredicate(filters)
     val base = latestVersion(root)
     val st = stateAt(root, base)
     // ADVICE r13 medium: the staged replacement resolves against the
@@ -1081,31 +1080,10 @@ class TxnLogOps(val store: LogStore) {
       st.constraints, "replaceWhere")
     try {
       val candidates = TxnTableRelation.pruneForSt(st, filters)._1
-      val predSafe = coalesce(pred, lit(false))
-      val census =
-        if (candidates.isEmpty) Seq.empty
-        else scanWithDVs(spark, root, st, candidates,
-            fileCol = Some("__file"))
-          .select(col("__file"), predSafe.as("__hit"))
-          .groupBy(col("__file"))
-          .agg(count(when(col("__hit"), 1)).as("hits"),
-            count(lit(1)).as("total"))
-          .where(col("hits") > 0)
-          .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-          .sortBy(_._1).toSeq
-      val touched = census.map(_._1)
-      val outBase = f"rw${base + 1}%08d" + s"_$session"
-      val rewrites: Seq[(String, Entry)] = inPool(
-        census.filter { case (_, hits, total) => hits < total }
-          .zipWithIndex.map { case ((f, _, _), i) =>
-            () => {
-              val out = f"${outBase}_k$i%04d"
-              val fileDf = scanWithDVs(spark, root, st, Seq(f))
-              val (_, stats) = writeObserved(fileDf.where(!predSafe),
-                root, out, st.stats.getOrElse(f, Seq.empty).map(_.col))
-              out -> addOf(out, st.parts.getOrElse(f, Seq.empty), stats)
-            }
-          })
+      val (touched, rewrites) =
+        if (candidates.isEmpty) (Seq.empty, Seq.empty)
+        else deletePlan(spark, root, st, candidates, _ => pred, identity,
+          f"rw${base + 1}%08d" + s"_$session")
       if (touched.isEmpty && staged.isEmpty)
         return Some(base) // nothing to delete, nothing to add: no-op
       beforeCommit()
@@ -1121,6 +1099,18 @@ class TxnLogOps(val store: LogStore) {
       throw t
     }
   }
+
+  /** The exact row predicate of pushed `filters` (their conjunction;
+    * none is TRUE), rebuilt by [[TxnTableRelation.filterColumn]]; a
+    * filter it cannot rebuild exactly throws — a row-level write never
+    * approximates its region. */
+  private def exactPredicate(
+      filters: Array[org.apache.spark.sql.sources.Filter])
+  : org.apache.spark.sql.Column =
+    filters.map(f => TxnTableRelation.filterColumn(f)
+      .getOrElse(throw new UnsupportedOperationException(
+        s"cannot rebuild filter $f as an exact row predicate")))
+      .reduceOption(_ && _).getOrElse(lit(true))
 
   /** Project `base` to schema `s`'s columns in order, null-padding
     * any column `base` lacks: a frame read under one version's schema
@@ -1254,7 +1244,9 @@ class TxnLogOps(val store: LogStore) {
     * computed from `_metadata.file_path` on the scan side (an
     * `input_file_name()` evaluated after the anti join would not be
     * reliable). `rowIds` keeps each row's identity, the relative leaf
-    * path `__path` and the parquet `__pos`, after the data columns. */
+    * path `__path` and the parquet `__pos`, after the data columns;
+    * over a state with no DVs that is every row with its identity.
+    * This is the one reader of `_metadata.row_index`. */
   private def scanWithDVs(spark: SparkSession, root: String, st: State,
                           files: Seq[String],
                           fileCol: Option[String] = None,
@@ -1867,31 +1859,21 @@ class TxnLogOps(val store: LogStore) {
     }
   }
 
-  /** Physical locations of logged data-dir names at `version`
+  /** Physical locations of logged data-dir names at state `st`
     * (ext-ref-aware) — the resolution seam an EXTERNAL scan planner
     * (the V2 DataSource's parquet delegate) uses to hand Spark's own
     * reader the right paths without knowing the clone mechanics. */
-  def dataLocations(root: String, version: Int, files: Seq[String])
-  : Seq[String] =
-    dataLocationsSt(root, stateAt(root, version), files)
-
-  /** [[dataLocations]] over an already-resolved state. */
   def dataLocationsSt(root: String, st: State, files: Seq[String])
   : Seq[String] =
     files.map(dataPath(root, st, _))
 
-  /** Planner statistics for `files` at `version`, from the log alone:
+  /** Planner statistics for `files` at state `st`, from the log alone:
     * (exact row count when EVERY file published stats — DV-corrected,
     * a vectored file contributes its surviving rows — else None; total
     * bytes). Driver metadata: one stat per file, no data I/O. This is
     * what makes SQL over the table stats-AWARE — join-side broadcast
     * decisions and AQE read these through the V2 scan's
     * reportStatistics seam instead of guessing from file sizes. */
-  def fileFootprint(root: String, version: Int, files: Seq[String])
-  : (Option[Long], Long) =
-    fileFootprintSt(root, stateAt(root, version), files)
-
-  /** [[fileFootprint]] over an already-resolved state. */
   def fileFootprintSt(root: String, st: State, files: Seq[String])
   : (Option[Long], Long) = {
     val rows = files.map { f =>
@@ -1905,15 +1887,10 @@ class TxnLogOps(val store: LogStore) {
       bytes)
   }
 
-  /** True iff a read of `files` at `version` needs the FULL read path
+  /** True iff a read of `files` at state `st` needs the FULL read path
     * (deletion vectors to anti-join, a column mapping to coalesce) —
     * the V2 DataSource's dispatch test between the columnar parquet
     * delegate and the correctness-first V1 fallback. */
-  def needsMergeRead(root: String, version: Int, files: Seq[String])
-  : Boolean =
-    needsMergeReadSt(stateAt(root, version), files)
-
-  /** [[needsMergeRead]] over an already-resolved state. */
   def needsMergeReadSt(st: State, files: Seq[String]): Boolean =
     st.colmap.nonEmpty || files.exists(st.dvs.contains)
 
@@ -2131,14 +2108,14 @@ class TxnLogOps(val store: LogStore) {
   }
 
   /** Run independent rewrite tasks as CONCURRENT Spark jobs on a
-    * bounded driver-side pool — the fan-out [[compact]],
-    * [[mergeUpsert]], [[deleteRange]] and [[commitPartitionedAppend]]
-    * share (VERDICT r10 #1: merge/delete used to pay one serialized
-    * job latency per touched file while compact already pooled its
-    * bins). Each task is one narrow job; Spark's scheduler interleaves
-    * them across executor slots. Results keep `tasks` order. A failed
-    * task's error surfaces only once every task has ended, so the
-    * caller's cleanup never races a write still running. */
+    * bounded driver-side pool — the fan-out every write wave shares
+    * ([[writeWave]], and [[compactZorder]]'s groups; VERDICT r10 #1:
+    * merge/delete used to pay one serialized job latency per touched
+    * file while compact already pooled its bins). Each task is one
+    * narrow job; Spark's scheduler interleaves them across executor
+    * slots. Results keep `tasks` order. A failed task's error surfaces
+    * only once every task has ended, so the caller's cleanup never
+    * races a write still running. */
   private def inPool[T](tasks: Seq[() => T]): Seq[T] =
     if (tasks.size <= 1) tasks.map(_())
     else {
@@ -2156,6 +2133,19 @@ class TxnLogOps(val store: LogStore) {
           java.util.concurrent.TimeUnit.NANOSECONDS)
         ()
       }
+    }
+
+  /** One wave of data-dir writes ([[inPool]]): each task writes the
+    * dir it is paired with. When any task fails, every dir of the wave
+    * is deleted, the finished tasks' included, before the error
+    * surfaces — a failed wave leaves nothing on disk for a vacuum to
+    * find. Results keep `tasks` order. */
+  private def writeWave[T](root: String, tasks: Seq[(String, () => T)])
+  : Seq[T] =
+    try inPool(tasks.map(_._2))
+    catch { case t: Throwable =>
+      tasks.foreach { case (out, _) => store.deleteDataDir(root, out) }
+      throw t
     }
 
   /** Conflict-aware optimistic commit for read-modify-write writers
@@ -2374,7 +2364,7 @@ class TxnLogOps(val store: LogStore) {
         if (bins.size == 1) outName else f"${outName}_p$i%04d")
     }
     val adds: Seq[Entry] =
-      inPool(named.map { case (p, b, n) => () => writeBin(p, b, n) })
+      writeWave(root, named.map { case (p, b, n) => n -> (() => writeBin(p, b, n)) })
     val outs = named.map(_._3)
     beforeCommit()
     // OPTIMIZE moves bytes, never content: the commit carries the
@@ -3160,34 +3150,28 @@ class TxnLogOps(val store: LogStore) {
   /** The tail every MERGE path shares: write each touched file's
     * rewrite (`rewrites`: file, output dir, its rows — pruning metadata
     * survives through [[writeRewrite]]) and the insert file as ONE wave
-    * of concurrent writes ([[inPool]], [[writeObserved]]), then commit a remove for each
+    * of concurrent writes ([[writeWave]], [[writeObserved]]), then commit a remove for each
     * rewritten and each `pure` file plus the adds through
     * [[commitRewrite]]. The insert
     * file publishes bounds for every column the table's live files
     * track (∩ its schema) and no partition tuple (one insert file may
     * span partitions); a zero-row insert leaves no file. A failed write
-    * deletes every output of the wave. Returns None, committing
-    * nothing, when nothing fired and nothing inserts. */
+    * deletes every output of the wave ([[writeWave]]). Returns None,
+    * committing nothing, when nothing fired and nothing inserts. */
   private def writeMergeAndCommit(root: String, st: State, mc: MergeCommit,
       pure: Seq[String], rewrites: Seq[(String, String, () => DataFrame)],
       insert: Option[(String, () => DataFrame)],
       readAllLive: Option[Set[String]] = None): Option[Int] = {
-    val tasks: Seq[() => Option[(String, Entry)]] =
+    val tasks: Seq[(String, () => Option[(String, Entry)])] =
       rewrites.map { case (f, out, rows) =>
-        () => Some(writeRewrite(rows(), root, out, st, f)) } ++
-      insert.map { case (out, rows) => () => {
+        out -> (() => Some(writeRewrite(rows(), root, out, st, f))) } ++
+      insert.map { case (out, rows) => out -> (() => {
         val df = rows()
         val statCols = st.stats.values.flatten.map(_.col).toSeq
           .distinct.sorted.filter(df.columns.contains)
         addOrDrop(root, out, writeObserved(df, root, out, statCols))
-      } }
-    val outs =
-      try inPool(tasks).flatten
-      catch { case t: Throwable =>
-        (rewrites.map(_._2) ++ insert.map(_._1))
-          .foreach(store.deleteDataDir(root, _))
-        throw t
-      }
+      }) }
+    val outs = writeWave(root, tasks).flatten
     if (outs.isEmpty && pure.isEmpty)
       return None // nothing fired, nothing to insert
     mc.beforeCommit()
@@ -3410,11 +3394,7 @@ class TxnLogOps(val store: LogStore) {
     val named = tuples.zipWithIndex.map { case (t, i) =>
       t -> f"${outBase}_t$i%04d" }
     val adds: Seq[Entry] =
-      try inPool(named.map { case (t, n) => () => writeSlice(t, n) })
-      catch { case t: Throwable =>
-        named.foreach { case (_, n) => store.deleteDataDir(root, n) }
-        throw t
-      }
+      writeWave(root, named.map { case (t, n) => n -> (() => writeSlice(t, n)) })
     commitNext(root, adds, session, maxAttempts)
   }
 
@@ -3422,13 +3402,13 @@ class TxnLogOps(val store: LogStore) {
     * remove every row with `colName BETWEEN lo AND hi` (bounds in
     * stats rendering, compared in the column's own type). The planner
     * story is the same ladder as [[mergeUpsert]]: a stats prune drops
-    * files that provably hold no matching row (metadata), one probe
-    * pass over the survivors counts matching vs total rows per file,
-    * and then each file takes the CHEAPEST correct action — untouched
-    * when it holds no match, PURE REMOVE (a metadata-only action, no
-    * data I/O at all) when every row matches, and a narrow one-task
-    * rewrite keeping only survivors otherwise. Broadcast-sized
-    * candidates are held on the driver ([[deleteCore]]): the delete is
+    * files that provably hold no matching row (metadata), one census
+    * pass over the survivors counts matching vs total rows per file
+    * ([[Census]]), and then each file takes the CHEAPEST correct
+    * action — untouched when it holds no match, PURE REMOVE (a
+    * metadata-only action, no data I/O at all) when every row matches,
+    * and a narrow one-task rewrite keeping only survivors otherwise.
+    * Broadcast-sized candidates are held on the driver: the delete is
     * then one collect job, and its bounds never reach generated code.
     * Commit is remove+add through the conflict checker (appends
     * commute; a removed touched file aborts). Returns the committed
@@ -3437,23 +3417,9 @@ class TxnLogOps(val store: LogStore) {
                   lo: String, hi: String, session: String,
                   beforeCommit: () => Unit = () => (),
                   maxAttempts: Int = 5,
-                  strictConflict: Boolean = false): Option[Int] = {
-    val base = latestVersion(root)
-    if (liveFiles(root, base).isEmpty) return None
-    val (candidates, _) =
-      pruneWhere(root, base, Seq.empty, Seq((colName, lo, hi)))
-    if (candidates.isEmpty) return None
-    val st = stateAt(root, base)
-    // the bounds compare in the COLUMN's own type (exact at any
-    // magnitude — no string-vs-numeric promotion)
-    def pred(scan: DataFrame) = {
-      val dt = scan.schema(colName).dataType
-      col(colName).between(lit(lo).cast(dt), lit(hi).cast(dt))
-    }
-    deleteCore(spark, root, base, st, candidates, pred, session,
-      beforeCommit, maxAttempts,
-      conflictWhat = if (strictConflict) Some("DELETE") else None)
-  }
+                  strictConflict: Boolean = false): Option[Int] =
+    deleteInRange(spark, root, colName, lo, hi, session, beforeCommit,
+      maxAttempts, strictConflict, deleteCore)
 
   /** Row-level DELETE with an ARBITRARY SQL predicate (r13 — VERDICT
     * r12 #1: "a real DELETE has OR, IN, inequalities"): the same
@@ -3465,12 +3431,11 @@ class TxnLogOps(val store: LogStore) {
                       predSql: String, session: String,
                       beforeCommit: () => Unit = () => (),
                       maxAttempts: Int = 5,
-                      strictConflict: Boolean = false): Option[Int] = {
+                      strictConflict: Boolean = false): Option[Int] =
     // r14: IN-subqueries materialize ONCE up front; the rewritten
     // predicate's remaining conjuncts still prune from the log
     deleteResolved(spark, root, resolveSubqueries(spark, predSql),
       session, beforeCommit, maxAttempts, strictConflict)
-  }
 
   /** [[deletePredicate]] over a pre-resolved (predicate, prep,
     * cleanup) triple — the native-DML rule's entry for subquery
@@ -3479,26 +3444,15 @@ class TxnLogOps(val store: LogStore) {
       resolved: (String, DataFrame => DataFrame, () => Unit),
       session: String, beforeCommit: () => Unit = () => (),
       maxAttempts: Int = 5, strictConflict: Boolean = false)
-  : Option[Int] = {
-    val base = latestVersion(root)
-    if (liveFiles(root, base).isEmpty) return None
-    val st = stateAt(root, base)
-    val (predSql2, prep, cleanup) = resolved
-    try {
-      val candidates = pruneForPredicateSt(spark, st, predSql2)
-      if (candidates.isEmpty) return None
-      deleteCore(spark, root, base, st, candidates, _ => expr(predSql2),
-        session, beforeCommit, maxAttempts,
-        conflictWhat = if (strictConflict) Some("DELETE") else None,
-        prep = prep)
-    } finally cleanup()
-  }
+  : Option[Int] =
+    deleteMatching(spark, root, resolved, session, beforeCommit,
+      maxAttempts, strictConflict, deleteCore)
 
   /** Native SQL DELETE seam (r13 — plain `DELETE FROM catalog.ns.t
     * WHERE ...` through the V2 table's `SupportsDelete`): the pushed
     * filters both PRUNE candidates (the same log-metadata pruning the
     * read path uses — [[TxnTableRelation.pruneForSt]]) and rebuild
-    * the EXACT row predicate ([[TxnTableRelation.filterColumn]]); the
+    * the EXACT row predicate ([[exactPredicate]]); the
     * ladder is [[deletePredicate]]'s. A filter shape the exact
     * rebuild cannot express throws — callers gate via
     * `canDeleteWhere`, so this is the never-approximate backstop. */
@@ -3506,112 +3460,198 @@ class TxnLogOps(val store: LogStore) {
                     filters: Array[org.apache.spark.sql.sources.Filter],
                     session: String, maxAttempts: Int = 5)
   : Option[Int] = {
-    val cols = filters.map(f => TxnTableRelation.filterColumn(f)
-      .getOrElse(throw new UnsupportedOperationException(
-        s"cannot rebuild filter $f as an exact row predicate")))
+    val pred = exactPredicate(filters)
     val base = latestVersion(root)
     if (liveFiles(root, base).isEmpty) return None
     val st = stateAt(root, base)
     val candidates = TxnTableRelation.pruneForSt(st, filters)._1
     if (candidates.isEmpty) return None
-    val pred = cols.reduceOption(_ && _).getOrElse(lit(true))
     // ADVICE r13 high: the native SQL seam must distinguish "nothing
     // matched" (clean no-op) from a LOST WRITE CONFLICT — deleteWhere
     // returning Unit used to swallow the None and report success with
     // zero rows deleted
-    deleteCore(spark, root, base, st, candidates, _ => pred, session,
-      () => (), maxAttempts, conflictWhat = Some("DELETE"))
+    deleteCore(spark, root, base, st, candidates, _ => pred, identity,
+      session, () => (), maxAttempts, Some("DELETE"))
   }
 
-  /** The shared copy-on-write DELETE body: census + cheapest-action
-    * ladder + conflict-aware commit, parameterized by the delete
-    * predicate (built against the candidates' merged scan, so typed
-    * bounds can resolve their column's type first).
+  /** A DELETE engine, [[deleteCore]] or [[deleteCoreDV]]: all that the
+    * copy-on-write and merge-on-read entry points differ in. */
+  private type DeleteEngine = (SparkSession, String, Int, State,
+    Seq[String], DataFrame => org.apache.spark.sql.Column,
+    DataFrame => DataFrame, String, () => Unit, Int, Option[String])
+    => Option[Int]
+
+  /** [[deleteRange]]'s prologue: prune on `colName`'s bounds, then run
+    * `engine` with `colName BETWEEN lo AND hi` compared in the COLUMN's
+    * own type (exact at any magnitude — no string-vs-numeric promotion). */
+  private def deleteInRange(spark: SparkSession, root: String,
+      colName: String, lo: String, hi: String, session: String,
+      beforeCommit: () => Unit, maxAttempts: Int, strictConflict: Boolean,
+      engine: DeleteEngine): Option[Int] = {
+    val base = latestVersion(root)
+    if (liveFiles(root, base).isEmpty) return None
+    val (candidates, _) =
+      pruneWhere(root, base, Seq.empty, Seq((colName, lo, hi)))
+    if (candidates.isEmpty) return None
+    def pred(scan: DataFrame) = {
+      val dt = scan.schema(colName).dataType
+      col(colName).between(lit(lo).cast(dt), lit(hi).cast(dt))
+    }
+    engine(spark, root, base, stateAt(root, base), candidates, pred,
+      identity, session, beforeCommit, maxAttempts,
+      if (strictConflict) Some("DELETE") else None)
+  }
+
+  /** [[deleteResolved]]'s prologue: prune by the resolved predicate's
+    * prunable conjuncts ([[pruneForPredicateSt]]) and run `engine`; the
+    * cleanup (unpinning the subquery sets) runs on every exit. */
+  private def deleteMatching(spark: SparkSession, root: String,
+      resolved: (String, DataFrame => DataFrame, () => Unit),
+      session: String, beforeCommit: () => Unit, maxAttempts: Int,
+      strictConflict: Boolean, engine: DeleteEngine): Option[Int] = {
+    val (predSql, prep, cleanup) = resolved
+    try {
+      val base = latestVersion(root)
+      val st = stateAt(root, base)
+      val candidates =
+        if (st.live.isEmpty) Seq.empty
+        else pruneForPredicateSt(spark, st, predSql)
+      if (candidates.isEmpty) None
+      else engine(spark, root, base, st, candidates, _ => expr(predSql),
+        prep, session, beforeCommit, maxAttempts,
+        if (strictConflict) Some("DELETE") else None)
+    } finally cleanup()
+  }
+
+  /** The one predicate census of the row-level DML ladder (DELETE on
+    * both engines, UPDATE, REPLACE WHERE): the DV-applied scan of
+    * `candidates` under the log schema, with each row's `__file` (and,
+    * with `positions`, its `__path`/`__pos`), then `prep`; `pred` is
+    * `mkPred` over it made null-safe — a row hits iff it is TRUE, so
+    * `!pred` keeps null-keyed rows (ADVICE r10 high). Only SURVIVING
+    * rows count: a deleted row can neither re-match nor re-delete.
     *
-    * When the candidate scan [[graft.core.Held.fits]], it is HELD: one
-    * collect job returns the candidate rows with their `__file`, the
-    * predicate is a projection over a local relation of those rows
-    * (evaluated on the driver: no job, and the bounds never reach
-    * generated code), and each partial file's survivors are a local
-    * relation that [[writeObserved]] writes on the driver. Larger scans
-    * run the census as one aggregate job and each rewrite as its own
-    * scan and write job. Both give the same census, rows and entries. */
-  private def deleteCore(spark: SparkSession, root: String, base: Int,
-                         st: State, candidates: Seq[String],
-                         mkPred: DataFrame => org.apache.spark.sql.Column,
-                         session: String, beforeCommit: () => Unit,
-                         maxAttempts: Int,
-                         conflictWhat: Option[String] = None,
-                         prep: DataFrame => DataFrame = identity)
-  : Option[Int] = {
-    // log schema: candidates may span schema generations — a file
-    // predating the predicate column reads it as null (no hit), and
-    // the scan must not depend on which file's footer gets sampled.
-    // DV-applied: census counts SURVIVING rows, so the pure-remove
-    // bar on a vectored file is "every not-yet-deleted row matches"
-    val scan = prep(scanWithDVs(spark, root, st, candidates,
-      fileCol = Some("__file")))
-    // DELETE semantics: a row is deleted iff the predicate is TRUE.
-    // A null key makes the comparison null, and a bare `!pred` filter
-    // would DROP those rows (null is not true) — a delete silently
-    // destroying every null-keyed row in a partially-matching file
-    // (ADVICE r10 high). The null-safe complement keeps them.
-    val pred = coalesce(mkPred(scan), lit(false))
+    * Scale shape: a scan that [[graft.core.Held.fits]] is HELD — one
+    * collect job, the predicate a projection over a local relation (no
+    * job, its literals never in generated code), and [[rowsOf]] and
+    * [[hitPositions]] local relations of the held rows. A larger scan
+    * costs one aggregate job; [[rowsOf]] is then the file's own scan,
+    * and with `positions` the marked rows stay cached until [[close]],
+    * so the candidates are read once. */
+  private final class Census(spark: SparkSession, root: String, st: State,
+      candidates: Seq[String],
+      mkPred: DataFrame => org.apache.spark.sql.Column,
+      prep: DataFrame => DataFrame, positions: Boolean = false) {
+    private val raw = scanWithDVs(spark, root, st, candidates,
+      fileCol = Some("__file"), rowIds = positions)
+    /** The table's columns, as a rewrite writes them. */
+    val dataCols: Seq[String] = raw.columns.toSeq.takeWhile(_ != "__file")
+    val scan: DataFrame = prep(raw)
+    val pred: org.apache.spark.sql.Column = coalesce(mkPred(scan), lit(false))
     // held: each candidate file's rows, in scan order, with hit flags
-    val held: Option[Map[String,
+    private lazy val held: Option[Map[String,
         Seq[(org.apache.spark.sql.catalyst.InternalRow, Boolean)]]] =
       if (!graft.core.Held.fits(scan)) None
       else {
         val rows = graft.core.Held.rows(scan).toSeq
-        val hits = graft.core.Held.local(spark, scan.schema, rows)
+        val flags = graft.core.Held.local(spark, scan.schema, rows)
           .select(pred).collect().map(_.getBoolean(0))
         val fileAt = scan.schema.fieldIndex("__file")
-        Some(rows.zip(hits).groupBy(_._1.getUTF8String(fileAt).toString))
+        Some(rows.zip(flags).groupBy(_._1.getUTF8String(fileAt).toString))
       }
-    val census: Seq[(String, Long, Long)] = held match {
+    private var cached: Option[DataFrame] = None
+    private lazy val marked: DataFrame = {
+      val m = scan.select((Seq(col("__file"), pred.as("__hit")) ++
+        (if (positions) Seq(col("__path"), col("__pos")) else Nil)): _*)
+      if (positions) cached = Some(m.cache())
+      cached.getOrElse(m)
+    }
+
+    /** (file, hits, surviving rows) of every candidate holding a hit,
+      * by name. */
+    lazy val hits: Seq[(String, Long, Long)] = held match {
       case Some(byFile) =>
         byFile.toSeq.map { case (f, rs) =>
           (f, rs.count(_._2).toLong, rs.size.toLong) }
           .filter(_._2 > 0).sortBy(_._1)
       case None =>
-        scan.select(col("__file"), pred.as("__hit"))
-          .groupBy(col("__file"))
+        marked.groupBy(col("__file"))
           .agg(count(when(col("__hit"), 1)).as("hits"),
             count(lit(1)).as("total"))
           .where(col("hits") > 0)
           .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
           .sortBy(_._1).toSeq
     }
-    if (census.isEmpty) return None // nothing matches: no-op
-    val outBase = f"d${base + 1}%08d" + s"_$session"
-    val touched = census.map(_._1)
-    // survivor rewrites inherit the input file's partition tuple (a
-    // subset of a partition stays in it) and recompute its published
-    // stats columns — pruning metadata survives the DELETE
-    val rewrites: Seq[(String, Entry)] = inPool(
-      census.filter { case (_, hits, total) => hits < total }
-        .zipWithIndex.map { case ((f, _, _), i) =>
-          () => {
-            val out = f"${outBase}_k$i%04d"
-            // the rewrite reads under the TABLE schema like the
-            // census: an arbitrary predicate may reference an evolved
-            // column a file of an older generation lacks physically —
-            // it reads as null (so the file CAN hold hits, e.g.
-            // `evolved IS NULL OR ...`) instead of failing analysis
-            val fileDf = scanWithDVs(spark, root, st, Seq(f))
-            // survivors re-select the FILE's columns: a subquery prep
-            // may have attached membership columns for the predicate
-            val survivors = held match {
-              case Some(byFile) => graft.core.Held.local(spark, scan.schema,
-                byFile(f).collect { case (r, false) => r })
-              case None => prep(fileDf).where(!pred)
-            }
-            val (_, stats) = writeObserved(
-              survivors.select(fileDf.columns.toSeq.map(col): _*), root, out,
-              st.stats.getOrElse(f, Seq.empty).map(_.col))
-            out -> addOf(out, st.parts.getOrElse(f, Seq.empty), stats)
-          }
-        })
+
+    /** File `f`'s rows, `prep` applied: all, or only those that do not
+      * hit. Its own scan reads under the TABLE schema like the census's,
+      * so a column an older file lacks reads as null. */
+    def rowsOf(f: String, survivors: Boolean): DataFrame = held match {
+      case Some(byFile) => graft.core.Held.local(spark, scan.schema,
+        byFile(f).collect { case (r, hit) if !(survivors && hit) => r })
+      case None =>
+        val rows = prep(scanWithDVs(spark, root, st, Seq(f)))
+        if (survivors) rows.where(!pred) else rows
+    }
+
+    /** The (path, pos) of every hit row of `files`, as a deletion
+      * vector names them (a census with `positions`). */
+    def hitPositions(files: Seq[String]): DataFrame = {
+      val ids = Seq(col("__path").as("path"), col("__pos").as("pos"))
+      held match {
+        case Some(byFile) => graft.core.Held.local(spark, scan.schema,
+          files.flatMap(f => byFile(f).collect { case (r, true) => r }))
+          .select(ids: _*)
+        case None => marked.where(col("__hit") &&
+          col("__file").isin(files: _*)).select(ids: _*)
+      }
+    }
+
+    /** Release the cached marked rows, if any. */
+    def close(): Unit = cached.foreach { m => m.unpersist(); () }
+  }
+
+  /** A copy-on-write DELETE's plan: the [[Census]] of `mkPred`, then
+    * every file holding a hit is touched — PURE-REMOVED (metadata only)
+    * when all its rows hit, else rewritten with its survivors as
+    * `<outBase>_k<i>` in one [[writeWave]] (held: from the held rows, no
+    * job), keeping the input's partition tuple and published stats
+    * columns. Returns the touched files and the rewrites (dir, add). */
+  private def deletePlan(spark: SparkSession, root: String, st: State,
+      candidates: Seq[String],
+      mkPred: DataFrame => org.apache.spark.sql.Column,
+      prep: DataFrame => DataFrame, outBase: String)
+  : (Seq[String], Seq[(String, Entry)]) = {
+    val c = new Census(spark, root, st, candidates, mkPred, prep)
+    val partial = c.hits.collect { case (f, hits, total) if hits < total => f }
+    val rewrites = writeWave(root, partial.zipWithIndex.map { case (f, i) =>
+      val out = f"${outBase}_k$i%04d"
+      // survivors re-select the FILE's columns: a subquery prep may
+      // have attached membership columns for the predicate
+      out -> (() => {
+        val (_, stats) = writeObserved(
+          c.rowsOf(f, survivors = true).select(c.dataCols.map(col): _*),
+          root, out, st.stats.getOrElse(f, Seq.empty).map(_.col))
+        out -> addOf(out, st.parts.getOrElse(f, Seq.empty), stats)
+      })
+    })
+    (c.hits.map(_._1), rewrites)
+  }
+
+  /** The copy-on-write DELETE engine: [[deletePlan]], then remove every
+    * touched file and add every rewrite through [[commitRewrite]]. Scale
+    * shape: held, one collect job in all; else one aggregate job plus a
+    * scan-and-write job per partial file. None when nothing matches. */
+  private def deleteCore(spark: SparkSession, root: String, base: Int,
+                         st: State, candidates: Seq[String],
+                         mkPred: DataFrame => org.apache.spark.sql.Column,
+                         prep: DataFrame => DataFrame,
+                         session: String, beforeCommit: () => Unit,
+                         maxAttempts: Int, conflictWhat: Option[String])
+  : Option[Int] = {
+    val (touched, rewrites) = deletePlan(spark, root, st, candidates,
+      mkPred, prep, f"d${base + 1}%08d" + s"_$session")
+    if (touched.isEmpty) return None // nothing matches: no-op
     beforeCommit()
     commitRewrite(root, base + 1, touched,
       touched.map(remove) ++ rewrites.map(_._2), rewrites.map(_._1),
@@ -3640,29 +3680,20 @@ class TxnLogOps(val store: LogStore) {
     * file's previous vector rows forward (the pointer REPLACES, so
     * the union is the writer's job), and the census counts only
     * surviving rows — already-deleted rows can neither re-match nor
-    * re-delete. Commit is conflict-aware: touched files must still
-    * be live with an unchanged vector at the retry tip
-    * ([[commitRewrite]]'s DV check). Returns the committed version,
-    * None when no surviving row matched or on conflict. */
+    * re-delete. The census is [[deleteRange]]'s ([[Census]]): held, one
+    * collect job and the sidecar written on the driver; else one
+    * aggregate job plus the sidecar's write job. Commit is
+    * conflict-aware: touched files must still be live with an unchanged
+    * vector at the retry tip ([[commitRewrite]]'s DV check). Returns the
+    * committed version, None when no surviving row matched or on
+    * conflict. */
   def deleteRangeDV(spark: SparkSession, root: String, colName: String,
                     lo: String, hi: String, session: String,
                     beforeCommit: () => Unit = () => (),
                     maxAttempts: Int = 5,
-                    strictConflict: Boolean = false): Option[Int] = {
-    val base = latestVersion(root)
-    if (liveFiles(root, base).isEmpty) return None
-    val (candidates, _) =
-      pruneWhere(root, base, Seq.empty, Seq((colName, lo, hi)))
-    if (candidates.isEmpty) return None
-    val st = stateAt(root, base)
-    def pred(scan: DataFrame) = {
-      val dt = scan.schema(colName).dataType
-      col(colName).between(lit(lo).cast(dt), lit(hi).cast(dt))
-    }
-    deleteCoreDV(spark, root, base, st, candidates, pred, session,
-      beforeCommit, maxAttempts,
-      conflictWhat = if (strictConflict) Some("DELETE") else None)
-  }
+                    strictConflict: Boolean = false): Option[Int] =
+    deleteInRange(spark, root, colName, lo, hi, session, beforeCommit,
+      maxAttempts, strictConflict, deleteCoreDV)
 
   /** [[deletePredicate]]'s MERGE-ON-READ twin (r13): an arbitrary
     * SQL predicate delete that publishes deletion vectors instead of
@@ -3672,89 +3703,46 @@ class TxnLogOps(val store: LogStore) {
                         predSql: String, session: String,
                         beforeCommit: () => Unit = () => (),
                         maxAttempts: Int = 5,
-                        strictConflict: Boolean = false): Option[Int] = {
-    val base = latestVersion(root)
-    if (liveFiles(root, base).isEmpty) return None
-    val st = stateAt(root, base)
-    val (predSql2, prep, cleanup) = resolveSubqueries(spark, predSql)
-    try {
-      val candidates = pruneForPredicateSt(spark, st, predSql2)
-      if (candidates.isEmpty) return None
-      deleteCoreDV(spark, root, base, st, candidates,
-        _ => expr(predSql2),
-        session, beforeCommit, maxAttempts,
-        conflictWhat = if (strictConflict) Some("DELETE") else None,
-        prep = prep)
-    } finally cleanup()
-  }
+                        strictConflict: Boolean = false): Option[Int] =
+    deleteMatching(spark, root, resolveSubqueries(spark, predSql), session,
+      beforeCommit, maxAttempts, strictConflict, deleteCoreDV)
 
-  /** The shared merge-on-read DELETE body — census, cheapest-action
-    * ladder (pure removes stay metadata-only), sidecar union, pointer
-    * commit — parameterized by the delete predicate. */
+  /** The merge-on-read DELETE engine — the shared [[Census]] with row
+    * positions, cheapest-action ladder (pure removes stay
+    * metadata-only), sidecar union, pointer commit. */
   private def deleteCoreDV(spark: SparkSession, root: String, base: Int,
                            st: State, candidates: Seq[String],
                            mkPred: DataFrame => org.apache.spark.sql.Column,
+                           prep: DataFrame => DataFrame,
                            session: String, beforeCommit: () => Unit,
-                           maxAttempts: Int,
-                           conflictWhat: Option[String] = None,
-                           prep: DataFrame => DataFrame = identity)
+                           maxAttempts: Int, conflictWhat: Option[String])
   : Option[Int] = {
-    val baseScan = readData(spark, root, st, candidates)
-    // row identity is captured BEFORE the subquery prep: _metadata is
-    // a scan-relation column and would not survive the membership join
-    val withIds = prep(baseScan.select(col("*"),
-      relPath.as("__rel_path"), col("_metadata.row_index").as("__pos")))
-    val pred = coalesce(mkPred(withIds), lit(false))
-    // one scan: hit flag + (path, pos) identity per SURVIVING row
-    val withMeta = withIds.select(pred.as("__hit"),
-      col("__rel_path").as("__path"), col("__pos"))
-    val surviving = dvRows(spark, root, st, candidates) match {
-      case None => withMeta
-      case Some(d) =>
-        withMeta.join(broadcast(d.withColumnRenamed("path", "__path")
-          .withColumnRenamed("pos", "__pos")),
-          Seq("__path", "__pos"), "left_anti")
-    }
-    val marked = surviving.select(
-      regexp_extract(col("__path"), "^([^/]+)/", 1).as("__file"),
-      col("__hit"), col("__path"), col("__pos")).cache()
+    val c = new Census(spark, root, st, candidates, mkPred, prep,
+      positions = true)
     try {
-      val census = marked.groupBy(col("__file"))
-        .agg(count(when(col("__hit"), 1)).as("hits"),
-          count(lit(1)).as("total"))
-        .where(col("hits") > 0)
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-        .sortBy(_._1).toSeq
-      if (census.isEmpty) return None // nothing matches: no-op
-      val pure = census.filter { case (_, h, t) => h == t }.map(_._1)
-      val vectored = census.filter { case (_, h, t) => h < t }
-      val touched = census.map(_._1)
+      if (c.hits.isEmpty) return None // nothing matches: no-op
+      val vectored = c.hits.filter { case (_, h, t) => h < t }
       val dvName = f"dv${base + 1}%08d" + s"_$session"
       val outs: Seq[String] =
         if (vectored.isEmpty) Seq.empty
         else {
           val vecFiles = vectored.map(_._1)
-          val fresh = marked.where(col("__hit") &&
-              col("__file").isin(vecFiles: _*))
-            .select(col("__path").as("path"), col("__pos").as("pos"))
+          val fresh = c.hitPositions(vecFiles)
           // carry each file's PREVIOUS vector forward: the SetDV
           // pointer replaces, so the sidecar must hold the union
           val carried = dvRows(spark, root, st, vecFiles)
-          val all = carried.map(fresh.unionAll).getOrElse(fresh)
-          store.deleteDataDir(root, dvName) // crashed earlier attempt
-          all.coalesce(1).write.mode("overwrite")
-            .parquet(s"$root/$dvName")
+          writeObserved(carried.map(fresh.unionAll).getOrElse(fresh), root,
+            dvName, Seq.empty)
           Seq(dvName)
         }
-      val actions: Seq[Entry] = pure.map(remove) ++
-        vectored.map { case (f, h, _) =>
-          val old = st.dvs.get(f).map(_._2).getOrElse(0L)
-          SetDV(f, dvName, old + h)
-        }
+      val actions: Seq[Entry] =
+        c.hits.collect { case (f, h, t) if h == t => remove(f) } ++
+          vectored.map { case (f, h, _) =>
+            SetDV(f, dvName, st.dvs.get(f).map(_._2).getOrElse(0L) + h) }
       beforeCommit()
-      commitRewrite(root, base + 1, touched, actions, outs, session,
-        maxAttempts, readDvs = st.dvs, conflictWhat = conflictWhat)
-    } finally { marked.unpersist(); () }
+      commitRewrite(root, base + 1, c.hits.map(_._1), actions, outs,
+        session, maxAttempts, readDvs = st.dvs, conflictWhat = conflictWhat)
+    } finally c.close()
   }
 
   /** Row-level UPDATE, copy-on-write (r13 — VERDICT r12 #1: "users
@@ -3766,10 +3754,12 @@ class TxnLogOps(val store: LogStore) {
     * declared type: UPDATE is not schema evolution.
     *
     * The planner ladder is [[deletePredicate]]'s: the predicate's
-    * prunable conjuncts pre-prune candidates from the log alone, one
-    * census pass finds the files actually holding a match, and ONLY
-    * those rewrite (narrow per-file copy-on-write tasks in the shared
-    * pool — there is no pure-remove rung, updated rows stay). CHECK
+    * prunable conjuncts pre-prune candidates from the log alone, the
+    * shared [[Census]] finds the files actually holding a match, and
+    * ONLY those rewrite (narrow per-file copy-on-write tasks in one
+    * [[writeWave]] — there is no pure-remove rung, updated rows stay).
+    * Scale shape: [[deleteCore]]'s, each rewrite a projection over the
+    * file's rows (held: its held rows, no job). CHECK
     * constraints gate the rows the update WRITES: one pass over the
     * matched rows' post-SET image (kept rows satisfy by induction,
     * the MERGE posture). Pruning metadata survives: each rewrite
@@ -3794,74 +3784,51 @@ class TxnLogOps(val store: LogStore) {
     // r14 (VERDICT r13 #3): IN-subqueries in the WHERE materialize
     // ONCE; the rewritten predicate's conjuncts still prune. The
     // cleanup unpins the materialized sets on every exit path.
-    val (predSql2, prep, cleanup) = resolvedPred match {
-      case Some((p2, pr, cl)) => (Some(p2), pr, cl)
-      case None => predSql match {
-        case Some(p) => resolveSubqueries(spark, p) match {
-          case (p2, pr, cl) => (Some(p2), pr, cl)
-        }
+    val (predSql2, prep, cleanup) =
+      resolvedPred.orElse(predSql.map(resolveSubqueries(spark, _))) match {
+        case Some((p2, pr, cl)) => (Some(p2), pr, cl)
         case None => (None, identity[DataFrame] _, () => ())
       }
-    }
     try {
     val candidates = predSql2
       .map(p => pruneForPredicateSt(spark, st, p))
       .getOrElse(st.live.toSeq.sorted)
     if (candidates.isEmpty) return None
-    val pred = predSql2.map(p => coalesce(expr(p), lit(false)))
-      .getOrElse(lit(true))
-    val tableSchema = st.schemaDdl.map(StructType.fromDDL)
-    val scan0 = scanWithDVs(spark, root, st, candidates,
-      fileCol = Some("__file"))
-    val dataCols = tableSchema.map(_.fieldNames.toSeq)
-      .getOrElse(scan0.columns.filterNot(_ == "__file").toSeq)
-    sets.foreach { case (c, _) => require(dataCols.contains(c),
-      s"UPDATE target column $c is not in the table schema " +
-        s"(${dataCols.mkString(",")})") }
+    val c = new Census(spark, root, st, candidates,
+      _ => predSql2.map(expr).getOrElse(lit(true)), prep)
+    sets.foreach { case (n, _) => require(c.dataCols.contains(n),
+      s"UPDATE target column $n is not in the table schema " +
+        s"(${c.dataCols.mkString(",")})") }
     val assigned = sets.toMap
-    def updated(df0: DataFrame): DataFrame = {
-      val df = prep(tableSchema.map(projectTo(df0, _)).getOrElse(df0))
-      df.select(dataCols.map { c =>
-        assigned.get(c) match {
+    def updated(df: DataFrame): DataFrame =
+      df.select(c.dataCols.map { n =>
+        assigned.get(n) match {
           case Some(e) =>
-            when(pred, expr(e).cast(df.schema(c).dataType))
-              .otherwise(col(c)).as(c)
-          case None => col(c)
+            when(c.pred, expr(e).cast(df.schema(n).dataType))
+              .otherwise(col(n)).as(n)
+          case None => col(n)
         }
       }: _*)
-    }
-    // census: every file holding at least one matching SURVIVING row
-    // rewrites (DV-applied — an already-deleted row cannot re-match)
-    val touched = prep(scan0).select(col("__file"), pred.as("__hit"))
-      .groupBy(col("__file"))
-      .agg(count(when(col("__hit"), 1)).as("hits"))
-      .where(col("hits") > 0)
-      .collect().map(_.getString(0)).sorted.toSeq
+    // every file holding at least one matching SURVIVING row rewrites
+    val touched = c.hits.map(_._1)
     if (touched.isEmpty) return None
     // r14 (VERDICT r13 #4): CHECK enforcement is FUSED into each
     // rewrite's own projection ([[checkGuard]], the stageWrite
     // pattern) instead of a separate pre-pass over the matched rows'
     // post-SET image — a checked UPDATE reads each touched file
-    // exactly TWICE (census + rewrite), not three times. Kept rows
+    // at most TWICE (census + rewrite), not three times. Kept rows
     // satisfy by induction (they were validated when written /
     // when the constraint was added), so guarding the whole output
     // accepts and rejects exactly the same statements; a violation
     // aborts ALL rewrites before any commit and cleans the staging.
     val outBase = f"up${base + 1}%08d" + s"_$session"
-    val rewriteTasks = touched.zipWithIndex.map { case (f, i) =>
-      () => {
-        val out = f"${outBase}_r$i%04d"
-        writeRewrite(checkGuard(updated(scanWithDVs(spark, root, st, Seq(f))),
-          st.constraints, "update"), root, out, st, f)
-      }
-    }
     val rewrites: Seq[(String, Entry)] =
-      try inPool(rewriteTasks)
-      catch { case t: Throwable =>
-        touched.indices.foreach(i =>
-          store.deleteDataDir(root, f"${outBase}_r$i%04d"))
-        throw t
-      }
+      writeWave(root, touched.zipWithIndex.map { case (f, i) =>
+        val out = f"${outBase}_r$i%04d"
+        out -> (() => writeRewrite(checkGuard(
+          updated(c.rowsOf(f, survivors = false)), st.constraints,
+          "update"), root, out, st, f))
+      })
     beforeCommit()
     commitRewrite(root, base + 1, touched,
       touched.map(remove) ++ rewrites.map(_._2), rewrites.map(_._1),
@@ -4006,15 +3973,12 @@ class TxnLogOps(val store: LogStore) {
             }
           }.reduce(_ unionAll _)
           val files = dvSets.map(_.file).distinct.sorted
-          val base = readData(spark, root, postSt, files)
-          val dataCols = base.columns.toSeq
-          Some(projectTo(base.select((dataCols.map(col) :+
-              relPath.as("__path") :+
-              col("_metadata.row_index").as("__pos")): _*)
+          // every row of the files, vectors unapplied, with its identity
+          Some(projectTo(scanWithDVs(spark, root, postSt.copy(dvs = Map.empty),
+              files, rowIds = true)
             .join(broadcast(delta.withColumnRenamed("path", "__path")
               .withColumnRenamed("pos", "__pos")),
-              Seq("__path", "__pos"), "left_semi")
-            .select(dataCols.map(col): _*), schema))
+              Seq("__path", "__pos"), "left_semi"), schema))
         }
       val ts = commitTs(root, v)
       def tag(df: DataFrame, t: String): DataFrame = df.select(
@@ -4423,7 +4387,7 @@ class TxnLogOps(val store: LogStore) {
         a.fields ++ b.fields.filterNot(f =>
           a.fieldNames.exists(_.equalsIgnoreCase(f.name)))))
     val histSt = tipSt.copy(schemaDdl = histSchema.map(_.toDDL),
-      ext = extAll)
+      ext = extAll, dvs = Map.empty)
     val perFile = readData(spark, root, histSt, files)
       .select(regexp_extract(input_file_name(), "/([^/]+)/[^/]+$", 1)
         .as("file"),
@@ -4444,9 +4408,8 @@ class TxnLogOps(val store: LogStore) {
             .select(col("path"), col("pos"), lit(d).as("dv")))
           .reduce(_ unionAll _)
         val dvFiles = pairs.map(_._1).distinct.sorted
-        val corr = readData(spark, root, histSt, dvFiles)
-          .select(relPath.as("path"),
-            col("_metadata.row_index").as("pos"),
+        val corr = scanWithDVs(spark, root, histSt, dvFiles, rowIds = true)
+          .select(col("__path").as("path"), col("__pos").as("pos"),
             graft.core.Det.cents(col(valueCol)).as("cents"))
           .join(broadcast(dvAll), Seq("path", "pos"))
           .select(regexp_extract(col("path"), "^([^/]+)/", 1).as("file"),

@@ -100,6 +100,52 @@ class JobCountSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("a one-file deleteRangeDV and deletePredicateDV") {
+    // held: the candidate rows' collect, the sidecar written on the
+    // driver; a file that already carries a vector adds a footer-
+    // inference job per sidecar read and a collect of the carried rows.
+    // auto-broadcast off: the census aggregate over the cached marked
+    // rows and the sidecar's write job
+    withScratch { root =>
+      table(root, 1)
+      assertJobs("deleteRangeDV", 1)(
+        assert(TxnLog.deleteRangeDV(spark, root, "k", "3", "6", "d").nonEmpty))
+      assertJobs("deletePredicateDV", 5)(
+        assert(TxnLog.deletePredicateDV(spark, root, "k = 9", "d").nonEmpty))
+      withThreshold(-1L) {
+        assertJobs("deleteRangeDV, auto-broadcast off", 7)(
+          assert(TxnLog.deleteRangeDV(spark, root, "k", "11", "12", "d").nonEmpty))
+        assertJobs("deletePredicateDV, auto-broadcast off", 7)(
+          assert(TxnLog.deletePredicateDV(spark, root, "k = 14", "d").nonEmpty))
+      }
+    }
+  }
+
+  test("a one-file update and writeReplaceWhere") {
+    // held: the candidate rows' collect, the rewrite a projection over
+    // them; auto-broadcast off, the census aggregate and the rewrite's
+    // write job (and REPLACE WHERE's staged append's)
+    import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
+    def region(lo: Long, hi: Long) =
+      Array[org.apache.spark.sql.sources.Filter](
+        GreaterThanOrEqual("k", lo), LessThanOrEqual("k", hi))
+    withScratch { root =>
+      table(root, 1)
+      assertJobs("update", 1)(assert(TxnLog.update(spark, root,
+        Seq("v" -> "v + 1"), Some("k BETWEEN 3 AND 6"), "u").nonEmpty))
+      assertJobs("writeReplaceWhere", 1)(assert(TxnLog.writeReplaceWhere(
+        spark, root, rows(8, 10), region(8, 9), "u", "r0").nonEmpty))
+      withThreshold(-1L) {
+        assertJobs("update, auto-broadcast off", 3)(assert(TxnLog.update(
+          spark, root, Seq("v" -> "v + 1"), Some("k BETWEEN 3 AND 6"),
+          "u").nonEmpty))
+        assertJobs("writeReplaceWhere, auto-broadcast off", 4)(assert(
+          TxnLog.writeReplaceWhere(spark, root, rows(11, 13), region(11, 12),
+            "u", "r1").nonEmpty))
+      }
+    }
+  }
+
   test("a one-file mergeUpsert") {
     // the probe and the rewrite's collect; the inserts are local
     withScratch { root =>

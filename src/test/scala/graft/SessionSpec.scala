@@ -10,8 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * keeps operators from registering extensions themselves, keeps the
   * one release rule: operators pin and unpin through [[graft.core.Caches]],
   * and only the harness mains sweep the session, keeps txn-log data
-  * read under the log's own schema, and keeps [[graft.core.Held]] the
-  * one writer of parquet files outside a write job. */
+  * read under the log's own schema, keeps [[graft.core.Held]] the
+  * one writer of parquet files outside a write job, and keeps
+  * `TxnLog`'s data writes, write waves and row-position reads each in
+  * one place. */
 class SessionSpec extends AnyFunSuite {
 
   private val main = Paths.get("src/main")
@@ -59,6 +61,33 @@ class SessionSpec extends AnyFunSuite {
     val fallback = lines.indexWhere(_.contains("case None =>"), start)
     assert(infers.size == 1 && fallback < end &&
       infers.head == s"$txnLog:${fallback + 2}", infers)
+  }
+
+  /** For each code line of `TxnLog.scala` matching `pattern`, the
+    * member of its class or object that holds it: the last definition
+    * at member indentation above it. Comment lines are skipped. */
+  private def txnLogOwners(pattern: String): Seq[String] = {
+    val member = ("  (?:(?:private(?:\\[\\w+\\])?|final|override|lazy) )*" +
+      "(?:def|val|var|class|object|type) (\\w+)\\b.*").r
+    val lines = Files.readAllLines(main.resolve("scala/graft/sources/TxnLog.scala"))
+      .asScala.toSeq
+    val owners = lines.scanLeft("") {
+      case (_, member(name)) => name
+      case (owner, _) => owner
+    }.tail
+    lines.zip(owners).collect {
+      case (line, owner) if !line.trim.startsWith("*") &&
+          !line.trim.startsWith("/") && pattern.r.findFirstIn(line).nonEmpty => owner
+    }
+  }
+
+  test("TxnLog writes only in writeObserved and compactZorder's stage, runs write " +
+    "waves only through writeWave, and reads row positions only in scanWithDVs") {
+    val writes = txnLogOwners("""\.write\b""")
+    assert(writes.toSet == Set("writeObserved", "compactZorder") &&
+      writes.count(_ == "compactZorder") == 1, writes)
+    assert(txnLogOwners("""\binPool\(""").sorted == Seq("compactZorder", "writeWave"))
+    assert(txnLogOwners("""_metadata\.row_index""") == Seq("scanWithDVs"))
   }
 
   test("only graft.core.Held writes parquet outside a write job") {

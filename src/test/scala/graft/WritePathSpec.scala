@@ -9,6 +9,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -30,10 +31,13 @@ class WritePathSpec extends AnyFunSuite with SparkSpec with ScratchDirs {
   private case class Outcome(rows: Seq[String], entries: Seq[Entry],
                              footers: Set[(String, Map[String, String], Set[String])])
 
+  /** The dirs `entries` publish: added data dirs and deletion-vector
+    * sidecars. */
   private def outputs(entries: Seq[Entry]): Seq[String] = entries.collect {
     case a: TxnLog.AddFile => a.file
     case TxnLog.Action("add", f) => f
-  }
+    case d: TxnLog.SetDV => d.dv
+  }.distinct
 
   private def parts(root: String, out: String): Seq[File] =
     new File(root, out).listFiles().filter(f => f.getName.startsWith("part-") &&
@@ -162,6 +166,23 @@ class WritePathSpec extends AnyFunSuite with SparkSpec with ScratchDirs {
       bothPaths(table)(root =>
         assert(TxnLog.deletePredicate(spark, root, "s = '日本' OR d IS NULL",
           "d").nonEmpty))
+      // merge-on-read: the second delete carries the first's vector
+      val vectored = bothPaths(table) { root =>
+        assert(TxnLog.deleteRangeDV(spark, root, "k", "3", "20", "v").nonEmpty)
+        assert(TxnLog.deleteRangeDV(spark, root, "k", "0", "1", "v").nonEmpty)
+      }
+      assert(outputs(vectored.entries) == Seq("dv00000003_v", "dv00000004_v"))
+      assert(vectored.rows.size == 32 - 20)
+      bothPaths(table)(root =>
+        assert(TxnLog.deletePredicateDV(spark, root,
+          "s = '日本' OR d IS NULL", "v").nonEmpty))
+      val replaced = bothPaths(table)(root =>
+        assert(TxnLog.writeReplaceWhere(spark, root,
+          edge(3, 18).withColumn("i", col("i") + 100),
+          Array(GreaterThanOrEqual("k", 3L), LessThanOrEqual("k", 20L)),
+          "r", "rw").nonEmpty))
+      assert(outputs(replaced.entries) ==
+        Seq("rw00000003_r_k0000", "rw00000003_r_k0001", "w_rw"))
       bothPaths(table)(root =>
         assert(TxnLog.update(spark, root, Seq("dec" -> "dec * 2"),
           Some("k BETWEEN 5 AND 9"), "u").nonEmpty))
@@ -194,6 +215,21 @@ class WritePathSpec extends AnyFunSuite with SparkSpec with ScratchDirs {
         d.startsWith("w_bad")), s"held $held: $dirs")
       assert(TxnLog.read(spark, root).count() == 8)
     }
+  }
+
+  test("a failed OPTIMIZE bin leaves no output of its wave") {
+    // four files in two bins of two; the second bin's last input is
+    // gone from disk, so its write fails while the first bin's succeeds
+    val root = scratchDir("graft_writepath_")
+    for (i <- 0 until 4) append(root, s"t$i", edge(i * 8L, 8))
+    val bytes = (0 until 4).map(i =>
+      new File(root, s"w_t$i").listFiles().map(_.length).sum)
+    val cap = math.max(bytes(0) + bytes(1), bytes(2) + bytes(3))
+    graft.core.Fixtures.deleteRecursively(new File(root, "w_t3"))
+    val out = f"c${TxnLog.latestVersion(root) + 1}%08d_o"
+    intercept[Exception](TxnLog.compact(spark, root, "o", targetBytes = cap))
+    val left = new File(root).list().toSeq.filter(_.startsWith(out))
+    assert(left.isEmpty, left)
   }
 
   test("spark.sql.files.maxRecordsPerFile keeps the write job and its limit") {
